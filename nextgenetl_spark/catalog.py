@@ -32,12 +32,16 @@ TABLES = (
 
 def _parquet_ts_unit(path: str, field: str = "ts") -> str | None:
     """Footer-only probe (pyarrow, no Spark job) for a timestamp column's
-    physical resolution ('ns'/'us'/'ms'), or None if absent/not a timestamp."""
+    physical resolution ('ns'/'us'/'ms'), or None if absent/not a timestamp.
+    A URI-scheme path (s3a://, hdfs://) is not a local file pyarrow can open:
+    None, as _schema_cache_key does, and the plain Spark read follows."""
     import glob
     import os
 
     import pyarrow.parquet as pq
 
+    if "://" in path:
+        return None
     if os.path.isdir(path):
         parts = sorted(glob.glob(os.path.join(path, "*.parquet")))
         if not parts:

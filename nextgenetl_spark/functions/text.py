@@ -3,31 +3,31 @@
 The reference models multi-valued attributes as `;`-packed strings and
 decodes them in SQL (`SPLIT`, `STRING_AGG`, delimiter-count idiom,
 `REGEXP_EXTRACT` ladders). Each helper below is the Spark-native equivalent,
-kept as pure Column expressions so they compile into whole-stage codegen.
+kept as pure Column or SQL expressions so they compile into whole-stage
+codegen. The ingest-side helpers (``normalize_value_sql``,
+``caller_flag_sql``) are SQL text templates: a reader splices them into one
+``select_sql`` projection, the DataFrame API's plan at a constant number of
+JVM round trips however wide the file is.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# Null-marker vocabulary the reference normalizes to NULL
-# (reference: cda_bq_etl/data_helpers.py:447-486 normalize_value).
-NULL_VOCAB = [
-    "na",
-    "n/a",
-    "none",
-    "",
-    "--",
-    "-",
-    "null",
-    "not reported",
-    "unknown",
-    "[not available]",
-    "[not applicable]",
-    "[unknown]",
-    ".",
-]
+from nextgenetl_spark.inference import NULL_VOCAB
+
+
+def sql_string(value: str) -> str:
+    """Spark SQL string literal for ``value`` under the default parser, which
+    unescapes backslash sequences inside quotes."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def sql_ident(name: str) -> str:
+    """Backtick-quoted Spark SQL identifier: a name with dots, spaces or
+    backticks refers to one top-level column, never a nested field."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 def string_agg(col, sep: str = ";", *, sort: bool = True) -> Column:
@@ -77,17 +77,20 @@ def concat_to_multi(col, sep: str = ";", max_count: int = 8, *, distinct: bool =
     return F.when(F.size(arr) > max_count, F.lit("multi")).otherwise(F.array_join(arr, sep))
 
 
-def caller_flag(packed, caller: str, sep: str = ";") -> Column:
-    """Expand a `;`-packed caller list into one Yes/No(/Yes*) column per
-    caller (reference: build_open_somatic_mut_bq_table.py:213-233 — e.g.
+def caller_flag_sql(packed: str, caller: str, sep: str = ";") -> str:
+    """SQL text of the per-caller Yes/No(/Yes*) flag over the SQL expression
+    ``packed`` (reference: build_open_somatic_mut_bq_table.py:213-233 — e.g.
     ``callers='muse;mutect2*'`` → muse='Yes', mutect2='Yes*', pindel='No')."""
-    c = F.col(packed) if isinstance(packed, str) else packed
-    parts = F.split(c, sep)
+    parts = f"split({packed}, {sql_string(sep)})"
     return (
-        F.when(F.array_contains(parts, caller + "*"), F.lit("Yes*"))
-        .when(F.array_contains(parts, caller), F.lit("Yes"))
-        .otherwise(F.lit("No"))
+        f"CASE WHEN array_contains({parts}, {sql_string(caller + '*')}) THEN 'Yes*' "
+        f"WHEN array_contains({parts}, {sql_string(caller)}) THEN 'Yes' ELSE 'No' END"
     )
+
+
+def caller_flag(packed: str, caller: str, sep: str = ";") -> Column:
+    """``caller_flag_sql`` over the column named ``packed``."""
+    return F.expr(caller_flag_sql(sql_ident(packed), caller, sep))
 
 
 def split_offset(col, delim: str, idx: int) -> Column:
@@ -113,18 +116,42 @@ def zip_split(a, b, delim: str = ":") -> Column:
     return F.arrays_zip(F.split(ca, delim), F.split(cb, delim))
 
 
-def normalize_value(col) -> Column:
-    """Column-expression port of the reference's value normalizer
-    (cda_bq_etl/data_helpers.py:447-486): null-marker vocabulary → NULL,
-    yes/no/true/false → boolean strings, trimmed. Type coercion (trivial
-    floats → int) lives in inference.py — this is the string-level pass
-    applied during ingest."""
-    c = F.col(col) if isinstance(col, str) else col
-    t = F.trim(c)
-    low = F.lower(t)
+_NULL_VOCAB_SQL = ", ".join(sql_string(v) for v in NULL_VOCAB)
+
+
+def normalize_value_sql(expr: str) -> str:
+    """SQL text of the reference's string-level value normalizer
+    (cda_bq_etl/data_helpers.py:447-486) over the SQL expression ``expr``:
+    trimmed, null-marker vocabulary → NULL, yes/true and no/false → the
+    strings 'True'/'False'. Type coercion (trivial floats → int) lives in
+    inference.py and the readers' casts. Readers splice this into one
+    ``select_sql`` projection, so a wide file costs one parse instead of a
+    JVM round trip per Column call."""
+    t = f"trim({expr})"
+    low = f"lower({t})"
     return (
-        F.when(low.isin(NULL_VOCAB), F.lit(None))
-        .when(low.isin(["yes", "true"]), F.lit("True"))
-        .when(low.isin(["no", "false"]), F.lit("False"))
-        .otherwise(t)
+        f"CASE WHEN {low} IN ({_NULL_VOCAB_SQL}) THEN NULL "
+        f"WHEN {low} IN ('yes', 'true') THEN 'True' "
+        f"WHEN {low} IN ('no', 'false') THEN 'False' ELSE {t} END"
     )
+
+
+def normalize_value(col: str) -> Column:
+    """``normalize_value_sql`` over the column named ``col``."""
+    return F.expr(normalize_value_sql(sql_ident(col)))
+
+
+def select_sql(df: DataFrame, exprs: list[str], where: str | None = None) -> DataFrame:
+    """``SELECT exprs FROM df [WHERE where]`` as one parsed statement.
+    ``selectExpr`` ships its argument list one py4j call per element, so its
+    build cost grows with the column count; one SQL text costs the same few
+    calls at any width and optimizes to the same plan. ``df`` is bound
+    through a temporary view that ``spark.sql`` drops before returning."""
+    def escape(sql: str) -> str:
+        # spark.sql(..., src=df) formats the text with str.format
+        return sql.replace("{", "{{").replace("}", "}}")
+
+    text = "SELECT " + escape(", ".join(exprs)) + " FROM {src}"
+    if where is not None:
+        text += " WHERE " + escape(where)
+    return df.sparkSession.sql(text, src=df)

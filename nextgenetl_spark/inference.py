@@ -30,6 +30,7 @@ then applied to ``spark.read`` — which is where scale happens.
 from __future__ import annotations
 
 import datetime
+import itertools
 import math
 import re
 from typing import Any
@@ -92,6 +93,9 @@ def normalize_value(value: Any, is_tsv: bool = False) -> Any:
     integral numerics (100.0, '100.0') → int."""
     if value is None:
         return None
+    if isinstance(value, (dict, list)):
+        # never int-like: skips is_int_like's str() of the whole subtree
+        return value
     if isinstance(value, str):
         value = value.strip()
         low = value.lower()
@@ -246,19 +250,31 @@ def resolve_type_conflict(field: str, types_set: set) -> str:
 # Structure detection over record collections
 # ---------------------------------------------------------------------------
 
-def detect_object_structure(records: list, out: dict | None = None) -> dict:
+def detect_object_structure(records: list, out: dict | None = None, _seen: dict | None = None) -> dict:
     """Union-of-fields recursive structure over ALL records (field sets vary
     per record; JSON inference must be full-pass, not sampled). Result nodes:
     scalar field → set of type names; nested dict → {'__record__': sub};
-    list field → {'__array__': sub-or-{'__scalar__': set}}."""
+    list field → {'__array__': sub-or-{'__scalar__': set}}.
+
+    A scalar already seen at the same node adds nothing, so it is checked
+    once. The memo key carries the type because ``True == 1`` in Python
+    while the two check as BOOL and INT64."""
     out = out if out is not None else {}
+    seen = _seen if _seen is not None else {}
     for rec in records:
         for key, raw in rec.items():
+            node_seen = seen.setdefault((id(out), key), set())
+            try:
+                if (type(raw), raw) in node_seen:
+                    continue
+                node_seen.add((type(raw), raw))
+            except TypeError:
+                pass  # unhashable (dict/list) values are always walked
             value = normalize_value(raw)
             vtype = check_value_type(value)
             if vtype == "RECORD":
                 node = out.setdefault(key, {"__record__": {}})
-                detect_object_structure([value], node["__record__"])
+                detect_object_structure([value], node["__record__"], seen)
             elif vtype == "ARRAY":
                 node = out.setdefault(key, {"__array__": {}})
                 elems = [normalize_value(e) for e in value]
@@ -267,7 +283,7 @@ def detect_object_structure(records: list, out: dict | None = None) -> dict:
                     # let it downgrade a record-array to scalar
                     continue
                 if isinstance(elems[0], dict):
-                    detect_object_structure(elems, node["__array__"])
+                    detect_object_structure(elems, node["__array__"], seen)
                 else:
                     types = node["__array__"].setdefault("__scalar__", set())
                     for e in elems:
@@ -321,14 +337,29 @@ def infer_schema(records: list) -> T.StructType:
 def infer_tsv_types(rows: list, headers: list, sample_interval: int = 1) -> dict:
     """Per-column resolved type over every Nth row of pre-split TSV rows
     (reference: data_helpers.py:220-277 — sampled inference for flat files,
-    unlike full-pass JSON)."""
-    observed: dict = {h: set() for h in headers}
-    for i, row in enumerate(rows):
-        if i % sample_interval:
-            continue
-        for h, v in zip(headers, row):
-            observed[h].add(check_value_type(normalize_value(v)))
-    return {h: resolve_type_conflict(h, s) for h, s in observed.items()}
+    unlike full-pass JSON).
+
+    Exact but lazy: the lattice maps an ``_id`` column to STRING whatever
+    its values; each distinct cell is checked once per column; and a column
+    stops at its first STRING. A string cell normalizes to a str, int or
+    None, whose checked type is never ARRAY or RECORD, so STRING absorbs
+    every other type the column could still see."""
+    sampled = [row for i, row in enumerate(rows) if not i % sample_interval]
+    distinct: dict = {h: set() for h in headers}
+    # short rows pad with None, which checks as no type, like a missing cell
+    for h, column in zip(headers, itertools.zip_longest(*sampled)):
+        distinct[h].update(column)
+    out = {}
+    for h, values in distinct.items():
+        observed: set = set()
+        if "_id" not in h:
+            for v in values:
+                t = check_value_type(normalize_value(v))
+                observed.add(t)
+                if t == "STRING":
+                    break
+        out[h] = resolve_type_conflict(h, observed)
+    return out
 
 
 # ---------------------------------------------------------------------------

@@ -62,14 +62,26 @@ def _oha_fallback_threshold(driver_mem: str) -> str:
     guard proportionally (2.1M/1M keys) instead of keeping a bound sized
     for a bigger heap. Floor 131072 keeps small-heap hosts above the
     degenerate 128-key default that external-sorted every real grouping.
-    SPARK_GRAFT_OHA_FALLBACK still overrides outright."""
-    import re
+    SPARK_GRAFT_OHA_FALLBACK still overrides outright.
 
-    m = re.fullmatch(r"(\d+)([gGmM])", driver_mem.strip())
+    ``driver_mem`` is read as a JVM -Xmx string, which is how the driver
+    heap is set: an optional k/m/g/t/p suffix (with or without a trailing
+    'b'), a bare number meaning bytes; fractions are accepted. Anything
+    else warns and falls back to the 16g-sized 4194304."""
+    import re
+    import warnings
+
+    m = re.fullmatch(r"(\d+(?:\.\d+)?)\s*([kmgtp]?)b?", driver_mem.strip().lower())
     if not m:
+        warnings.warn(
+            f"unparseable driver memory {driver_mem!r}: ObjectHashAggregate "
+            "fallback threshold falls back to 4194304",
+            stacklevel=2,
+        )
         return "4194304"
-    mib = int(m.group(1)) * (1024 if m.group(2).lower() == "g" else 1)
-    return str(max(131072, min(8 * 4194304, mib * 256)))
+    mib_per_unit = {"": 1 / 1024**2, "k": 1 / 1024, "m": 1, "g": 1024, "t": 1024**2, "p": 1024**3}
+    mib = float(m.group(1)) * mib_per_unit[m.group(2)]
+    return str(max(131072, min(8 * 4194304, int(mib * 256))))
 
 
 def get_spark(app_name: str = "nextgenetl-spark", shuffle_partitions: int | None = None) -> SparkSession:

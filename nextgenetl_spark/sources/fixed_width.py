@@ -7,19 +7,19 @@ the slicing front-end).
 
 Scale design: the body load is ``spark.read.text`` (line-splittable exactly
 like CSV), and every field is a scan-stage ``substring`` projection — no
-UDF, no driver pass over the data. Only inference samples the file head
-driver-side (bounded read, same contract as sources/tsv.py).
+UDF, no driver pass over the data. The header filter and the whole
+slice→normalize→cast projection are one parsed SQL select. Only inference
+samples the file head driver-side (bounded read, same contract as
+sources/tsv.py).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from nextgenetl_spark.functions.text import normalize_value as normalize_value_expr
+from nextgenetl_spark.functions.text import normalize_value_sql, select_sql, sql_ident, sql_string
 from nextgenetl_spark.inference import dedupe_headers, infer_tsv_types, make_name_bq_friendly
-from nextgenetl_spark.sources.tsv import _CAST, _first_file_local
+from nextgenetl_spark.sources.tsv import _first_file_local, cast_sql
 
 
 def _slice_line(line: str, fields: list[tuple[str, int, int]]) -> list[str]:
@@ -55,6 +55,7 @@ def read_fixed_width(
     types = infer_tsv_types(sample_rows, names)
 
     lines = spark.read.text(path)
+    where = None
     if skip_leading_rows:
         # drop header lines by VALUE (distributed reads have no row order):
         # a header line is one whose sliced fields equal the field names'
@@ -69,18 +70,13 @@ def read_fixed_width(
                 f"{path}: cannot read {skip_leading_rows} header line(s) — "
                 f"first file has only {len(header_lines)} line(s)"
             )
-        pred = F.col("value").isin(header_lines)
-        lines = lines.filter(~pred)
+        where = f"NOT `value` IN ({', '.join(sql_string(ln) for ln in header_lines)})"
 
     cols = []
-    for name, (raw_name, start, length) in zip(names, fields):
-        c = F.trim(F.substring(F.col("value"), start, length))
-        c = F.when(c == "", None).otherwise(c)
+    for name, (_, start, length) in zip(names, fields):
+        c = f"trim(substring(`value`, {int(start)}, {int(length)}))"
+        c = f"CASE WHEN {c} = '' THEN NULL ELSE {c} END"
         if normalize:
-            c = normalize_value_expr(c)
-        if types[name] == "INT64":
-            c = c.cast("double").cast("long")
-        else:
-            c = c.cast(_CAST[types[name]])
-        cols.append(c.alias(name))
-    return lines.select(*cols)
+            c = normalize_value_sql(c)
+        cols.append(f"{cast_sql(c, types[name])} AS {sql_ident(name)}")
+    return select_sql(lines, cols, where)

@@ -7,6 +7,11 @@ schema inference is a FULL-pass union of fields across records
 would drop rare fields. For bounded driver memory on big files, inference
 here reads up to ``max_infer_records`` (full pass by default for parity;
 cap it at scale and pass an explicit schema for the 100 TB path).
+The pass is exact but lazy: a scalar already seen at the same field is not
+checked again (``inference.detect_object_structure``). The load normalizes
+every top-level string field in one parsed SQL select
+(``functions.text.select_sql``), with backtick-quoted names, so keys with
+dots, spaces or backticks stay single top-level columns.
 """
 
 from __future__ import annotations
@@ -16,6 +21,7 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from nextgenetl_spark.functions.text import normalize_value_sql, select_sql, sql_ident
 from nextgenetl_spark.inference import infer_schema, normalize_value
 
 
@@ -49,10 +55,6 @@ def read_jsonl(
     a silent drop is unacceptable). The driver-side inference pass applies
     the same policy (raises only under 'fail')."""
     import os
-
-    from pyspark.sql import functions as F
-
-    from nextgenetl_spark.functions.text import normalize_value as normalize_value_expr
 
     if schema is None and schema_path and os.path.exists(schema_path):
         from nextgenetl_spark.schemas import load_schema
@@ -92,10 +94,12 @@ def read_jsonl(
         )
         reader = reader.option("columnNameOfCorruptRecord", "_corrupt_record")
     df = reader.schema(read_schema).json(path)
-    for f in schema.fields:
-        if isinstance(f.dataType, T.StringType):
-            df = df.withColumn(f.name, normalize_value_expr(F.col(f.name)))
-    return df
+    string_fields = {f.name for f in schema.fields if isinstance(f.dataType, T.StringType)}
+    return select_sql(df, [
+        f"{normalize_value_sql(sql_ident(f.name))} AS {sql_ident(f.name)}"
+        if f.name in string_fields else sql_ident(f.name)
+        for f in read_schema.fields
+    ])
 
 
 def records_to_df(spark: SparkSession, records: list, schema: T.StructType | None = None) -> DataFrame:

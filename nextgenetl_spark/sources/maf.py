@@ -7,7 +7,8 @@ many per-sample MAF TSVs are concatenated into one table, with
 per known caller (:213-233).
 
 Spark design: one globbed ``spark.read.csv`` (parallel scan, no driver-side
-concat), ``input_file_name()`` for provenance, per-caller flag expressions.
+concat), ``input_file_name()`` for provenance, per-caller flag expressions,
+all in one parsed SQL select.
 The reference's threaded BucketPuller + sequential file append collapses
 into the scan itself.
 """
@@ -15,9 +16,8 @@ into the scan itself.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from nextgenetl_spark.functions.text import caller_flag
+from nextgenetl_spark.functions.text import caller_flag_sql, select_sql, sql_ident, sql_string
 
 DEFAULT_CALLERS = ("muse", "mutect2", "pindel", "varscan2")
 
@@ -34,15 +34,17 @@ def read_maf_concat(
     """Read MAF file(s) → one DataFrame with file-provenance and caller
     flags. MAF headers start with '#version' comment lines; the first
     non-comment row is the header."""
-    df = (
-        spark.read.options(sep=sep, header=True, comment=comment)
-        .csv(paths)
-        .withColumn(
-            file_id_col,
-            F.regexp_extract(F.input_file_name(), r"([^/]+?)(\.maf)?(\.tsv)?(\.gz)?$", 1),
-        )
-    )
-    if callers_col in df.columns:
-        for caller in callers:
-            df = df.withColumn(caller, caller_flag(callers_col, caller))
-    return df
+    df = spark.read.options(sep=sep, header=True, comment=comment).csv(paths)
+    names = df.columns
+    stem = sql_string(r"([^/]+?)(\.maf)?(\.tsv)?(\.gz)?$")
+    new = {file_id_col: f"regexp_extract(input_file_name(), {stem}, 1)"}
+    if callers_col in names:
+        new.update((c, caller_flag_sql(sql_ident(callers_col), c)) for c in callers)
+    # withColumn semantics: a new column replaces a same-named one (the
+    # default case-insensitive resolver) in place; the rest append
+    cols = []
+    for c in names:
+        hit = next((n for n in new if n.lower() == c.lower()), None)
+        cols.append(sql_ident(c) if hit is None else f"{new.pop(hit)} AS {sql_ident(hit)}")
+    cols += [f"{e} AS {sql_ident(n)}" for n, e in new.items()]
+    return select_sql(df, cols)

@@ -11,7 +11,12 @@ Reference behavior being reproduced (S1/Y7/Y8/Y9):
 Scale design: inference samples the file head driver-side (bounded read);
 the full load is a distributed ``spark.read.csv`` with an explicit schema —
 no Spark-side inference pass over the whole dataset, no double scan.
-Normalization is a column expression applied in the scan projection.
+The header-row filter and the normalize→cast projection are one parsed SQL
+select (``functions.text.select_sql``), so building the DataFrame costs
+the same few JVM round trips at 10 columns or 140, and the plan is the one
+the DataFrame API would build. Inference is exact but lazy
+(``inference.infer_tsv_types``): ``_id`` columns are STRING unseen, each
+distinct cell is checked once, and a column stops at its first STRING.
 """
 
 from __future__ import annotations
@@ -20,10 +25,9 @@ import csv
 import io
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from nextgenetl_spark.functions.text import normalize_value as normalize_value_expr
+from nextgenetl_spark.functions.text import normalize_value_sql, select_sql, sql_ident, sql_string
 from nextgenetl_spark.inference import (
     BQ_TO_SPARK,
     dedupe_headers,
@@ -211,27 +215,29 @@ def read_tsv(
         .schema(str_schema)
         .csv(path)
     )
+    where = None
     if skip_leading_rows:
         # drop the header row(s) by value, not position: distributed reads
         # have no row order. Header rows are exactly the rows equal to the
         # raw header tuple.
-        header_pred = None
-        for h, raw in zip(headers, raw_headers):
-            p = F.col(h) == F.lit(raw)
-            header_pred = p if header_pred is None else (header_pred & p)
-        df = df.filter(~F.coalesce(header_pred, F.lit(False)))
-
+        header_pred = " AND ".join(
+            f"{sql_ident(h)} = {sql_string(raw)}" for h, raw in zip(headers, raw_headers)
+        )
+        where = f"NOT coalesce({header_pred}, false)"
     cols = []
     for h in headers:
-        c = normalize_value_expr(F.col(h)) if normalize else F.col(h)
-        if types[h] == "INT64":
-            # trivial-float collapse ('42.0' → 42), mirroring normalize_value:
-            # a direct string→long cast rejects the decimal point
-            c = c.cast("double").cast("long")
-        else:
-            c = c.cast(_CAST[types[h]])
-        cols.append(c.alias(h))
-    return df.select(*cols)
+        e = normalize_value_sql(sql_ident(h)) if normalize else sql_ident(h)
+        cols.append(f"{cast_sql(e, types[h])} AS {sql_ident(h)}")
+    return select_sql(df, cols, where)
+
+
+def cast_sql(expr: str, bq_type: str) -> str:
+    """SQL text casting the string expression ``expr`` to ``bq_type``."""
+    if bq_type == "INT64":
+        # trivial-float collapse ('42.0' → 42), mirroring normalize_value:
+        # a direct string→long cast rejects the decimal point
+        return f"CAST(CAST({expr} AS double) AS long)"
+    return f"CAST({expr} AS {_CAST[bq_type]})"
 
 
 def schema_from_types(types: dict[str, str]) -> T.StructType:

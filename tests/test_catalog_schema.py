@@ -316,7 +316,46 @@ def test_oha_threshold_derived_from_heap():
     assert t("512m") == "131072"       # floor: never the degenerate 128
     assert t("1g") == str(1024 * 256)
     assert t("256g") == str(8 * 4194304)  # cap
-    assert t("weird") == "4194304"     # unparseable -> measured default
+    import pytest
+
+    with pytest.warns(UserWarning, match="unparseable driver memory"):
+        assert t("weird") == "4194304"  # unparseable -> measured default, loudly
+
+
+def test_oha_threshold_parses_every_memory_string():
+    """Every -Xmx-style spelling of a heap resolves to its own threshold:
+    fractions, k/m/g/t suffixes with or without 'b', any case, and bare
+    bytes — none of them silently takes the 16g-sized default."""
+    import warnings
+
+    from nextgenetl_spark.session import _default_driver_mem
+    from nextgenetl_spark.session import _oha_fallback_threshold as t
+
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        for spelling in ("8g", "8G", "8gb", "8192m", "8192MB", "8388608k", str(8 * 1024**3)):
+            assert t(spelling) == "2097152", spelling
+        assert t("1.5g") == str(1536 * 256)
+        assert t("16384k") == "131072"          # 16 MiB: the floor
+        assert t("2t") == str(8 * 4194304)      # the cap
+        assert t(" 4g ") == str(4096 * 256)
+        t(_default_driver_mem())  # the session's own default parses without a warning
+
+
+def test_parquet_ts_unit_skips_remote_paths(monkeypatch):
+    """A URI-scheme path returns None before pyarrow sees it (pyarrow's
+    read_schema raises ArrowInvalid, a ValueError, on s3a:// URIs), so
+    catalog.load takes the plain Spark read for a remote events table."""
+    import pyarrow.parquet as pq
+
+    from nextgenetl_spark import catalog as cat
+
+    def boom(*a, **k):
+        raise ValueError("pyarrow must not open a remote path")
+
+    monkeypatch.setattr(pq, "read_schema", boom)
+    assert cat._parquet_ts_unit("s3a://bucket/sf/events.parquet") is None
+    assert cat._parquet_ts_unit("hdfs://nn/sf/events") is None
 
 
 def test_schema_cache_bypasses_remote_and_bounds_per_path(spark, tmp_path):

@@ -164,3 +164,123 @@ def test_render_sql_only_touches_known_params(sql, params):
     assert out == expect
     if not re.search(r"\{[A-Za-z_][A-Za-z0-9_]*\}", sql):
         assert out == sql  # brace-free or non-param braces: identity
+
+
+# --- exact-but-lazy inference against the full-pass originals ---
+
+from nextgenetl_spark.inference import (  # noqa: E402
+    NULL_VOCAB,
+    detect_object_structure,
+    infer_tsv_types,
+)
+
+
+def _full_pass_infer_tsv_types(rows, headers, sample_interval=1):
+    """The full-pass infer_tsv_types the lazy one replaced, kept verbatim
+    as the oracle."""
+    observed: dict = {h: set() for h in headers}
+    for i, row in enumerate(rows):
+        if i % sample_interval:
+            continue
+        for h, v in zip(headers, row):
+            observed[h].add(check_value_type(normalize_value(v)))
+    return {h: resolve_type_conflict(h, s) for h, s in observed.items()}
+
+
+def _full_pass_detect(records, out=None):
+    """The memo-free detect_object_structure, kept verbatim as the oracle."""
+    out = out if out is not None else {}
+    for rec in records:
+        for key, raw in rec.items():
+            value = normalize_value(raw)
+            vtype = check_value_type(value)
+            if vtype == "RECORD":
+                node = out.setdefault(key, {"__record__": {}})
+                _full_pass_detect([value], node["__record__"])
+            elif vtype == "ARRAY":
+                node = out.setdefault(key, {"__array__": {}})
+                elems = [normalize_value(e) for e in value]
+                if not elems:
+                    continue
+                if isinstance(elems[0], dict):
+                    _full_pass_detect(elems, node["__array__"])
+                else:
+                    types = node["__array__"].setdefault("__scalar__", set())
+                    for e in elems:
+                        types.add(check_value_type(e))
+            else:
+                node = out.setdefault(key, set())
+                if isinstance(node, set):
+                    node.add(vtype)
+    return out
+
+
+_tsv_cells = st.one_of(
+    st.sampled_from(list(NULL_VOCAB) + ["NA", "N/A", " None ", "Not Reported", "[UNKNOWN]"]),
+    st.sampled_from(["1.0", "42.0", "-3.00", "100.000", "0.0", "2.01803E+13", "1e3"]),  # trivial floats
+    st.sampled_from(["007", "0012", "00", "0"]),  # leading-zero ids
+    st.sampled_from(["2020-01-02", "1999-12-31", "2021-2-3"]),  # dates
+    st.sampled_from(["2020-01-02 03:04:05", "2020-01-02T03:04:05.123456", "12:30:00"]),  # timestamps
+    st.sampled_from(["yes", "No", "TRUE", "false", "y", "off", "1"]),
+    st.integers(-(10**6), 10**6).map(str),
+    st.floats(allow_nan=True, allow_infinity=True).map(str),
+    st.text(max_size=6),
+)
+_tsv_headers = st.lists(st.sampled_from(["a", "b", "x", "case_id", "b_id_c", "n", "a"]), min_size=1, max_size=6)
+
+
+@st.composite
+def _tsv_samples(draw):
+    headers = draw(_tsv_headers)
+    width = len(headers)
+    # ragged rows: short rows miss trailing cells, long rows carry extras
+    rows = draw(st.lists(st.lists(_tsv_cells, max_size=width + 1), max_size=30))
+    return headers, rows
+
+
+@given(_tsv_samples(), st.sampled_from([1, 2, 3, 7]))
+@settings(max_examples=400, deadline=None, derandomize=True)
+def test_lazy_infer_tsv_types_equals_full_pass(sample, sample_interval):
+    """Skipping `_id` columns, checking each distinct cell once and stopping
+    at the first STRING give exactly the full pass's types."""
+    headers, rows = sample
+    got = infer_tsv_types(rows, headers, sample_interval=sample_interval)
+    assert got == _full_pass_infer_tsv_types(rows, headers, sample_interval=sample_interval)
+    assert list(got) == list(dict.fromkeys(headers))
+
+
+_json_scalars = st.sampled_from([True, 1, False, 0, 1.0, "1", "yes", "x", None, "NA", 2.5, "007", ""])
+_json_values = st.recursive(
+    _json_scalars,
+    lambda inner: st.one_of(
+        st.lists(inner, max_size=3),
+        st.dictionaries(st.sampled_from(["p", "q"]), inner, max_size=2),
+    ),
+    max_leaves=8,
+)
+
+
+@given(st.lists(st.dictionaries(st.sampled_from(["f", "g"]), _json_values, max_size=2), min_size=2, max_size=12))
+@settings(max_examples=300, deadline=None, derandomize=True)
+def test_memoized_detect_object_structure_equals_full_pass(records):
+    """Skipping scalars already seen at the same node leaves the structure
+    exactly as the full pass builds it (or fails the same way)."""
+    try:
+        want = _full_pass_detect(records)
+    except Exception as exc:  # a record/scalar clash on one key
+        try:
+            detect_object_structure(records)
+        except type(exc):
+            return
+        raise AssertionError(f"full pass raised {exc!r}, memoized pass did not")
+    assert detect_object_structure(records) == want
+
+
+def test_detect_object_structure_keeps_true_and_one_apart():
+    """True == 1 in Python, so a memo keyed on the value alone would drop
+    whichever came second; keyed on (type, value) both are recorded."""
+    recs = [{"f": True, "r": {"g": 1}}, {"f": 1, "r": {"g": True}}, {"f": True}, {"f": 1.0}]
+    got = detect_object_structure(recs)
+    assert got["f"] == {"BOOL", "INT64"}
+    assert got["r"]["__record__"]["g"] == {"BOOL", "INT64"}
+    assert got == _full_pass_detect(recs)

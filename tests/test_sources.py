@@ -214,3 +214,146 @@ def test_read_fixed_width_duplicate_names(spark, tmp_path):
     p.write_text("1  2  x \n")
     df = read_fixed_width(spark, str(p), fields=[("a", 1, 3), ("a", 4, 3), ("b", 7, 3)])
     assert df.columns == ["a", "a_1", "b"]
+
+
+# --- SQL-text ingest projection: equivalence with the Column-API builder ---
+
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
+
+from tests.conftest import fuzz_examples
+
+_NULL_WORDS = ["na", "n/a", "none", "", "--", "-", "null", "not reported", "unknown",
+               "[not available]", "[not applicable]", "[unknown]", "."]
+_PIECES = ["'", "\\", "\\'", "''", "\\\\", " ", "\t", "\n", "\u00a0", "\u2003", "\u3000",
+           "yes", "no", "true", "false", "x", "\u00e9", "{", "}", "`", "%s"] + _NULL_WORDS
+
+
+def _column_api_normalize(c):
+    """The Column-API normalizer the SQL template replaced, kept verbatim
+    as the oracle."""
+    from pyspark.sql import functions as F
+
+    t = F.trim(c)
+    low = F.lower(t)
+    return (
+        F.when(low.isin(_NULL_WORDS), F.lit(None))
+        .when(low.isin(["yes", "true"]), F.lit("True"))
+        .when(low.isin(["no", "false"]), F.lit("False"))
+        .otherwise(t)
+    )
+
+
+def _mixed_case(s, flips):
+    return "".join(ch.upper() if f else ch for ch, f in zip(s, flips))
+
+
+_raw_strings = st.one_of(
+    st.text(max_size=12),
+    st.builds(
+        _mixed_case,
+        st.lists(st.sampled_from(_PIECES), max_size=4).map("".join),
+        st.lists(st.booleans(), min_size=40, max_size=40),
+    ),
+)
+
+
+@settings(
+    max_examples=fuzz_examples(120, 25),
+    deadline=None,
+    derandomize=True,
+    suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
+)
+@given(values=st.lists(_raw_strings, min_size=1, max_size=12))
+def test_normalize_value_sql_matches_column_builder(spark, values):
+    """normalize_value_sql over a column AND over an escaped literal of each
+    value agrees with the Column-API builder on quotes, backslashes, unicode
+    whitespace and mixed-case null/yes/no words."""
+    from pyspark.sql import functions as F
+
+    from nextgenetl_spark.functions.text import normalize_value_sql, sql_string
+
+    df = spark.createDataFrame([(v,) for v in values], "s string")
+    cols = [_column_api_normalize(F.col("s")).alias("old"), F.expr(normalize_value_sql("s")).alias("new")]
+    for i, v in enumerate(values):
+        cols += [_column_api_normalize(F.lit(v)).alias(f"old{i}"),
+                 F.expr(normalize_value_sql(sql_string(v))).alias(f"new{i}")]
+    for r in df.select(*cols).collect():
+        assert r["old"] == r["new"]
+        for i in range(len(values)):
+            assert r[f"old{i}"] == r[f"new{i}"], values[i]
+
+
+def test_read_tsv_header_filter_escapes_quotes_and_backslashes(spark, tmp_path):
+    """The header row is dropped by comparing every column with its raw
+    header text as an SQL literal, so a header holding ' and \\ must still
+    match itself, and only itself."""
+    p = tmp_path / "q.tsv"
+    p.write_text(
+        "it's\tback\\slash\t{n}\n"
+        "it's\tback\\slash\t{n}\n"  # a repeated header row is dropped too
+        "it\tback\\\\slash\t1\n"
+        "it's\tback\\slash\t2\n"
+    )
+    df = read_tsv(spark, str(p))
+    assert df.columns == ["it_s", "back_slash", "_n_"]
+    rows = sorted(tuple(r) for r in df.collect())
+    assert rows == [("it", "back\\\\slash", "1"), ("it's", "back\\slash", "2")]
+
+
+def test_read_jsonl_quotes_awkward_keys(spark, tmp_path):
+    """JSON keys with a backtick, a space and a dot are one top-level
+    column each (backtick-quoted, backticks doubled), and their string
+    values are normalized like any other."""
+    p = tmp_path / "keys.jsonl"
+    recs = [
+        {"a`b": " N/A ", "c d": "Yes", "e.f": " x ", "n": 1},
+        {"a`b": "kept", "c d": "maybe", "e.f": "NULL", "n": 2},
+    ]
+    p.write_text("\n".join(json.dumps(r) for r in recs))
+    df = read_jsonl(spark, str(p))
+    assert df.columns == ["a`b", "c d", "e.f", "n"]
+    rows = sorted((tuple(r) for r in df.collect()), key=lambda r: r[3])
+    assert rows == [(None, "True", "x", 1), ("kept", "maybe", None, 2)]
+
+
+def test_read_tsv_build_cost_is_flat_in_width(spark, tmp_path):
+    """Building read_tsv's DataFrame issues about as many py4j commands
+    for a 140-column file as for a 10-column one: the projection is one
+    SQL text, not a JVM call per column."""
+    import threading
+
+    import py4j.clientserver as cs
+    from py4j.protocol import MEMORY_COMMAND_NAME, MEMORY_DEL_SUBCOMMAND_NAME
+
+    def write(ncols):
+        p = tmp_path / f"w{ncols}.tsv"
+        header = [f"c{i}" for i in range(ncols)]
+        rows = [[str(r * i) if i % 2 else f"{r}.5" for i in range(ncols)] for r in range(5)]
+        p.write_text("\n".join("\t".join(x) for x in [header, *rows]) + "\n")
+        return str(p)
+
+    # count this thread's commands; py4j's finalizer thread sends the
+    # deletes of garbage-collected JVM references whenever it gets to them
+    me = threading.get_ident()
+    delete = MEMORY_COMMAND_NAME + MEMORY_DEL_SUBCOMMAND_NAME
+    orig = cs.ClientServerConnection.send_command
+    counts = {}
+    for ncols in (10, 140):
+        path = write(ncols)
+        read_tsv(spark, path)  # warm the reader path once
+        n = [0]
+
+        def counting(self, command, _n=n):
+            if threading.get_ident() == me and not command.startswith(delete):
+                _n[0] += 1
+            return orig(self, command)
+
+        cs.ClientServerConnection.send_command = counting
+        try:
+            df = read_tsv(spark, path)
+        finally:
+            cs.ClientServerConnection.send_command = orig
+        assert len(df.columns) == ncols
+        counts[ncols] = n[0]
+    assert abs(counts[140] - counts[10]) < 20, counts
