@@ -80,12 +80,22 @@ def _schema_cache_key(path: str) -> tuple[str, str] | None:
         return None
 
 
+def _schema_cache_get(key: tuple[str, str]) -> T.StructType | None:
+    """Memo lookup; a hit moves its entry to the end of the dict, so dict
+    order is recency order for ``_schema_cache_put``'s eviction."""
+    schema = _SCHEMA_CACHE.pop(key, None)
+    if schema is not None:
+        _SCHEMA_CACHE[key] = schema
+    return schema
+
+
 def _schema_cache_put(key: tuple[str, str], schema: T.StructType) -> None:
     """Insert with a bound that evicts only STALE entries: first drop
     superseded fingerprints of the SAME path (in-place rewrites, per-run
     staged copies under a reused dir), then — if genuinely full of live
-    entries — drop oldest-inserted (dict order) rather than clearing the
-    ten hot fixed-table entries wholesale (r11 ADVICE #4)."""
+    entries — drop the least recently used (dict order, refreshed on every
+    hit by ``_schema_cache_get``) rather than clearing the ten hot
+    fixed-table entries wholesale (r11 ADVICE #4)."""
     stale = [k for k in _SCHEMA_CACHE if k[0] == key[0] and k != key]
     for k in stale:
         del _SCHEMA_CACHE[k]
@@ -106,7 +116,7 @@ def read_parquet_cached(spark: SparkSession, path: str) -> DataFrame:
     key = _schema_cache_key(path)
     if key is None:
         return spark.read.parquet(path)
-    cached = _SCHEMA_CACHE.get(key)
+    cached = _schema_cache_get(key)
     if cached is not None:
         return spark.read.schema(cached).parquet(path)
     df = spark.read.parquet(path)
@@ -117,7 +127,7 @@ def read_parquet_cached(spark: SparkSession, path: str) -> DataFrame:
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = f"{sf_dir}/{name}.parquet"
     cache_key = _schema_cache_key(path)
-    cached = _SCHEMA_CACHE.get(cache_key) if cache_key is not None else None
+    cached = _schema_cache_get(cache_key) if cache_key is not None else None
     if cached is not None:
         df = spark.read.schema(cached).parquet(path)
     elif name == "events" and _parquet_ts_unit(path) == "ns":

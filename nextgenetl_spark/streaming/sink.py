@@ -54,7 +54,9 @@ def run_stream_to_lake(
 ) -> None:
     """Run a bounded (availableNow) streaming write into the lake dir with
     a real checkpoint — restartable and exactly-once by idempotent batch
-    overwrite."""
+    overwrite. A write that does not finish within ``timeout_sec`` raises
+    ``TimeoutError`` naming ``out_dir``: the lake then holds only some of
+    the batches."""
     q = (
         sdf.writeStream.foreachBatch(exactly_once_parquet_sink(out_dir, partition_cols))
         .option("checkpointLocation", checkpoint_dir)
@@ -62,6 +64,11 @@ def run_stream_to_lake(
         .start()
     )
     try:
-        q.awaitTermination(timeout_sec)
+        finished = q.awaitTermination(timeout_sec)
     finally:
         q.stop()
+    if not finished:
+        raise TimeoutError(
+            f"run_stream_to_lake({out_dir}): availableNow write did not finish "
+            f"within {timeout_sec}s — the lake holds a partial replay"
+        )

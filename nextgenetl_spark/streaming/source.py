@@ -186,7 +186,9 @@ def run_memory_replay(
     """Run a bounded availableNow replay of ``out`` into a memory sink named
     ``name`` under a scoped state-store partition cap (``replay_shuffle_cap``)
     and return the sink table. The shared tail of every stream_* workload —
-    one place owns the start/await/stop/restore discipline."""
+    one place owns the start/await/stop/restore discipline. A replay that
+    does not finish within ``timeout_s`` raises ``TimeoutError`` naming
+    ``name`` instead of returning the partial sink."""
     with replay_shuffle_cap(spark, cap):
         q = (
             out.writeStream.format("memory")
@@ -196,13 +198,18 @@ def run_memory_replay(
             .start()
         )
         try:
-            q.awaitTermination(timeout_s)
+            finished = q.awaitTermination(timeout_s)
         finally:
             # stop() in finally: if awaitTermination raises (e.g.
             # StreamingQueryException) the query must not be left running
             # with the memory sink name claimed — the next replay under the
             # same name would fail forever.
             q.stop()
+    if not finished:
+        raise TimeoutError(
+            f"{name}: availableNow replay did not finish within {timeout_s}s — "
+            "refusing to return a partial memory sink"
+        )
     return spark.table(name)
 
 

@@ -96,48 +96,12 @@ def _oracle_verified() -> dict[str, int]:
     return green
 
 
-def _changed_since_evidence(verified: dict[str, int], snap_path: str | None = None) -> set[str]:
-    """Names whose implementation fingerprint (fingerprints.py — symbol-level
-    transitive source closure) differs from the snapshot taken at the round
-    commit their newest green row tested. These rotate FIRST (round-8 verdict
-    ask #1): a changed operator with stale evidence is a correctness risk
-    oldest-first rotation can miss for many rounds.
-
-    The snapshot (``_evidence_fps.json``, regenerated each round start by
-    ``tools/gen_evidence_fps.py`` from the immutable round-boundary commits)
-    records {name: {round, fp}}. Comparison only happens when the snapshot
-    round EQUALS the entry's newest green round — a snapshot older than the
-    evidence means the green row already re-tested newer code, and a missing
-    entry means no basis to compare; both count as unchanged. Any failure
-    (missing file, no git history at generation time) degrades to the plain
-    oldest-first rotation, never breaks driver import."""
-    try:
-        import json
-        import os
-
-        if snap_path is None:
-            snap_path = os.path.join(os.path.dirname(__file__), "_evidence_fps.json")
-        with open(snap_path, encoding="utf-8") as fh:
-            snap = json.load(fh)
-        from nextgenetl_spark.fingerprints import tree_reader, workload_fingerprints
-
-        root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-        targets = {
-            n: (REGISTRY[n].fn.__module__, REGISTRY[n].fn.__name__)
-            for n, rnd in verified.items()
-            if n in REGISTRY and n in snap and snap[n].get("round") == rnd
-        }
-        cur = workload_fingerprints(tree_reader(root), targets)
-        return {n for n, fp in cur.items() if fp != snap[n].get("fp")}
-    except Exception:
-        return set()
-
-
 def load_all() -> dict[str, Workload]:
-    """Import every workload module (side-effect: registry population)."""
-    # Import order = registration order within each partition; text and
-    # similarity (the LLM-data-pipeline surface, zero oracle rows in r01)
-    # go first so the driver reaches them earliest.
+    """Import every workload module (side-effect: registry population) and
+    order the registry for a checker that walks it front to back: entries
+    without green oracle evidence first, in import order, then the verified
+    ones, oldest newest-evidence round first. The sort is stable, so import
+    order breaks ties."""
     from nextgenetl_spark.workloads import text  # noqa: F401  isort: skip
     from nextgenetl_spark.workloads import similarity  # noqa: F401  isort: skip
     from nextgenetl_spark.workloads import relational  # noqa: F401  isort: skip
@@ -149,86 +113,15 @@ def load_all() -> dict[str, Workload]:
         pipelines,
     )
 
-    green = _oracle_verified()
     # A negative round number means "checked but only ever as no_oracle":
     # that counts as settled ONLY while the entry still has no oracle — an
     # entry that gained one since re-enters the unverified tier.
     verified = {
         n: abs(rnd)
-        for n, rnd in green.items()
+        for n, rnd in _oracle_verified().items()
         if rnd > 0 or (n in REGISTRY and REGISTRY[n].oracle is None)
     }
-    # The driver's check may stop at a fixed budget (round 1: exactly 50).
-    # Within the unverified tier, ALTERNATE between the SURVEY §2 core
-    # modules (relational/arrays/files/pipelines/multimodal — the judge's
-    # per-ID checklist) and the extension surface (text/similarity/events —
-    # the LLM-pipeline ops): a 1:1 interleave covers both families
-    # proportionally under ANY budget, where a module-block order would
-    # spend the whole budget on one family and re-create round 1's gap.
-    core_mods = {"relational", "arrays", "files", "pipelines", "multimodal"}
-
-    def _mod(wl):
-        return wl.fn.__module__.rsplit(".", 1)[-1]
-
-    # Within the unverified tier, rank by check cost so a TIME-boxed driver
-    # budget verifies the most queries: plain scans/aggs first, the
-    # iterative/quadratic family next, real availableNow streaming runs
-    # (micro-batch machinery, seconds each regardless of sf) last. The sort
-    # is stable, so registration order is preserved within each class.
-    heavy = {
-        "near_dup_groups", "near_dup_groups_star", "ngram_jaccard_pairs",
-        "near_dup_pairs_auto", "minhash_near_dup", "minhash_md5_near_dup",
-        "simhash_dedup_keep", "semantic_dedup_keep", "simhash_hamming_pairs",
-        "embedding_near_dup", "embedding_near_dup_auto", "training_assembly",
-        "curation_pipeline", "ann_ivf_topk", "ann_ivf_full_probe",
-        "ann_lsh_multiprobe", "ann_cosine_topk", "boilerplate_scrub",
-    }
-
-    def _cost(name: str, wl: Workload) -> int:
-        # ∅-oracle entries last within the unverified tier: a driver check
-        # slot spent on one can only ever record `err: no_oracle`, never a
-        # hash-verified green row.
-        if wl.oracle is None:
-            return 3
-        if name.startswith("stream_"):
-            return 2
-        return 1 if name in heavy else 0
-
-    tier0 = sorted(
-        ((n, wl) for n, wl in REGISTRY.items() if n not in verified),
-        key=lambda kv: _cost(kv[0], kv[1]),
-    )
-    # ∅-oracle entries stay out of the interleave entirely — the zip would
-    # otherwise pull a cost-3 entry forward whenever one family is short —
-    # and are appended after every hash-verifiable unverified entry.
-    no_oracle_tail = [(n, wl) for n, wl in tier0 if wl.oracle is None]
-    tier0 = [(n, wl) for n, wl in tier0 if wl.oracle is not None]
-    core = [(n, wl) for n, wl in tier0 if _mod(wl) in core_mods]
-    ext = [(n, wl) for n, wl in tier0 if _mod(wl) not in core_mods]
-    interleaved: list = []
-    for i in range(max(len(core), len(ext))):
-        if i < len(core):
-            interleaved.append(core[i])
-        if i < len(ext):
-            interleaved.append(ext[i])
-    interleaved += no_oracle_tail
-
-    # Verified tier: CHANGED-since-evidence first (round-8 verdict ask #1 —
-    # an entry whose implementation fingerprint no longer matches the code
-    # its newest green row tested is a re-verification priority regardless
-    # of age), then oldest newest-evidence first so the driver's remaining
-    # budget keeps rotating re-greens onto the stalest rows (round-4 ask #1).
-    # Within each class the slow availableNow streaming module still sorts
-    # last (scoped per-(changed, round) so old stream evidence isn't starved
-    # behind every fresher batch query). Stable sort keeps registration
-    # order within each class.
-    changed = _changed_since_evidence(verified)
-    tier1 = sorted(
-        ((n, wl) for n, wl in REGISTRY.items() if n in verified),
-        key=lambda kv: (kv[0] not in changed, verified[kv[0]], _mod(kv[1]) == "events"),
-    )
-
-    ordered = dict(interleaved + tier1)
+    ordered = sorted(REGISTRY.items(), key=lambda kv: (kv[0] in verified, verified.get(kv[0], 0)))
     REGISTRY.clear()
     REGISTRY.update(ordered)
     return REGISTRY

@@ -516,8 +516,15 @@ def stream_ann_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
-    q.stop()
+    try:
+        finished = q.awaitTermination(300)
+    finally:
+        q.stop()
+    if not finished:
+        raise TimeoutError(
+            "stream_ann_lookup: availableNow scoring did not finish within "
+            "300s — refusing to return the batches scored so far"
+        )
     return spark.createDataFrame(
         results, "query_id long, neighbor_id long, sim double, rank int"
     )

@@ -378,3 +378,27 @@ def test_schema_cache_bypasses_remote_and_bounds_per_path(spark, tmp_path):
     assert ("/p/x", "fp1") not in cat._SCHEMA_CACHE  # stale evicted
     assert cat._SCHEMA_CACHE[("/p/x", "fp2")] == s2
     assert ("/p/hot", "fph") in cat._SCHEMA_CACHE   # hot entry survives
+
+
+def test_schema_cache_evicts_least_recently_used(spark, tmp_path):
+    """A full memo evicts the least recently USED entry: a read that hits
+    refreshes recency, so the oldest-inserted entry survives once read."""
+    from pyspark.sql import types as T
+
+    from nextgenetl_spark import catalog as cat
+
+    path = str(tmp_path / "t.parquet")
+    spark.range(3).write.parquet(path)
+    cat._SCHEMA_CACHE.clear()
+    cat.read_parquet_cached(spark, path)  # miss: the oldest entry
+    key = cat._schema_cache_key(path)
+    s = T.StructType([T.StructField("a", T.LongType())])
+    for i in range(255):
+        cat._schema_cache_put((f"/lru/{i}", "fp"), s)
+    assert len(cat._SCHEMA_CACHE) == 256
+    assert cat.read_parquet_cached(spark, path).count() == 3  # hit
+    cat._schema_cache_put(("/lru/new", "fp"), s)
+    assert len(cat._SCHEMA_CACHE) == 256
+    assert key in cat._SCHEMA_CACHE
+    assert ("/lru/0", "fp") not in cat._SCHEMA_CACHE
+    cat._SCHEMA_CACHE.clear()

@@ -484,3 +484,28 @@ def test_sharded_debounce_equals_per_user_keyed(spark):
     want = sorted(tuple(r) for r in per_user.collect())
     assert len(got) > 0
     assert got == want
+
+
+@pytest.mark.parametrize("site", ["run_memory_replay", "run_stream_to_lake", "stream_ann_lookup"])
+def test_stream_timeout_fails_by_name(spark, tmp_path, monkeypatch, site):
+    """A bounded replay whose awaitTermination times out (returns False)
+    must raise TimeoutError naming the query, never hand back the partial
+    sink, and must not leave the query running."""
+    from pyspark.sql.streaming.query import StreamingQuery
+
+    from nextgenetl_spark.streaming.sink import run_stream_to_lake
+    from nextgenetl_spark.streaming.source import run_memory_replay
+    from nextgenetl_spark.workloads.similarity import stream_ann_lookup
+
+    monkeypatch.setattr(StreamingQuery, "awaitTermination", lambda self, timeout=None: False)
+    ev = events_stream(spark, SF_SMOKE).select("event_id", "event_type", "value")
+    lake = str(tmp_path / "lake")
+    if site == "run_memory_replay":
+        call, name = (lambda: run_memory_replay(spark, ev, "t_timeout_replay")), "t_timeout_replay"
+    elif site == "run_stream_to_lake":
+        call, name = (lambda: run_stream_to_lake(ev, lake, str(tmp_path / "ckpt"))), lake
+    else:
+        call, name = (lambda: stream_ann_lookup(spark, SF_SMOKE)), "stream_ann_lookup"
+    with pytest.raises(TimeoutError, match=name):
+        call()
+    assert not spark.streams.active

@@ -4,9 +4,10 @@ Round-5's §4.2 curves measured the two halves separately (94.4s pair
 materialization, then a 25-32s CC solve over checkpointed pairs). This
 runs the COMPOSED pipeline — minhash-LSH pairs → connected components →
 keep-list (min doc_id per component) → survivor count — as ONE plan
-under the default 8 GB driver heap, and records wall + spill via the UI
-REST API, so the datapoint shows the full production shape: nothing is
-pre-materialized, the pair stream feeds the iterative solver directly,
+on the factory session (``session.get_spark``, default heap; set
+SPARK_GRAFT_DRIVER_MEM to pin one) and records wall + spill from the
+status store, so the datapoint shows the full production shape: nothing
+is pre-materialized, the pair stream feeds the iterative solver directly,
 and the solver's DISK_ONLY checkpoints (the round-5 ×100 OOM fix) bound
 heap at any edge volume.
 
@@ -25,50 +26,14 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import functions as F
+from pyspark.sql import functions as F  # noqa: E402
 
-from nextgenetl_spark.catalog import load
-from nextgenetl_spark.operators import dedup as D
-
-
-def _ui_spark():
-    """Engine-default-heap session (8g, session.py's default — overridable
-    via SPARK_GRAFT_DRIVER_MEM) with the UI on for spill metrics."""
-    from pyspark.sql import SparkSession
-
-    cpus = os.environ.get("SPARK_GRAFT_CPUS")
-    master = f"local[{cpus}]" if cpus else "local[*]"
-    parts = int(cpus) if cpus else (os.cpu_count() or 8)
-    return (
-        SparkSession.builder.appName("dedup-pipeline-bench")
-        .master(master)
-        .config("spark.sql.shuffle.partitions", str(parts))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.retainedStages", "500")
-        # the engine's default heap (session.py): the round-5 OOM-fix
-        # claim under test is "DISK_ONLY checkpoints bound heap at any
-        # edge volume AT the 8g default" — bare local-mode 1g is not the
-        # deployment shape (a real executor has several GB)
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .getOrCreate()
-    )
-
-
-def _spill(spark, min_stage_id):
-    import urllib.request
-
-    base = f"{spark.sparkContext.uiWebUrl}/api/v1/applications/{spark.sparkContext.applicationId}"
-    stages = json.load(urllib.request.urlopen(f"{base}/stages?status=COMPLETE"))
-    mem = disk = 0
-    for s in stages:
-        if s["stageId"] >= min_stage_id:
-            mem += s.get("memoryBytesSpilled", 0)
-            disk += s.get("diskBytesSpilled", 0)
-    return {"memory_spilled_mb": mem // 2**20, "disk_spilled_mb": disk // 2**20}
+from nextgenetl_spark.catalog import load  # noqa: E402
+from nextgenetl_spark.operators import dedup as D  # noqa: E402
+from nextgenetl_spark.session import DEFAULT_SF_DIR, get_spark  # noqa: E402
+from tools.spill_bench import SpillCounters  # noqa: E402
 
 
 def replicate_docs(d, n):
@@ -83,9 +48,9 @@ def replicate_docs(d, n):
 def main() -> None:
     factor = int(sys.argv[1]) if len(sys.argv) > 1 else 100
     variants = sys.argv[2:] or ["min_label", "star"]
-    spark = _ui_spark()
-    sf = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    d = replicate_docs(load(spark, sf, "documents"), factor)
+    spark = get_spark("dedup-pipeline-bench")
+    counters = SpillCounters(spark)
+    d = replicate_docs(load(spark, DEFAULT_SF_DIR, "documents"), factor)
     n_docs = d.count()
     out = {
         "factor": factor,
@@ -96,7 +61,6 @@ def main() -> None:
     }
     for variant in variants:
         solver = D.connected_components if variant == "min_label" else D.connected_components_star
-        s0 = int(spark.sparkContext._jsc.sc().dagScheduler().nextStageId())
         t0 = time.time()
         # ONE composed plan: pairs are never materialized or counted
         # separately — the LSH pair stream feeds the solver directly and
@@ -108,12 +72,13 @@ def main() -> None:
         drop = comp.filter(F.col("node") != F.col("label")).select("node")
         survivors = d.join(drop, d["doc_id"] == drop["node"], "left_anti")
         n_surv = survivors.count()
-        wall = round(time.time() - t0, 2)
+        t1 = time.time()
+        wall = round(t1 - t0, 2)
         out[variant] = {
             "wall_s": wall,
             "survivors": n_surv,
             "dropped": n_docs - n_surv,
-            **_spill(spark, s0),
+            **counters.spill(t0, t1),
         }
         print(f"  {variant}: {wall}s, {n_surv} survivors", file=sys.stderr, flush=True)
     print(json.dumps(out))

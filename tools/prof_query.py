@@ -1,13 +1,21 @@
-"""Generic job-level profiler for any registry entry (guide §1/§7):
-event-log every Spark job with wall, task count, and the DRIVER GAPS
-between jobs that per-query wall timing hides. Usage:
+"""Layer profile of registry entries, one JSON record per query rep.
 
     python tools/prof_query.py <query> [<query> ...]
 
-Each query runs 1 warm rep (codegen caches) then a measured rep; the
-job table is printed for the measured rep only. Bench-identical forcing
-(collect for small outputs, count otherwise) via bench.HEADLINE."""
-import glob
+Each query runs ``$PROF_REPS`` times (default 2; the first rep also pays
+whole-stage codegen) on the factory session over ``$SPARK_GRAFT_SF_DIR``,
+forced with collect or count as ``bench.HEADLINE`` says. A record holds the
+rep's wall, its Catalyst phases, and the jobs, stages, tasks, executor
+run/CPU/GC seconds, shuffle bytes and spill of the jobs submitted during the
+rep, plus the driver gap: wall minus the time at least one job was running.
+Phases and counters are ``perfbench/spans.py``'s, so a record reads the same
+as the benchmark's per-layer metrics.
+
+For a cross-process A/B of a session setting, run it once per process with
+the setting's env var set (e.g. ``SPARK_GRAFT_DRIVER_MEM``)."""
+
+from __future__ import annotations
+
 import json
 import os
 import sys
@@ -15,118 +23,43 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession  # noqa: E402
-
-EVDIR = "/tmp/spark-events"
-os.makedirs(EVDIR, exist_ok=True)
+from perfbench.spans import SparkCounters, phases  # noqa: E402
 
 
-def get_spark_ev(name):
-    from nextgenetl_spark import session as S
-
-    cpus = os.environ.get("SPARK_GRAFT_CPUS")
-    master = f"local[{cpus}]" if cpus else "local[*]"
-    sp = int(cpus) if cpus else (os.cpu_count() or 8)
-    b = (
-        SparkSession.builder.appName(name)
-        .master(master)
-        .config("spark.sql.shuffle.partitions", str(sp))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", S._default_driver_mem()))
-        .config("spark.driver.extraJavaOptions", os.environ.get("SPARK_GRAFT_DRIVER_JAVA_OPTS", "-XX:+UseG1GC"))
-        .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4194304")
-        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
-        .config("spark.ui.enabled", "false")
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", EVDIR)
-        # plain single-file layout — the default rolling/zstd dir layout
-        # (eventlog_v2_<app>/events_1_<app>.zstd) isn't line-readable
-        .config("spark.eventLog.rolling.enabled", "false")
-        .config("spark.eventLog.compress", "false")
-    )
-    return b.getOrCreate()
-
-
-def main():
-    names = sys.argv[1:]
-    SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark_ev("prof-query")
-    spark.range(1000).selectExpr("sum(id)").collect()
-
-    from bench import HEADLINE  # noqa: E402
-    from nextgenetl_spark.workloads import load_all  # noqa: E402
+def profile(spark, names: list[str], sf_dir: str, reps: int = 2) -> list[dict]:
+    """Run each of ``names`` ``reps`` times and return one record per rep."""
+    from bench import HEADLINE
+    from nextgenetl_spark.workloads import load_all
 
     registry = load_all()
-    walls = {}
+    counters = SparkCounters(spark)
+    counters.poll()
+    records = []
     for name in names:
-        fn = registry[name].fn
-        mode = HEADLINE.get(name, "count")
-        for rep in range(int(os.environ.get("PROF_REPS", "2"))):
-            spark.sparkContext.setJobDescription(f"{name} rep{rep}")
-            t0 = time.time()
-            df = fn(spark, SF)
-            (df.collect() if mode == "collect" else df.count())
-            walls[(name, rep)] = time.time() - t0
-            print(f"{name} rep{rep} wall {walls[(name, rep)]:.2f}s", flush=True)
-            del df
-            import gc
+        for rep in range(reps):
+            lo = time.time()
+            df = registry[name].fn(spark, sf_dir)
+            if HEADLINE.get(name, "count") == "collect":
+                df.collect()
+            else:
+                # what df.count() runs, kept as a DataFrame for its phases
+                df = df.groupBy().count()
+                df.collect()
+            hi = time.time()
+            counters.poll()
+            rec = {"query": name, "rep": rep, "wall_s": hi - lo, **phases(df), **counters.window(lo, hi)}
+            rec["driver_gap_s"] = rec["wall_s"] - rec["job_busy_s"]
+            records.append(rec)
+    return records
 
-            gc.collect()
 
-    app_id = spark.sparkContext.applicationId
-    spark.stop()
-    time.sleep(1)
+def main() -> None:
+    from nextgenetl_spark.session import DEFAULT_SF_DIR, get_spark
 
-    path = sorted(glob.glob(os.path.join(EVDIR, app_id + "*")))[-1]
-    jobs, stages = {}, {}
-    with open(path) as fh:
-        for line in fh:
-            ev = json.loads(line)
-            e = ev.get("Event")
-            if e == "SparkListenerJobStart":
-                jobs[ev["Job ID"]] = {
-                    "start": ev["Submission Time"],
-                    "desc": (ev.get("Properties") or {}).get("spark.job.description", ""),
-                    "stages": ev.get("Stage IDs", []),
-                }
-            elif e == "SparkListenerJobEnd":
-                jobs[ev["Job ID"]]["end"] = ev["Completion Time"]
-            elif e == "SparkListenerStageCompleted":
-                si = ev["Stage Info"]
-                stages[si["Stage ID"]] = {
-                    "name": si["Stage Name"].split("\n")[0][:60],
-                    "tasks": si["Number of Tasks"],
-                }
-
-    prev_end = None
-    print(f"\n{'job':>4} {'wall_ms':>8} {'gap_ms':>7} {'ntask':>5}  first-stage | desc")
-    per = {}
-    for jid in sorted(jobs):
-        j = jobs[jid]
-        if "end" not in j:
-            continue
-        wall = j["end"] - j["start"]
-        gap = (j["start"] - prev_end) if prev_end is not None else 0
-        prev_end = j["end"]
-        ntask = sum(stages.get(s, {}).get("tasks", 0) for s in j["stages"])
-        sname = stages.get(j["stages"][0], {}).get("name", "?") if j["stages"] else "?"
-        d = j["desc"]
-        if "rep0" not in d:
-            qn = d.rsplit(" rep", 1)[0]
-            agg = per.setdefault(qn, {"jobs": 0, "wall": 0, "gap": 0, "tasks": 0})
-            agg["jobs"] += 1
-            agg["wall"] += wall
-            agg["gap"] += gap
-            agg["tasks"] += ntask
-        print(f"{jid:>4} {wall:>8} {gap:>7} {ntask:>5}  {sname} | {d[:40]}")
-    print()
-    for qn, a in per.items():
-        print(f"{qn}: rep1 {a['jobs']} jobs, job-wall {a['wall']}ms, gaps {a['gap']}ms, {a['tasks']} tasks")
+    spark = get_spark("prof-query")
+    spark.range(1000).selectExpr("sum(id)").collect()
+    for rec in profile(spark, sys.argv[1:], DEFAULT_SF_DIR, int(os.environ.get("PROF_REPS", "2"))):
+        print(json.dumps(rec), flush=True)
 
 
 if __name__ == "__main__":

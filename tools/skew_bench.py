@@ -20,41 +20,23 @@ Prints one JSON line; the BASELINE §4.4 row comes from this.
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import functions as F
+from pyspark.sql import functions as F  # noqa: E402
 
-from nextgenetl_spark.catalog import load
-from nextgenetl_spark.operators.joins import salted_join
+from nextgenetl_spark.catalog import load  # noqa: E402
+from nextgenetl_spark.operators.joins import salted_join  # noqa: E402
+from nextgenetl_spark.session import DEFAULT_SF_DIR, get_spark  # noqa: E402
+from perfbench.spans import SparkCounters  # noqa: E402
 
 
-def _ui_spark():
-    """The factory session runs with spark.ui.enabled=false (right for the
-    bench/driver paths); this diagnostic needs the UI REST API for
-    per-task durations, so it mirrors the factory's execution configs with
-    the UI on."""
-    import os
+class _StageCounters(SparkCounters):
+    STAGE_FIELDS = SparkCounters.STAGE_FIELDS + ("stageId", "attemptId")
 
-    from pyspark.sql import SparkSession
-
-    cpus = os.environ.get("SPARK_GRAFT_CPUS")
-    master = f"local[{cpus}]" if cpus else "local[*]"
-    parts = int(cpus) if cpus else (os.cpu_count() or 8)
-    return (
-        SparkSession.builder.appName("skew-bench")
-        .master(master)
-        .config("spark.sql.shuffle.partitions", str(parts))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.retainedStages", "200")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
-        .getOrCreate()
-    )
 
 N_COLD_KEYS = 50_000
 HOT_FRACTION = 0.4
@@ -79,25 +61,23 @@ def build_dim(spark):
     )
 
 
-def _reduce_task_skew(spark, min_stage_id):
-    """Max vs median task duration of the heaviest shuffle-read stage since
-    ``min_stage_id``, via the UI REST API — the metric that becomes the
-    WALL on a real cluster (local[32] timeshares a straggler's core, a
-    1000-executor cluster waits for it)."""
-    import urllib.request
-
-    base = f"{spark.sparkContext.uiWebUrl}/api/v1/applications/{spark.sparkContext.applicationId}"
-    stages = json.load(urllib.request.urlopen(f"{base}/stages?status=COMPLETE"))
-    recent = [s for s in stages if s["stageId"] >= min_stage_id and s.get("shuffleReadBytes", 0) > 0]
+def _reduce_task_skew(spark, counters, lo, hi):
+    """Median vs max task run time of the heaviest shuffle-read stage
+    submitted in [lo, hi] (epoch s), from the status store — the metric
+    that becomes the WALL on a real cluster (local[32] timeshares a
+    straggler's core, a 1000-executor cluster waits for it)."""
+    counters.poll()
+    recent = [s for s in counters.stages if lo <= s["start"] <= hi and s["shuffleReadBytes"] > 0]
     if not recent:
         return None
     heavy = max(recent, key=lambda s: s["shuffleReadBytes"])
-    q = json.load(
-        urllib.request.urlopen(
-            f"{base}/stages/{heavy['stageId']}/{heavy['attemptId']}/taskSummary?quantiles=0.5,1.0"
-        )
-    )
-    p50, mx = q["executorRunTime"]
+    quantiles = spark.sparkContext._gateway.new_array(spark._jvm.double, 2)
+    quantiles[0], quantiles[1] = 0.5, 1.0
+    dist = spark._jsc.sc().statusStore().taskSummary(heavy["stageId"], heavy["attemptId"], quantiles)
+    if not dist.isDefined():
+        return None
+    run_ms = dist.get().executorRunTime()
+    p50, mx = run_ms.apply(0), run_ms.apply(1)
     return {
         "stage": heavy["stageId"],
         "task_p50_s": round(p50 / 1000, 2),
@@ -106,42 +86,38 @@ def _reduce_task_skew(spark, min_stage_id):
     }
 
 
-def run(spark, fact, dim, mode):
+def run(spark, counters, fact, dim, mode):
     on_ = "true" if mode == "aqe_skew" else "false"
     spark.conf.set("spark.sql.adaptive.skewJoin.enabled", on_)
     # without force, OptimizeSkewedJoin bails whenever splitting would add
     # a shuffle for the downstream aggregation — which is every fact-dim
     # join feeding a groupBy, i.e. the shape under test
     spark.conf.set("spark.sql.adaptive.forceOptimizeSkewedJoin", on_)
-    next_stage = int(spark.sparkContext._jsc.sc().dagScheduler().nextStageId())
     t0 = time.time()
     if mode == "salted":
         out = salted_join(fact, dim, on="k", num_salts=32)
     else:
         out = fact.join(dim, "k")
     n = out.groupBy("grp").agg(F.count(F.lit(1)).alias("n")).count()
-    wall = round(time.time() - t0, 2)
-    try:
-        tasks = _reduce_task_skew(spark, next_stage)
-    except Exception:
-        tasks = None
-    return wall, n, tasks
+    t1 = time.time()
+    return round(t1 - t0, 2), n, _reduce_task_skew(spark, counters, t0, t1)
 
 
 def main():
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 20
-    spark = _ui_spark()
+    spark = get_spark("skew-bench")
+    counters = _StageCounters(spark)
     old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        fact = build_fact(spark, "/root/testdata/sf0.1", n).localCheckpoint()
+        fact = build_fact(spark, DEFAULT_SF_DIR, n).localCheckpoint()
         dim = build_dim(spark).localCheckpoint()
         rows = fact.count()
         out = {"fact_rows": rows, "hot_fraction": HOT_FRACTION, "replication": n}
         for mode in ["plain", "aqe_skew", "salted"]:
             walls, tasks = [], None
             for _ in range(2):
-                w, groups, t = run(spark, fact, dim, mode)
+                w, groups, t = run(spark, counters, fact, dim, mode)
                 walls.append(w)
                 tasks = t or tasks
             out[mode] = {"wall_s": min(walls), "result_groups": groups, "reduce_tasks": tasks}

@@ -7,12 +7,14 @@ Builds a ~TOTAL_MB working set in-plan (lineitem replicated with a padded
 payload), runs the two classic spillers under a deliberately small heap —
 a global sort (range-partitioned external sort) and a high-cardinality
 hash aggregation (hash map falls back to sort-based agg) — and reports
-wall time plus memory/disk spill bytes from the stage metrics REST API.
+wall time plus memory/disk spill bytes from the status store's stage
+metrics.
 
     python tools/spill_bench.py [heap_gb] [replication]   # default 3 40
 
-Run it as its own process (the small heap must be set at JVM launch).
-Prints one JSON line; BASELINE §4.5 records the datapoint.
+Run it as its own process: the heap is set through SPARK_GRAFT_DRIVER_MEM
+before the factory session launches the JVM. Prints one JSON line;
+BASELINE §4.5 records the datapoint.
 """
 
 from __future__ import annotations
@@ -22,47 +24,36 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import functions as F
+from pyspark.sql import functions as F  # noqa: E402
 
-
-def _spark(heap_gb: int):
-    from pyspark.sql import SparkSession
-
-    cpus = os.environ.get("SPARK_GRAFT_CPUS")
-    master = f"local[{cpus}]" if cpus else "local[*]"
-    parts = int(cpus) if cpus else (os.cpu_count() or 8)
-    return (
-        SparkSession.builder.appName("spill-bench")
-        .master(master)
-        .config("spark.sql.shuffle.partitions", str(parts))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", f"{heap_gb}g")
-        .config("spark.ui.enabled", "true")
-        .getOrCreate()
-    )
+from nextgenetl_spark.session import DEFAULT_SF_DIR, get_spark  # noqa: E402
+from perfbench.spans import SparkCounters  # noqa: E402
 
 
-def _spill_metrics(spark, min_stage_id):
-    import urllib.request
+class SpillCounters(SparkCounters):
+    """``SparkCounters`` that also keep each stage's in-memory spill size."""
 
-    base = f"{spark.sparkContext.uiWebUrl}/api/v1/applications/{spark.sparkContext.applicationId}"
-    stages = json.load(urllib.request.urlopen(f"{base}/stages?status=COMPLETE"))
-    mem = disk = 0
-    for s in stages:
-        if s["stageId"] >= min_stage_id:
-            mem += s.get("memoryBytesSpilled", 0)
-            disk += s.get("diskBytesSpilled", 0)
-    return {"memory_spilled_mb": mem // 2**20, "disk_spilled_mb": disk // 2**20}
+    STAGE_FIELDS = SparkCounters.STAGE_FIELDS + ("memoryBytesSpilled",)
+
+    def spill(self, lo: float, hi: float) -> dict:
+        """Spill of the stages submitted in [lo, hi] (epoch s)."""
+        self.poll()
+        stages = [s for s in self.stages if lo <= s["start"] <= hi]
+        return {
+            "memory_spilled_mb": sum(s["memoryBytesSpilled"] for s in stages) // 2**20,
+            "disk_spilled_mb": sum(s["diskBytesSpilled"] for s in stages) // 2**20,
+        }
 
 
 def main():
     heap_gb = int(sys.argv[1]) if len(sys.argv) > 1 else 3
     n = int(sys.argv[2]) if len(sys.argv) > 2 else 40
-    spark = _spark(heap_gb)
-    sf = "/root/testdata/sf0.1"
-    li = spark.read.parquet(f"{sf}/lineitem.parquet").select(
+    os.environ["SPARK_GRAFT_DRIVER_MEM"] = f"{heap_gb}g"
+    spark = get_spark("spill-bench")
+    counters = SpillCounters(spark)
+    li = spark.read.parquet(f"{DEFAULT_SF_DIR}/lineitem.parquet").select(
         "l_orderkey", "l_partkey", "l_suppkey"
     )
     rep = F.explode(F.sequence(F.lit(0), F.lit(n - 1))).alias("rep")
@@ -72,33 +63,23 @@ def main():
     )
     out = {"heap_gb": heap_gb, "replication": n}
 
-    sc = spark.sparkContext
-
-    def stage_floor():
-        return int(sc._jsc.sc().dagScheduler().nextStageId())
-
     # 1. global sort: range partition + per-partition external sort.
     # The noop sink executes the full sorted plan and discards rows —
     # a bare count() would let Catalyst eliminate the sort entirely.
     # rows is counted BEFORE the metrics window opens: the dict-literal
-    # form evaluated big.count() inside [s0, now), polluting the reported
+    # form evaluated big.count() inside [t0, t1], polluting the reported
     # sort spill bytes with the count job's stages (round-5 ADVICE).
     rows = big.count()
-    s0 = stage_floor()
     t0 = time.time()
     big.orderBy("payload", "k").write.format("noop").mode("overwrite").save()
-    wall = round(time.time() - t0, 2)
-    out["global_sort"] = {"wall_s": wall, "rows": rows, **_spill_metrics(spark, s0)}
+    t1 = time.time()
+    out["global_sort"] = {"wall_s": round(t1 - t0, 2), "rows": rows, **counters.spill(t0, t1)}
 
     # 2. high-cardinality hash agg (every key distinct => map exceeds heap)
-    s0 = stage_floor()
     t0 = time.time()
     agg_rows = big.groupBy("k", "payload").agg(F.count(F.lit(1))).count()
-    out["wide_hash_agg"] = {
-        "wall_s": round(time.time() - t0, 2),
-        "groups": agg_rows,
-        **_spill_metrics(spark, s0),
-    }
+    t1 = time.time()
+    out["wide_hash_agg"] = {"wall_s": round(t1 - t0, 2), "groups": agg_rows, **counters.spill(t0, t1)}
     print(json.dumps(out))
 
 
