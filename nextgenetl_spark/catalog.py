@@ -60,7 +60,11 @@ def _parquet_ts_unit(path: str, field: str = "ts") -> str | None:
 # handing the previously-inferred schema back via .schema(...) skips the
 # job with a byte-identical scan. Metadata only — never rows or results —
 # and the fingerprint (size+mtime of every part file) invalidates the
-# entry the moment the data is regenerated in place.
+# entry the moment the data is regenerated in place. Tables the engine
+# writes itself (plans/ materialize, resume and publish) do not use the
+# memo: their first read would still pay the job, and a new process starts
+# with the memo empty. They carry the writer's schema instead, in hand or
+# recorded in their sidecar, and read through ``read_parquet_as``.
 _SCHEMA_CACHE: dict[tuple[str, str], T.StructType] = {}
 
 
@@ -122,6 +126,20 @@ def read_parquet_cached(spark: SparkSession, path: str) -> DataFrame:
     df = spark.read.parquet(path)
     _schema_cache_put(key, df.schema)
     return df
+
+
+def read_parquet_as(spark: SparkSession, path: str, schema: T.StructType | str | None) -> DataFrame:
+    """Read a parquet directory whose schema the caller already holds: the
+    writer's ``df.schema`` or its recorded ``schema.json()``. No footer
+    inference job runs. The file source makes every field nullable on
+    either route, so the result's schema equals what plain inference
+    returns, field metadata included. ``None`` (a sidecar written before
+    schemas were recorded) takes the plain ``spark.read.parquet`` route."""
+    if schema is None:
+        return spark.read.parquet(path)
+    if isinstance(schema, str):
+        schema = T.StructType.fromJson(json.loads(schema))
+    return spark.read.schema(schema).parquet(path)
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

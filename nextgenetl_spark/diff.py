@@ -11,9 +11,9 @@ Reference sources:
 - NaN-tolerant new-data check            cda_bq_etl/bq_helpers/lookup.py:650-698
 - release-over-release schema/key report build_gdc_api_clinical_program_tables.py:1217-1363
 
-Scale notes: every compare is expressed as distinct/subtract/anti-join —
-hash shuffles on the compared columns only; nothing collects except final
-(small) diff samples and scalar verdicts.
+Scale notes: every compare is expressed as distinct/subtract/anti-join or
+one tagged group-by — hash shuffles on the compared columns only; nothing
+collects except final (small) diff samples and scalar verdicts.
 """
 
 from __future__ import annotations
@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from nextgenetl_spark.operators.setops import except_distinct, symmetric_diff
+from nextgenetl_spark.operators.setops import symmetric_diff
 
 
 def row_count_compare(old: DataFrame, new: DataFrame) -> dict:
@@ -76,12 +76,23 @@ def _nan_safe(df: DataFrame) -> DataFrame:
 def tables_equal(old: DataFrame, new: DataFrame, nan_tolerant: bool = True) -> bool:
     """The publish gate: True when the symmetric EXCEPT DISTINCT diff is
     empty both ways (reference: support.py:2072-2123 compare_two_tables →
-    skip republish when identical)."""
+    skip republish when identical).
+
+    Computed as one UNION ALL of both sides tagged 1 (old) and 2 (new),
+    grouped by every column: a distinct row seen on one side only has
+    ``bit_or(tag) != 3``. Grouping compares as the set operations do (NULL
+    equals NULL, NaN equals NaN, -0.0 equals 0.0, nested values too), so
+    the verdict is the symmetric diff's with one shuffle instead of four."""
     if sorted(old.columns) != sorted(new.columns):
         return False
     o = _nan_safe(old) if nan_tolerant else old
     n = _nan_safe(new.select(*old.columns)) if nan_tolerant else new.select(*old.columns)
-    return symmetric_diff(o, n).limit(1).count() == 0
+    tag = "__side"
+    while tag in old.columns:
+        tag = "_" + tag
+    tagged = o.withColumn(tag, F.lit(1)).union(n.withColumn(tag, F.lit(2)))
+    one_sided = tagged.groupBy(*old.columns).agg(F.bit_or(tag).alias(tag)).filter(F.col(tag) != 3)
+    return one_sided.limit(1).count() == 0
 
 
 def full_table_diff(old: DataFrame, new: DataFrame, nan_tolerant: bool = True) -> DataFrame:

@@ -16,7 +16,13 @@ Spark design:
 - ``materialize: true`` writes parquet and re-reads it — the reference's
   per-step WRITE_TRUNCATE semantics, kept for resumability/inspection and
   as an explicit shuffle barrier when a step's output is reused by several
-  consumers (cache-without-memory-pressure at 100 TB).
+  consumers (cache-without-memory-pressure at 100 TB). An ``overwrite``
+  re-read takes the writer's schema, so no schema-inference job runs;
+  ``append`` infers, since the directory also holds earlier part files.
+  A ``skip_if_fresh`` step records the schema next to its fingerprint, and
+  a resume reads with it — zero Spark jobs, in a new process too.
+- each step runs under a Spark job group named after the step, so its jobs
+  can be counted by name (``statusTracker().getJobIdsForGroup``).
 """
 
 from __future__ import annotations
@@ -30,7 +36,11 @@ import yaml
 
 from pyspark.sql import DataFrame, SparkSession
 
+from nextgenetl_spark.catalog import read_parquet_as
+
 _PARAM_RE = re.compile(r"\{([A-Za-z_][A-Za-z0-9_]*)\}")
+# The SparkContext local properties setJobGroup writes.
+_JOB_GROUP_KEYS = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
 
 
 def render_sql(sql: str, params: dict) -> str:
@@ -99,9 +109,21 @@ class Pipeline:
         return hashlib.md5(json.dumps(basis, sort_keys=True, default=str).encode()).hexdigest()
 
     def run_step(self, step: dict) -> DataFrame:
+        """Run one step under a Spark job group named after it; the
+        caller's job group is restored afterwards."""
+        name = step.get("name", step.get("dest", "<unnamed>"))
+        sc = self.spark.sparkContext
+        caller = [sc.getLocalProperty(k) for k in _JOB_GROUP_KEYS]
+        sc.setJobGroup(name, f"pipeline step {name}")
+        try:
+            return self._run_step(step, name)
+        finally:
+            for key, value in zip(_JOB_GROUP_KEYS, caller):
+                sc.setLocalProperty(key, value)
+
+    def _run_step(self, step: dict, name: str) -> DataFrame:
         import json
 
-        name = step.get("name", step.get("dest", "<unnamed>"))
         dest = step["dest"]
         rendered = None
         if "sql" in step:
@@ -117,9 +139,9 @@ class Pipeline:
             sidecar = os.path.join(path, "_step_fingerprint.json")
             if os.path.exists(os.path.join(path, "_SUCCESS")) and os.path.exists(sidecar):
                 with open(sidecar, encoding="utf-8") as fh:
-                    recorded = json.load(fh).get("fingerprint")
-                if recorded == self._step_fingerprint(step, rendered):
-                    df = self.spark.read.parquet(path)
+                    recorded = json.load(fh)
+                if recorded.get("fingerprint") == self._step_fingerprint(step, rendered):
+                    df = read_parquet_as(self.spark, path, recorded.get("schema"))
                     self.register(dest, df)
                     return df
         if "sql" in step:
@@ -221,10 +243,11 @@ class Pipeline:
                         self.spark.conf.set(key, prev)
             else:
                 df.write.mode(mode).parquet(path)
-            df = self.spark.read.parquet(path)
+            df = read_parquet_as(self.spark, path, df.schema if mode == "overwrite" else None)
             if step.get("skip_if_fresh"):
+                record = {"fingerprint": self._step_fingerprint(step, rendered), "schema": df.schema.json()}
                 with open(os.path.join(path, "_step_fingerprint.json"), "w", encoding="utf-8") as fh:
-                    json.dump({"fingerprint": self._step_fingerprint(step, rendered)}, fh)
+                    json.dump(record, fh)
         if step.get("export_jsonl"):
             # table → JSONL extract: the reference's staging format for
             # BQ load jobs (write_list_to_jsonl_and_upload,

@@ -8,7 +8,9 @@ version (support.py:2025-2070; cda_bq_etl/bq_helpers/create_modify.py:
 210-278; utils.py:368-382 find_most_recent_release at :1876-1918).
 
 Spark mapping: tables are parquet directories under a warehouse root:
-``{root}/{table}_versioned/{release}/`` + ``{root}/{table}_current/``.
+``{root}/{table}_versioned/{release}/`` + ``{root}/{table}_current/``. The
+metadata sidecar records the published schema (``spark_schema``), so the
+next publish reads the previous release without a schema-inference job.
 """
 
 from __future__ import annotations
@@ -20,6 +22,7 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
+from nextgenetl_spark.catalog import read_parquet_as
 from nextgenetl_spark.diff import tables_equal
 
 #: Sidecar filename for table metadata. The leading underscore makes Spark's
@@ -81,19 +84,13 @@ def prune_releases(root: str, table: str, keep: int = 3) -> list[str]:
     superseded releases). The current release and any release not labeled
     archived are never deleted, whatever ``keep`` says — pruning is for
     storage, not history rewriting. Returns the releases removed."""
-    import re
     import shutil
 
     vdir = _versioned_dir(root, table)
     if not os.path.isdir(vdir):
         return []
     releases = [d for d in os.listdir(vdir) if not d.startswith(("_", "."))]
-
-    def sort_key(r: str):
-        m = re.search(r"(\d+)$", r)
-        return (0, int(m.group(1))) if m else (1, r)
-
-    ordered = sorted(releases, key=sort_key)
+    ordered = sorted(releases, key=_release_sort_key)
     removed = []
     for rel in ordered[:-keep] if keep > 0 else ordered:
         path = os.path.join(vdir, rel)
@@ -107,21 +104,21 @@ def _versioned_dir(root: str, table: str) -> str:
     return os.path.join(root, f"{table}_versioned")
 
 
+def _release_sort_key(release: str) -> tuple:
+    """Releases order by the numeric tail of 'rNN'-style names; names
+    without one sort after them, lexicographically."""
+    m = re.search(r"(\d+)$", release)
+    return (0, int(m.group(1))) if m else (1, release)
+
+
 def find_most_recent_release(root: str, table: str) -> str | None:
     """Latest release under the versioned dir (releases sort by the numeric
     tail of 'rNN'-style names, falling back to lexicographic)."""
     vdir = _versioned_dir(root, table)
     if not os.path.isdir(vdir):
         return None
-    releases = [d for d in os.listdir(vdir) if not d.startswith("_") and not d.startswith(".")]
-    if not releases:
-        return None
-
-    def sort_key(r: str):
-        m = re.search(r"(\d+)$", r)
-        return (0, int(m.group(1))) if m else (1, r)
-
-    return sorted(releases, key=sort_key)[-1]
+    releases = [d for d in os.listdir(vdir) if not d.startswith(("_", "."))]
+    return sorted(releases, key=_release_sort_key)[-1] if releases else None
 
 
 def publish_table(
@@ -140,11 +137,14 @@ def publish_table(
     descriptions) lands as a sidecar in both the versioned and _current
     dirs with labels.status='current', and the superseded release's sidecar
     flips to status='archived' — the reference's supersede tail
-    (common_etl/utils.py:134-298,368-382)."""
+    (common_etl/utils.py:134-298,368-382). The sidecar also records
+    ``df.schema`` as ``spark_schema``; the previous release is read with
+    it, or inferred when its sidecar predates the field."""
     prev = find_most_recent_release(root, table)
     if prev is not None:
-        prev_df = spark.read.parquet(os.path.join(_versioned_dir(root, table), prev))
-        if sorted(prev_df.columns) == sorted(df.columns) and tables_equal(prev_df, df, nan_tolerant):
+        prev_dir = os.path.join(_versioned_dir(root, table), prev)
+        prev_df = read_parquet_as(spark, prev_dir, read_table_metadata(prev_dir).get("spark_schema"))
+        if tables_equal(prev_df, df, nan_tolerant):
             return {"published": False, "reason": "identical to previous release", "previous_release": prev}
 
     vdir = os.path.join(_versioned_dir(root, table), release)
@@ -153,6 +153,7 @@ def publish_table(
     df.write.mode("overwrite").parquet(cdir)
     meta = dict(metadata or {})
     meta["labels"] = {**meta.get("labels", {}), "status": "current", "release": release}
+    meta["spark_schema"] = df.schema.json()
     write_table_metadata(vdir, meta)
     write_table_metadata(cdir, meta)
     if prev is not None:

@@ -135,8 +135,9 @@ def publish_current(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Compare-then-publish tail (§3.4): release r1 (orders before 1997) is
     published, r2 (full corpus, changed data) supersedes it, then an
     identical r3 is correctly skipped — and the ``_current`` parquet is
-    returned. Compares run as EXCEPT-DISTINCT-style diffs (diff.tables_equal),
-    so 'unchanged' costs two aggregates, never a row-by-row driver loop."""
+    returned. Compares run as one tagged UNION ALL group-by with EXCEPT
+    DISTINCT semantics (diff.tables_equal), so 'unchanged' costs one
+    shuffle, never a row-by-row driver loop."""
     o = load(spark, sf_dir, "orders")
 
     def profile(df: DataFrame) -> DataFrame:

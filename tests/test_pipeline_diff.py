@@ -5,10 +5,15 @@ from __future__ import annotations
 
 import math
 
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from nextgenetl_spark import diff as D
+from nextgenetl_spark.operators.setops import symmetric_diff
 from nextgenetl_spark.plans import Pipeline, load_config, publish_table
+from nextgenetl_spark.plans.pipeline import _JOB_GROUP_KEYS
+from tests.conftest import fuzz_examples
 
 
 def _versioned_pair(spark):
@@ -567,3 +572,298 @@ def test_lake_report_flags_small_files_and_compaction_clears_it(spark, tmp_path)
     compact_parquet_dir(spark, str(root / "shattered"), str(root / "shattered_c"), target_file_bytes=64 * 1024)
     after = {r["table"]: r for r in lake_report(str(root), target_file_bytes=64 * 1024)}
     assert after["shattered_c"]["n_files"] < 40
+
+
+def _group_jobs(spark, group: str) -> set:
+    """Job ids the status tracker holds for ``group``, read once the
+    listener bus has caught up with every job already submitted."""
+    spark._jsc.sc().listenerBus().waitUntilEmpty()
+    return set(spark.sparkContext.statusTracker().getJobIdsForGroup(group))
+
+
+def _jobs_in(spark, group: str, fn):
+    """``(fn(), number of Spark jobs fn ran)``, run under job group ``group``."""
+    sc = spark.sparkContext
+    before = _group_jobs(spark, group)
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        for key in _JOB_GROUP_KEYS:
+            sc.setLocalProperty(key, None)
+    return out, len(_group_jobs(spark, group) - before)
+
+
+def test_materialize_resume_and_publish_run_no_schema_inference_job(spark, tmp_path):
+    """Job-count guard over an sf0.001 table: a materialized skip_if_fresh
+    step runs exactly the jobs of writing its query (no parquet inference
+    job), a resume from a fresh Pipeline runs none, and an identical
+    publish runs only the gate's. The step's jobs are counted by its job
+    group, and run_step gives the caller's group back."""
+    import os
+
+    from nextgenetl_spark.catalog import load
+    from tests.conftest import SF_SMOKE
+
+    orders = load(spark, SF_SMOKE, "orders")
+    wh, root = str(tmp_path / "wh"), str(tmp_path / "pub")
+    step = {
+        "name": "guard_status_totals",
+        "dest": "status_totals",
+        "materialize": True,
+        "skip_if_fresh": True,
+        "sql": "SELECT o_orderstatus, COUNT(*) AS n, SUM(o_totalprice) AS total FROM orders GROUP BY o_orderstatus",
+    }
+
+    def fresh_pipeline():
+        p = Pipeline(spark, warehouse=wh)
+        p.register("orders", orders)
+        return p
+
+    built, step_jobs = _jobs_in(spark, step["name"], lambda: fresh_pipeline().run_step(step))
+    _, write_jobs = _jobs_in(
+        spark, "guard_plain_write", lambda: spark.sql(step["sql"]).write.parquet(str(tmp_path / "plain"))
+    )
+    assert write_jobs > 0 and step_jobs == write_jobs
+
+    sc = spark.sparkContext
+    marker = os.path.join(wh, "status_totals", "_SUCCESS")
+    mtime = os.path.getmtime(marker)
+    sc.setJobGroup("guard_caller", "caller")
+    try:
+        before = _group_jobs(spark, step["name"])
+        resumed = fresh_pipeline().run_step(step)
+        assert len(_group_jobs(spark, step["name"]) - before) == 0
+        assert sc.getLocalProperty("spark.jobGroup.id") == "guard_caller"
+    finally:
+        for key in _JOB_GROUP_KEYS:
+            sc.setLocalProperty(key, None)
+    assert os.path.getmtime(marker) == mtime
+    assert sorted(resumed.collect()) == sorted(built.collect())
+
+    assert publish_table(spark, built, root, "status_totals", "r1")["published"]
+    out, publish_jobs = _jobs_in(spark, "guard_publish", lambda: publish_table(spark, built, root, "status_totals", "r2"))
+    assert not out["published"]
+    r1 = spark.read.schema(built.schema).parquet(os.path.join(root, "status_totals_versioned", "r1"))
+    equal, gate_jobs = _jobs_in(spark, "guard_gate", lambda: D.tables_equal(r1, built))
+    assert equal and publish_jobs == gate_jobs
+
+
+def test_run_step_restores_an_unset_job_group(spark, tmp_path):
+    """Without a caller group, run_step leaves none behind, also when the
+    step fails."""
+    import pytest
+
+    p = Pipeline(spark, warehouse=str(tmp_path / "wh"))
+    p.register("src", spark.range(3))
+    p.run_step({"name": "group_probe", "dest": "probe", "sql": "SELECT id FROM src", "materialize": True})
+    with pytest.raises(ValueError):
+        p.run_step({"name": "group_probe_bad", "dest": "bad"})
+    sc = spark.sparkContext
+    assert all(sc.getLocalProperty(k) is None for k in _JOB_GROUP_KEYS)
+
+
+def _schema_zoo(spark, tmp_path):
+    """A step input with decimal(20,4), timestamp, timestamp_ntz, date,
+    binary, array<struct>, map, char/varchar, a non-nullable column and a
+    column with field metadata."""
+    import datetime
+    import decimal
+
+    from pyspark.sql import types as T
+
+    typed = T.StructType([
+        T.StructField("nn", T.LongType(), False),
+        T.StructField("d", T.DecimalType(20, 4)),
+        T.StructField("ts", T.TimestampType()),
+        T.StructField("ntz", T.TimestampNTZType()),
+        T.StructField("dt", T.DateType()),
+        T.StructField("b", T.BinaryType()),
+        T.StructField("arr", T.ArrayType(T.StructType([
+            T.StructField("x", T.IntegerType(), False), T.StructField("y", T.StringType())]), False)),
+        T.StructField("m", T.MapType(T.StringType(), T.LongType(), False)),
+        T.StructField("md", T.StringType(), True, {"comment": "described", "level": 2}),
+    ])
+    rows = [
+        (1, decimal.Decimal("12345678901234.5678"), datetime.datetime(2021, 3, 4, 5, 6, 7, 890123),
+         datetime.datetime(2021, 3, 4, 5, 6, 7), datetime.date(2021, 3, 4), b"\x00\xff",
+         [(1, "a"), (2, None)], {"k": 7}, "x"),
+        (2, None, None, None, None, None, None, None, None),
+    ]
+    # char/varchar columns come from a catalog table's schema
+    spark.sql("DROP TABLE IF EXISTS zoo_chars")
+    spark.sql(f"CREATE TABLE zoo_chars (k BIGINT, c CHAR(5), v VARCHAR(3)) USING parquet LOCATION '{tmp_path}/chars'")
+    spark.sql("INSERT INTO zoo_chars VALUES (1, 'ab', 'xy'), (2, 'c', NULL)")
+    spark.createDataFrame(rows, typed).createOrReplaceTempView("zoo_typed")
+    return spark.sql("SELECT t.*, c.c, c.v FROM zoo_typed t JOIN zoo_chars c ON t.nn = c.k")
+
+
+def test_known_and_recorded_schema_reads_equal_inference(spark, tmp_path):
+    """The materialize re-read (writer's schema), the resume (schema from
+    the step sidecar) and the previous-release read (schema from the
+    table sidecar) return the StructType plain inference returns,
+    nullability and field metadata included, and the same rows."""
+    zoo = _schema_zoo(spark, tmp_path)
+    try:
+        _check_schema_reads(spark, tmp_path, zoo)
+    finally:
+        spark.sql("DROP TABLE IF EXISTS zoo_chars")
+
+
+def _check_schema_reads(spark, tmp_path, zoo):
+    import os
+
+    from nextgenetl_spark.catalog import read_parquet_as
+    from nextgenetl_spark.plans.publish import read_table_metadata
+
+    assert zoo.schema["nn"].nullable is False
+    assert "__CHAR_VARCHAR_TYPE_STRING" in zoo.schema["c"].metadata
+    wh, root = str(tmp_path / "wh"), str(tmp_path / "pub")
+    step = {"name": "zoo", "dest": "zoo", "sql": "SELECT * FROM zoo_src", "materialize": True, "skip_if_fresh": True}
+
+    def fresh_pipeline():
+        p = Pipeline(spark, warehouse=wh)
+        p.register("zoo_src", zoo)
+        return p
+
+    built = fresh_pipeline().run_step(step)
+    inferred = spark.read.parquet(os.path.join(wh, "zoo"))
+    assert built.schema == inferred.schema
+    resumed = fresh_pipeline().run_step(step)
+    assert resumed.schema == inferred.schema
+    assert sorted(resumed.collect()) == sorted(inferred.collect())
+
+    assert publish_table(spark, zoo, root, "zoo", "r1")["published"]
+    vdir = os.path.join(root, "zoo_versioned", "r1")
+    recorded = read_parquet_as(spark, vdir, read_table_metadata(vdir)["spark_schema"])
+    assert recorded.schema == spark.read.parquet(vdir).schema
+    assert sorted(recorded.collect()) == sorted(spark.read.parquet(vdir).collect())
+    assert read_parquet_as(spark, vdir, zoo.schema).schema == spark.read.parquet(vdir).schema
+    assert not publish_table(spark, built, root, "zoo", "r2")["published"]
+
+
+def test_sidecars_without_recorded_schema_still_resume_and_publish(spark, tmp_path):
+    """A _step_fingerprint.json or _table_meta.json written before schemas
+    were recorded falls back to inference: the step still resumes and the
+    publish gate still skips identical data and publishes changed data."""
+    import json
+    import os
+
+    from pyspark.sql import functions as F
+
+    from nextgenetl_spark.plans.publish import METADATA_FILE
+
+    def strip(path, key):
+        with open(path, encoding="utf-8") as fh:
+            doc = json.load(fh)
+        doc.pop(key)
+        with open(path, "w", encoding="utf-8") as fh:
+            json.dump(doc, fh)
+
+    wh, root = str(tmp_path / "wh"), str(tmp_path / "pub")
+    src = spark.range(0, 6).select(F.col("id").alias("k"), (F.col("id") * 0.5).alias("v"))
+    step = {"name": "legacy", "dest": "legacy", "sql": "SELECT k, v FROM src", "materialize": True, "skip_if_fresh": True}
+    p = Pipeline(spark, warehouse=wh)
+    p.register("src", src)
+    built = p.run_step(step)
+    out_dir = os.path.join(wh, "legacy")
+    strip(os.path.join(out_dir, "_step_fingerprint.json"), "schema")
+    mtime = os.path.getmtime(os.path.join(out_dir, "_SUCCESS"))
+    p2 = Pipeline(spark, warehouse=wh)
+    p2.register("src", src)
+    resumed = p2.run_step(step)
+    assert os.path.getmtime(os.path.join(out_dir, "_SUCCESS")) == mtime
+    assert resumed.schema == built.schema
+    assert sorted(resumed.collect()) == sorted(built.collect())
+
+    assert publish_table(spark, built, root, "legacy", "r1")["published"]
+    strip(os.path.join(root, "legacy_versioned", "r1", METADATA_FILE), "spark_schema")
+    assert not publish_table(spark, built, root, "legacy", "r2")["published"]
+    changed = built.withColumn("v", F.col("v") + 1)
+    assert publish_table(spark, changed, root, "legacy", "r2")["published"]
+
+
+def test_tables_equal_compares_map_columns_by_content(spark):
+    """Grouping normalizes maps, so the gate compares map columns by their
+    entries, in any insertion order. (EXCEPT DISTINCT rejects map columns.)"""
+    m = spark.sql("SELECT 1 AS k, map('a', 1, 'b', 2) AS m")
+    assert D.tables_equal(m, spark.sql("SELECT map('b', 2, 'a', 1) AS m, 1 AS k"))
+    assert not D.tables_equal(m, spark.sql("SELECT 1 AS k, map('a', 1, 'b', 3) AS m"))
+
+
+_GATE_FLOATS = (None, 0.0, -0.0, 1.5, -2.0, float("nan"))
+_GATE_SCHEMA = "k INT, x DOUBLE, s STRING, arr ARRAY<DOUBLE>, st STRUCT<a: DOUBLE, b: STRING>"
+
+
+def _flip_float(v):
+    """0.0 <-> -0.0 and NaN <-> NULL: values the gate must judge by set
+    semantics, not by representation."""
+    if v is None:
+        return float("nan")
+    if math.isnan(v):
+        return None
+    return -v if v == 0.0 else v
+
+
+def _gate_twin(row: tuple, flip: bool) -> tuple:
+    if not flip:
+        return row
+    k, x, s, arr, struct = row
+    return (
+        k,
+        _flip_float(x),
+        s,
+        None if arr is None else [_flip_float(v) for v in arr],
+        None if struct is None else (_flip_float(struct[0]), struct[1]),
+    )
+
+
+@st.composite
+def _gate_cases(draw):
+    """(old rows, new rows, new column order): new holds each old row 0-2
+    times, some with flipped floats, maybe one row more, shuffled."""
+    floats = st.sampled_from(_GATE_FLOATS)
+    row = st.tuples(
+        st.sampled_from([None, 1, 2]),
+        floats,
+        st.sampled_from([None, "", "a"]),
+        st.one_of(st.none(), st.lists(floats, max_size=2)),
+        st.one_of(st.none(), st.tuples(floats, st.sampled_from([None, "x"]))),
+    )
+    old = draw(st.lists(row, max_size=4))
+    new = [
+        _gate_twin(r, draw(st.booleans()))
+        for r in old
+        for _ in range(draw(st.sampled_from([1, 1, 1, 2, 0])))
+    ]
+    if draw(st.sampled_from([False, False, True])):
+        new.append(draw(row))
+    return old, draw(st.permutations(new)), draw(st.permutations(["k", "x", "s", "arr", "st"]))
+
+
+def _symmetric_diff_gate(old, new, nan_tolerant):
+    """The publish gate before it became one tagged group-by: symmetric
+    EXCEPT DISTINCT, kept here as the oracle."""
+    if sorted(old.columns) != sorted(new.columns):
+        return False
+    o = D._nan_safe(old) if nan_tolerant else old
+    n = D._nan_safe(new.select(*old.columns)) if nan_tolerant else new.select(*old.columns)
+    return symmetric_diff(o, n).limit(1).count() == 0
+
+
+@settings(
+    max_examples=fuzz_examples(150, 20),
+    deadline=None,
+    derandomize=True,
+    suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
+)
+@given(case=_gate_cases())
+def test_tables_equal_matches_symmetric_except_distinct(spark, case):
+    """The one-shuffle gate agrees with the symmetric EXCEPT DISTINCT over
+    NULLs, NaN, -0.0, duplicate rows, reordered columns and array/struct
+    columns, NaN-tolerant or not."""
+    old_rows, new_rows, order = case
+    old = spark.createDataFrame(old_rows, _GATE_SCHEMA)
+    new = spark.createDataFrame(new_rows, _GATE_SCHEMA).select(*order)
+    for nan_tolerant in (True, False):
+        assert D.tables_equal(old, new, nan_tolerant) == _symmetric_diff_gate(old, new, nan_tolerant)
