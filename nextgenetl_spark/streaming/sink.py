@@ -1,5 +1,6 @@
 """Streaming lake sink: exactly-once publish into a partitioned parquet
-directory via ``foreachBatch``.
+directory via ``foreachBatch``, run like every bounded stream by
+``streaming.source.run_bounded``.
 
 Spark's streaming file sink is append-only and ties commit metadata to one
 output directory; pipelines that need dynamic partition overwrite, dedup
@@ -21,6 +22,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from nextgenetl_spark.streaming.source import run_bounded
 
 
 def exactly_once_parquet_sink(out_dir: str, partition_cols: list[str] | None = None):
@@ -50,25 +53,13 @@ def run_stream_to_lake(
     out_dir: str,
     checkpoint_dir: str,
     partition_cols: list[str] | None = None,
-    timeout_sec: int = 300,
 ) -> None:
-    """Run a bounded (availableNow) streaming write into the lake dir with
-    a real checkpoint — restartable and exactly-once by idempotent batch
-    overwrite. A write that does not finish within ``timeout_sec`` raises
-    ``TimeoutError`` naming ``out_dir``: the lake then holds only some of
-    the batches."""
-    q = (
-        sdf.writeStream.foreachBatch(exactly_once_parquet_sink(out_dir, partition_cols))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        finished = q.awaitTermination(timeout_sec)
-    finally:
-        q.stop()
-    if not finished:
-        raise TimeoutError(
-            f"run_stream_to_lake({out_dir}): availableNow write did not finish "
-            f"within {timeout_sec}s — the lake holds a partial replay"
-        )
+    """Run a bounded streaming write into the lake dir through
+    ``run_bounded`` with a real checkpoint — restartable and exactly-once
+    by idempotent batch overwrite. The query is named after ``out_dir``, so
+    a failing batch or a timeout names the lake that holds a partial
+    replay."""
+    writer = sdf.writeStream.foreachBatch(
+        exactly_once_parquet_sink(out_dir, partition_cols)
+    ).option("checkpointLocation", checkpoint_dir)
+    run_bounded(writer, f"run_stream_to_lake({out_dir})")

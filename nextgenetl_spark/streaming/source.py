@@ -1,17 +1,28 @@
-"""Streaming source helpers for the driver's events table.
+"""One staged file source and one bounded-stream runner.
 
-``events.parquet`` has shipped with either TIMESTAMP(MICROS) (reads
-natively) or TIMESTAMP(NANOS) (reads as long under
-``spark.sql.legacy.parquet.nanosAsLong``). A cheap batch probe of the
-footer schema decides which; the stream source then converts at the edge
-exactly like catalog.load does for batch, so streaming and batch plans
-see the same schema."""
+Sources: ``docs_stream``, ``events_stream`` and ``embeddings_stream`` are
+file-source streams over the input parquet tables, all staged by one
+``_file_stream`` with an explicit schema. ``events.parquet`` has shipped
+with either TIMESTAMP(MICROS) (reads natively) or TIMESTAMP(NANOS); a
+footer probe decides which, and ``events_stream`` converts ``ts`` at the
+edge exactly like catalog.load does for batch, so streaming and batch plans
+see the same schema.
+
+Runner: ``run_bounded`` runs every bounded (availableNow) query of the
+package, whatever its sink — memory, lake or foreachBatch. It names the
+query, waits, stops it in ``finally`` and fails by name, so no caller ever
+reads a partial replay. ``run_memory_replay`` is the memory-sink form under
+a scoped state-store partition cap (``replay_shuffle_cap``)."""
 
 from __future__ import annotations
+
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
+
 
 def _stage_symlinks(src: str, stage: str) -> None:
     """Stage a table into a file-source landing directory via symlinks.
@@ -46,29 +57,24 @@ def _stage_symlinks(src: str, stage: str) -> None:
             os.symlink(p, link)
 
 
-def _events_raw_schema(ts_type: T.DataType) -> T.StructType:
-    return T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", ts_type),  # long = nanos-as-long; else native timestamp
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
-
-
-def docs_stream(spark: SparkSession, sf_dir: str, max_files_per_trigger: int | None = None) -> DataFrame:
-    """File-source stream over the documents parquet — the ingest shape of a
-    text-curation pipeline (new crawl shards landing in a directory). Same
-    symlink staging as ``events_stream``; schema is static."""
+def _file_stream(spark: SparkSession, sf_dir: str, table: str, schema: T.StructType) -> DataFrame:
+    """File-source stream over ``<sf_dir>/<table>.parquet`` with an explicit
+    schema. Spark's file stream source requires a DIRECTORY of files, so the
+    table is staged as a symlink directory (a real deployment points the
+    reader at the landing directory new files arrive in). One file is one
+    micro-batch unit; ``run_bounded`` runs the stream as a bounded replay."""
     import hashlib
     import os
 
-    src = os.path.abspath(f"{sf_dir}/documents.parquet")
+    src = os.path.abspath(f"{sf_dir}/{table}.parquet")
     stage = f"/tmp/nextgenetl_streams/{hashlib.md5(src.encode()).hexdigest()[:12]}"
     _stage_symlinks(src, stage)
+    return spark.readStream.schema(schema).parquet(stage)
+
+
+def docs_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """File-source stream over the documents parquet — the ingest shape of a
+    text-curation pipeline (new crawl shards landing in a directory)."""
     schema = T.StructType(
         [
             T.StructField("doc_id", T.LongType()),
@@ -78,26 +84,12 @@ def docs_stream(spark: SparkSession, sf_dir: str, max_files_per_trigger: int | N
             T.StructField("n_chars", T.LongType()),
         ]
     )
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(stage)
+    return _file_stream(spark, sf_dir, "documents", schema)
 
 
-def events_stream(spark: SparkSession, sf_dir: str, max_files_per_trigger: int | None = None) -> DataFrame:
-    """File-source stream over the events parquet (one file = one
-    micro-batch unit; use availableNow trigger for bounded runs).
-
-    Spark's file stream source requires a DIRECTORY; the driver ships a
-    single file, so we stage a symlink dir (a real deployment points this
-    at the landing directory new files arrive in)."""
-    import hashlib
-    import os
-
-    src = os.path.abspath(f"{sf_dir}/events.parquet")
-    stage = f"/tmp/nextgenetl_streams/{hashlib.md5(src.encode()).hexdigest()[:12]}"
-    _stage_symlinks(src, stage)
-
+def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """File-source stream over the events parquet, with ``ts`` converted to
+    the TIMESTAMP that catalog.load gives the batch plans."""
     # Footer-only probe (pyarrow, no Spark job, NO session conf) decides
     # the read type for ts: nanos → request LongType in the EXPLICIT stream
     # schema (the parquet reader accepts INT64 TIMESTAMP(NANOS) → LongType
@@ -116,10 +108,17 @@ def events_stream(spark: SparkSession, sf_dir: str, max_files_per_trigger: int |
         ts_type = T.TimestampNTZType()
     else:
         ts_type = T.TimestampType()
-    reader = spark.readStream.schema(_events_raw_schema(ts_type))
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    df = reader.parquet(stage)
+    schema = T.StructType(
+        [
+            T.StructField("event_id", T.LongType()),
+            T.StructField("ts", ts_type),  # long = nanos-as-long; else native timestamp
+            T.StructField("user_id", T.LongType()),
+            T.StructField("event_type", T.StringType()),
+            T.StructField("value", T.DoubleType()),
+            T.StructField("props", T.StringType()),
+        ]
+    )
+    df = _file_stream(spark, sf_dir, "events", schema)
     if isinstance(ts_type, T.LongType):
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     elif isinstance(ts_type, T.TimestampNTZType):
@@ -139,6 +138,20 @@ def events_stream(spark: SparkSession, sf_dir: str, max_files_per_trigger: int |
     return df
 
 
+def embeddings_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """File-source stream over the embeddings parquet — the serving shape of
+    an ANN lookup pipeline (query-vector batches landing in a directory)."""
+    schema = T.StructType(
+        [
+            T.StructField("vec_id", T.LongType()),
+            T.StructField("embedding", T.ArrayType(T.FloatType())),
+            T.StructField("label", T.IntegerType()),
+        ]
+    )
+    return _file_stream(spark, sf_dir, "embeddings", schema)
+
+
+@contextmanager
 def replay_shuffle_cap(spark: SparkSession, cap: int = 16):
     """Scoped shuffle-partition cap for bounded stateful replays.
 
@@ -156,23 +169,42 @@ def replay_shuffle_cap(spark: SparkSession, cap: int = 16):
     debounce/session replays, 8-16 state-store partitions run ~25-30%
     faster than 32 (fewer per-partition store fixed costs) while 4 loses
     task parallelism; 16 keeps headroom for larger replays."""
-    from contextlib import contextmanager
-
-    @contextmanager
-    def _scope():
-        key = "spark.sql.shuffle.partitions"
-        prev = spark.conf.get(key, "200")
-        capped = max(4, min(cap, spark.sparkContext.defaultParallelism))
-        changed = int(prev) > capped
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key, "200")
+    capped = max(4, min(cap, spark.sparkContext.defaultParallelism))
+    changed = int(prev) > capped
+    if changed:
+        spark.conf.set(key, str(capped))
+    try:
+        yield
+    finally:
         if changed:
-            spark.conf.set(key, str(capped))
-        try:
-            yield
-        finally:
-            if changed:
-                spark.conf.set(key, prev)
+            spark.conf.set(key, prev)
 
-    return _scope()
+
+def run_bounded(writer: DataStreamWriter, name: str, timeout_s: int = 300) -> StreamingQuery:
+    """Run a configured ``writer`` as one bounded availableNow query named
+    ``name`` and return the stopped query (``recentProgress`` stays
+    readable). The one place every bounded stream starts, waits and stops.
+
+    Naming every query makes a failing batch's ``StreamingQueryException``
+    name it (``Identifier: <name>``). ``stop()`` runs in ``finally``: a
+    query whose wait raises or times out is never left running with its
+    name claimed, or the next run under the same name would fail. A query
+    that does not finish within ``timeout_s`` raises ``TimeoutError``
+    naming ``name``: its sink holds a partial replay, which no caller may
+    return as a result."""
+    q = writer.queryName(name).trigger(availableNow=True).start()
+    try:
+        finished = q.awaitTermination(timeout_s)
+    finally:
+        q.stop()
+    if not finished:
+        raise TimeoutError(
+            f"{name}: availableNow query did not finish within {timeout_s}s — "
+            "refusing to return a partial replay"
+        )
+    return q
 
 
 def run_memory_replay(
@@ -181,56 +213,11 @@ def run_memory_replay(
     name: str,
     output_mode: str = "append",
     cap: int = 16,
-    timeout_s: int = 300,
 ) -> DataFrame:
-    """Run a bounded availableNow replay of ``out`` into a memory sink named
-    ``name`` under a scoped state-store partition cap (``replay_shuffle_cap``)
-    and return the sink table. The shared tail of every stream_* workload —
-    one place owns the start/await/stop/restore discipline. A replay that
-    does not finish within ``timeout_s`` raises ``TimeoutError`` naming
-    ``name`` instead of returning the partial sink."""
+    """Replay ``out`` into a memory sink named ``name`` through
+    ``run_bounded`` under a scoped state-store partition cap
+    (``replay_shuffle_cap``) and return the sink table — the shared tail of
+    every stream_* workload."""
     with replay_shuffle_cap(spark, cap):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            finished = q.awaitTermination(timeout_s)
-        finally:
-            # stop() in finally: if awaitTermination raises (e.g.
-            # StreamingQueryException) the query must not be left running
-            # with the memory sink name claimed — the next replay under the
-            # same name would fail forever.
-            q.stop()
-    if not finished:
-        raise TimeoutError(
-            f"{name}: availableNow replay did not finish within {timeout_s}s — "
-            "refusing to return a partial memory sink"
-        )
+        run_bounded(out.writeStream.format("memory").outputMode(output_mode), name)
     return spark.table(name)
-
-
-def embeddings_stream(spark: SparkSession, sf_dir: str, max_files_per_trigger: int | None = None) -> DataFrame:
-    """File-source stream over the embeddings parquet — the serving shape of
-    an ANN lookup pipeline (query-vector batches landing in a directory).
-    Same symlink staging as ``events_stream``; schema is static."""
-    import hashlib
-    import os
-
-    src = os.path.abspath(f"{sf_dir}/embeddings.parquet")
-    stage = f"/tmp/nextgenetl_streams/{hashlib.md5(src.encode()).hexdigest()[:12]}"
-    _stage_symlinks(src, stage)
-    schema = T.StructType(
-        [
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("embedding", T.ArrayType(T.FloatType())),
-            T.StructField("label", T.IntegerType()),
-        ]
-    )
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(stage)

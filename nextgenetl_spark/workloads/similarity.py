@@ -487,7 +487,7 @@ def stream_ann_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from nextgenetl_spark.operators.similarity import build_ivf_index, ivf_query_index
     from nextgenetl_spark.staging import code_token, mark_complete, staged_dir
-    from nextgenetl_spark.streaming.source import embeddings_stream
+    from nextgenetl_spark.streaming.source import embeddings_stream, run_bounded
 
     idx, complete = staged_dir(
         "ngetl_ivf",
@@ -498,35 +498,27 @@ def stream_ann_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
         build_ivf_index(load(spark, sf_dir, "embeddings"), idx, k_centroids=16, refine_iters=1)
         mark_complete(idx)
 
-    results: list = []
+    # keyed by batch id: foreachBatch is at-least-once, so a re-delivered
+    # batch replaces its rows instead of adding them a second time
+    results: dict = {}
 
     def score_batch(batch_df, batch_id):
         q = batch_df.filter(F.col("vec_id") < 10).select(
             F.col("vec_id").alias("query_id"), "embedding"
         )
-        results.extend(
+        results[batch_id] = (
             ivf_query_index(spark, idx, q, nprobe=16, k=5)
             .select("query_id", "neighbor_id", "sim", "rank")
             .collect()
         )
 
-    q = (
-        embeddings_stream(spark, sf_dir)
-        .writeStream.foreachBatch(score_batch)
-        .trigger(availableNow=True)
-        .start()
+    run_bounded(
+        embeddings_stream(spark, sf_dir).writeStream.foreachBatch(score_batch),
+        "stream_ann_lookup",
     )
-    try:
-        finished = q.awaitTermination(300)
-    finally:
-        q.stop()
-    if not finished:
-        raise TimeoutError(
-            "stream_ann_lookup: availableNow scoring did not finish within "
-            "300s — refusing to return the batches scored so far"
-        )
     return spark.createDataFrame(
-        results, "query_id long, neighbor_id long, sim double, rank int"
+        [row for b in sorted(results) for row in results[b]],
+        "query_id long, neighbor_id long, sim double, rank int",
     )
 
 
@@ -1144,7 +1136,7 @@ def stream_ivfpq_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivfpq_query_index,
     )
     from nextgenetl_spark.staging import code_token, mark_complete, staged_dir
-    from nextgenetl_spark.streaming.source import embeddings_stream
+    from nextgenetl_spark.streaming.source import embeddings_stream, run_bounded
 
     emb = load(spark, sf_dir, "embeddings")
     base, complete = staged_dir(
@@ -1186,23 +1178,13 @@ def stream_ivfpq_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             # ask #6; claim/_DONE contract in append_to_ivfpq_index)
             append_to_ivfpq_index(spark, run_idx, b, batch_id=batch_id)
 
-    q = (
-        embeddings_stream(spark, sf_dir)
-        .writeStream.foreachBatch(ingest)
-        .trigger(availableNow=True)
-        .start()
-    )
     # the returned DataFrame lazily scans run_idx: evaluating it while
     # foreachBatch is still appending would race the writes, so a timeout
-    # fails BY NAME instead of proceeding (round-10 self-review; the
-    # run_memory_replay stop discipline)
-    finished = q.awaitTermination(300)
-    q.stop()
-    if not finished:
-        raise TimeoutError(
-            "stream_ivfpq_ingest: availableNow ingest did not finish within "
-            "300s — refusing to query an index still being appended to"
-        )
+    # fails BY NAME instead of proceeding
+    run_bounded(
+        embeddings_stream(spark, sf_dir).writeStream.foreachBatch(ingest),
+        "stream_ivfpq_ingest",
+    )
 
     qdf = emb.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), "embedding"

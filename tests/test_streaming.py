@@ -5,31 +5,24 @@ depend on arrival order)."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from nextgenetl_spark.catalog import load
 from nextgenetl_spark.streaming import session_window_agg, sliding_window_agg, tumbling_window_agg
-from nextgenetl_spark.streaming.source import events_stream
+from nextgenetl_spark.streaming.source import events_stream, run_memory_replay
 from nextgenetl_spark.streaming.windows import with_watermark
 from tests.conftest import SF_SMOKE
 
 
-def _run_stream(spark, sdf, name):
-    q = (
-        sdf.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    return spark.sql(f"SELECT * FROM {name}")
-
-
 def test_tumbling_stream_matches_batch(spark):
     batch = tumbling_window_agg(load(spark, SF_SMOKE, "events")).collect()
-    stream = _run_stream(
-        spark, tumbling_window_agg(with_watermark(events_stream(spark, SF_SMOKE))), "t_tumble"
+    stream = run_memory_replay(
+        spark,
+        tumbling_window_agg(with_watermark(events_stream(spark, SF_SMOKE))),
+        "t_tumble",
+        "complete",
     ).collect()
     assert sorted(map(tuple, stream)) == sorted(map(tuple, batch))
     assert len(batch) > 0
@@ -37,8 +30,11 @@ def test_tumbling_stream_matches_batch(spark):
 
 def test_sliding_stream_matches_batch(spark):
     batch = sliding_window_agg(load(spark, SF_SMOKE, "events")).collect()
-    stream = _run_stream(
-        spark, sliding_window_agg(with_watermark(events_stream(spark, SF_SMOKE))), "t_slide"
+    stream = run_memory_replay(
+        spark,
+        sliding_window_agg(with_watermark(events_stream(spark, SF_SMOKE))),
+        "t_slide",
+        "complete",
     ).collect()
     assert sorted(map(tuple, stream)) == sorted(map(tuple, batch))
     # every event lands in window/slide = 2 windows: sliding total = 2× tumbling total
@@ -47,10 +43,11 @@ def test_sliding_stream_matches_batch(spark):
 
 def test_session_stream_matches_batch(spark):
     batch = session_window_agg(load(spark, SF_SMOKE, "events"), gap="30 minutes").collect()
-    stream = _run_stream(
+    stream = run_memory_replay(
         spark,
         session_window_agg(with_watermark(events_stream(spark, SF_SMOKE)), gap="30 minutes"),
         "t_sess",
+        "complete",
     ).collect()
     assert sorted(map(tuple, stream)) == sorted(map(tuple, batch))
     # cross-check against the lag-based batch sessionizer (same session count)
@@ -63,23 +60,13 @@ def test_session_stream_matches_batch(spark):
 def test_stateful_running_profile(spark):
     from nextgenetl_spark.streaming.stateful import running_user_profile
 
-    out = _run_stream_update(spark, running_user_profile(events_stream(spark, SF_SMOKE)), "t_state")
+    out = run_memory_replay(
+        spark, running_user_profile(events_stream(spark, SF_SMOKE)), "t_state", "update"
+    )
     rows = {r["user_id"]: r for r in out.collect()}
     ev = load(spark, SF_SMOKE, "events")
     expected = {r["user_id"]: r for r in ev.groupBy("user_id").count().collect()}
     assert {u: r["n_events"] for u, r in rows.items()} == {u: r["count"] for u, r in expected.items()}
-
-
-def _run_stream_update(spark, sdf, name):
-    q = (
-        sdf.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    return spark.sql(f"SELECT * FROM {name}")
 
 
 def test_dedup_stream_first_occurrence_only(spark):
@@ -87,24 +74,14 @@ def test_dedup_stream_first_occurrence_only(spark):
 
     # documents have no event-time; reuse events and dedup on props content
     ev = events_stream(spark, SF_SMOKE)
-    out = _run_stream_append(spark, dedup_stream(ev, text_col="props", ts_col="ts"), "t_dedup")
+    out = run_memory_replay(
+        spark, dedup_stream(ev, text_col="props", ts_col="ts"), "t_dedup", "append"
+    )
     rows = out.collect()
     batch = load(spark, SF_SMOKE, "events")
     n_distinct = batch.select("props").distinct().count()
     assert len(rows) == n_distinct
     assert len({r["fp"] for r in rows}) == len(rows)
-
-
-def _run_stream_append(spark, sdf, name):
-    q = (
-        sdf.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    return spark.sql(f"SELECT * FROM {name}")
 
 
 def test_stream_static_enrich_matches_batch(spark):
@@ -115,7 +92,9 @@ def test_stream_static_enrich_matches_batch(spark):
         F.col("c_custkey").alias("user_id"), F.col("c_mktsegment").alias("segment")
     )
     ev = events_stream(spark, SF_SMOKE)
-    out = _run_stream_append(spark, enrich_with_dim(ev, dim, "user_id", "inner"), "t_enrich")
+    out = run_memory_replay(
+        spark, enrich_with_dim(ev, dim, "user_id", "inner"), "t_enrich", "append"
+    )
     batch = load(spark, SF_SMOKE, "events").join(dim, "user_id", "inner")
     assert out.count() == batch.count()
     s = {(r["event_id"], r["segment"]) for r in out.select("event_id", "segment").collect()}
@@ -128,8 +107,8 @@ def test_stream_interval_join_matches_batch(spark):
     from pyspark.sql import functions as F
 
     ev = events_stream(spark, SF_SMOKE)
-    out = _run_stream_append(
-        spark, interval_self_join(ev, "purchase", "click", "10 minutes"), "t_ijoin"
+    out = run_memory_replay(
+        spark, interval_self_join(ev, "purchase", "click", "10 minutes"), "t_ijoin", "append"
     )
     e = load(spark, SF_SMOKE, "events")
     p = e.where(F.col("event_type") == "purchase").select(
@@ -262,16 +241,7 @@ def test_watermark_drops_late_events_in_append_mode(spark, tmp_path):
         .parquet(str(land))
     )
     agg = tumbling_window_agg(with_watermark(sdf, delay="10 minutes"))
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("late_test")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    q.stop()
-    rows = spark.table("late_test").collect()
+    rows = run_memory_replay(spark, agg, "late_test", "append").collect()
     import calendar
     import datetime
 
@@ -370,8 +340,6 @@ def test_events_stream_accepts_directory_shaped_table(spark, tmp_path):
     table path (which raises on directories)."""
     import shutil
 
-    from nextgenetl_spark.streaming.source import run_memory_replay
-
     lake = tmp_path / "lake"
     lake.mkdir()
     # stage a directory-shaped copy: batch-read the single file, write a
@@ -397,7 +365,6 @@ def test_stateful_debounce_incremental_batches_match_single_batch(spark, tmp_pat
 
     from pyspark.sql import functions as F
 
-    from nextgenetl_spark.streaming.source import run_memory_replay
     from nextgenetl_spark.streaming.stateful import debounce_against_last_kept
 
     e = load(spark, SF_SMOKE, "events").select(
@@ -454,7 +421,6 @@ def test_sharded_debounce_equals_per_user_keyed(spark):
     from pyspark.sql import functions as F
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from nextgenetl_spark.streaming.source import events_stream, run_memory_replay
     from nextgenetl_spark.streaming.stateful import (
         DEBOUNCE_OUTPUT_SCHEMA,
         DEBOUNCE_USER_STATE_SCHEMA,
@@ -486,26 +452,83 @@ def test_sharded_debounce_equals_per_user_keyed(spark):
     assert got == want
 
 
-@pytest.mark.parametrize("site", ["run_memory_replay", "run_stream_to_lake", "stream_ann_lookup"])
+def _bounded_site(spark, tmp_path, site):
+    """A call that runs one bounded stream, and the name it must fail by."""
+    from nextgenetl_spark.streaming.sink import run_stream_to_lake
+    from nextgenetl_spark.workloads import similarity
+
+    ev = events_stream(spark, SF_SMOKE).select("event_id", "event_type", "value")
+    lake = str(tmp_path / "lake")
+    if site == "run_memory_replay":
+        return (lambda: run_memory_replay(spark, ev, "t_timeout_replay")), "t_timeout_replay"
+    if site == "run_stream_to_lake":
+        name = f"run_stream_to_lake({lake})"
+        return (lambda: run_stream_to_lake(ev, lake, str(tmp_path / "ckpt"))), name
+    return (lambda: getattr(similarity, site)(spark, SF_SMOKE)), site
+
+
+@pytest.mark.parametrize(
+    "site",
+    ["run_memory_replay", "run_stream_to_lake", "stream_ann_lookup", "stream_ivfpq_ingest"],
+)
 def test_stream_timeout_fails_by_name(spark, tmp_path, monkeypatch, site):
     """A bounded replay whose awaitTermination times out (returns False)
     must raise TimeoutError naming the query, never hand back the partial
     sink, and must not leave the query running."""
     from pyspark.sql.streaming.query import StreamingQuery
 
-    from nextgenetl_spark.streaming.sink import run_stream_to_lake
-    from nextgenetl_spark.streaming.source import run_memory_replay
-    from nextgenetl_spark.workloads.similarity import stream_ann_lookup
-
     monkeypatch.setattr(StreamingQuery, "awaitTermination", lambda self, timeout=None: False)
-    ev = events_stream(spark, SF_SMOKE).select("event_id", "event_type", "value")
-    lake = str(tmp_path / "lake")
-    if site == "run_memory_replay":
-        call, name = (lambda: run_memory_replay(spark, ev, "t_timeout_replay")), "t_timeout_replay"
-    elif site == "run_stream_to_lake":
-        call, name = (lambda: run_stream_to_lake(ev, lake, str(tmp_path / "ckpt"))), lake
-    else:
-        call, name = (lambda: stream_ann_lookup(spark, SF_SMOKE)), "stream_ann_lookup"
-    with pytest.raises(TimeoutError, match=name):
+    call, name = _bounded_site(spark, tmp_path, site)
+    with pytest.raises(TimeoutError, match=re.escape(name)):
         call()
+    assert not spark.streams.active
+
+
+@pytest.mark.parametrize("site", ["run_stream_to_lake", "stream_ann_lookup", "stream_ivfpq_ingest"])
+def test_failing_batch_names_its_query(spark, tmp_path, monkeypatch, site):
+    """A foreachBatch function that raises fails the bounded run with a
+    StreamingQueryException whose text names the query, and leaves no query
+    active."""
+    from pyspark.errors import StreamingQueryException
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    orig = DataStreamWriter.foreachBatch
+
+    def failing(self, func):
+        def fail(batch_df, batch_id):
+            raise RuntimeError("injected batch failure")
+
+        return orig(self, fail)
+
+    monkeypatch.setattr(DataStreamWriter, "foreachBatch", failing)
+    call, name = _bounded_site(spark, tmp_path, site)
+    with pytest.raises(StreamingQueryException) as err:
+        call()
+    assert f"Identifier: {name}" in str(err.value)
+    assert not spark.streams.active
+
+
+@pytest.mark.parametrize("site", ["stream_ann_lookup", "stream_ivfpq_ingest"])
+def test_foreach_batch_redelivery_keeps_rows(spark, monkeypatch, site):
+    """foreachBatch is at-least-once: a batch function run twice per batch
+    (a redelivery after a crash between the write and the checkpoint
+    commit) must leave the workload's rows equal to a single delivery."""
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    from nextgenetl_spark.workloads import similarity
+
+    fn = getattr(similarity, site)
+    once = sorted(map(tuple, fn(spark, SF_SMOKE).collect()))
+    orig = DataStreamWriter.foreachBatch
+
+    def twice(self, func):
+        def redeliver(batch_df, batch_id):
+            func(batch_df, batch_id)
+            func(batch_df, batch_id)
+
+        return orig(self, redeliver)
+
+    monkeypatch.setattr(DataStreamWriter, "foreachBatch", twice)
+    assert len(once) > 0
+    assert sorted(map(tuple, fn(spark, SF_SMOKE).collect())) == once
     assert not spark.streams.active

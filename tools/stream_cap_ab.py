@@ -30,8 +30,8 @@ _ORIG = SRC.run_memory_replay
 _CAP = {"v": None}
 
 
-def _patched(spark, out, name, output_mode="append", cap=16, timeout_s=300):
-    return _ORIG(spark, out, name, output_mode, _CAP["v"] or cap, timeout_s)
+def _patched(spark, out, name, output_mode="append", cap=16):
+    return _ORIG(spark, out, name, output_mode, _CAP["v"] or cap)
 
 
 SRC.run_memory_replay = _patched

@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 
 from nextgenetl_spark.catalog import load
 from nextgenetl_spark.session import get_spark
-from nextgenetl_spark.streaming.source import replay_shuffle_cap
+from nextgenetl_spark.streaming.source import replay_shuffle_cap, run_bounded
 from nextgenetl_spark.streaming.stateful import debounce_against_last_kept
 
 N_SLICES = 10
@@ -95,28 +95,25 @@ def run_replay(spark, data_dir: str, name: str) -> dict:
     shutil.rmtree(ckpt, ignore_errors=True)
     with replay_shuffle_cap(spark, 16):
         t0 = time.time()
-        q = (
+        # a replay that does not finish raises by name: a partial replay's
+        # wall and kept_rows are never reported
+        q = run_bounded(
             out.writeStream.format("memory")
-            .queryName(name)
             .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+            .option("checkpointLocation", ckpt),
+            name,
+            timeout_s=600,
         )
-        try:
-            q.awaitTermination(600)
-            wall = round(time.time() - t0, 2)
-            prog = [
-                {
-                    "batch": p["batchId"],
-                    "rows": p["numInputRows"],
-                    "ms": p["durationMs"].get("triggerExecution"),
-                }
-                for p in (json.loads(rp.json) for rp in q.recentProgress)
-                if p["numInputRows"] > 0
-            ]
-        finally:
-            q.stop()
+        wall = round(time.time() - t0, 2)
+    prog = [
+        {
+            "batch": p["batchId"],
+            "rows": p["numInputRows"],
+            "ms": p["durationMs"].get("triggerExecution"),
+        }
+        for p in (json.loads(rp.json) for rp in q.recentProgress)
+        if p["numInputRows"] > 0
+    ]
     kept = spark.table(name).count()
     shutil.rmtree(ckpt, ignore_errors=True)
     return {"wall_s": wall, "kept_rows": kept, "batches": prog}
