@@ -108,28 +108,26 @@ def release_report(old: DataFrame, new: DataFrame, key: str) -> dict:
     part via INFORMATION_SCHEMA — here the DataFrame schema IS the catalog)."""
     old_fields = {f.name: f.dataType.simpleString() for f in old.schema.fields}
     new_fields = {f.name: f.dataType.simpleString() for f in new.schema.fields}
-    # One full-outer key join + one unioned count: 2 jobs total where the
-    # compositional form (key_diff counts + row_count_compare) pays 4 —
-    # at warehouse scale each job is a full scan, so halving passes matters.
-    o = old.select(F.col(key).alias("__k")).distinct().withColumn("__o", F.lit(1))
-    n = new.select(F.col(key).alias("__k")).distinct().withColumn("__n", F.lit(1))
-    krow = (
-        o.join(n, "__k", "full_outer")
-        .agg(
-            F.count(F.when(F.col("__o").isNull(), 1)).alias("added"),
-            F.count(F.when(F.col("__n").isNull(), 1)).alias("removed"),
-        )
-        .first()
+    # One action: both sides' keys in one UNION ALL tagged 1 (old) and 2
+    # (new), grouped by key; ``bit_or(tag)`` says which sides hold the key
+    # and the per-side counts sum to the row counts (the tagged group-by of
+    # tables_equal). A NULL key matches nothing, as in a key join: the extra
+    # grouping column keeps each side's NULL keys in a group of their own.
+    tag = F.col("__t")
+    keys = old.select(F.col(key).alias("__k"), F.lit(1).alias("__t")).unionAll(
+        new.select(F.col(key).alias("__k"), F.lit(2).alias("__t"))
     )
-    rc = {
-        r["__side"]: r["cnt"]
-        for r in old.select(F.lit("old").alias("__side"))
-        .unionByName(new.select(F.lit("new").alias("__side")))
-        .groupBy("__side")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .collect()
-    }
-    rc = {"old": rc.get("old", 0), "new": rc.get("new", 0)}
+    per_key = keys.groupBy("__k", F.when(F.col("__k").isNull(), tag).alias("__null_side")).agg(
+        F.bit_or(tag).alias("__sides"),
+        F.count_if(tag == 1).alias("__old"),
+        F.count_if(tag == 2).alias("__new"),
+    )
+    row = per_key.agg(
+        F.count_if(F.col("__sides") == 2).alias("added"),
+        F.count_if(F.col("__sides") == 1).alias("removed"),
+        F.coalesce(F.sum("__old"), F.lit(0)).alias("old"),
+        F.coalesce(F.sum("__new"), F.lit(0)).alias("new"),
+    ).first()
     return {
         "added_fields": sorted(set(new_fields) - set(old_fields)),
         "removed_fields": sorted(set(old_fields) - set(new_fields)),
@@ -138,9 +136,9 @@ def release_report(old: DataFrame, new: DataFrame, key: str) -> dict:
             for c in set(old_fields) & set(new_fields)
             if old_fields[c] != new_fields[c]
         },
-        "added_key_count": krow["added"],
-        "removed_key_count": krow["removed"],
-        "row_counts": {**rc, "equal": rc["old"] == rc["new"]},
+        "added_key_count": row["added"],
+        "removed_key_count": row["removed"],
+        "row_counts": {"old": row["old"], "new": row["new"], "equal": row["old"] == row["new"]},
     }
 
 

@@ -1402,17 +1402,10 @@ def pq_topk(
 
     # The query-side collect is independent of the whole training/crowd
     # walk — overlap it (guide §2.6; see ivfpq_topk). Values unchanged.
-    from concurrent.futures import ThreadPoolExecutor
+    from nextgenetl_spark.overlap import overlap
 
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        f_qrows = pool.submit(
-            lambda: queries.select(F.col(query_id), F.col(vec_col))
-            .limit(MAX_QUERY_ROWS + 1)
-            .collect()
-        )
-        cb = train_pq_codebooks(corpus, m, ks, train_iters, corpus_id, vec_col)
-        CB = _collect_codebooks(cb, m, ks)
-        dsub = CB.shape[2]
+    def _walk(shortlist=shortlist):
+        CB = _collect_codebooks(train_pq_codebooks(corpus, m, ks, train_iters, corpus_id, vec_col), m, ks)
         codes = pq_encode(corpus, CB, corpus_id, vec_col)
         if shortlist is None:
             # the crowd measurement AND the final scoring scan both consume the
@@ -1433,7 +1426,13 @@ def pq_topk(
                     unit, codes, CB, corpus_id, count_fraction=crowd_count_fraction
                 ),
             )
-        qrows = f_qrows.result()
+        return CB, codes, shortlist
+
+    qrows, (CB, codes, shortlist) = overlap(queries.sparkSession, [
+        lambda: queries.select(F.col(query_id), F.col(vec_col)).limit(MAX_QUERY_ROWS + 1).collect(),
+        _walk,
+    ])
+    dsub = CB.shape[2]
     if len(qrows) > MAX_QUERY_ROWS:
         raise ValueError(
             f"pq_topk: the query side is collected and broadcast in the UDF "
@@ -1568,11 +1567,11 @@ def ivfpq_topk(
     # the Lloyd refinement of the cell centroids, the PQ codebook training,
     # and the query-side collect each depend only on inputs that already
     # exist. Running them sequentially left the cluster idle between each
-    # walk's small jobs; a 3-thread pool overlaps them (guide §2.6 —
+    # walk's small jobs; ``overlap`` runs them together (guide §2.6 —
     # actions are only sequential because the driver calls them
     # sequentially). Each walk's own collected values are unchanged, so
     # results are bit-identical regardless of scheduling order.
-    from concurrent.futures import ThreadPoolExecutor
+    from nextgenetl_spark.overlap import overlap
 
     def _refine():
         if refine_iters > 0:
@@ -1584,43 +1583,37 @@ def ivfpq_topk(
             corpus, m, ks, train_iters, corpus_id, vec_col,
             _seed_rows=seed_rows, _seed_horizon=seed_horizon,
         )
-        return cb, _collect_codebooks(cb, m, ks)
+        return _collect_codebooks(cb, m, ks)
 
     def _qrows():
         return queries.select(F.col(query_id), F.col(vec_col)).limit(MAX_QUERY_ROWS + 1).collect()
 
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        f_cents = pool.submit(_refine)
-        f_train = pool.submit(_train)
-        f_qrows = pool.submit(_qrows)
-        cents = f_cents.result()
-        _, CB = f_train.result()
-        # literal-backed either way (r11) — no checkpoint job needed
-        cells = assign_cells(corpus, cents, corpus_id, vec_col).select(corpus_id, "cell_id")
-        dsub = CB.shape[2]
-        # the IVF-PQ index table: (cell_id, id, codes) — hive-partition by
-        # cell_id when persisting
-        codes = pq_encode(corpus, CB, corpus_id, vec_col).join(cells, corpus_id)
-        if shortlist is None:
-            # near-identical vectors tie in ADC score REGARDLESS of cell, so
-            # the crowd statistic ignores cell boundaries (the frozen
-            # two-crowd rule — see pq_topk's TUNING / _auto_shortlist).
-            # Materialize the (id, codes, cell_id) index table once: the crowd
-            # pass and the final probed-cell scan both consume it, and without
-            # the localCheckpoint each action re-runs the scan→assign-GEMM→
-            # encode-GEMM→join lineage (guide §5; values untouched — this is
-            # the exact table build_ivfpq_index persists). eager=False merges
-            # the materialization into the crowd pass's first action instead
-            # of paying a separate checkpoint job (r11).
-            codes = codes.localCheckpoint(eager=False)
-            unit = _unit_vectors(corpus, corpus_id, vec_col)
-            shortlist = _auto_shortlist(
-                k,
-                measured_adc_crowd(
-                    unit, codes, CB, corpus_id, count_fraction=crowd_count_fraction
-                ),
-            )
-        qrows = f_qrows.result()
+    cents, CB, qrows = overlap(queries.sparkSession, [_refine, _train, _qrows])
+    # literal-backed either way (r11) — no checkpoint job needed
+    cells = assign_cells(corpus, cents, corpus_id, vec_col).select(corpus_id, "cell_id")
+    dsub = CB.shape[2]
+    # the IVF-PQ index table: (cell_id, id, codes) — hive-partition by
+    # cell_id when persisting
+    codes = pq_encode(corpus, CB, corpus_id, vec_col).join(cells, corpus_id)
+    if shortlist is None:
+        # near-identical vectors tie in ADC score REGARDLESS of cell, so
+        # the crowd statistic ignores cell boundaries (the frozen
+        # two-crowd rule — see pq_topk's TUNING / _auto_shortlist).
+        # Materialize the (id, codes, cell_id) index table once: the crowd
+        # pass and the final probed-cell scan both consume it, and without
+        # the localCheckpoint each action re-runs the scan→assign-GEMM→
+        # encode-GEMM→join lineage (guide §5; values untouched — this is
+        # the exact table build_ivfpq_index persists). eager=False merges
+        # the materialization into the crowd pass's first action instead
+        # of paying a separate checkpoint job (r11).
+        codes = codes.localCheckpoint(eager=False)
+        unit = _unit_vectors(corpus, corpus_id, vec_col)
+        shortlist = _auto_shortlist(
+            k,
+            measured_adc_crowd(
+                unit, codes, CB, corpus_id, count_fraction=crowd_count_fraction
+            ),
+        )
     if len(qrows) > MAX_QUERY_ROWS:
         raise ValueError(
             f"ivfpq_topk: the query side is collected and broadcast in the UDF "
@@ -1889,7 +1882,7 @@ def append_to_ivfpq_index(
     # while the vectors write streams rows; the _DONE marker below still
     # lands only after BOTH writes returned, so idempotence semantics are
     # unchanged — either write failing propagates before the marker.
-    from concurrent.futures import ThreadPoolExecutor
+    from nextgenetl_spark.overlap import overlap
 
     def _write_vectors():
         (
@@ -1907,11 +1900,7 @@ def append_to_ivfpq_index(
             .parquet(f"{index_dir}/codes")
         )
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        fv = pool.submit(_write_vectors)
-        fc = pool.submit(_write_codes)
-        fv.result()
-        fc.result()
+    overlap(spark, [_write_vectors, _write_codes])
     if marker is not None:
         with open(os.path.join(marker, "_DONE"), "w", encoding="utf-8") as fh:
             fh.write("")

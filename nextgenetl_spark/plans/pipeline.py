@@ -23,6 +23,18 @@ Spark design:
   a resume reads with it — zero Spark jobs, in a new process too.
 - each step runs under a Spark job group named after the step, so its jobs
   can be counted by name (``statusTracker().getJobIdsForGroup``).
+- ``run`` treats the steps as a dependency graph, not a list (SURVEY §3.1:
+  steps chain through named tables). A ``sql`` step reads the relations
+  its parsed plan names (subqueries included, its own CTE names excluded);
+  a ``salted_join`` step reads ``big`` and ``small``. A step waits for
+  every earlier step that writes a table it reads, reads or writes a table
+  it writes (so same-dest steps keep config order), or shares an export
+  directory with it. A builder step, a ``force_skew_join`` step (it flips a
+  session-global conf) and a step reading a name the pipeline cannot name
+  are barriers: they wait for every earlier step, and every later step
+  waits for them. Ready steps run concurrently (``overlap.overlap_pool``);
+  each finished step's output is registered on the calling thread before
+  its dependents are submitted.
 """
 
 from __future__ import annotations
@@ -30,15 +42,22 @@ from __future__ import annotations
 import os
 import re
 from collections.abc import Callable
+from concurrent.futures import FIRST_COMPLETED, Future, wait
 from dataclasses import dataclass, field
 
 import yaml
 
+from pyspark.errors import ParseException
 from pyspark.sql import DataFrame, SparkSession
 
 from nextgenetl_spark.catalog import read_parquet_as
+from nextgenetl_spark.overlap import overlap_pool
 
 _PARAM_RE = re.compile(r"\{([A-Za-z_][A-Za-z0-9_]*)\}")
+# What a parsed (unresolved) plan's tree string prints for each table a
+# query reads and for the names its WITH clauses define.
+_RELATION_RE = re.compile(r"'UnresolvedRelation \[([^\]]*)\]")
+_CTE_RE = re.compile(r"\bCTE \[([^\]]*)\]")
 # The SparkContext local properties setJobGroup writes.
 _JOB_GROUP_KEYS = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
 
@@ -109,9 +128,17 @@ class Pipeline:
         return hashlib.md5(json.dumps(basis, sort_keys=True, default=str).encode()).hexdigest()
 
     def run_step(self, step: dict) -> DataFrame:
-        """Run one step under a Spark job group named after it; the
-        caller's job group is restored afterwards."""
-        name = step.get("name", step.get("dest", "<unnamed>"))
+        """Run one step and register its output under its ``dest``."""
+        df = self._step_output(step)
+        self.register(step["dest"], df)
+        return df
+
+    def _step_output(self, step: dict) -> DataFrame:
+        """Build (and, if configured, write) one step's output under a Spark
+        job group named after the step; the caller's job group is restored
+        afterwards. Registers nothing, so ``run`` can call it from a pool
+        thread."""
+        name = _step_name(step)
         sc = self.spark.sparkContext
         caller = [sc.getLocalProperty(k) for k in _JOB_GROUP_KEYS]
         sc.setJobGroup(name, f"pipeline step {name}")
@@ -121,13 +148,14 @@ class Pipeline:
             for key, value in zip(_JOB_GROUP_KEYS, caller):
                 sc.setLocalProperty(key, value)
 
+    def _rendered_sql(self, step: dict) -> str:
+        return render_sql(step["sql"], self.params) if step.get("format", True) else step["sql"]
+
     def _run_step(self, step: dict, name: str) -> DataFrame:
         import json
 
         dest = step["dest"]
-        rendered = None
-        if "sql" in step:
-            rendered = render_sql(step["sql"], self.params) if step.get("format", True) else step["sql"]
+        rendered = self._rendered_sql(step) if "sql" in step else None
         if step.get("skip_if_fresh"):
             # Incremental resume: reuse a materialized output whose recorded
             # definition fingerprint matches this step — the automatic form
@@ -141,9 +169,7 @@ class Pipeline:
                 with open(sidecar, encoding="utf-8") as fh:
                     recorded = json.load(fh)
                 if recorded.get("fingerprint") == self._step_fingerprint(step, rendered):
-                    df = read_parquet_as(self.spark, path, recorded.get("schema"))
-                    self.register(dest, df)
-                    return df
+                    return read_parquet_as(self.spark, path, recorded.get("schema"))
         if "sql" in step:
             df = self.spark.sql(rendered)
         elif "builder" in step:
@@ -227,8 +253,9 @@ class Pipeline:
                 # NOTE: the override is SESSION-GLOBAL for the duration of
                 # this write — Spark has no per-query conf scope, so any
                 # concurrent query on the same SparkSession also runs with
-                # skew-join forced (round-6 ADVICE; the pipeline runner is
-                # single-threaded, so in practice the window is this write).
+                # skew-join forced (round-6 ADVICE). ``run`` makes this step
+                # a barrier, so it runs alone: no other step of the pipeline
+                # runs a job during this write.
                 # Restore by UNSETTING when the key was absent, so we never
                 # convert "unset" into an explicit "false".
                 key = "spark.sql.adaptive.forceOptimizeSkewedJoin"
@@ -280,19 +307,103 @@ class Pipeline:
             from nextgenetl_spark.schemas import save_schema
 
             save_schema(os.path.join(export_dir, "_schema.json"), df.schema)
-        self.register(dest, df)
         return df
 
+    def _step_inputs(self, step: dict) -> set[str] | None:
+        """Lower-cased names of the tables a step reads, or None when they
+        cannot be determined (a builder step, SQL that does not parse or
+        names a table through IDENTIFIER)."""
+        if "sql" in step:
+            try:
+                plan = self.spark._jsparkSession.sessionState().sqlParser().parsePlan(
+                    self._rendered_sql(step)).toString()
+            except ParseException:
+                return None
+            if "UnresolvedIdentifier" in plan:
+                return None
+            ctes = {n.strip().lower() for names in _CTE_RE.findall(plan) for n in names.split(",")}
+            return {n.lower() for n in _RELATION_RE.findall(plan)} - ctes
+        if "builder" not in step and "salted_join" in step:
+            spec = step["salted_join"]
+            return {str(spec.get("big")).lower(), str(spec.get("small")).lower()}
+        return None
+
+    def _step_dag(self, plan: list[dict]) -> list[set[int]]:
+        """For each step of ``plan``, the indices of the earlier steps it
+        waits for (see the module docstring)."""
+        known = {n.lower() for n in self.tables}
+        reads: list[set[str]] = []
+        writes: list[set[str]] = []
+        barrier: list[bool] = []
+        deps: list[set[int]] = []
+        for j, step in enumerate(plan):
+            inputs = self._step_inputs(step)
+            out = {str(step[k]).lower() for k in ("dest", "export_jsonl", "export_csv") if step.get(k)}
+            earlier = {str(s.get("dest")).lower() for s in plan[:j]}
+            barrier.append(inputs is None or not inputs <= known | earlier or bool(step.get("force_skew_join")))
+            reads.append(inputs or set())
+            writes.append(out)
+            deps.append({
+                i for i in range(j)
+                if barrier[j] or barrier[i] or reads[j] & writes[i] or out & (reads[i] | writes[i])
+            })
+        return deps
+
     def run(self, config: dict, steps: list | None = None) -> dict:
-        """Run the configured steps (optionally a named subset, preserving
-        config order — the reference's resume-by-steps-list). Returns the
-        name → DataFrame map of step outputs."""
+        """Run the configured steps (optionally a named subset, the
+        reference's resume-by-steps-list; ``run_steps`` in the config is the
+        default subset) and return the dest → DataFrame map of step outputs
+        in config order.
+
+        The selected steps form a DAG (``_step_dag``, rules in the module
+        docstring); every step whose predecessors have finished is
+        submitted to a pool bounded by ``defaultParallelism``, each under
+        its own job group. A step's output is registered (temp view and
+        ``tables``) on this thread as it finishes, before its dependents
+        are submitted. When a step fails, nothing more is submitted, the
+        running steps' job groups are cancelled until they end, and a
+        RuntimeError naming the failed step is raised from its error. A
+        step that did not finish writes no ``_step_fingerprint.json``."""
         self.params = {**config.get("params", {}), **self.params}
         selected = steps if steps is not None else config.get("run_steps")
-        out = {}
-        for step in config["steps"]:
-            name = step.get("name", step.get("dest"))
-            if selected is not None and name not in selected:
-                continue
-            out[step["dest"]] = self.run_step(step)
-        return out
+        plan = [s for s in config["steps"] if selected is None or _step_name(s) in selected]
+        deps = self._step_dag(plan)
+        done: dict[int, DataFrame] = {}
+        running: dict[Future, int] = {}
+        failed: list[tuple[int, BaseException]] = []
+
+        def settle(finished) -> None:
+            # config order among steps that finished together
+            for fut in sorted(finished, key=running.get):
+                j = running.pop(fut)
+                if fut.cancelled():
+                    continue
+                if fut.exception() is not None:
+                    failed.append((j, fut.exception()))
+                    continue
+                done[j] = fut.result()
+                self.register(plan[j]["dest"], done[j])
+
+        with overlap_pool(self.spark) as submit:
+            try:
+                while not failed and len(done) < len(plan):
+                    for j, step in enumerate(plan):
+                        if j not in done and j not in running.values() and deps[j] <= done.keys():
+                            running[submit(lambda step=step: self._step_output(step))] = j
+                    settle(wait(running, return_when=FIRST_COMPLETED)[0])
+            finally:
+                # cancelJobGroup reaches only the jobs active when it is
+                # called, so repeat it until each sibling has ended.
+                while running:
+                    for fut, j in running.items():
+                        if not fut.cancel():
+                            self.spark.sparkContext.cancelJobGroup(_step_name(plan[j]))
+                    settle(wait(running, timeout=0.05)[0])
+        if failed:
+            j, exc = failed[0]
+            raise RuntimeError(f"pipeline step '{_step_name(plan[j])}' failed: {exc}") from exc
+        return {plan[j]["dest"]: done[j] for j in sorted(done)}
+
+
+def _step_name(step: dict) -> str:
+    return step.get("name", step.get("dest", "<unnamed>"))

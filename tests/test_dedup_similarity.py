@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import random
 
+import pytest
 from pyspark.sql import functions as F
 
 from nextgenetl_spark.catalog import load
@@ -1936,3 +1937,54 @@ def test_ivfpq_append_normalizes_vector_element_type(spark, tmp_path):
     )
     got = ivfpq_query_index(spark, idx, q, nprobe=4, shortlist=10**9, k=3)
     assert got.count() == 9
+
+
+def _ann_pool_site(spark, tmp_path, site: str):
+    """A callable running one of the three pooled ANN paths on 40 random
+    8-d vectors."""
+    from nextgenetl_spark.operators.similarity import (
+        append_to_ivfpq_index,
+        build_ivfpq_index,
+        ivfpq_topk,
+        pq_topk,
+    )
+
+    rng = random.Random(5)
+    emb = spark.createDataFrame(
+        [(i, [rng.gauss(0, 1) for _ in range(8)]) for i in range(40)], "vec_id long, embedding array<double>"
+    )
+    corpus = emb.withColumnRenamed("vec_id", "neighbor_id")
+    queries = emb.filter("vec_id < 3").withColumnRenamed("vec_id", "query_id")
+    if site == "pq_topk":
+        return lambda: pq_topk(queries, corpus, m=2, ks=4, k=3, shortlist=8).collect()
+    if site == "ivfpq_topk":
+        return lambda: ivfpq_topk(queries, corpus, k_centroids=4, m=2, ks=4, k=3, shortlist=8,
+                                  refine_iters=1).collect()
+    idx = str(tmp_path / "idx")
+    build_ivfpq_index(emb.filter("vec_id >= 10"), idx, k_centroids=4, refine_iters=1, m=2, ks=4, train_iters=1)
+    return lambda: append_to_ivfpq_index(spark, idx, emb.filter("vec_id < 10"), batch_id=1)
+
+
+@pytest.mark.parametrize("site", ["pq_topk", "ivfpq_topk", "append_to_ivfpq_index"])
+def test_pooled_ann_jobs_stay_in_the_callers_job_group(spark, tmp_path, site):
+    """The overlapped walks of pq_topk and ivfpq_topk and the IVF-PQ
+    append's two concurrent writes run in the job group the caller set:
+    no job they run is left without a group, so the caller's
+    cancelJobGroup and per-group job counts reach every one of them."""
+    tracker = spark.sparkContext.statusTracker()
+
+    def group_jobs(group):
+        spark._jsc.sc().listenerBus().waitUntilEmpty()
+        return set(tracker.getJobIdsForGroup(group))
+
+    fn = _ann_pool_site(spark, tmp_path, site)
+    group = f"ann_pool_{site}"
+    ungrouped, grouped = group_jobs(None), group_jobs(group)
+    spark.sparkContext.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            spark.sparkContext.setLocalProperty(key, None)
+    assert group_jobs(group) - grouped
+    assert not group_jobs(None) - ungrouped

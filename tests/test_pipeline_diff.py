@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import math
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -867,3 +867,321 @@ def test_tables_equal_matches_symmetric_except_distinct(spark, case):
     new = spark.createDataFrame(new_rows, _GATE_SCHEMA).select(*order)
     for nan_tolerant in (True, False):
         assert D.tables_equal(old, new, nan_tolerant) == _symmetric_diff_gate(old, new, nan_tolerant)
+
+
+def _two_action_report(old, new, key):
+    """release_report's key and row counts before they became one action:
+    a full-outer join of distinct keys, then a unioned count. Kept here as
+    the oracle."""
+    o = old.select(F.col(key).alias("__k")).distinct().withColumn("__o", F.lit(1))
+    n = new.select(F.col(key).alias("__k")).distinct().withColumn("__n", F.lit(1))
+    krow = (
+        o.join(n, "__k", "full_outer")
+        .agg(
+            F.count(F.when(F.col("__o").isNull(), 1)).alias("added"),
+            F.count(F.when(F.col("__n").isNull(), 1)).alias("removed"),
+        )
+        .first()
+    )
+    rc = {
+        r["__side"]: r["cnt"]
+        for r in old.select(F.lit("old").alias("__side"))
+        .unionByName(new.select(F.lit("new").alias("__side")))
+        .groupBy("__side")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+        .collect()
+    }
+    rc = {"old": rc.get("old", 0), "new": rc.get("new", 0)}
+    return krow["added"], krow["removed"], {**rc, "equal": rc["old"] == rc["new"]}
+
+
+_REPORT_KEYS = st.lists(st.sampled_from([None, 1, 2, 3, 4, 5]), max_size=6)
+
+
+@settings(
+    max_examples=fuzz_examples(150, 10),
+    deadline=None,
+    derandomize=True,
+    suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
+)
+@example(old_keys=[None, 1], new_keys=[1])
+@example(old_keys=[None, None, 2], new_keys=[None, 2, 2])
+@example(old_keys=[], new_keys=[3, 3])
+@example(old_keys=[], new_keys=[])
+@example(old_keys=[1, 2], new_keys=[3, 4])
+@given(old_keys=_REPORT_KEYS, new_keys=_REPORT_KEYS)
+def test_release_report_matches_two_action_form(spark, old_keys, new_keys):
+    """The one-action report gives the two-action form's added/removed key
+    and row counts over NULL keys on one or both sides (a NULL key matches
+    nothing), duplicate keys, empty sides and disjoint key sets."""
+    old = spark.createDataFrame([(k, "o") for k in old_keys], "pk INT, v STRING")
+    new = spark.createDataFrame([(k, "n") for k in new_keys], "pk INT, v STRING")
+    rep = D.release_report(old, new, "pk")
+    got = (rep["added_key_count"], rep["removed_key_count"], rep["row_counts"])
+    assert got == _two_action_report(old, new, "pk")
+
+
+def test_release_report_runs_one_action(spark):
+    """Job-count guard: the report runs one action (every job it runs is
+    named after one call site), 3 jobs against the two-action form's 6."""
+    old, new = _versioned_pair(spark)
+    rep, jobs = _jobs_in(spark, "report_guard", lambda: D.release_report(old, new, "pk"))
+    oracle, oracle_jobs = _jobs_in(spark, "report_oracle", lambda: _two_action_report(old, new, "pk"))
+    assert (rep["added_key_count"], rep["removed_key_count"], rep["row_counts"]) == oracle
+    store = spark._jsc.sc().statusStore()
+
+    def actions(group):
+        return len({store.job(j).name() for j in _group_jobs(spark, group)})
+
+    assert (actions("report_guard"), jobs) == (1, 3)
+    assert (actions("report_oracle"), oracle_jobs) == (2, 6)
+
+
+def _sleep_udfs(spark):
+    """``pipe_sleep(id, s)`` returns ``id`` after ``s`` seconds;
+    ``pipe_fail(id, s)`` raises after ``s`` seconds. One row per call, so
+    a one-row input holds its step's job that long."""
+    import time
+
+    def fail(i, s):
+        time.sleep(float(s))
+        raise ValueError("pipe_fail")
+
+    spark.udf.register("pipe_sleep", lambda i, s: time.sleep(float(s)) or i, "long")
+    spark.udf.register("pipe_fail", fail, "long")
+
+
+def _group_span(spark, group: str) -> tuple[int, int]:
+    """(first submission, last completion) in epoch ms of ``group``'s jobs."""
+    store = spark._jsc.sc().statusStore()
+    jobs = [store.job(j) for j in _group_jobs(spark, group)]
+    assert jobs, group
+    return (min(j.submissionTime().get().getTime() for j in jobs),
+            max(j.completionTime().get().getTime() for j in jobs))
+
+
+def _sleep_step(name: str, seconds: float, **extra) -> dict:
+    return {"name": name, "dest": name, "materialize": True,
+            "sql": f"SELECT pipe_sleep(id, {seconds}) AS id FROM one", **extra}
+
+
+def _dag_pipeline(spark, tmp_path):
+    _sleep_udfs(spark)
+    p = Pipeline(spark, warehouse=str(tmp_path / "wh"))
+    p.register("one", spark.range(0, 1, 1, 1))
+    return p
+
+
+def test_step_dag_reads_tables_from_the_parsed_plan(spark):
+    """A sql step reads the relations of its parsed plan, subqueries
+    included and its own CTE names excluded; a salted_join step reads big
+    and small; a step overwriting a table waits for the steps reading it."""
+    p = Pipeline(spark)
+    p.register("src", spark.range(1))
+    plan = [
+        {"name": "a", "dest": "a", "sql": "SELECT * FROM src"},
+        {"name": "b", "dest": "b", "sql": "SELECT * FROM src WHERE id IN (SELECT id FROM A)"},
+        {"name": "c", "dest": "c", "sql": "WITH a AS (SELECT 1 AS id) SELECT * FROM a JOIN src USING (id)"},
+        {"name": "d", "dest": "d", "salted_join": {"big": "b", "small": "c", "key": "id"}},
+        {"name": "e", "dest": "src", "sql": "SELECT 2 AS id"},
+        {"name": "f", "dest": "f", "sql": "SELECT * FROM IDENTIFIER('a')"},
+        {"name": "g", "dest": "g", "sql": "SELECT * FROM d"},
+    ]
+    assert p._step_dag(plan) == [set(), {0}, set(), {1, 2}, {0, 1, 2}, {0, 1, 2, 3, 4}, {3, 5}]
+
+
+def test_failing_step_cancels_running_sibling(spark, tmp_path):
+    """A failing step cancels a sibling blocked in a slow UDF (its job ends
+    FAILED long before the UDF would return), nothing more is submitted,
+    the error names the failing step, and neither the cancelled step nor
+    its never-run dependent writes a fingerprint sidecar."""
+    import os
+    import time
+
+    import pytest
+
+    p = _dag_pipeline(spark, tmp_path)
+    cfg = {"steps": [
+        _sleep_step("dag_cancel_slow", 60, skip_if_fresh=True),
+        {"name": "dag_cancel_boom", "dest": "boom", "materialize": True,
+         "sql": "SELECT pipe_fail(id, 1.0) AS id FROM one"},
+        {"name": "dag_cancel_after", "dest": "after", "materialize": True, "skip_if_fresh": True,
+         "sql": "SELECT * FROM dag_cancel_slow"},
+    ]}
+    t0 = time.perf_counter()
+    with pytest.raises(RuntimeError, match="pipeline step 'dag_cancel_boom' failed"):
+        p.run(cfg)
+    assert time.perf_counter() - t0 < 30
+    tracker = spark.sparkContext.statusTracker()
+    slow_jobs = _group_jobs(spark, "dag_cancel_slow")
+    assert slow_jobs and {tracker.getJobInfo(j).status for j in slow_jobs} == {"FAILED"}
+    assert not _group_jobs(spark, "dag_cancel_after")
+    wh = p.warehouse
+    for dest in ("dag_cancel_slow", "after"):
+        assert not os.path.exists(os.path.join(wh, dest, "_step_fingerprint.json"))
+    assert not {"dag_cancel_slow", "boom", "after"} & set(p.tables)
+
+
+def test_force_skew_join_step_runs_alone(spark, tmp_path):
+    """A force_skew_join step flips a session-global conf, so no other
+    step's jobs run while its jobs do; the independent steps after it do
+    overlap each other."""
+    p = _dag_pipeline(spark, tmp_path)
+    names = ["dag_skew_a", "dag_skew_b", "dag_skew_c", "dag_skew_d"]
+    cfg = {"steps": [
+        _sleep_step(names[0], 0.5),
+        _sleep_step(names[1], 0.5, force_skew_join=True),
+        _sleep_step(names[2], 1.0),
+        _sleep_step(names[3], 1.0),
+    ]}
+    p.run(cfg)
+    spans = {n: _group_span(spark, n) for n in names}
+    skew = spans["dag_skew_b"]
+    for n in ("dag_skew_a", "dag_skew_c", "dag_skew_d"):
+        assert spans[n][1] <= skew[0] or skew[1] <= spans[n][0], (n, spans)
+    (c0, c1), (d0, d1) = spans["dag_skew_c"], spans["dag_skew_d"]
+    assert c0 < d1 and d0 < c1, spans
+
+
+def test_same_dest_steps_keep_config_order(spark, tmp_path):
+    """Two steps writing one dest run in config order even when the first
+    is slow, and a reader of that dest sees the second's output."""
+    import os
+
+    p = _dag_pipeline(spark, tmp_path)
+    cfg = {"steps": [
+        {"name": "dag_dest_first", "dest": "t", "materialize": True,
+         "sql": "SELECT pipe_sleep(id, 1.0) AS v FROM one"},
+        {"name": "dag_dest_second", "dest": "t", "materialize": True, "sql": "SELECT 7L AS v"},
+        {"name": "dag_dest_reader", "dest": "r", "sql": "SELECT v + 1 AS v FROM t"},
+    ]}
+    out = p.run(cfg)
+    assert list(out) == ["t", "r"]
+    assert [r.v for r in out["t"].collect()] == [7]
+    assert [r.v for r in spark.table("t").collect()] == [7]
+    assert [r.v for r in spark.read.parquet(os.path.join(p.warehouse, "t")).collect()] == [7]
+    assert [r.v for r in out["r"].collect()] == [8]
+    assert _group_span(spark, "dag_dest_first")[1] <= _group_span(spark, "dag_dest_second")[0]
+
+
+def test_builder_and_unregistered_view_steps_are_barriers(spark, tmp_path):
+    """A builder step, and a step reading a view the pipeline did not
+    register, wait for every earlier step; every later step waits for
+    them."""
+    p = _dag_pipeline(spark, tmp_path)
+    p.register_builder("dag_probe", lambda pipe, step: pipe.table("one").selectExpr("pipe_sleep(id, 0.3) AS id"))
+    spark.range(1).createOrReplaceTempView("dag_outside")
+    names = ["dag_bar_a", "dag_bar_builder", "dag_bar_c", "dag_bar_view", "dag_bar_e"]
+    cfg = {"steps": [
+        _sleep_step(names[0], 0.5),
+        {"name": names[1], "dest": names[1], "builder": "dag_probe", "materialize": True},
+        _sleep_step(names[2], 0.5),
+        {"name": names[3], "dest": names[3], "materialize": True,
+         "sql": "SELECT pipe_sleep(id, 0.3) AS id FROM dag_outside"},
+        _sleep_step(names[4], 0.5),
+    ]}
+    p.run(cfg)
+    spans = [_group_span(spark, n) for n in names]
+    for before, after in zip(spans, spans[1:]):
+        assert before[1] <= after[0], (names, spans)
+
+
+def _equivalence_config() -> dict:
+    """Independent branches, a chain, a CTE, a subquery, a lazy step, a
+    salted_join, a CSV export and an overwritten dest."""
+    return {"params": {"floor": 3}, "steps": [
+        {"name": "eq_big", "dest": "eq_big", "materialize": True,
+         "sql": "SELECT id, id % 5 AS k, id * 2 AS v FROM nums WHERE id >= {floor}"},
+        {"name": "eq_dim", "dest": "eq_dim", "materialize": True,
+         "sql": "SELECT k, concat('k', k) AS label FROM keys"},
+        {"name": "eq_lazy", "dest": "eq_lazy", "sql": "SELECT k, SUM(v) AS total FROM eq_big GROUP BY k"},
+        {"name": "eq_join", "dest": "eq_join", "materialize": True,
+         "salted_join": {"big": "eq_big", "small": "eq_dim", "key": "k", "num_salts": 4}},
+        {"name": "eq_cte", "dest": "eq_cte", "materialize": True, "export_csv": "eq_cte_csv",
+         "sql": """WITH top AS (SELECT k FROM eq_lazy WHERE total > 100)
+                   SELECT d.k, d.label FROM eq_dim d WHERE d.k IN (SELECT k FROM top)"""},
+        {"name": "eq_dim_again", "dest": "eq_dim", "materialize": True,
+         "sql": "SELECT k, concat('K', k) AS label FROM keys"},
+        {"name": "eq_last", "dest": "eq_last", "materialize": True,
+         "sql": "SELECT d.label, COUNT(*) AS n FROM eq_join j JOIN eq_dim d USING (k) GROUP BY d.label"},
+    ]}
+
+
+def _equivalence_pipeline(spark, warehouse: str) -> Pipeline:
+    p = Pipeline(spark, warehouse=warehouse)
+    p.register("nums", spark.range(0, 200))
+    p.register("keys", spark.range(0, 5).selectExpr("id AS k"))
+    return p
+
+
+def test_dag_run_matches_sequential_run(spark, tmp_path):
+    """Every output of a DAG run has the rows of a run that calls
+    run_step once per step in config order."""
+    cfg = _equivalence_config()
+    seq = _equivalence_pipeline(spark, str(tmp_path / "seq"))
+    seq.params = dict(cfg["params"])
+    expected = {}
+    for step in cfg["steps"]:
+        expected[step["dest"]] = sorted(seq.run_step(step).collect())
+    dag = _equivalence_pipeline(spark, str(tmp_path / "dag"))
+    out = dag.run(cfg)
+    assert list(out) == list(expected)
+    assert {dest: sorted(df.collect()) for dest, df in out.items()} == expected
+    csv = spark.read.option("header", True).option("sep", "\t").csv(str(tmp_path / "dag" / "eq_cte_csv"))
+    assert csv.count() == len(expected["eq_cte"])
+
+
+def test_overlapped_steps_run_the_jobs_of_a_sequential_run(spark, tmp_path):
+    """Two independent materialized steps run, per step job group, the
+    same number of jobs overlapped as one after the other."""
+    cfg = {"steps": [
+        {"name": "jobs_left", "dest": "jobs_left", "materialize": True,
+         "sql": "SELECT id % 7 AS k, COUNT(*) AS n FROM nums GROUP BY id % 7"},
+        {"name": "jobs_right", "dest": "jobs_right", "materialize": True,
+         "sql": "SELECT k, MAX(k) AS m FROM keys GROUP BY k"},
+    ]}
+    names = [s["name"] for s in cfg["steps"]]
+
+    def counted(fn) -> list[int]:
+        before = {n: _group_jobs(spark, n) for n in names}
+        fn()
+        return [len(_group_jobs(spark, n) - before[n]) for n in names]
+
+    seq = _equivalence_pipeline(spark, str(tmp_path / "seq"))
+    sequential = counted(lambda: [seq.run_step(s) for s in cfg["steps"]])
+    dag = _equivalence_pipeline(spark, str(tmp_path / "dag"))
+    assert dag._step_dag(cfg["steps"]) == [set(), set()]
+    assert counted(lambda: dag.run(cfg)) == sequential
+    assert all(sequential)
+
+
+def test_dag_run_under_fast_thread_switching(spark):
+    """Stress: 12 independent lazy steps and 12 steps each reading one of
+    them, run with a 1 µs thread switch interval. Every output is
+    registered and returned in config order, and each dependent reads its
+    own source."""
+    import sys
+    import threading
+
+    p = Pipeline(spark)
+    p.register("src", spark.range(3))
+    steps = [{"name": f"stress_{i}", "dest": f"stress_{i}", "sql": f"SELECT id + {i} AS v FROM src"}
+             for i in range(12)]
+    steps += [{"name": f"stress_dep_{i}", "dest": f"stress_dep_{i}", "sql": f"SELECT v FROM stress_{i}"}
+              for i in range(12)]
+    out: dict = {}
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        runner = threading.Thread(target=lambda: out.update(p.run({"steps": steps})))
+        runner.start()
+        runner.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not runner.is_alive()
+    assert list(out) == [s["dest"] for s in steps]
+    assert all(p.tables[d] is df for d, df in out.items())
+    deps = out["stress_dep_0"]
+    for i in range(1, 12):
+        deps = deps.unionAll(out[f"stress_dep_{i}"].selectExpr(f"v - {i} AS v"))
+    assert sorted(r.v for r in deps.collect()) == sorted(list(range(3)) * 12)
