@@ -1567,11 +1567,12 @@ def ivfpq_topk(
     # the Lloyd refinement of the cell centroids, the PQ codebook training,
     # and the query-side collect each depend only on inputs that already
     # exist. Running them sequentially left the cluster idle between each
-    # walk's small jobs; ``overlap`` runs them together (guide §2.6 —
+    # walk's small jobs; ``overlap_pool`` runs them together (guide §2.6 —
     # actions are only sequential because the driver calls them
-    # sequentially). Each walk's own collected values are unchanged, so
+    # sequentially), and the query collect also overlaps the encode and
+    # crowd pass below. Each walk's own collected values are unchanged, so
     # results are bit-identical regardless of scheduling order.
-    from nextgenetl_spark.overlap import overlap
+    from nextgenetl_spark.overlap import overlap_pool
 
     def _refine():
         if refine_iters > 0:
@@ -1588,32 +1589,35 @@ def ivfpq_topk(
     def _qrows():
         return queries.select(F.col(query_id), F.col(vec_col)).limit(MAX_QUERY_ROWS + 1).collect()
 
-    cents, CB, qrows = overlap(queries.sparkSession, [_refine, _train, _qrows])
-    # literal-backed either way (r11) — no checkpoint job needed
-    cells = assign_cells(corpus, cents, corpus_id, vec_col).select(corpus_id, "cell_id")
-    dsub = CB.shape[2]
-    # the IVF-PQ index table: (cell_id, id, codes) — hive-partition by
-    # cell_id when persisting
-    codes = pq_encode(corpus, CB, corpus_id, vec_col).join(cells, corpus_id)
-    if shortlist is None:
-        # near-identical vectors tie in ADC score REGARDLESS of cell, so
-        # the crowd statistic ignores cell boundaries (the frozen
-        # two-crowd rule — see pq_topk's TUNING / _auto_shortlist).
-        # Materialize the (id, codes, cell_id) index table once: the crowd
-        # pass and the final probed-cell scan both consume it, and without
-        # the localCheckpoint each action re-runs the scan→assign-GEMM→
-        # encode-GEMM→join lineage (guide §5; values untouched — this is
-        # the exact table build_ivfpq_index persists). eager=False merges
-        # the materialization into the crowd pass's first action instead
-        # of paying a separate checkpoint job (r11).
-        codes = codes.localCheckpoint(eager=False)
-        unit = _unit_vectors(corpus, corpus_id, vec_col)
-        shortlist = _auto_shortlist(
-            k,
-            measured_adc_crowd(
-                unit, codes, CB, corpus_id, count_fraction=crowd_count_fraction
-            ),
-        )
+    with overlap_pool(queries.sparkSession) as submit:
+        f_cents, f_train, f_qrows = submit(_refine), submit(_train), submit(_qrows)
+        cents, CB = f_cents.result(), f_train.result()
+        # literal-backed either way (r11) — no checkpoint job needed
+        cells = assign_cells(corpus, cents, corpus_id, vec_col).select(corpus_id, "cell_id")
+        dsub = CB.shape[2]
+        # the IVF-PQ index table: (cell_id, id, codes) — hive-partition by
+        # cell_id when persisting
+        codes = pq_encode(corpus, CB, corpus_id, vec_col).join(cells, corpus_id)
+        if shortlist is None:
+            # near-identical vectors tie in ADC score REGARDLESS of cell, so
+            # the crowd statistic ignores cell boundaries (the frozen
+            # two-crowd rule — see pq_topk's TUNING / _auto_shortlist).
+            # Materialize the (id, codes, cell_id) index table once: the crowd
+            # pass and the final probed-cell scan both consume it, and without
+            # the localCheckpoint each action re-runs the scan→assign-GEMM→
+            # encode-GEMM→join lineage (guide §5; values untouched — this is
+            # the exact table build_ivfpq_index persists). eager=False merges
+            # the materialization into the crowd pass's first action instead
+            # of paying a separate checkpoint job (r11).
+            codes = codes.localCheckpoint(eager=False)
+            unit = _unit_vectors(corpus, corpus_id, vec_col)
+            shortlist = _auto_shortlist(
+                k,
+                measured_adc_crowd(
+                    unit, codes, CB, corpus_id, count_fraction=crowd_count_fraction
+                ),
+            )
+        qrows = f_qrows.result()
     if len(qrows) > MAX_QUERY_ROWS:
         raise ValueError(
             f"ivfpq_topk: the query side is collected and broadcast in the UDF "

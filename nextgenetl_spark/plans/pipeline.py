@@ -25,13 +25,15 @@ Spark design:
   can be counted by name (``statusTracker().getJobIdsForGroup``).
 - ``run`` treats the steps as a dependency graph, not a list (SURVEY §3.1:
   steps chain through named tables). A ``sql`` step reads the relations
-  its parsed plan names (subqueries included, its own CTE names excluded);
-  a ``salted_join`` step reads ``big`` and ``small``. A step waits for
+  its parsed plan names (subqueries included, its own CTE names excluded
+  unless a pipeline table shares the name); a ``salted_join`` step reads
+  ``big`` and ``small``; a step reading a lazy step's dest also reads
+  that step's inputs, since the view is a plan over them. A step waits for
   every earlier step that writes a table it reads, reads or writes a table
   it writes (so same-dest steps keep config order), or shares an export
   directory with it. A builder step, a ``force_skew_join`` step (it flips a
   session-global conf) and a step reading a name the pipeline cannot name
-  are barriers: they wait for every earlier step, and every later step
+  (directly or through a lazy step) are barriers: they wait for every earlier step, and every later step
   waits for them. Ready steps run concurrently (``overlap.overlap_pool``);
   each finished step's output is registered on the calling thread before
   its dependents are submitted.
@@ -309,10 +311,13 @@ class Pipeline:
             save_schema(os.path.join(export_dir, "_schema.json"), df.schema)
         return df
 
-    def _step_inputs(self, step: dict) -> set[str] | None:
+    def _step_inputs(self, step: dict, names: set[str]) -> set[str] | None:
         """Lower-cased names of the tables a step reads, or None when they
         cannot be determined (a builder step, SQL that does not parse or
-        names a table through IDENTIFIER)."""
+        names a table through IDENTIFIER). A name the step's own CTEs
+        define is dropped unless it is also one of ``names``: the unresolved
+        plan does not tell a CTE reference from a table read of the same
+        name (``WITH src AS (SELECT * FROM src) ...``)."""
         if "sql" in step:
             try:
                 plan = self.spark._jsparkSession.sessionState().sqlParser().parsePlan(
@@ -321,8 +326,8 @@ class Pipeline:
                 return None
             if "UnresolvedIdentifier" in plan:
                 return None
-            ctes = {n.strip().lower() for names in _CTE_RE.findall(plan) for n in names.split(",")}
-            return {n.lower() for n in _RELATION_RE.findall(plan)} - ctes
+            ctes = {n.strip().lower() for group in _CTE_RE.findall(plan) for n in group.split(",")}
+            return {n.lower() for n in _RELATION_RE.findall(plan)} - (ctes - names)
         if "builder" not in step and "salted_join" in step:
             spec = step["salted_join"]
             return {str(spec.get("big")).lower(), str(spec.get("small")).lower()}
@@ -332,20 +337,28 @@ class Pipeline:
         """For each step of ``plan``, the indices of the earlier steps it
         waits for (see the module docstring)."""
         known = {n.lower() for n in self.tables}
-        reads: list[set[str]] = []
+        reads: list[set[str] | None] = []
         writes: list[set[str]] = []
         barrier: list[bool] = []
         deps: list[set[int]] = []
         for j, step in enumerate(plan):
-            inputs = self._step_inputs(step)
-            out = {str(step[k]).lower() for k in ("dest", "export_jsonl", "export_csv") if step.get(k)}
-            earlier = {str(s.get("dest")).lower() for s in plan[:j]}
-            barrier.append(inputs is None or not inputs <= known | earlier or bool(step.get("force_skew_join")))
-            reads.append(inputs or set())
-            writes.append(out)
+            names = known | {str(s.get("dest")).lower() for s in plan[:j]}
+            inputs = self._step_inputs(step, names)
+            # A lazy step's output is a view over its own inputs, so a step
+            # reading it reads them too; None (unknown) spreads the same way.
+            via = [reads[i] for i in range(j)
+                   if not plan[i].get("materialize") and str(plan[i].get("dest")).lower() in (inputs or ())]
+            if inputs is not None and inputs <= names and None not in via:
+                inputs = inputs.union(*via)
+            else:
+                inputs = None
+            reads.append(inputs)
+            writes.append({str(step[k]).lower() for k in ("dest", "export_jsonl", "export_csv") if step.get(k)})
+            barrier.append(inputs is None or bool(step.get("force_skew_join")))
             deps.append({
                 i for i in range(j)
-                if barrier[j] or barrier[i] or reads[j] & writes[i] or out & (reads[i] | writes[i])
+                if barrier[j] or barrier[i] or (inputs or set()) & writes[i]
+                or writes[j] & ((reads[i] or set()) | writes[i])
             })
         return deps
 

@@ -974,20 +974,50 @@ def _dag_pipeline(spark, tmp_path):
 
 def test_step_dag_reads_tables_from_the_parsed_plan(spark):
     """A sql step reads the relations of its parsed plan, subqueries
-    included and its own CTE names excluded; a salted_join step reads big
-    and small; a step overwriting a table waits for the steps reading it."""
+    included and its own CTE names excluded unless a pipeline table has
+    the name; a salted_join step reads big and small; reading a lazy
+    step's dest reads its inputs too; a step overwriting a table waits for
+    the steps reading it."""
     p = Pipeline(spark)
     p.register("src", spark.range(1))
     plan = [
-        {"name": "a", "dest": "a", "sql": "SELECT * FROM src"},
-        {"name": "b", "dest": "b", "sql": "SELECT * FROM src WHERE id IN (SELECT id FROM A)"},
-        {"name": "c", "dest": "c", "sql": "WITH a AS (SELECT 1 AS id) SELECT * FROM a JOIN src USING (id)"},
-        {"name": "d", "dest": "d", "salted_join": {"big": "b", "small": "c", "key": "id"}},
-        {"name": "e", "dest": "src", "sql": "SELECT 2 AS id"},
+        {"name": "a", "dest": "a", "materialize": True, "sql": "SELECT * FROM src"},
+        {"name": "b", "dest": "b", "materialize": True, "sql": "SELECT * FROM src WHERE id IN (SELECT id FROM A)"},
+        {"name": "c", "dest": "c", "materialize": True,
+         "sql": "WITH x AS (SELECT 1 AS id) SELECT * FROM x JOIN src USING (id)"},
+        {"name": "d", "dest": "d", "materialize": True, "salted_join": {"big": "b", "small": "c", "key": "id"}},
+        {"name": "e", "dest": "src", "materialize": True, "sql": "SELECT 2 AS id"},
+        {"name": "g", "dest": "g", "materialize": True, "sql": "SELECT * FROM d"},
+        {"name": "h", "dest": "h", "sql": "SELECT * FROM a"},
+        {"name": "i", "dest": "i", "materialize": True, "sql": "SELECT * FROM h"},
+        {"name": "j", "dest": "a", "materialize": True, "sql": "SELECT 3 AS id"},
+        {"name": "k", "dest": "k", "materialize": True,
+         "sql": "WITH src AS (SELECT * FROM src WHERE id > 0) SELECT * FROM src"},
         {"name": "f", "dest": "f", "sql": "SELECT * FROM IDENTIFIER('a')"},
-        {"name": "g", "dest": "g", "sql": "SELECT * FROM d"},
+        {"name": "m", "dest": "m", "materialize": True, "sql": "SELECT * FROM f"},
+        {"name": "n", "dest": "n", "materialize": True, "sql": "SELECT * FROM src"},
     ]
-    assert p._step_dag(plan) == [set(), {0}, set(), {1, 2}, {0, 1, 2}, {0, 1, 2, 3, 4}, {3, 5}]
+    assert p._step_dag(plan) == [
+        set(), {0}, set(), {1, 2}, {0, 1, 2}, {3}, {0}, {0, 6}, {0, 1, 6, 7}, {4},
+        set(range(10)), set(range(11)), {4, 10, 11},
+    ]
+
+
+def test_reader_of_a_lazy_step_waits_for_an_overwrite_of_its_input(spark, tmp_path):
+    """A lazy step over ``y`` is a plan over y's files, so a step reading
+    it and a later overwrite of ``y`` never run at the same time, and the
+    reader sees the first ``y``."""
+    p = _dag_pipeline(spark, tmp_path)
+    cfg = {"steps": [
+        {"name": "lazy_y", "dest": "y", "materialize": True, "sql": "SELECT 1L AS id"},
+        {"name": "lazy_x", "dest": "x", "sql": "SELECT * FROM y"},
+        {"name": "lazy_z", "dest": "z", "materialize": True, "sql": "SELECT pipe_sleep(id, 1.0) AS id FROM x"},
+        {"name": "lazy_y2", "dest": "y", "materialize": True, "sql": "SELECT pipe_sleep(id + 2, 0.5) AS id FROM one"},
+    ]}
+    out = p.run(cfg)
+    assert [r.id for r in out["z"].collect()] == [1]
+    assert [r.id for r in out["y"].collect()] == [2]
+    assert _group_span(spark, "lazy_z")[1] <= _group_span(spark, "lazy_y2")[0]
 
 
 def test_failing_step_cancels_running_sibling(spark, tmp_path):
