@@ -1,15 +1,19 @@
 """Benchmark harness: runs the headline workload queries at
-$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]
-and prints ONE JSON line: {"metric", "value", "unit", "queries", "sf"}.
+$SPARK_GRAFT_SF_DIR (default ``session.DEFAULT_SF_DIR``) on the factory
+session and prints ONE JSON line: {"metric", "value", "unit", "queries", "sf"}.
 
 Per-query wall time is measured after a session warm-up job so JVM/session
 startup isn't attributed to the first query. Results are forced with
 collect() for small outputs and count() for large ones (no driver-side
 materialization of big results — same as a real pipeline sink would do).
+The Spark side is timed by ``tools/prof_query.profile``, so every rep also
+records its layers (Catalyst phases, jobs, tasks, executor CPU/GC, shuffle,
+spill, driver gap) in BENCH_DETAIL.json.
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import re
@@ -18,7 +22,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from nextgenetl_spark.session import get_spark
+from nextgenetl_spark.session import DEFAULT_SF_DIR, get_spark
 from nextgenetl_spark.workloads import load_all
 
 # name -> force mode ("collect" for small outputs, "count" for large)
@@ -256,8 +260,30 @@ def _box_health() -> dict:
     return health
 
 
+# Each query runs 1 cold + 2 warm reps back to back; the reported time is
+# the MIN across reps: steady-state throughput, excluding one-time
+# whole-stage-codegen compilation (~0.5-3s/query, amortized to zero on real
+# workloads and on any cluster run) AND single-run host noise (multiway_star
+# once swung 1.94→5.62s between two healthy-box records on a byte-identical
+# plan — one warm run is not a trustworthy wall on a VM; the min of 3 is).
+# A query whose cold rep reaches REPEAT_MAX_SEC gets one warm rep, to bound
+# total bench time — its multi-second walls drown scheduler jitter anyway.
+REPEAT_MAX_SEC = 10.0
+
+
+def spark_side(spark, names: list[str], sf_dir: str) -> tuple[dict[str, float], dict[str, list[dict]]]:
+    """Time ``names`` by the rule above through ``prof_query.profile``.
+    Returns each query's min wall and its reps' layer records."""
+    from tools.prof_query import profile
+
+    reps: dict[str, list[dict]] = {}
+    for rec in profile(spark, names, sf_dir, reps=3, long_s=REPEAT_MAX_SEC):
+        reps.setdefault(rec.pop("query"), []).append(rec)
+    return {name: round(min(r["wall_s"] for r in rs), 3) for name, rs in reps.items()}, reps
+
+
 def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf_dir = DEFAULT_SF_DIR
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
     health_pre = _box_health()
@@ -265,7 +291,7 @@ def main() -> None:
         print(
             f"WARNING: box health check failed pre-run ({health_pre}; "
             f"thresholds {HEALTH_THRESHOLDS}) — walls from this record are "
-            "not comparable across rounds (box_health_ok=false)",
+            "not comparable with other records (box_health_ok=false)",
             file=sys.stderr,
         )
     registry = load_all()
@@ -273,138 +299,72 @@ def main() -> None:
     # warm-up: touch the session + parquet footers once
     spark.range(1000).selectExpr("sum(id)").collect()
 
-    # Each query runs 1 cold + up to 2 warm repeats; reported time is the
-    # MIN across runs — steady-state throughput, excluding one-time
-    # whole-stage-codegen compilation (~0.5-3s/query, amortized to zero on
-    # real workloads and on any cluster run) AND single-run host noise
-    # (round-10 verdict ask #3: multiway_star swung 1.94→5.62s between two
-    # healthy-box records on a byte-identical plan — one warm run is not a
-    # trustworthy wall on this VM; the min of 3 is). Queries whose cold run
-    # exceeds REPEAT_MAX_SEC get only one warm repeat (the pre-r11
-    # behavior) to bound total bench time — their multi-second walls drown
-    # scheduler jitter anyway. cold_total records the full first-pass wall
-    # so the one-time cost stays visible; every per-query run lands in the
-    # detail record's spark_runs/duckdb_runs for cross-round adjudication.
-    REPEAT_MAX_SEC = 10.0
-    timings: dict[str, float] = {}
-    spark_runs: dict[str, list[float]] = {}
-    cold_total = 0.0
-    for name, mode in HEADLINE.items():
-        fn = registry[name].fn
-        runs = []
-        while len(runs) < (3 if not runs or runs[0] < REPEAT_MAX_SEC else 2):
-            t0 = time.time()
-            df = fn(spark, sf_dir)
-            if mode == "collect":
-                df.collect()
-            else:
-                df.count()
-            runs.append(time.time() - t0)
-        cold_total += runs[0]
-        spark_runs[name] = [round(r, 3) for r in runs]
-        timings[name] = round(min(runs), 3)
-        # drop the DataFrame graph so ContextCleaner releases localCheckpoint
-        # RDD blocks from iterative queries (connected components) — without
-        # this, accumulated blocks pressure executor memory and inflate
-        # later heavy queries by 30-70%
-        del df
-        import gc
-
-        gc.collect()
-
+    timings, spark_reps = spark_side(spark, list(HEADLINE), sf_dir)
     total = round(sum(timings.values()), 3)
-    # Record-contract fields (round-11 verdict ask #2): the stdout line is
-    # budget-truncated, so a cross-round diff of its inline `queries` dict
-    # reported 9 phantom "dropped" queries in r11. query_set_sha fingerprints
-    # the FULL query set (sha256 over the sorted names) so the driver can
-    # tell truncation from deletion without the detail file, and timing_rule
-    # names the methodology so a rule change is visible in the record itself.
-    import hashlib as _hashlib
-
-    query_set_sha = _hashlib.sha256("|".join(sorted(timings)).encode()).hexdigest()[:16]
+    # The stdout line is budget-truncated, so query_set_sha fingerprints the
+    # FULL query set (sha256 over the sorted names): a reader can tell
+    # truncation from deletion without the detail file. timing_rule names
+    # the methodology so a rule change is visible in the record itself.
     out = {
         "metric": "headline_queries_total_wall",
         "value": total,
         "unit": "sec",
         "queries": timings,
-        "spark_runs": spark_runs,
+        "spark_reps": spark_reps,
         "sf": sf,
         "timing_rule": "min-of-3",
-        "query_set_sha": query_set_sha,
-        "cold_total": round(cold_total, 3),
+        "query_set_sha": hashlib.sha256("|".join(sorted(timings)).encode()).hexdigest()[:16],
+        # the full first-pass wall, so the one-time cost stays visible
+        "cold_total": round(sum(rs[0]["wall_s"] for rs in spark_reps.values()), 3),
         "box_health_pre": health_pre,
         "box_health_post": (health_post := _box_health()),
         "box_health_ok": _box_health_ok(health_pre, health_post),
         "box_health_thresholds": HEALTH_THRESHOLDS,
     }
+    # Warm-time each query's DuckDB oracle on the same tables, on as many
+    # threads as Spark has cores, for the paired regime ratio (BASELINE.md §3).
+    import duckdb
 
-    # Warm-time each query's DuckDB oracle on the same tables for a
-    # side-by-side regime table (BASELINE.md §3). On by default so every
-    # BENCH_r{N}.json carries per-query ratios; SPARK_GRAFT_BENCH_DUCKDB=0
-    # opts out.
-    if os.environ.get("SPARK_GRAFT_BENCH_DUCKDB", "1") != "0":
-        import duckdb
+    con = duckdb.connect()
+    con.execute(f"SET threads={spark.sparkContext.defaultParallelism}")
+    for t in ["region", "nation", "customer", "supplier", "part", "orders",
+              "lineitem", "events", "documents", "embeddings"]:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    duck: dict[str, float] = {}
+    duck_runs: dict[str, list[float]] = {}
+    pins: list[str] = []
+    for name in HEADLINE:
+        sql = registry[name].oracle
+        if sql is None:
+            continue
+        # Literal-VALUES oracles are CORRECTNESS pins — DuckDB just selects
+        # frozen literals, so timing it says nothing about the operator.
+        # Exclude them from the comparative totals and list them so the
+        # record shows which entries are pinned rather than raced.
+        if "FROM (VALUES" in sql:
+            pins.append(name)
+            continue
+        # min-of-3 for sub-threshold oracles (same rule as the Spark side —
+        # both engines' walls must carry the same noise discipline for the
+        # paired ratio to mean anything); the recursive-CTE oracles cost
+        # minutes at sf0.1 and stay single-run
+        druns = []
+        while len(druns) < (3 if not druns or druns[0] < REPEAT_MAX_SEC else 1):
+            t0 = time.time()
+            con.execute(sql).fetchall()
+            druns.append(time.time() - t0)
+        duck_runs[name] = [round(r, 3) for r in druns]
+        duck[name] = round(min(druns), 3)
+    out["duckdb"] = duck
+    out["duckdb_runs"] = duck_runs
+    out["values_pinned"] = sorted(pins)
+    out["duckdb_total"] = round(sum(duck.values()), 3)
+    out["paired_spark_total"] = round(sum(timings[n] for n in duck), 3)
 
-        con = duckdb.connect()
-        con.execute(f"SET threads={os.environ.get('SPARK_GRAFT_CPUS', '32')}")
-        for t in ["region", "nation", "customer", "supplier", "part", "orders",
-                  "lineitem", "events", "documents", "embeddings"]:
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-        duck: dict[str, float] = {}
-        duck_runs: dict[str, list[float]] = {}
-        pins: list[str] = []
-        for name in HEADLINE:
-            sql = registry[name].oracle
-            if sql is None:
-                continue
-            # Literal-VALUES oracles (round 7: compression_ratio, the LSH/
-            # xxhash-path entries) are CORRECTNESS pins — DuckDB just selects
-            # frozen literals, so timing it says nothing about the operator.
-            # Exclude them from the comparative totals and list them so the
-            # record shows which entries are pinned rather than raced.
-            if "FROM (VALUES" in sql:
-                pins.append(name)
-                continue
-            # min-of-3 for sub-threshold oracles (same rule as the Spark
-            # side — both engines' walls must carry the same noise
-            # discipline for the paired ratio to mean anything); the
-            # recursive-CTE oracles cost minutes at sf0.1 and stay
-            # single-run — their walls drown scheduler jitter
-            druns = []
-            while len(druns) < (3 if not druns or druns[0] < REPEAT_MAX_SEC else 1):
-                t0 = time.time()
-                con.execute(sql).fetchall()
-                druns.append(time.time() - t0)
-            duck_runs[name] = [round(r, 3) for r in druns]
-            duck[name] = round(min(druns), 3)
-        out["duckdb"] = duck
-        out["duckdb_runs"] = duck_runs
-        out["values_pinned"] = sorted(pins)
-        out["duckdb_total"] = round(sum(duck.values()), 3)
-        out["paired_spark_total"] = round(sum(timings[n] for n in duck), 3)
-
-    # Full per-query detail (incl. the duckdb dict) goes to a file; the
-    # stdout line must stay compact because the driver's tail capture clips
-    # at ~2000 chars (round-2 verdict #2: the full line was unparseable).
-    repo = os.path.dirname(os.path.abspath(__file__))
-    detail_path = os.path.join(repo, "BENCH_DETAIL.json")
-    with open(detail_path, "w", encoding="utf-8") as fh:
-        json.dump(out, fh, indent=1, sort_keys=True)
-    # Freeze a per-round copy so every round's full record stands alone in
-    # git history (round-5 verdict nit #3: BENCH_r{N}.json carries only the
-    # slowest entries + a pointer, and BENCH_DETAIL.json is overwritten by
-    # interactive runs). Round number = newest driver-written BENCH_r file
-    # + 1 (this run IS the next round's record when the driver invokes it).
-    import glob as _glob
-    import re as _re
-
-    rounds = [
-        int(m.group(1))
-        for p in _glob.glob(os.path.join(repo, "BENCH_r*.json"))
-        if (m := _re.search(r"BENCH_r(\d+)\.json$", p))
-    ]
-    rnd = (max(rounds) if rounds else 0) + 1
-    with open(os.path.join(repo, f"BENCH_DETAIL_r{rnd:02d}.json"), "w", encoding="utf-8") as fh:
+    # Full per-query detail goes to a file; the stdout line must stay
+    # compact because a tail capture of ~2000 chars would clip it.
+    detail = "BENCH_DETAIL.json"
+    with open(os.path.join(os.path.dirname(os.path.abspath(__file__)), detail), "w", encoding="utf-8") as fh:
         json.dump(out, fh, indent=1, sort_keys=True)
 
     compact = {
@@ -417,16 +377,14 @@ def main() -> None:
         "query_set_sha": out["query_set_sha"],
         "cold_total": out["cold_total"],
         "box_health_ok": out["box_health_ok"],
-        "detail": f"BENCH_DETAIL_r{rnd:02d}.json",
+        "detail": detail,
+        "duckdb_total": out["duckdb_total"],
+        "paired_spark_total": out["paired_spark_total"],
+        "n_paired": len(duck),
     }
-    if "duckdb_total" in out:
-        compact["duckdb_total"] = out["duckdb_total"]
-        compact["paired_spark_total"] = out["paired_spark_total"]
-        compact["n_paired"] = len(out["duckdb"])
-    # Self-contained-as-far-as-it-fits: pack the per-query dict slowest-
-    # first into the remaining line budget, so the r-file itself carries
-    # every entry that matters (the tail it drops is sub-0.3s floor-bound
-    # queries) while the full dict lives in the frozen per-round detail.
+    # Pack the per-query dict slowest-first into the remaining line budget:
+    # the tail it drops is sub-0.3s floor-bound queries, and the full dict
+    # lives in the detail file.
     budget = 1900 - len(json.dumps(compact))
     packed: dict[str, float] = {}
     for name, t in sorted(timings.items(), key=lambda kv: -kv[1]):

@@ -469,7 +469,8 @@ def md5_simhash_fingerprints(
     # chars 1-8 big-endian → n1, 9-16 → n2. Bit b of the layout (bit 3-b%4
     # of hex char b//4) is bit (31-b) of n1 for b<32, bit (63-b) of n2
     # otherwise — identical fingerprint values, an eighth of the per-row
-    # string work (this path was the slowest verification pin in BENCH_r02).
+    # string work (this path was the slowest verification pin in the r2
+    # bench record, kept in commit 580b237).
     base = base.select(
         id_col,
         F.conv(F.substring("h", 1, 8), 16, 10).cast("long").alias("n1"),
@@ -859,8 +860,8 @@ def connected_components(
     delta tracking compose. Convergence = zero changed rows, one action
     per round exactly like the old change-sum check. ``localCheckpoint``
     cuts lineage each round so the plan does not grow with iterations.
-    Measured (tools/cc_ab.py, interleaved min-of-5 on the real sf0.1 pair
-    graph, 444,872 edges): 2.92s vs 2.99s for the pre-r12 form — local
+    Measured (the r12 A/B script in commit 580b237, interleaved min-of-5
+    on the real sf0.1 pair graph, 444,872 edges): 2.92s vs 2.99s for the pre-r12 form — local
     parity (this graph is clique-shaped, the frontier IS ~the edge list
     for its single delta round), adopted for the rounds x |E| -> |E| +
     frontier shuffle-byte cut on any graph whose diameter exceeds 2."""
@@ -872,12 +873,12 @@ def connected_components(
     # stays bounded at ANY edge volume; sf0.1 cost is unmeasurable.
     from pyspark.storagelevel import StorageLevel
 
-    # MEASURED AND REJECTED (r12, tools/cc_ab.py): pre-partitioning sym by
+    # MEASURED AND REJECTED (r12 A/B, commit 580b237): pre-partitioning sym by
     # src before the checkpoint read 3.45s -> 3.15s min-of-5 on the sf0.1
     # pair graph, but the formatted round plan disproves the intended
     # mechanism — a PySpark localCheckpoint comes back as a Scan
-    # ExistingRDD with UNKNOWN partitioning (plans/r12/
-    # near_dup_groups_ccround_{before,after}.txt are identical: the join
+    # ExistingRDD with UNKNOWN partitioning (the before/after round plans
+    # kept in commit 580b237 are identical: the join
     # still exchanges the sym side), so the delta was pre-clustered
     # shuffle-write locality/noise, not a removed exchange. At cluster
     # scale the repartition would ADD one full edge-list exchange at setup

@@ -426,7 +426,8 @@ def refine_centroids(
     LITERAL DataFrame, instead of chaining lazy left-joins whose lineage
     re-executed every prior iteration's corpus pass at every downstream
     collect (the warm ivfpq walk spent ~half its 16s in exactly that
-    recompute; see OPTIMIZATION_r11.md). collect→createDataFrame is an
+    recompute; see the r11 optimization report in commit 580b237).
+    collect→createDataFrame is an
     exact float64 round trip and the coalesce-with-previous fallback for
     emptied cells is replayed on the driver, so the returned values are
     bit-identical; the oracle hashes prove it. The returned table is

@@ -250,7 +250,7 @@ def bm25_multi_scores(
     # are SMALL (dl: one row per doc; tf: postings restricted to the query
     # vocabulary), so a lazy localCheckpoint dedupes the subtree at the
     # cost of materializing a few MB — no new shuffle, values untouched
-    # (measured: tools/bm25_ckpt_ab.py, interleaved min-of-5 at sf0.1,
+    # (measured by the r12 A/B script in commit 580b237, interleaved min-of-5 at sf0.1,
     # lex leg 1.62s -> 1.44s, outputs asserted identical; at scale the
     # win is tokenize CPU x fewer corpus passes).
     dl = (

@@ -182,8 +182,8 @@ def stream_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = tumbling_window_agg(with_watermark(events_stream(spark, sf_dir)))
     from nextgenetl_spark.streaming.source import run_memory_replay
 
-    # cap=4: per-entry state-partition measurement (r12, tools/stream_cap_ab
-    # .py, two interleaved rotations, results asserted identical across
+    # cap=4: per-entry state-partition measurement (r12 cap A/B, commit
+    # 580b237, two interleaved rotations, results asserted identical across
     # caps): 0.85/0.98 < cap8 0.85/1.04 < cap16 1.02/1.15 — window-agg
     # state is tiny, per-partition store fixed cost is the wall.
     return run_memory_replay(spark, agg, name, "complete", cap=4)
@@ -234,7 +234,7 @@ def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = session_window_agg(with_watermark(events_stream(spark, sf_dir)), gap="30 minutes")
     from nextgenetl_spark.streaming.source import run_memory_replay
 
-    # cap=8: measured (r12, tools/stream_cap_ab.py, two rotations) — cap16
+    # cap=8: measured (r12 cap A/B, commit 580b237, two rotations) — cap16
     # worst in both (1.64/2.04), cap4 and cap8 within noise of each other
     # (1.47/1.68 vs 1.53/1.59); 8 keeps session-window merge parallelism.
     return run_memory_replay(spark, agg, name, "append", cap=8)
@@ -293,7 +293,7 @@ def stream_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = sliding_window_agg(with_watermark(events_stream(spark, sf_dir)))
     from nextgenetl_spark.streaming.source import run_memory_replay
 
-    # cap=4: measured 0.86 < cap8 0.99 < cap16 1.05 (r12 stream_cap_ab)
+    # cap=4: measured 0.86 < cap8 0.99 < cap16 1.05 (r12 cap A/B, 580b237)
     return run_memory_replay(spark, agg, name, "complete", cap=4)
 
 
@@ -318,7 +318,7 @@ def stream_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = ev.dropDuplicates(["user_id", "event_type"]).select("user_id", "event_type")
     from nextgenetl_spark.streaming.source import run_memory_replay
 
-    # cap=4: the biggest per-entry cap win measured (r12 stream_cap_ab):
+    # cap=4: the biggest per-entry cap win measured (r12 cap A/B, 580b237):
     # 0.94 < cap8 1.36 < cap16 1.91 — dedup state is one tiny key set,
     # the 16-store fixed cost dominated the replay.
     return run_memory_replay(spark, out, name, "append", cap=4)
@@ -356,7 +356,7 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from nextgenetl_spark.streaming.source import run_memory_replay
 
-    # cap=4: measured 0.67 < cap8 0.90 < cap16 0.91 (r12 stream_cap_ab) —
+    # cap=4: measured 0.67 < cap8 0.90 < cap16 0.91 (r12 cap A/B, 580b237) —
     # the join side is a broadcast (zero state), only the complete-mode
     # agg keeps state; one of the r11 faster-at-8-cores scale-out debts.
     return run_memory_replay(spark, agg, name, "complete", cap=4)
@@ -403,7 +403,7 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # A stream-stream join keeps FOUR state stores per shuffle partition
     # (left/right × key-index layouts), so per-partition fixed cost is 4×
     # an agg's: size partitions to state volume, not core count. Measured
-    # per-entry this round (tools/stream_cap_ab.py, interleaved min-of-3,
+    # per-entry in r12 (cap A/B in commit 580b237, interleaved min-of-3,
     # results asserted identical across caps): cap4 2.56s < cap8 3.87s <
     # cap16 6.34s — the 4-store-per-partition fixed cost dominates at
     # replay state volume, so the cap drops to 4. A deployment with real
@@ -1468,7 +1468,7 @@ def stream_value_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("cnt"))
         .select(F.unix_timestamp(F.col("w.start")).alias("window_start"), "bin", "cnt")
     )
-    # cap=4: measured 1.35 < cap8 1.51 < cap16 1.59 (r12 stream_cap_ab)
+    # cap=4: measured 1.35 < cap8 1.51 < cap16 1.59 (r12 cap A/B, 580b237)
     sketch = run_memory_replay(spark, agg, "wl_stream_qhist", "complete", cap=4)
     return qhist_quantiles(sketch, [0.5, 0.95], lo, hi, nb, by=["window_start"])
 

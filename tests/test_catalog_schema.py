@@ -8,6 +8,9 @@ no scan, no Spark job for the metadata itself.
 
 from __future__ import annotations
 
+import os
+import shutil
+
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -402,3 +405,195 @@ def test_schema_cache_evicts_least_recently_used(spark, tmp_path):
     assert key in cat._SCHEMA_CACHE
     assert ("/lru/0", "fp") not in cat._SCHEMA_CACHE
     cat._SCHEMA_CACHE.clear()
+
+
+def test_write_bucketed_survives_stale_warehouse_dir(spark):
+    """Crash residue: an orphaned spark-warehouse/<table> dir with no
+    metastore entry must not fail saveAsTable forever (round-3 verdict
+    What's-wrong #2)."""
+    from nextgenetl_spark.plans.bucketing import write_bucketed
+
+    table = "b_stale_regression"
+    warehouse = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
+    if warehouse.startswith("file:"):
+        warehouse = warehouse[len("file:"):]
+    loc = os.path.join(warehouse, table)
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    os.makedirs(loc, exist_ok=True)
+    with open(os.path.join(loc, "orphan.parquet"), "w") as fh:
+        fh.write("residue")
+    try:
+        df = spark.range(100).withColumn("k", F.col("id") % 10)
+        write_bucketed(df, table, "k", num_buckets=4)
+        assert spark.table(table).count() == 100
+        # and a second overwrite (registered-table path) still works
+        write_bucketed(df, table, "k", num_buckets=4)
+        assert spark.table(table).count() == 100
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+        shutil.rmtree(loc, ignore_errors=True)
+
+
+def test_residual_cleanup_ignores_temp_view_shadow(spark, tmp_path):
+    """A temp view shadowing a table name must not suppress the
+    crash-residue directory cleanup (ADVICE: plans/bucketing.py
+    tableExists matches temp views)."""
+    from nextgenetl_spark.plans.bucketing import _clear_residual_location
+
+    name = "shadowed_residual_tbl"
+    warehouse = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
+    if warehouse.startswith("file:"):
+        warehouse = warehouse[len("file:"):]
+    loc = os.path.join(warehouse, name)
+    os.makedirs(loc, exist_ok=True)
+    spark.sql(f"DROP TABLE IF EXISTS {name}")
+    spark.createDataFrame([(1,)], "k long").createOrReplaceTempView(name)
+    try:
+        _clear_residual_location(spark, name)
+        assert not os.path.isdir(loc), "temp view suppressed residual cleanup"
+    finally:
+        spark.catalog.dropTempView(name)
+
+
+def test_staging_fingerprint_tracks_content(tmp_path):
+    """Regenerating a source in place must change the cache key; an
+    incomplete build (no _COMPLETE marker) must report not-complete."""
+    from nextgenetl_spark.staging import content_fingerprint, mark_complete, staged_dir
+
+    src = tmp_path / "t.parquet"
+    src.write_bytes(b"v1")
+    fp1 = content_fingerprint(str(src))
+    d1, complete = staged_dir("ngetl_test_stage", str(src))
+    assert not complete
+    mark_complete(d1)
+    _, complete = staged_dir("ngetl_test_stage", str(src))
+    assert complete
+
+    src.write_bytes(b"v2-longer")  # in-place regeneration
+    fp2 = content_fingerprint(str(src))
+    assert fp1 != fp2
+    d2, complete = staged_dir("ngetl_test_stage", str(src))
+    assert d2 != d1 and not complete
+
+    # an unrelated source's completed cache must survive the reap below
+    other = tmp_path / "other.parquet"
+    other.write_bytes(b"other")
+    d_other, _ = staged_dir("ngetl_test_stage", str(other))
+    mark_complete(d_other)
+
+    # completing the new build reaps the superseded fingerprint of the
+    # SAME source (bounded disk) but never another source's cache
+    mark_complete(d2)
+    assert not os.path.exists(d1), "superseded build not reaped"
+    assert os.path.exists(d_other), "different source's cache was reaped"
+
+    # directory-shaped source: fingerprint covers every data file
+    dsrc = tmp_path / "dir.parquet"
+    dsrc.mkdir()
+    (dsrc / "part-0.parquet").write_bytes(b"a")
+    (dsrc / "_SUCCESS").write_bytes(b"")
+    fp3 = content_fingerprint(str(dsrc))
+    (dsrc / "part-1.parquet").write_bytes(b"b")
+    assert content_fingerprint(str(dsrc)) != fp3
+
+    shutil.rmtree(d2, ignore_errors=True)
+    shutil.rmtree(d_other, ignore_errors=True)
+
+
+def test_staging_code_token_invalidates_on_impl_change(tmp_path):
+    """Round-5 ADVICE: a staged artifact keyed on input content alone
+    silently serves stale results after the GENERATING CODE changes. The
+    code token (hash of the operator source) must fold into the cache key,
+    and completing a build under a new token must reap the old one."""
+    from nextgenetl_spark.staging import code_token, mark_complete, staged_dir
+
+    src = tmp_path / "t.parquet"
+    src.write_bytes(b"v1")
+
+    def impl_v1(x):
+        return x + 1
+
+    def impl_v2(x):
+        return x + 2
+
+    t1, t2 = code_token(impl_v1), code_token(impl_v2)
+    assert t1 != t2
+    # token is stable across calls for the same source
+    assert code_token(impl_v1) == t1
+
+    d1, complete = staged_dir("ngetl_test_code", str(src), code=t1)
+    assert not complete
+    mark_complete(d1)
+    _, complete = staged_dir("ngetl_test_code", str(src), code=t1)
+    assert complete
+
+    # same data, new implementation → different dir, not complete
+    d2, complete = staged_dir("ngetl_test_code", str(src), code=t2)
+    assert d2 != d1 and not complete
+    mark_complete(d2)
+    assert not os.path.exists(d1), "stale-code build not reaped"
+
+    shutil.rmtree(d2, ignore_errors=True)
+
+
+def _exec_fn(src: str):
+    ns: dict = {}
+    exec(compile(src, "<round8-gen>", "exec"), ns)  # no retrievable source
+    return ns["f"]
+
+
+def test_code_token_fallback_distinguishes_constants_and_names():
+    from nextgenetl_spark.staging import code_token
+
+    f_plus1 = _exec_fn("def f(x):\n    return x + 1\n")
+    f_plus2 = _exec_fn("def f(x):\n    return x + 2\n")
+    # same bytecode, different co_consts — must produce different tokens
+    assert f_plus1.__code__.co_code == f_plus2.__code__.co_code
+    assert code_token(f_plus1) != code_token(f_plus2)
+
+    f_len = _exec_fn("def f(x):\n    return len(x)\n")
+    f_abs = _exec_fn("def f(x):\n    return abs(x)\n")
+    assert f_len.__code__.co_code == f_abs.__code__.co_code
+    assert code_token(f_len) != code_token(f_abs)
+
+    # stable across re-exec of identical source (cache hits across runs)
+    assert code_token(f_plus1) == code_token(_exec_fn("def f(x):\n    return x + 1\n"))
+
+
+def test_code_token_fallback_folds_closure_cells():
+    from nextgenetl_spark.staging import code_token
+
+    src = "def mk(th):\n    def f(x):\n        return x > th\n    return f\ndef f():\n    pass\n"
+    ns: dict = {}
+    exec(compile(src, "<round8-gen>", "exec"), ns)
+    g1, g2 = ns["mk"](0.5), ns["mk"](0.7)  # identical code, threshold in a cell
+    assert code_token(g1) != code_token(g2)
+    assert code_token(g1) == code_token(ns["mk"](0.5))
+
+
+def test_staged_phash_fps_match_fresh_compute(spark):
+    """The staged pHash fingerprint scans (workloads/multimodal.py
+    _staged_phash_fps) must serve bit-identical fp values to a fresh
+    in-plan computation for BOTH hash variants — the staging is a cost
+    move, never a semantics change."""
+    from nextgenetl_spark.operators.multimodal import (
+        attach_blob,
+        attach_image_blob,
+        perceptual_hash,
+        perceptual_hash_pixels,
+    )
+    from nextgenetl_spark.workloads.multimodal import (
+        _phash_variant_corpus,
+        _staged_phash_fps,
+    )
+
+    sf = SF_SMOKE
+    for pixels in (False, True):
+        corpus = _phash_variant_corpus(spark, sf, pixels)
+        if pixels:
+            fresh = perceptual_hash_pixels(attach_image_blob(corpus))
+        else:
+            fresh = perceptual_hash(attach_blob(corpus))
+        fresh_rows = {r.doc_id: r.fp for r in fresh.collect()}
+        staged_rows = {r.doc_id: r.fp for r in _staged_phash_fps(spark, sf, pixels).collect()}
+        assert staged_rows == fresh_rows, f"pixels={pixels}"

@@ -1988,3 +1988,63 @@ def test_pooled_ann_jobs_stay_in_the_callers_job_group(spark, tmp_path, site):
             spark.sparkContext.setLocalProperty(key, None)
     assert group_jobs(group) - grouped
     assert not group_jobs(None) - ungrouped
+
+
+def test_swar_vote_fold_matches_naive_and_handles_empty_docs(spark):
+    """The SWAR-packed vote fold must produce bit-identical fingerprints to
+    a naive per-bit ±1 vote, including the explode_outer null row of an
+    NULL-text document (md5(null) propagates null hash halves → coalesced word
+    0 → fp 0, matching the old per-bit when-form)."""
+    from pyspark.sql import functions as F
+
+    from nextgenetl_spark.operators.dedup import (
+        md5_simhash_fingerprints,
+        simhash_fingerprints,
+    )
+
+    docs = spark.createDataFrame(
+        [
+            (1, "the quick brown fox jumps over the lazy dog"),
+            (2, "the quick brown fox jumps over the lazy cat"),
+            (3, None),
+            (4, "completely different text about spark aggregation"),
+        ],
+        "doc_id long, text string",
+    )
+    got = {r["doc_id"]: r["fp"] for r in md5_simhash_fingerprints(docs).collect()}
+    assert got[3] == 0  # NULL text: null token array → null md5 halves → fp 0
+
+    # naive reference: per-bit ±1 votes over the same md5 bit layout
+    from nextgenetl_spark.operators.textstats import tokens
+
+    base = docs.select("doc_id", F.explode_outer(F.array_distinct(tokens("text"))).alias("t"))
+    base = base.select(
+        "doc_id",
+        F.conv(F.substring(F.md5("t"), 1, 8), 16, 10).cast("long").alias("n1"),
+        F.conv(F.substring(F.md5("t"), 9, 8), 16, 10).cast("long").alias("n2"),
+    )
+    masks = [(1 << b) if b < 63 else -(2**63) for b in range(64)]
+    aggs = [
+        F.sum(
+            F.when(
+                F.shiftright(F.col("n1" if b < 32 else "n2"), (31 - b) if b < 32 else (63 - b))
+                .bitwiseAND(F.lit(1))
+                != 0,
+                1,
+            ).otherwise(-1)
+        ).alias(f"v{b}")
+        for b in range(64)
+    ]
+    votes = base.groupBy("doc_id").agg(*aggs)
+    fp = F.lit(0).cast("long")
+    for b, m in enumerate(masks):
+        fp = fp + F.when(F.col(f"v{b}") > 0, F.lit(m).cast("long")).otherwise(F.lit(0).cast("long"))
+    naive = {r["doc_id"]: r["fp"] for r in votes.select("doc_id", fp.alias("fp")).collect()}
+    # naive form yields null fp for the empty doc (null votes); SWAR pins it to 0
+    assert naive[3] is None or naive[3] == 0
+    for d in (1, 2, 4):
+        assert got[d] == naive[d], f"doc {d}: SWAR {got[d]:#x} != naive {naive[d]:#x}"
+
+    # xxhash production path: empty doc folds the single null-token hash
+    xx = {r["doc_id"]: r["fp"] for r in simhash_fingerprints(docs).collect()}
+    assert set(xx) == {1, 2, 3, 4} and all(v is not None for v in xx.values())

@@ -6,6 +6,9 @@ from __future__ import annotations
 import gzip
 import json
 
+import pytest
+from pyspark.sql import types as T
+
 from nextgenetl_spark.sources import read_gtf, read_jsonl, read_maf_concat, read_tsv, read_vcf
 from nextgenetl_spark.sources.jsonl import records_to_df
 
@@ -357,3 +360,98 @@ def test_read_tsv_build_cost_is_flat_in_width(spark, tmp_path):
         assert len(df.columns) == ncols
         counts[ncols] = n[0]
     assert abs(counts[140] - counts[10]) < 20, counts
+
+
+def test_export_csv_writes_schema_sidecar(spark, tmp_path):
+    """Pipeline export_csv persists the writer schema as _schema.json."""
+    from nextgenetl_spark.plans.pipeline import Pipeline
+    from nextgenetl_spark.schemas import load_schema_types
+
+    df = spark.createDataFrame([(1, "a", 1.0), (2, "b", 2.5)], "k long, v string, bal double")
+    pipe = Pipeline(spark, warehouse=str(tmp_path))
+    pipe.register("t", df)
+    pipe.run_step(
+        {"name": "e", "dest": "out", "sql": "SELECT * FROM t", "export_csv": "out_tsv"}
+    )
+    sidecar = tmp_path / "out_tsv" / "_schema.json"
+    assert sidecar.exists()
+    types = load_schema_types(str(sidecar))
+    assert types == {"k": "INT64", "v": "STRING", "bal": "FLOAT64"}
+
+
+def test_read_tsv_sidecar_pins_types_over_degenerate_first_file(spark, tmp_path):
+    """The S9 hash-mismatch mechanism, forced: the lexicographically-first
+    part file samples a double column as all-integral (head-of-first-file
+    inference would re-type it INT64 and truncate every fractional value in
+    OTHER files); the _schema.json sidecar pins FLOAT64 so the read-back is
+    partitioning-insensitive."""
+    from nextgenetl_spark.schemas import save_schema
+    from nextgenetl_spark.sources.tsv import read_tsv
+
+    d = tmp_path / "exp"
+    d.mkdir()
+    (d / "part-00000.csv").write_text("k\tbal\n1\t10.0\n2\t20.0\n")
+    (d / "part-00001.csv").write_text("k\tbal\n3\t2.5\n")
+
+    # without the sidecar: first-file inference re-types bal to INT64
+    plain = read_tsv(spark, str(d), sep="\t")
+    assert dict(plain.dtypes)["bal"] == "bigint"
+
+    save_schema(str(d / "_schema.json"), {"k": "INT64", "bal": "FLOAT64"})
+    pinned = read_tsv(spark, str(d), sep="\t")
+    assert dict(pinned.dtypes)["bal"] == "double"
+    vals = {r["k"]: r["bal"] for r in pinned.collect()}
+    assert vals == {1: 10.0, 2: 20.0, 3: 2.5}
+
+
+def test_tsv_export_roundtrip_under_varied_partitioning(spark, tmp_path):
+    """End-to-end S9 shape at adversarial partitioning: many small part
+    files, fractional values isolated away from the first file. The
+    sidecar-pinned read-back must reproduce the source exactly."""
+    from nextgenetl_spark.plans.pipeline import Pipeline
+    from nextgenetl_spark.sources.tsv import read_tsv
+
+    rows = [(i, float(i)) for i in range(1, 40)] + [(99, 0.25)]
+    df = spark.createDataFrame(rows, "k long, bal double").repartition(8)
+    pipe = Pipeline(spark, warehouse=str(tmp_path))
+    pipe.register("src", df)
+    pipe.run_step(
+        {"name": "e", "dest": "out", "sql": "SELECT * FROM src", "export_csv": "t", "sep": "\t"}
+    )
+    back = read_tsv(spark, str(tmp_path / "t"), sep="\t")
+    assert dict(back.dtypes)["bal"] == "double"
+    assert sorted(r["bal"] for r in back.collect()) == sorted(b for _, b in rows)
+
+
+def test_schema_sidecar_survives_unmapped_atomic_types():
+    """schema_to_fields maps NTZ/short/byte best-effort and degrades any
+    other atomic (binary) to STRING instead of raising KeyError after the
+    CSV already wrote (ADVICE: plans/pipeline.py export_csv sidecar)."""
+    from nextgenetl_spark.schemas import fields_to_schema, schema_to_fields
+
+    schema = T.StructType(
+        [
+            T.StructField("ntz", T.TimestampNTZType()),
+            T.StructField("s", T.ShortType()),
+            T.StructField("b", T.ByteType()),
+            T.StructField("raw", T.BinaryType()),
+        ]
+    )
+    fields = schema_to_fields(schema)
+    assert [f["type"] for f in fields] == ["DATETIME", "INT64", "INT64", "STRING"]
+    # DATETIME reloads as a Spark timestamp via BQ_TO_SPARK — round-trippable
+    back = fields_to_schema(fields)
+    assert back["ntz"].dataType == T.TimestampType()
+
+
+def test_fixed_width_short_first_file_raises(spark, tmp_path):
+    """A first file shorter than skip_leading_rows gets a clear error, not
+    a StopIteration surfacing as an opaque RuntimeError."""
+    from nextgenetl_spark.sources.fixed_width import read_fixed_width
+
+    f = tmp_path / "empty.txt"
+    f.write_text("")
+    with pytest.raises(ValueError, match="header"):
+        read_fixed_width(
+            spark, str(f), fields=[("k", 1, 4)], skip_leading_rows=1
+        )

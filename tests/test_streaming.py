@@ -5,8 +5,10 @@ depend on arrival order)."""
 
 from __future__ import annotations
 
+import os
 import re
 
+import pandas as pd
 import pytest
 
 from nextgenetl_spark.catalog import load
@@ -532,3 +534,100 @@ def test_foreach_batch_redelivery_keeps_rows(spark, monkeypatch, site):
     assert len(once) > 0
     assert sorted(map(tuple, fn(spark, SF_SMOKE).collect())) == once
     assert not spark.streams.active
+
+
+def test_stage_symlinks_prunes_dangling_links(tmp_path):
+    """After an in-place source regeneration, same-basename stale links must
+    re-link (no FileExistsError) and different-basename danglers must be
+    pruned from the stage dir (ADVICE: streaming/source.py lexists)."""
+    from nextgenetl_spark.streaming.source import _stage_symlinks
+
+    src = tmp_path / "tbl.parquet"
+    src.mkdir()
+    (src / "part-0.parquet").write_bytes(b"v1")
+    (src / "old-name.parquet").write_bytes(b"v1")
+    stage = str(tmp_path / "stage")
+    _stage_symlinks(str(src), stage)
+    assert sorted(os.listdir(stage)) == ["old-name.parquet", "part-0.parquet"]
+
+    # regenerate in place: part-0 rewritten (same basename), old-name gone,
+    # new-name appears — both staged links now dangle
+    (src / "part-0.parquet").unlink()
+    (src / "old-name.parquet").unlink()
+    (src / "part-0.parquet").write_bytes(b"v2")
+    (src / "new-name.parquet").write_bytes(b"v2")
+
+    _stage_symlinks(str(src), stage)  # must not raise FileExistsError
+    names = sorted(os.listdir(stage))
+    assert names == ["new-name.parquet", "part-0.parquet"]
+    for n in names:
+        assert os.path.exists(os.path.join(stage, n))  # nothing dangles
+
+
+class FakeState:
+    exists = False
+
+    def update(self, v):
+        self.exists = True
+        self._v = v
+
+    @property
+    def get(self):
+        return self._v
+
+
+def test_shard_debounce_tolerates_null_event_type():
+    from nextgenetl_spark.streaming.stateful import _debounce_shard_group
+
+    t0 = 1_700_000_000_000_000
+    rows = pd.DataFrame(
+        {
+            "event_id": [1, 2, 3, 4],
+            "user_id": [7, 7, 7, 8],
+            "event_type": [None, "click", None, "view"],
+            "ts_us": [t0, t0 + 1_000_000, t0 + 2_000_000, t0],
+        }
+    )
+    out = pd.concat(list(_debounce_shard_group((0,), iter([rows]), FakeState())))
+    # null-typed events debounce as their own (user, None) series: the
+    # second None event at +2s is within the 5-min gap of the first → drop
+    assert sorted(out["event_id"]) == [1, 2, 4]
+
+
+def test_shard_debounce_evicts_stale_state_entries():
+    from nextgenetl_spark.streaming.stateful import (
+        DEBOUNCE_GAP_US,
+        DEBOUNCE_LATE_ALLOWANCE_US,
+        _debounce_shard_group,
+    )
+
+    t0 = 1_700_000_000_000_000
+    horizon = DEBOUNCE_GAP_US + DEBOUNCE_LATE_ALLOWANCE_US
+    state = FakeState()
+    # batch 1: user 1 at t0, user 2 at t0 + horizon + 60s — user 1's entry
+    # is already unreachable by any in-allowance future event
+    b1 = pd.DataFrame(
+        {
+            "event_id": [1, 2],
+            "user_id": [1, 2],
+            "event_type": ["click", "click"],
+            "ts_us": [t0, t0 + horizon + 60_000_000],
+        }
+    )
+    list(_debounce_shard_group((0,), iter([b1]), state))
+    users, types, last = state.get
+    assert list(users) == [2]  # user 1 evicted, user 2 retained
+
+    # the evicted entry is decision-equivalent: user 1's next in-allowance
+    # event (> last + GAP by construction) is kept, exactly as if the
+    # entry had been retained
+    b2 = pd.DataFrame(
+        {
+            "event_id": [3],
+            "user_id": [1],
+            "event_type": ["click"],
+            "ts_us": [t0 + horizon + 61_000_000],
+        }
+    )
+    out = pd.concat(list(_debounce_shard_group((0,), iter([b2]), state)))
+    assert list(out["event_id"]) == [3]

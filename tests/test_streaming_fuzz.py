@@ -6,8 +6,9 @@ parameters (window/slide/gap), splits the events across several parquet
 files in a random order, and replays them through the REAL streaming
 operators with ``maxFilesPerTrigger=1`` — forcing multi-micro-batch
 incremental state — in complete mode. The streamed result must equal the
-same plan run in batch, for every split and arrival order: event-time
-semantics may not depend on arrival.
+same plan run in batch over the rows the stream keeps, for every split and
+arrival order: event-time semantics may not depend on arrival beyond the
+watermark's own late-row rule (``_on_time``).
 
 Values are generated as multiples of 0.25 (exact in binary), so sums are
 bit-identical under any aggregation order and the compare stays exact.
@@ -18,7 +19,7 @@ from __future__ import annotations
 import os
 import sys
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from pyspark.sql import functions as F
@@ -28,9 +29,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from tests.conftest import fuzz_examples
 
 from nextgenetl_spark.streaming import session_window_agg, sliding_window_agg, tumbling_window_agg
+from nextgenetl_spark.streaming.source import run_memory_replay
 from nextgenetl_spark.streaming.windows import with_watermark
 
 _COUNTER = [0]
+WATERMARK_DELAY_S = 600  # with_watermark's default delay
 
 
 @st.composite
@@ -69,12 +72,44 @@ def _stream_cases(draw):
     return rows, op, params, n_files, assignment
 
 
+def _on_time(rows, op, params, n_files, assignment):
+    """The rows the stream aggregates. File k is micro-batch k, and Spark
+    judges a batch's rows against the watermark the previous batch ran
+    under: the max event time of files 0..k-2 less the delay. A session
+    window drops a row whose session (event time + gap) ends at or before
+    that watermark; tumbling and sliding windows in complete mode keep
+    every row."""
+    if op != "session":
+        return rows
+    n, unit = params["gap"].split()
+    gap = int(n) * (60 if unit.startswith("minute") else 1)
+    file_max = [max((r[3] for r, a in zip(rows, assignment) if a == f), default=None) for f in range(n_files)]
+
+    def late(f, epoch):
+        seen = [m for m in file_max[: max(f - 1, 0)] if m is not None]
+        return bool(seen) and epoch + gap <= max(seen) - WATERMARK_DELAY_S
+
+    return [r for r, a in zip(rows, assignment) if not late(a, r[3])]
+
+
 def _apply(op, params, df):
     if op == "tumbling":
         return tumbling_window_agg(df, **params)
     if op == "sliding":
         return sliding_window_agg(df, **params)
     return session_window_agg(df, **params)
+
+
+# A streamed session drops the late +0 s row of file 2: file 0's +2145 s
+# row set the watermark file 1 (empty) ran under to +1545 s.
+_LATE_SESSION_ROW = (
+    [(0, 1, "click", 1_700_002_145, 0.0)]
+    + [(i, 1, "click", 1_700_000_000, 0.0) for i in range(1, 22)],
+    "session",
+    {"gap": "90 seconds"},
+    3,
+    [0] * 21 + [2],
+)
 
 
 @settings(
@@ -84,6 +119,7 @@ def _apply(op, params, df):
     suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
 )
 @given(case=_stream_cases())
+@example(case=_LATE_SESSION_ROW)
 def test_stream_matches_batch_under_any_arrival_order(spark, case, tmp_path_factory):
     rows, op, params, n_files, assignment = case
     src = str(tmp_path_factory.mktemp("stream_fuzz"))
@@ -99,7 +135,9 @@ def test_stream_matches_batch_under_any_arrival_order(spark, case, tmp_path_fact
         part = full.filter(F.col("event_id").isin(ids)) if ids else full.limit(0)
         part.coalesce(1).write.mode("append").parquet(src)
 
-    batch = _apply(op, params, spark.read.schema(full.schema).parquet(src)).collect()
+    kept = [r[0] for r in _on_time(rows, op, params, n_files, assignment)]
+    on_time = spark.read.schema(full.schema).parquet(src).filter(F.col("event_id").isin(kept))
+    batch = _apply(op, params, on_time).collect()
 
     stream_src = (
         spark.readStream.schema(full.schema)
@@ -108,18 +146,9 @@ def test_stream_matches_batch_under_any_arrival_order(spark, case, tmp_path_fact
     )
     _COUNTER[0] += 1
     name = f"fuzz_stream_{_COUNTER[0]}"
-    q = (
-        _apply(op, params, with_watermark(stream_src))
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    streamed = spark.sql(f"SELECT * FROM {name}").collect()
+    streamed = run_memory_replay(spark, _apply(op, params, with_watermark(stream_src)), name, "complete").collect()
     spark.catalog.dropTempView(name)
 
     assert sorted(map(tuple, streamed)) == sorted(map(tuple, batch)), (
-        f"op={op} params={params} files={n_files}\nrows={rows}"
+        f"op={op} params={params} files={n_files}\nrows={rows}\nassignment={assignment}"
     )

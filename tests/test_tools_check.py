@@ -16,13 +16,14 @@ engine bug (or worse, mask one). Pin the invariants:
 from __future__ import annotations
 
 import math
+import os
 import random
 import sys
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from tools.check import canon, table_hash
 

@@ -740,3 +740,32 @@ def test_cms_inner_product_join_size(spark):
         cms_build(C, "k", depth=4, width=4096), cms_build(D, "k", depth=4, width=4096)
     ).collect()
     assert len(row) == 1 and row[0]["est_join_size"] == 0, row
+
+
+def test_qhist_oracle_clamps_before_int_cast(spark):
+    """The value_quantile_sketch DuckDB oracle must survive a heavy-tail
+    value whose floored bin exceeds INT32 (ADVICE: workloads/events.py —
+    clamp on BIGINT first, then cast), and still match qhist exactly."""
+    from nextgenetl_spark.operators.agg import qhist_build, qhist_quantiles
+    from nextgenetl_spark.workloads import load_all
+
+    oracle = load_all()["value_quantile_sketch"].oracle
+    vals = [float(v) for v in range(0, 500, 7)] + [-3.0, 6.0e9, None]
+    df = spark.createDataFrame([(v,) for v in vals], "value double")
+    got = qhist_quantiles(
+        qhist_build(df, "value", lo=0.0, hi=500.0, n_bins=256),
+        [0.5, 0.9, 0.99],
+        lo=0.0,
+        hi=500.0,
+        n_bins=256,
+    )
+    spark_rows = sorted((r["q"], r["value"]) for r in got.collect())
+
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW events AS SELECT * FROM (VALUES %s) AS t(value)"
+        % ", ".join("(CAST(%s AS DOUBLE))" % ("NULL" if v is None else repr(v)) for v in vals)
+    )
+    # pre-fix this raised a conversion error on the 6e9 row
+    duck_rows = sorted(tuple(r) for r in con.execute(oracle).fetchall())
+    assert spark_rows == duck_rows

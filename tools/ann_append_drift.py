@@ -44,10 +44,12 @@ docstring.
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F
 
@@ -59,9 +61,9 @@ from nextgenetl_spark.operators.similarity import (
     cosine_topk_gemm,
     ivfpq_query_index,
 )
-from nextgenetl_spark.session import get_spark
+from nextgenetl_spark.session import DEFAULT_SF_DIR, get_spark
 
-SF_DIR = "/root/testdata/sf0.1"
+SF_DIR = DEFAULT_SF_DIR
 K = 10
 
 
@@ -210,7 +212,7 @@ def main() -> None:
         "query populations; beyond it, rebuilding recovers more than 5 "
         "points of recall"
     )
-    with open("/root/repo/ANN_APPEND_DRIFT.json", "w", encoding="utf-8") as fh:
+    with open(os.path.join(REPO, "ANN_APPEND_DRIFT.json"), "w", encoding="utf-8") as fh:
         json.dump(report, fh, indent=1, sort_keys=True)
     print(json.dumps({k: v for k, v in report.items() if k != "curve"}))
 

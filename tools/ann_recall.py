@@ -26,11 +26,13 @@ tests/test_ann_fuzz.py pins the monotonicity these curves rely on
 from __future__ import annotations
 
 import json
+import os
 import random
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F
 
@@ -41,9 +43,9 @@ from nextgenetl_spark.operators.similarity import (
     lsh_topk,
     lsh_topk_multiprobe,
 )
-from nextgenetl_spark.session import get_spark
+from nextgenetl_spark.session import DEFAULT_SF_DIR, get_spark
 
-SF_DIR = "/root/testdata/sf0.1"
+SF_DIR = DEFAULT_SF_DIR
 K = 10
 
 
@@ -177,7 +179,7 @@ def main() -> None:
     finally:
         shutil.rmtree(idx_dir, ignore_errors=True)
 
-    out = sys.argv[3] if len(sys.argv) > 3 else "/root/repo/ANN_RECALL.json"
+    out = sys.argv[3] if len(sys.argv) > 3 else os.path.join(REPO, "ANN_RECALL.json")
     with open(out, "w", encoding="utf-8") as fh:
         json.dump(results, fh, indent=1)
     print(f"wrote {out}")

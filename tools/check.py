@@ -11,12 +11,13 @@ from __future__ import annotations
 
 import hashlib
 import math
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from nextgenetl_spark.session import get_spark
 from nextgenetl_spark.workloads import load_all

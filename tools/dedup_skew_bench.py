@@ -26,13 +26,13 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import functions as F
+from pyspark.sql import functions as F  # noqa: E402
 
-from nextgenetl_spark.operators import dedup as D
-from skew_bench import _reduce_task_skew, _ui_spark
+from nextgenetl_spark.operators import dedup as D  # noqa: E402
+from nextgenetl_spark.session import get_spark  # noqa: E402
+from tools.skew_bench import _reduce_task_skew, _StageCounters  # noqa: E402
 
 CHAIN_LEN = 5
 BG_BASE = 10_000_000
@@ -67,7 +67,8 @@ def build_edges(spark, n_hub: int, n_bg_chains: int):
 def main() -> None:
     n_hub = int(sys.argv[1]) if len(sys.argv) > 1 else 100_000
     n_bg = int(sys.argv[2]) if len(sys.argv) > 2 else 100_000
-    spark = _ui_spark()
+    spark = get_spark("dedup-skew-bench")
+    counters = _StageCounters(spark)
     edges = build_edges(spark, n_hub, n_bg).localCheckpoint()
     n_edges = edges.count()
     out = {"hub_size": n_hub, "bg_chains": n_bg, "n_edges": n_edges}
@@ -77,15 +78,12 @@ def main() -> None:
     ):
         walls, tasks, n_comp = [], None, None
         for _ in range(2):
-            s0 = int(spark.sparkContext._jsc.sc().dagScheduler().nextStageId())
             t0 = time.time()
             comp = solver(edges)
             n_comp = comp.select("label").distinct().count()
-            walls.append(round(time.time() - t0, 2))
-            try:
-                tasks = _reduce_task_skew(spark, s0) or tasks
-            except Exception:
-                pass
+            t1 = time.time()
+            walls.append(round(t1 - t0, 2))
+            tasks = _reduce_task_skew(spark, counters, t0, t1) or tasks
         out[variant] = {
             "wall_s": min(walls),
             "components": n_comp,

@@ -6,8 +6,8 @@ way the driver does (row count + schema + order-insensitive value hash).
     python tools/drive_plain.py            # all queries at sf0.01
 """
 
-import hashlib, math, sys, time
-sys.path.insert(0, "/root/repo")
+import hashlib, math, os, sys, time
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import SparkSession
 
 spark = SparkSession.builder.master("local[8]").appName("drive-full").getOrCreate()

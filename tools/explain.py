@@ -7,9 +7,10 @@ evaluation, unexpectedly wide scans). Run after touching any operator:
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from nextgenetl_spark.session import get_spark
 from nextgenetl_spark.workloads import load_all

@@ -34,11 +34,13 @@ from __future__ import annotations
 
 import json
 import shutil
+import os
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -195,7 +197,7 @@ def main() -> None:
             "threshold early never hurts in the remote regime"
         ),
     }
-    with open("/root/repo/INFO_SCHEMA_SCALE.json", "w", encoding="utf-8") as fh:
+    with open(os.path.join(REPO, "INFO_SCHEMA_SCALE.json"), "w", encoding="utf-8") as fh:
         json.dump(out, fh, indent=1)
     print(json.dumps(out, indent=1))
 

@@ -17,11 +17,13 @@ from __future__ import annotations
 import json
 import math
 import shutil
+import os
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F
 
@@ -86,9 +88,9 @@ def main() -> None:
     out = []
     for n_rep in (reps if len(reps) > 1 else [reps[0]]):
         out.append(confirm(spark, n_rep, n_queries))
-    with open("/root/repo/IVF_DEFAULT_CONFIRM.json", "w", encoding="utf-8") as fh:
+    with open(os.path.join(REPO, "IVF_DEFAULT_CONFIRM.json"), "w", encoding="utf-8") as fh:
         json.dump(out, fh, indent=1)
-    print("wrote /root/repo/IVF_DEFAULT_CONFIRM.json")
+    print("wrote", os.path.join(REPO, "IVF_DEFAULT_CONFIRM.json"))
 
 
 if __name__ == "__main__":

@@ -23,10 +23,12 @@ Writes PQ_AUTO_SHORTLIST.json.
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F
 
@@ -105,7 +107,7 @@ def main() -> None:
         queries.unpersist()
         c.unpersist()
 
-    out = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/PQ_AUTO_SHORTLIST.json"
+    out = sys.argv[2] if len(sys.argv) > 2 else os.path.join(REPO, "PQ_AUTO_SHORTLIST.json")
     with open(out, "w", encoding="utf-8") as fh:
         json.dump(results, fh, indent=1)
     print(f"wrote {out}", flush=True)

@@ -24,10 +24,12 @@ Writes PQ_RECALL.json and prints the table recorded in BASELINE.md §4.2.
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F
 
@@ -74,7 +76,7 @@ def main() -> None:
                 flush=True,
             )
 
-    out = sys.argv[3] if len(sys.argv) > 3 else "/root/repo/PQ_RECALL.json"
+    out = sys.argv[3] if len(sys.argv) > 3 else os.path.join(REPO, "PQ_RECALL.json")
     with open(out, "w", encoding="utf-8") as fh:
         json.dump(results, fh, indent=1)
     print(f"wrote {out}", flush=True)

@@ -27,14 +27,14 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from nextgenetl_spark.session import get_spark
+from nextgenetl_spark.session import DEFAULT_SF_DIR, get_spark
 from nextgenetl_spark.workloads import load_all
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+SF_DIR = DEFAULT_SF_DIR
 
 # (table, [key columns to offset]) — offsets preserve the FK graph per copy
 REPLICATED = {

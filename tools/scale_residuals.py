@@ -17,10 +17,12 @@ from __future__ import annotations
 
 import json
 import re
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -28,7 +30,7 @@ from pyspark.sql.window import Window
 from nextgenetl_spark.catalog import load
 from nextgenetl_spark.operators import dedup as D
 from nextgenetl_spark.operators import textstats as TS
-from nextgenetl_spark.session import get_spark
+from nextgenetl_spark.session import DEFAULT_SF_DIR, get_spark
 
 JOIN_NODES = re.compile(
     r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin|BroadcastNestedLoopJoin|CartesianProduct)"
@@ -146,7 +148,7 @@ def _join_profile(df) -> dict:
 def main() -> None:
     factors = [int(a) for a in sys.argv[1:]] or [1, 5, 20]
     spark = get_spark("scale-residuals")
-    sf = "/root/testdata/sf0.1"
+    sf = DEFAULT_SF_DIR
     d0 = load(spark, sf, "documents")
     e0 = load(spark, sf, "embeddings")
     record: dict = {"sf": 0.1, "factors": factors, "results": {}}
@@ -168,9 +170,9 @@ def main() -> None:
             row[name] = {"wall_s": round(time.time() - t0, 2), "rows": rows, "joins": plan}
         record["results"][f"x{n}"] = row
         print(f"x{n} ({n_docs} docs): " + json.dumps(row), flush=True)
-    with open("/root/repo/SCALE_RESIDUALS.json", "w", encoding="utf-8") as fh:
+    with open(os.path.join(REPO, "SCALE_RESIDUALS.json"), "w", encoding="utf-8") as fh:
         json.dump(record, fh, indent=1, sort_keys=True)
-    print("wrote /root/repo/SCALE_RESIDUALS.json")
+    print("wrote", os.path.join(REPO, "SCALE_RESIDUALS.json"))
 
 
 if __name__ == "__main__":

@@ -11,17 +11,18 @@ shape for the banding path, not a trivially-deduped copy."""
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
 from nextgenetl_spark.catalog import load
 from nextgenetl_spark.operators import dedup as D
 from nextgenetl_spark.operators.similarity import blocked_near_dup_pairs_auto, ivf_topk
-from nextgenetl_spark.session import get_spark
+from nextgenetl_spark.session import DEFAULT_SF_DIR, get_spark
 
 
 def replicate_docs(d, n):
@@ -84,7 +85,7 @@ def _bm25(d) -> int:
 def main() -> None:
     factors = [int(a) for a in sys.argv[1:]] or [1, 5, 20]
     spark = get_spark("scale-smoke")
-    sf = "/root/testdata/sf0.1"
+    sf = DEFAULT_SF_DIR
     d0 = load(spark, sf, "documents")
     e0 = load(spark, sf, "embeddings")
     for n in factors:

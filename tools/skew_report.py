@@ -12,6 +12,7 @@ join itself would pay, so run it at a sampled fraction on a 100 TB table
 
 from __future__ import annotations
 
+import os
 import sys
 
 from pyspark.sql import DataFrame
@@ -50,7 +51,7 @@ def skew_report(df: DataFrame, key_col: str, top_n: int = 5) -> dict:
 
 
 if __name__ == "__main__":
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from nextgenetl_spark.session import get_spark
 
     path, key = sys.argv[1], sys.argv[2]

@@ -28,12 +28,12 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
 from nextgenetl_spark.catalog import load
-from nextgenetl_spark.session import get_spark
+from nextgenetl_spark.session import DEFAULT_SF_DIR, get_spark
 from nextgenetl_spark.streaming.source import replay_shuffle_cap, run_bounded
 from nextgenetl_spark.streaming.stateful import debounce_against_last_kept
 
@@ -122,7 +122,7 @@ def run_replay(spark, data_dir: str, name: str) -> dict:
 def main() -> None:
     factors = [int(a) for a in sys.argv[1:]] or [1, 5, 10]
     spark = get_spark("stream-scale")
-    sf = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf = DEFAULT_SF_DIR
     out = {}
     for f in factors:
         d = build_sliced(spark, sf, f)
