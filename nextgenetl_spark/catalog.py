@@ -10,7 +10,6 @@ from __future__ import annotations
 
 import json
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -571,13 +570,12 @@ def create_view_from_query(
     the reference's type check."""
     if os.path.isdir(os.path.join(root, name)) or os.path.isdir(os.path.join(root, f"{name}_current")):
         raise ValueError(f"'{name}' already exists as a table under {root}; cannot create view")
-    vdir = _views_dir(root)
-    os.makedirs(vdir, exist_ok=True)
-    path = os.path.join(vdir, f"{name}.json")
-    fd, tmp = tempfile.mkstemp(dir=vdir)
-    with os.fdopen(fd, "w") as fh:
-        json.dump({"name": name, "sql": sql, "description": description}, fh, indent=2)
-    os.replace(tmp, path)
+    from nextgenetl_spark.staging import atomic_write
+
+    path = atomic_write(
+        os.path.join(_views_dir(root), f"{name}.json"),
+        json.dumps({"name": name, "sql": sql, "description": description}, indent=2),
+    )
     spark.sql(f"CREATE OR REPLACE TEMP VIEW {name} AS {sql}")
     return path
 

@@ -1,10 +1,25 @@
 """Similarity search over embedding columns (array<float>).
 
-Brute-force cosine top-k is the exact baseline: broadcast the (small) query
-set against the corpus so the corpus never shuffles, compute dot products
-JVM-side with zip_with/aggregate (no Python in the loop), and rank per query
-with a window. The scale path is ``lsh_topk`` — random-hyperplane bucketing
-so each query only scores its bucket.
+Exact search: ``cosine_topk`` scores every (broadcast query, corpus row)
+pair JVM-side with zip_with/aggregate; ``cosine_topk_gemm`` scores them as
+one numpy GEMM per Arrow batch. The measured scale path is IVF and IVF-PQ
+with their automatic knobs (√N cells, nprobe = ceil(cells/4), shortlist =
+3·max(k, ADC crowd)): recall@10 1.000 for IVF at 40k and 200k vectors
+(IVF_DEFAULT_CONFIRM.json), 0.965 / 0.997 for IVF-PQ
+(PQ_AUTO_SHORTLIST.json). ``pq_topk`` compresses without pruning.
+Hyperplane LSH (``lsh_topk``) is a cheap bucket join, but its recall@10
+measured only 0.15-0.41 (ANN_RECALL.json).
+
+The searches share one copy of each step: ``_topn`` (the per-query top-n
+under (score desc, id asc): final top-k, ADC shortlist, cell probe),
+``_collect_queries`` / ``_query_batch`` / ``_no_hits`` (the bounded query
+collect: an oversized side fails by name, an empty one returns typed
+empty rows), ``_dense_topn`` (a batch's top-n of a dense score matrix),
+``_probe`` (nprobe nearest cells), and ``_adc_lut`` / ``_adc_pairs`` /
+``_rerank`` (ADC table, paired ADC kernel, shortlist-then-exact-cosine
+re-rank). ``_ivf_search`` and ``_ivfpq_search`` run the same walk whether
+the centroids, codebooks and codes were built in memory (``ivf_topk``,
+``ivfpq_topk``) or read from an index (``*_query_index``).
 """
 
 from __future__ import annotations
@@ -30,6 +45,69 @@ def cosine(a, b) -> F.Column:
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
 
 
+def _sim(qv: str, cv: str, digits: int = 4) -> F.Column:
+    """The rounded cosine every search ranks by; rounding before ranking
+    pins cross-engine float comparability."""
+    return F.round(cosine(F.col(qv), F.col(cv)), digits).alias("sim")
+
+
+def _topn(df: DataFrame, by: str, score: str, tie: str, n: int, rank: str = "rank") -> DataFrame:
+    """Each ``by`` group's top ``n`` rows by (``score`` desc, ``tie`` asc),
+    numbered in ``rank``."""
+    w = Window.partitionBy(by).orderBy(F.desc(score), F.asc(tie))
+    return df.withColumn(rank, F.row_number().over(w)).filter(F.col(rank) <= n)
+
+
+def _collect_queries(queries: DataFrame, query_id: str, vec_col: str) -> list:
+    """The bounded query collect: limit(cap+1) bounds what the driver
+    materializes even when the query side is oversized."""
+    return queries.select(F.col(query_id), F.col(vec_col)).limit(MAX_QUERY_ROWS + 1).collect()
+
+
+def _query_batch(op: str, rows: list):
+    """(ids, float64 matrix) of a collected query side, or None when it is
+    empty. The matrix ships driver→executors in the UDF closure, so an
+    oversized side fails BY NAME (mirrors dedup.bounded_block_guard), not
+    as a driver OOM."""
+    import numpy as np
+
+    if len(rows) > MAX_QUERY_ROWS:
+        raise ValueError(
+            f"{op}: the query side is collected and broadcast in the UDF "
+            f"closure, but it has > MAX_QUERY_ROWS={MAX_QUERY_ROWS} rows. A "
+            f"batch this large is a corpus, not a query set: swap the sides, "
+            f"batch the queries, or use ivf_topk so each query scores its "
+            f"probed cells only."
+        )
+    if not rows:
+        return None
+    return np.array([r[0] for r in rows]), np.stack([np.asarray(r[1], dtype="float64") for r in rows])
+
+
+def _no_hits(spark, query_id: str, out_id: str, q_type: str, n_type: str) -> DataFrame:
+    """An empty query side's result, typed as a non-empty one."""
+    return spark.createDataFrame([], f"{query_id} {q_type}, {out_id} {n_type}, sim double, rank int")
+
+
+def _dense_topn(qids, ids, S, n: int, query_id: str, corpus_id: str, score: str):
+    """One Arrow batch's top-``n`` rows per query of a dense (query × row)
+    score matrix under the GLOBAL order (-score, id): lossless for the
+    final window. Self-matches score -inf and drop."""
+    import numpy as np
+    import pandas as pd
+
+    S[qids[:, None] == ids[None, :]] = -np.inf
+    take = min(n, len(ids))
+    out_q, out_n, out_s = [], [], []
+    for j in range(len(qids)):
+        order = np.lexsort((ids, -S[j]))[:take]
+        keep = order[np.isfinite(S[j, order])]
+        out_q.extend([qids[j]] * len(keep))
+        out_n.extend(ids[keep])
+        out_s.extend(S[j, keep])
+    return pd.DataFrame({query_id: out_q, corpus_id: out_n, score: out_s})
+
+
 def cosine_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -48,10 +126,9 @@ def cosine_topk(
         F.broadcast(q)
         .crossJoin(c)
         .filter(F.col(query_id) != F.col(corpus_id))
-        .select(query_id, corpus_id, F.round(cosine(F.col("qv"), F.col("cv")), round_digits).alias("sim"))
+        .select(query_id, corpus_id, _sim("qv", "cv", round_digits))
     )
-    w = Window.partitionBy(query_id).orderBy(F.desc("sim"), F.asc(corpus_id))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _topn(scored, query_id, "sim", corpus_id, k)
 
 
 def cosine_topk_gemm(
@@ -77,32 +154,13 @@ def cosine_topk_gemm(
     one BLAS matmul per batch and shuffles only candidates — at 100 TB the
     corpus never shuffles and the scan stays Arrow-batched."""
     import numpy as np
-    import pandas as pd
 
-    # Bounded-collect contract (mirrors dedup.bounded_block_guard): the
-    # query batch ships driver→executors in the UDF closure, so an oversized
-    # "queries" side must fail BY NAME, not as a driver OOM. limit(cap+1)
-    # bounds what the driver materializes even in the failure case.
-    qrows = (
-        queries.select(F.col(query_id), F.col(vec_col))
-        .limit(MAX_QUERY_ROWS + 1)
-        .collect()
-    )
-    if len(qrows) > MAX_QUERY_ROWS:
-        raise ValueError(
-            f"cosine_topk_gemm: the query side is collected and broadcast in the "
-            f"UDF closure, but it has > MAX_QUERY_ROWS={MAX_QUERY_ROWS} rows. "
-            f"A batch this large is a corpus, not a query set — swap the sides, "
-            f"or use ivf_topk / lsh_topk so each query scores one cell."
-        )
-    id_type = queries.schema[query_id].dataType.simpleString()
-    out_schema = f"{query_id} {id_type}, {corpus_id} {corpus.schema[corpus_id].dataType.simpleString()}, sim double"
-    if not qrows:
-        return queries.sparkSession.createDataFrame([], out_schema).withColumn(
-            "rank", F.lit(1)
-        ).limit(0)
-    qids = np.array([r[0] for r in qrows])
-    Q = np.stack([np.asarray(r[1], dtype="float64") for r in qrows])
+    q_type = queries.schema[query_id].dataType.simpleString()
+    n_type = corpus.schema[corpus_id].dataType.simpleString()
+    batch = _query_batch("cosine_topk_gemm", _collect_queries(queries, query_id, vec_col))
+    if batch is None:
+        return _no_hits(queries.sparkSession, query_id, corpus_id, q_type, n_type)
+    qids, Q = batch
     Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
 
     def score(batches):
@@ -113,22 +171,12 @@ def cosine_topk_gemm(
             C = np.stack([np.asarray(v, dtype="float64") for v in pdf[vec_col]])
             Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
             S = np.round(Cn @ Qn.T, round_digits)  # (batch, q)
-            S[ids[:, None] == qids[None, :]] = -np.inf  # self-match exclusion
-            take = min(k + 1, len(ids))
-            out_q, out_n, out_s = [], [], []
-            for j in range(len(qids)):
-                # batch-local top-(k+1) under the GLOBAL total order
-                # (-sim, neighbor_id): lossless for the final top-k merge
-                order = np.lexsort((ids, -S[:, j]))[:take]
-                keep = order[np.isfinite(S[order, j])]
-                out_q.extend([qids[j]] * len(keep))
-                out_n.extend(ids[keep])
-                out_s.extend(S[keep, j])
-            yield pd.DataFrame({query_id: out_q, corpus_id: out_n, "sim": out_s})
+            yield _dense_topn(qids, ids, S.T, k + 1, query_id, corpus_id, "sim")
 
-    cands = corpus.select(F.col(corpus_id), F.col(vec_col)).mapInPandas(score, out_schema)
-    w = Window.partitionBy(query_id).orderBy(F.desc("sim"), F.asc(corpus_id))
-    return cands.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    cands = corpus.select(F.col(corpus_id), F.col(vec_col)).mapInPandas(
+        score, f"{query_id} {q_type}, {corpus_id} {n_type}, sim double"
+    )
+    return _topn(cands, query_id, "sim", corpus_id, k)
 
 
 #: Bounded-block contract for the quadratic embedding pair generators. The
@@ -165,7 +213,7 @@ def blocked_near_dup_pairs(
     b = df.select(F.col(block_col).alias("blk"), F.col(id_col).alias("b_id"), F.col(vec_col).alias("bv"))
     out = (
         a.join(b, (a.blk == b.blk) & (F.col("a_id") < F.col("b_id")))
-        .select("a_id", "b_id", F.round(cosine(F.col("av"), F.col("bv")), 4).alias("sim"))
+        .select("a_id", "b_id", _sim("av", "bv"))
         .filter(F.col("sim") >= threshold)
     )
     return _guarded(out, df, block_col, max_block_rows, "blocked_near_dup_pairs")
@@ -273,21 +321,33 @@ def blocked_near_dup_pairs_auto(
     return exact.unionByName(routed)
 
 
-def hyperplane_signature(vec_col, planes: list[list[float]]) -> F.Column:
-    """Sign-bit signature against fixed hyperplanes → integer bucket id.
-    ``planes`` is generated driver-side (deterministic seed) and inlined as
-    literals — it is tiny (num_planes × dim)."""
-    bits = []
-    for i, plane in enumerate(planes):
-        # one array literal per plane, not dim separate F.lit py4j round
-        # trips (r11 — construction cost only; identical literal array)
-        p = F.lit([float(x) for x in plane])
-        d = F.aggregate(F.zip_with(vec_col, p, lambda x, y: x.cast("double") * y), F.lit(0.0), lambda a, v: a + v)
-        bits.append(F.when(d >= 0, F.lit(1 << i)).otherwise(F.lit(0)))
+def _plane_dots(vec_col, planes: list[list[float]]) -> list[F.Column]:
+    """``vec_col``'s dot product with each hyperplane. Each plane is one
+    array literal, not dim separate F.lit py4j round trips (r11 —
+    construction cost only; identical literal array)."""
+    return [
+        F.aggregate(
+            F.zip_with(vec_col, F.lit([float(x) for x in plane]), lambda x, y: x.cast("double") * y),
+            F.lit(0.0),
+            lambda a, v: a + v,
+        )
+        for plane in planes
+    ]
+
+
+def _signature(dots: list[F.Column]) -> F.Column:
+    bits = [F.when(d >= 0, F.lit(1 << i)).otherwise(F.lit(0)) for i, d in enumerate(dots)]
     out = bits[0]
     for b in bits[1:]:
         out = out + b
     return out.cast("int")
+
+
+def hyperplane_signature(vec_col, planes: list[list[float]]) -> F.Column:
+    """Sign-bit signature against fixed hyperplanes → integer bucket id.
+    ``planes`` is generated driver-side (deterministic seed) and inlined as
+    literals — it is tiny (num_planes × dim)."""
+    return _signature(_plane_dots(vec_col, planes))
 
 
 def lsh_topk(
@@ -314,10 +374,9 @@ def lsh_topk(
     scored = (
         q.join(c, "bucket")
         .filter(F.col(query_id) != F.col(corpus_id))
-        .select(query_id, corpus_id, F.round(cosine(F.col("qv"), F.col("cv")), 4).alias("sim"))
+        .select(query_id, corpus_id, _sim("qv", "cv"))
     )
-    w = Window.partitionBy(query_id).orderBy(F.desc("sim"), F.asc(corpus_id))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _topn(scored, query_id, "sim", corpus_id, k)
 
 
 def _seed_scan(corpus: DataFrame, n: int, id_col: str, vec_col: str) -> list:
@@ -581,27 +640,58 @@ def ivf_topk(
     batches join it shuffle-free."""
     if nprobe is None:
         nprobe = _auto_nprobe(k_centroids)
-    # pick_centroids returns a literal-backed k-row table (r11): the
-    # selection scan ran exactly once inside it, so neither the assignment
-    # pass nor the query probe re-runs it and no checkpoint job is needed
-    cents = pick_centroids(corpus, k_centroids, corpus_id, vec_col)
+    cents, cells = _ivf_cells(corpus, k_centroids, refine_iters, corpus_id, vec_col)
+    return _ivf_search(queries, cents, cells, nprobe, k, query_id, corpus_id, vec_col, corpus_id)
+
+
+def _ivf_cells(corpus: DataFrame, k_centroids: int, refine_iters: int, id_col: str, vec_col: str):
+    """The IVF build: seed centroids, ``refine_iters`` Lloyd passes, and the
+    corpus assigned to its nearest cell → (centroids, cells). The centroid
+    table is literal-backed (r11): the selection scan ran exactly once, so
+    neither the assignment pass nor the query probe re-runs it and no
+    checkpoint job is needed."""
+    cents = pick_centroids(corpus, k_centroids, id_col, vec_col)
     if refine_iters > 0:
-        cents = refine_centroids(corpus, cents, refine_iters, corpus_id, vec_col)
-    cells = assign_cells(corpus, cents, corpus_id, vec_col)
-    qprobe = (
+        cents = refine_centroids(corpus, cents, refine_iters, id_col, vec_col)
+    return cents, assign_cells(corpus, cents, id_col, vec_col)
+
+
+def _probe(queries: DataFrame, cents: DataFrame, query_id: str, vec_col: str, nprobe: int) -> DataFrame:
+    """Each query's ``nprobe`` nearest cells by centroid cosine (ties to the
+    lower cell id), against the broadcast k-row centroid table."""
+    scored = (
         queries.select(F.col(query_id), F.col(vec_col).alias("qv"))
         .crossJoin(F.broadcast(cents))
         .select(query_id, "qv", "cell_id", cosine(F.col("qv"), F.col("cvec")).alias("csim"))
     )
-    wq = Window.partitionBy(query_id).orderBy(F.desc("csim"), F.asc("cell_id"))
-    qcells = qprobe.withColumn("__pr", F.row_number().over(wq)).filter(F.col("__pr") <= nprobe)
+    return _topn(scored, query_id, "csim", "cell_id", nprobe, "__pr").select(query_id, "qv", "cell_id")
+
+
+def _ivf_search(
+    queries: DataFrame,
+    cents: DataFrame,
+    cells: DataFrame,
+    nprobe: int,
+    k: int,
+    query_id: str,
+    corpus_id: str,
+    vec_col: str,
+    out_id: str,
+) -> DataFrame:
+    """The IVF search: probe each query's cells, join the probed cells to
+    the cell-assigned corpus on cell_id, then score exactly and rank.
+    Output: (query_id, ``out_id``, sim, rank). The join carries no hint:
+    the planner broadcasts the smaller side, and when that is the cells the
+    probe's query_id partitioning feeds the final window with no further
+    shuffle (broadcasting the probe instead measured one more job per
+    query at sf0.01)."""
     scored = (
-        qcells.join(cells, "cell_id")
+        _probe(queries, cents, query_id, vec_col, nprobe)
+        .join(cells, "cell_id")
         .filter(F.col(query_id) != F.col(corpus_id))
-        .select(query_id, corpus_id, F.round(cosine(F.col("qv"), F.col(vec_col)), 4).alias("sim"))
+        .select(query_id, F.col(corpus_id).alias(out_id), _sim("qv", vec_col))
     )
-    w = Window.partitionBy(query_id).orderBy(F.desc("sim"), F.asc(corpus_id))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _topn(scored, query_id, "sim", out_id, k)
 
 
 def build_ivf_index(
@@ -615,7 +705,7 @@ def build_ivf_index(
     """Persist an IVF index: centroids (k rows) + the corpus assigned to
     cells, written hive-partitioned BY cell_id. Building costs one centroid
     pass (+ refine_iters Lloyd passes) and one assignment scan; every later
-    query batch reads ONLY its probed cells' partitions — the index-reuse
+    query batch reuses the cells — the index-reuse
     workflow that makes IVF pay off at 100 TB, where re-deriving cells per
     query batch (ivf_topk's self-contained form) would re-scan the corpus
     every time.
@@ -634,11 +724,7 @@ def build_ivf_index(
         import math
 
         k_centroids = max(1, round(math.sqrt(corpus.count())))
-    cents = pick_centroids(corpus, k_centroids, id_col, vec_col)
-    if refine_iters > 0:
-        cents = refine_centroids(corpus, cents, refine_iters, id_col, vec_col)
-    # literal-backed either way (r11) — no checkpoint job needed
-    cells = assign_cells(corpus, cents, id_col, vec_col)
+    cents, cells = _ivf_cells(corpus, k_centroids, refine_iters, id_col, vec_col)
     cents.write.mode("overwrite").parquet(f"{index_dir}/centroids")
     (
         cells.select(id_col, vec_col, "cell_id")
@@ -661,8 +747,8 @@ def ivf_query_index(
 ) -> DataFrame:
     """Query a persisted IVF index: rank cells per query against the tiny
     centroid table (broadcast), keep nprobe, join the cell-partitioned
-    corpus on cell_id — dynamic partition pruning / partition filters keep
-    unprobed cells' files unread — then score and re-rank. Same output
+    corpus on cell_id (``_ivf_search``, the walk ``ivf_topk`` runs on
+    in-memory cells), then score and re-rank. Same output
     contract as ``ivf_topk`` (query_id, neighbor_id, sim, rank); with
     nprobe == k_centroids it is exactly brute force. ``nprobe=None``
     applies the measured ceil(k/4) probe-fraction rule from the
@@ -671,24 +757,7 @@ def ivf_query_index(
     if nprobe is None:
         nprobe = _auto_nprobe(cents.count())
     cells = read_parquet_cached(spark, f"{index_dir}/cells")
-    qprobe = (
-        queries.select(F.col(query_id), F.col(vec_col).alias("qv"))
-        .crossJoin(F.broadcast(cents))
-        .select(query_id, "qv", "cell_id", cosine(F.col("qv"), F.col("cvec")).alias("csim"))
-    )
-    wq = Window.partitionBy(query_id).orderBy(F.desc("csim"), F.asc("cell_id"))
-    qcells = qprobe.withColumn("__pr", F.row_number().over(wq)).filter(F.col("__pr") <= nprobe)
-    scored = (
-        F.broadcast(qcells).join(cells, "cell_id")
-        .filter(F.col(query_id) != F.col(corpus_id))
-        .select(
-            query_id,
-            F.col(corpus_id).alias("neighbor_id"),
-            F.round(cosine(F.col("qv"), F.col(vec_col)), 4).alias("sim"),
-        )
-    )
-    w = Window.partitionBy(query_id).orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _ivf_search(queries, cents, cells, nprobe, k, query_id, corpus_id, vec_col, "neighbor_id")
 
 
 def lsh_topk_multiprobe(
@@ -712,16 +781,9 @@ def lsh_topk_multiprobe(
     corpus): ~2× the single-probe recall at every plane count — 0.75 vs
     0.41 (8 planes), 0.53 vs 0.27 (12), 0.33 vs 0.15 (16) — for ~1.5× the
     wall; see BASELINE §4.2 and ANN_RECALL.json."""
-    margins = []
-    for i, plane in enumerate(planes):
-        p = F.array(*[F.lit(float(x)) for x in plane])
-        d = F.aggregate(
-            F.zip_with(F.col(vec_col), p, lambda x, y: x.cast("double") * y),
-            F.lit(0.0),
-            lambda a, v: a + v,
-        )
-        margins.append(F.struct(F.abs(d).alias("m"), F.lit(i).alias("i")))
-    base = hyperplane_signature(F.col(vec_col), planes)
+    dots = _plane_dots(F.col(vec_col), planes)
+    margins = [F.struct(F.abs(d).alias("m"), F.lit(i).alias("i")) for i, d in enumerate(dots)]
+    base = _signature(dots)
     # lowest-|margin| planes first; flip each of the first nprobe_flips
     flips = F.slice(F.array_sort(F.array(*margins)), 1, nprobe_flips)
     probes = F.array_union(
@@ -743,11 +805,10 @@ def lsh_topk_multiprobe(
     scored = (
         q.join(c, "bucket")
         .filter(F.col(query_id) != F.col(corpus_id))
-        .select(query_id, corpus_id, F.round(cosine(F.col("qv"), F.col("cv")), 4).alias("sim"))
+        .select(query_id, corpus_id, _sim("qv", "cv"))
         .distinct()  # a neighbor can appear via several probed buckets
     )
-    w = Window.partitionBy(query_id).orderBy(F.desc("sim"), F.asc(corpus_id))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _topn(scored, query_id, "sim", corpus_id, k)
 
 
 def append_to_ivf_index(
@@ -863,13 +924,9 @@ def relative_contrast_profile(
         F.broadcast(s)
         .crossJoin(F.broadcast(b))
         .filter(F.col("a_id") != F.col("b_id"))
-        .select(
-            "a_id", "b_id", "arn", "brn", "m",
-            F.round(cosine(F.col("av"), F.col("bv")), 4).alias("sim"),
-        )
+        .select("a_id", "b_id", "arn", "brn", "m", _sim("av", "bv"))
     )
-    wn = Window.partitionBy("a_id").orderBy(F.desc("sim"), F.asc("b_id"))
-    nn = sims.withColumn("r", F.row_number().over(wn)).filter(F.col("r") == 1)
+    nn = _topn(sims, "a_id", "sim", "b_id", 1, "r")
     rnd = sims.filter(
         F.col("brn") == (F.col("arn") + F.floor(F.col("m") / 2).cast("long")) % F.col("m")
     )
@@ -1080,28 +1137,11 @@ def train_pq_codebooks(
                 f"corpus had fewer than ks non-zero-norm vectors at training time "
                 f"or the persisted codebook parquet is truncated"
             )
-        seed_rows_grid = [
+        cb = _codebook_literal(spark, [
             (j, t, seed_units[t][j * dsub : (j + 1) * dsub])
             for j in range(m)
             for t in range(ks)
-        ]
-        cb = spark.createDataFrame(
-            spark.sparkContext.parallelize(seed_rows_grid, 1),
-            "subspace int, code int, cvec array<double>",
-        )
-        import numpy as np
-
-        cb._nextgenetl_cb_ndarray = np.stack(
-            [
-                np.stack(
-                    [
-                        np.asarray(seed_rows_grid[j * ks + t][2], dtype="float64")
-                        for t in range(ks)
-                    ]
-                )
-                for j in range(m)
-            ]
-        )
+        ], m, ks)
     else:
         # zero-norm rows crowd the scanned horizon: fall back to the lazy
         # in-plan seed selection (ordering over the FILTERED unit set)
@@ -1135,7 +1175,6 @@ def train_pq_codebooks(
     # this replaces re-executed every prior iteration's corpus pass at the
     # caller's final _collect_codebooks (measured 4.5s warm on a 2000-row
     # corpus); values are bit-identical (exact float64 round trip).
-    spark = corpus.sparkSession
     for _ in range(iters):
         CB = _collect_codebooks(cb, m, ks)
         assigned = _pq_assign_long(unit, CB, id_col)
@@ -1165,18 +1204,24 @@ def train_pq_codebooks(
                 else:  # codes that lost all members keep their previous codeword
                     vec = [float(x) for x in CB[j][t]]
                 rows.append((j, t, vec))
-        cb = spark.createDataFrame(
-            spark.sparkContext.parallelize(rows, 1),
-            "subspace int, code int, cvec array<double>",
-        )
-        # memoize the driver-side ndarray so the caller's _collect_codebooks
-        # doesn't pay the literal's upload→collect round trip (values are
-        # the literal's rows verbatim)
-        import numpy as np
+        cb = _codebook_literal(spark, rows, m, ks)
+    return cb
 
-        cb._nextgenetl_cb_ndarray = np.stack(
-            [np.stack([np.asarray(rows[j * ks + t][2], dtype="float64") for t in range(ks)]) for j in range(m)]
-        )
+
+def _codebook_literal(spark, rows: list, m: int, ks: int) -> DataFrame:
+    """The (subspace, code, cvec) codebook table as a single-slice literal
+    from its subspace-major ``rows``, with the driver-side (m, ks, dsub)
+    ndarray memoized on it so the caller's _collect_codebooks doesn't pay
+    the literal's upload→collect round trip (values are the rows
+    verbatim)."""
+    import numpy as np
+
+    cb = spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, 1), "subspace int, code int, cvec array<double>"
+    )
+    cb._nextgenetl_cb_ndarray = np.stack(
+        [np.stack([np.asarray(rows[j * ks + t][2], dtype="float64") for t in range(ks)]) for j in range(m)]
+    )
     return cb
 
 
@@ -1277,7 +1322,6 @@ def measured_adc_crowd(
         raise ValueError(
             f"measured_adc_crowd: count_fraction={count_fraction} must be in (0, 1]"
         )
-    m, ks, dsub = CB.shape
     samp = (
         unit.select(F.md5(F.col(id_col).cast("string")).alias("__h"), id_col, "__nv")
         .orderBy("__h", id_col)
@@ -1291,9 +1335,9 @@ def measured_adc_crowd(
     V = np.stack([np.asarray(r["__nv"], dtype="float64") for r in srows])  # (s, d)
     Cd = np.stack([np.asarray(r["codes"], dtype="int64") for r in srows])  # (s, m)
     # ADC(v, u) via v's LUT and u's codes, over the sample pair grid
-    lut = np.stack([V[:, j * dsub : (j + 1) * dsub] @ CB[j].T for j in range(m)], axis=1)
+    lut = _adc_lut(V, CB)
     adc = np.zeros((len(V), len(V)))
-    for j in range(m):
+    for j in range(CB.shape[0]):
         adc += lut[:, j, :][:, Cd[:, j]]
     exact = V @ V.T
     off = ~np.eye(len(V), dtype=bool)
@@ -1343,6 +1387,98 @@ def _auto_shortlist(k: int, crowd: int) -> int:
     collision count, which under-measures it 20–50× on jittered replica
     corpora (PQ_AUTO_SHORTLIST.json, both statistics recorded)."""
     return 3 * max(k, crowd)
+
+
+def _crowd_shortlist(k, corpus, codes, CB, id_col, vec_col, count_fraction):
+    """``shortlist=None`` on a self-contained search → (codes, 3·max(k,
+    measured_adc_crowd)). The crowd measurement AND the final scoring scan
+    both consume the code table, so it is materialized once
+    (localCheckpoint) instead of re-running the corpus-scan→normalize→
+    GEMM-encode lineage under each action (guide §5). Values are untouched:
+    it is exactly the table the persisted index writes. eager=False merges
+    the materialization into the crowd pass's first action instead of
+    paying a separate checkpoint job (r11)."""
+    codes = codes.localCheckpoint(eager=False)
+    crowd = measured_adc_crowd(
+        _unit_vectors(corpus, id_col, vec_col), codes, CB, id_col, count_fraction=count_fraction
+    )
+    return codes, _auto_shortlist(k, crowd)
+
+
+def _adc_lut(Q, CB):
+    """LUT[q, j, t] = q's subvector j · codeword CB[j][t], shape (nq, m, ks);
+    raw queries, since a per-query scale never changes its ranking."""
+    import numpy as np
+
+    dsub = CB.shape[2]
+    return np.stack([Q[:, j * dsub : (j + 1) * dsub] @ CB[j].T for j in range(CB.shape[0])], axis=1)
+
+
+def _adc_pairs(Q, qids, CB, n: int, query_id: str, corpus_id: str):
+    """The paired ADC kernel for mapInPandas over (query_id, cell_id, id,
+    codes) rows: each row's approximate score is an explicit left-to-right
+    fold of m lookups in its query's table (deterministic, replayed exactly
+    by the oracle generators), and each batch keeps its top-``n`` rows per
+    query under the global (-approx, id) order — lossless for the
+    shortlist window. Self-matches score -inf and drop."""
+    import numpy as np
+    import pandas as pd
+
+    LUT = _adc_lut(Q, CB)
+    m = CB.shape[0]
+    qindex = {q: i for i, q in enumerate(qids.tolist())}
+
+    def score(batches):
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            qidx = np.array([qindex[q] for q in pdf[query_id]])
+            ids = pdf[corpus_id].to_numpy()
+            Cd = np.stack([np.asarray(c, dtype="int64") for c in pdf["codes"]])
+            s = LUT[qidx, 0, Cd[:, 0]]
+            for j in range(1, m):
+                s = s + LUT[qidx, j, Cd[:, j]]
+            s[pdf[query_id].to_numpy() == ids] = -np.inf
+            out = pd.DataFrame(
+                {query_id: pdf[query_id], "cell_id": pdf["cell_id"], corpus_id: ids, "approx": s}
+            )
+            out = out[np.isfinite(out["approx"])]
+            yield out.sort_values(
+                [query_id, "approx", corpus_id], ascending=[True, False, True]
+            ).groupby(query_id, sort=False).head(n)
+
+    return score
+
+
+def _rerank(
+    cands: DataFrame,
+    shortlist: int,
+    k: int,
+    queries: DataFrame,
+    vectors: DataFrame,
+    keys: list[str],
+    query_id: str,
+    corpus_id: str,
+    vec_col: str,
+    out_id: str,
+) -> DataFrame:
+    """Keep each query's ``shortlist`` best ADC candidates, join them and
+    their query vectors (broadcast) to the raw ``vectors`` on ``keys``, and
+    rank by the exact rounded cosine: only queries × shortlist rows touch
+    raw vectors."""
+    short = _topn(cands, query_id, "approx", corpus_id, shortlist, "__sr").select(query_id, *keys)
+    qdf = queries.select(F.col(query_id), F.col(vec_col).alias("__qv"))
+    rerank = vectors.join(F.broadcast(short.join(F.broadcast(qdf), query_id)), keys).select(
+        query_id, F.col(corpus_id).alias(out_id), _sim("__qv", vec_col)
+    )
+    return _topn(rerank, query_id, "sim", out_id, k)
+
+
+def _adc_no_hits(queries: DataFrame, vectors: DataFrame, query_id: str, corpus_id: str, out_id: str):
+    # the ADC candidates carry a long query id; the neighbor id is the
+    # re-rank vectors' own
+    n_type = vectors.schema[corpus_id].dataType.simpleString()
+    return _no_hits(queries.sparkSession, query_id, out_id, "long", n_type)
 
 
 def pq_topk(
@@ -1397,9 +1533,12 @@ def pq_topk(
 
     The ADC sum is an explicit left-to-right fold over subspaces, so scores
     are partition-order-free and the whole walk replays in the pure-Python
-    VALUES-oracle generator (tools/gen_pq_oracle.py)."""
+    VALUES-oracle generator (tools/gen_pq_oracle.py).
+
+    The kernel scores ALL queries against each batch of codes: there are
+    no cells, so pairing queries with rows would send queries × corpus
+    rows into the UDF."""
     import numpy as np
-    import pandas as pd
 
     # The query-side collect is independent of the whole training/crowd
     # walk — overlap it (guide §2.6; see ivfpq_topk). Values unchanged.
@@ -1409,50 +1548,21 @@ def pq_topk(
         CB = _collect_codebooks(train_pq_codebooks(corpus, m, ks, train_iters, corpus_id, vec_col), m, ks)
         codes = pq_encode(corpus, CB, corpus_id, vec_col)
         if shortlist is None:
-            # the crowd measurement AND the final scoring scan both consume the
-            # code table; materialize the encode chain once (localCheckpoint)
-            # instead of re-running the corpus-scan→normalize→GEMM-encode
-            # lineage under each action (guide §5 — cut lineage when an
-            # intermediate is reused and recomputing costs more). Values are
-            # untouched; the m-byte/vector code table is exactly the artifact
-            # the persisted path writes to parquet. Skipped when the caller
-            # passes an explicit shortlist — codes is then consumed once.
-            # eager=False merges the materialization into the crowd pass's
-            # first action instead of paying a separate checkpoint job (r11).
-            codes = codes.localCheckpoint(eager=False)
-            unit = _unit_vectors(corpus, corpus_id, vec_col)
-            shortlist = _auto_shortlist(
-                k,
-                measured_adc_crowd(
-                    unit, codes, CB, corpus_id, count_fraction=crowd_count_fraction
-                ),
+            codes, shortlist = _crowd_shortlist(
+                k, corpus, codes, CB, corpus_id, vec_col, crowd_count_fraction
             )
         return CB, codes, shortlist
 
     qrows, (CB, codes, shortlist) = overlap(queries.sparkSession, [
-        lambda: queries.select(F.col(query_id), F.col(vec_col)).limit(MAX_QUERY_ROWS + 1).collect(),
+        lambda: _collect_queries(queries, query_id, vec_col),
         _walk,
     ])
-    dsub = CB.shape[2]
-    if len(qrows) > MAX_QUERY_ROWS:
-        raise ValueError(
-            f"pq_topk: the query side is collected and broadcast in the UDF "
-            f"closure, but it has > MAX_QUERY_ROWS={MAX_QUERY_ROWS} rows. "
-            f"Swap the sides or batch the queries."
-        )
-    out_schema = f"{query_id} long, {corpus_id} long, approx double"
-    if not qrows:
-        empty = queries.sparkSession.createDataFrame([], out_schema)
-        return empty.select(query_id, corpus_id, F.lit(0.0).alias("sim"), F.lit(1).alias("rank")).limit(0)
-    qids = np.array([r[0] for r in qrows])
-    Q = np.stack([np.asarray(r[1], dtype="float64") for r in qrows])
-    # LUT[q, j, t] = q_subvec_j . codeword[j][t] (raw query — per-query scale
-    # never changes that query's ranking)
-    LUT = np.stack(
-        [Q[:, j * dsub : (j + 1) * dsub] @ CB[j].T for j in range(m)], axis=1
-    )  # (nq, m, ks)
-
-    take = shortlist + 1
+    vectors = corpus.select(F.col(corpus_id), F.col(vec_col))
+    batch = _query_batch("pq_topk", qrows)
+    if batch is None:
+        return _adc_no_hits(queries, vectors, query_id, corpus_id, corpus_id)
+    qids, Q = batch
+    LUT = _adc_lut(Q, CB)  # (nq, m, ks)
 
     def score(batches):
         for pdf in batches:
@@ -1465,36 +1575,12 @@ def pq_topk(
             S = LUT[:, 0, :][:, Cd[:, 0]]  # (nq, n)
             for j in range(1, m):
                 S = S + LUT[:, j, :][:, Cd[:, j]]
-            S[qids[:, None] == ids[None, :]] = -np.inf  # self-match exclusion
-            tk = min(take, len(ids))
-            out_q, out_n, out_s = [], [], []
-            for qi in range(len(qids)):
-                order = np.lexsort((ids, -S[qi]))[:tk]
-                keep = order[np.isfinite(S[qi][order])]
-                out_q.extend([qids[qi]] * len(keep))
-                out_n.extend(ids[keep])
-                out_s.extend(S[qi][keep])
-            yield pd.DataFrame({query_id: out_q, corpus_id: out_n, "approx": out_s})
+            yield _dense_topn(qids, ids, S, shortlist + 1, query_id, corpus_id, "approx")
 
-    cands = codes.mapInPandas(score, out_schema)
-    ws = Window.partitionBy(query_id).orderBy(F.desc("approx"), F.asc(corpus_id))
-    short = (
-        cands.withColumn("__sr", F.row_number().over(ws))
-        .filter(F.col("__sr") <= shortlist)
-        .select(query_id, corpus_id)
+    cands = codes.mapInPandas(score, f"{query_id} long, {corpus_id} long, approx double")
+    return _rerank(
+        cands, shortlist, k, queries, vectors, [corpus_id], query_id, corpus_id, vec_col, corpus_id
     )
-    qdf = queries.select(F.col(query_id), F.col(vec_col).alias("__qv"))
-    rerank = (
-        corpus.select(F.col(corpus_id), F.col(vec_col).alias("__cv"))
-        .join(F.broadcast(short.join(F.broadcast(qdf), query_id)), corpus_id)
-        .select(
-            query_id,
-            corpus_id,
-            F.round(cosine(F.col("__qv"), F.col("__cv")), 4).alias("sim"),
-        )
-    )
-    wk = Window.partitionBy(query_id).orderBy(F.desc("sim"), F.asc(corpus_id))
-    return rerank.withColumn("rank", F.row_number().over(wk)).filter(F.col("rank") <= k)
 
 
 def ivfpq_topk(
@@ -1552,9 +1638,6 @@ def ivfpq_topk(
     measurement costs one extra corpus scan + a driver GEMM count pass
     per call (see pq_topk's COST note); pass an int to skip it, or use
     the persisted index whose meta/ freezes the statistic at build time."""
-    import numpy as np
-    import pandas as pd
-
     if nprobe is None:
         nprobe = _auto_nprobe(k_centroids)
     # ONE seed scan feeds both halves' seed selections (r11): the IVF
@@ -1587,111 +1670,69 @@ def ivfpq_topk(
         )
         return _collect_codebooks(cb, m, ks)
 
-    def _qrows():
-        return queries.select(F.col(query_id), F.col(vec_col)).limit(MAX_QUERY_ROWS + 1).collect()
-
     with overlap_pool(queries.sparkSession) as submit:
-        f_cents, f_train, f_qrows = submit(_refine), submit(_train), submit(_qrows)
+        f_cents, f_train = submit(_refine), submit(_train)
+        f_qrows = submit(lambda: _collect_queries(queries, query_id, vec_col))
         cents, CB = f_cents.result(), f_train.result()
         # literal-backed either way (r11) — no checkpoint job needed
         cells = assign_cells(corpus, cents, corpus_id, vec_col).select(corpus_id, "cell_id")
-        dsub = CB.shape[2]
-        # the IVF-PQ index table: (cell_id, id, codes) — hive-partition by
+        # the IVF-PQ index table: (id, codes, cell_id) — hive-partition by
         # cell_id when persisting
         codes = pq_encode(corpus, CB, corpus_id, vec_col).join(cells, corpus_id)
         if shortlist is None:
             # near-identical vectors tie in ADC score REGARDLESS of cell, so
             # the crowd statistic ignores cell boundaries (the frozen
-            # two-crowd rule — see pq_topk's TUNING / _auto_shortlist).
-            # Materialize the (id, codes, cell_id) index table once: the crowd
-            # pass and the final probed-cell scan both consume it, and without
-            # the localCheckpoint each action re-runs the scan→assign-GEMM→
-            # encode-GEMM→join lineage (guide §5; values untouched — this is
-            # the exact table build_ivfpq_index persists). eager=False merges
-            # the materialization into the crowd pass's first action instead
-            # of paying a separate checkpoint job (r11).
-            codes = codes.localCheckpoint(eager=False)
-            unit = _unit_vectors(corpus, corpus_id, vec_col)
-            shortlist = _auto_shortlist(
-                k,
-                measured_adc_crowd(
-                    unit, codes, CB, corpus_id, count_fraction=crowd_count_fraction
-                ),
+            # two-crowd rule — see pq_topk's TUNING / _auto_shortlist)
+            codes, shortlist = _crowd_shortlist(
+                k, corpus, codes, CB, corpus_id, vec_col, crowd_count_fraction
             )
         qrows = f_qrows.result()
-    if len(qrows) > MAX_QUERY_ROWS:
-        raise ValueError(
-            f"ivfpq_topk: the query side is collected and broadcast in the UDF "
-            f"closure, but it has > MAX_QUERY_ROWS={MAX_QUERY_ROWS} rows. "
-            f"Swap the sides or batch the queries."
-        )
-    if not qrows:
-        empty = queries.sparkSession.createDataFrame([], f"{query_id} long, {corpus_id} long, sim double")
-        return empty.withColumn("rank", F.lit(1)).limit(0)
-    qindex = {r[0]: i for i, r in enumerate(qrows)}
-    Q = np.stack([np.asarray(r[1], dtype="float64") for r in qrows])
-    LUT = np.stack(
-        [Q[:, j * dsub : (j + 1) * dsub] @ CB[j].T for j in range(m)], axis=1
-    )  # (nq, m, ks)
-
-    # query-side probe: rank cells by centroid cosine, keep nprobe — the
-    # ivf_topk machinery verbatim (broadcast k-row centroid table)
-    qprobe = (
-        queries.select(F.col(query_id), F.col(vec_col).alias("qv"))
-        .crossJoin(F.broadcast(cents))
-        .select(query_id, "cell_id", cosine(F.col("qv"), F.col("cvec")).alias("csim"))
-    )
-    wq = Window.partitionBy(query_id).orderBy(F.desc("csim"), F.asc("cell_id"))
-    qcells = (
-        qprobe.withColumn("__pr", F.row_number().over(wq))
-        .filter(F.col("__pr") <= nprobe)
-        .select(query_id, "cell_id")
+    return _ivfpq_search(
+        "ivfpq_topk", queries, qrows, cents, CB, codes,
+        vectors=corpus.select(F.col(corpus_id), F.col(vec_col)), keys=[corpus_id],
+        nprobe=nprobe, shortlist=shortlist, k=k,
+        query_id=query_id, corpus_id=corpus_id, vec_col=vec_col, out_id=corpus_id,
     )
 
-    # ADC over probed cells only: the join shuffles (query, cell) pairs and
-    # code rows on cell_id; unprobed cells' codes never reach the scorer
-    joined = qcells.join(codes, "cell_id").select(query_id, corpus_id, "codes")
-    take = shortlist + 1
 
-    def score(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            qidx = np.array([qindex[q] for q in pdf[query_id]])
-            ids = pdf[corpus_id].to_numpy()
-            Cd = np.stack([np.asarray(c, dtype="int64") for c in pdf["codes"]])
-            s = LUT[qidx, 0, Cd[:, 0]]
-            for j in range(1, m):
-                s = s + LUT[qidx, j, Cd[:, j]]
-            s[pdf[query_id].to_numpy() == ids] = -np.inf  # self-match exclusion
-            out = pd.DataFrame({query_id: pdf[query_id], corpus_id: ids, "approx": s})
-            out = out[np.isfinite(out["approx"])]
-            # batch-local top-(shortlist+1) per query under the global total
-            # order (-approx, id): lossless for the final window
-            out = out.sort_values(
-                [query_id, "approx", corpus_id], ascending=[True, False, True]
-            ).groupby(query_id, sort=False).head(take)
-            yield out
-
-    cands = joined.mapInPandas(score, f"{query_id} long, {corpus_id} long, approx double")
-    ws = Window.partitionBy(query_id).orderBy(F.desc("approx"), F.asc(corpus_id))
-    short = (
-        cands.withColumn("__sr", F.row_number().over(ws))
-        .filter(F.col("__sr") <= shortlist)
-        .select(query_id, corpus_id)
+def _ivfpq_search(
+    op: str,
+    queries: DataFrame,
+    qrows: list,
+    cents: DataFrame,
+    CB,
+    codes: DataFrame,
+    vectors: DataFrame,
+    keys: list[str],
+    nprobe: int,
+    shortlist: int,
+    k: int,
+    query_id: str,
+    corpus_id: str,
+    vec_col: str,
+    out_id: str,
+) -> DataFrame:
+    """The IVF-PQ search: probe each query's cells, ADC-score ONLY the
+    probed cells' code rows (the probed cells are broadcast, so the code
+    table never shuffles, and over a cell-partitioned index partition
+    filters keep unprobed cells' files unread), shortlist, then re-rank
+    exactly against ``vectors`` joined on ``keys``. The same walk whether
+    ``cents``/``CB``/``codes``/``vectors`` were built in memory
+    (``ivfpq_topk``) or read from an index (``ivfpq_query_index``)."""
+    batch = _query_batch(op, qrows)
+    if batch is None:
+        return _adc_no_hits(queries, vectors, query_id, corpus_id, out_id)
+    qids, Q = batch
+    joined = (
+        F.broadcast(_probe(queries, cents, query_id, vec_col, nprobe))
+        .join(codes, "cell_id")
+        .select(query_id, "cell_id", F.col(corpus_id), "codes")
     )
-    qdf = queries.select(F.col(query_id), F.col(vec_col).alias("__qv"))
-    rerank = (
-        corpus.select(F.col(corpus_id), F.col(vec_col).alias("__cv"))
-        .join(F.broadcast(short.join(F.broadcast(qdf), query_id)), corpus_id)
-        .select(
-            query_id,
-            corpus_id,
-            F.round(cosine(F.col("__qv"), F.col("__cv")), 4).alias("sim"),
-        )
+    cands = joined.mapInPandas(
+        _adc_pairs(Q, qids, CB, shortlist + 1, query_id, corpus_id),
+        f"{query_id} long, cell_id int, {corpus_id} long, approx double",
     )
-    wk = Window.partitionBy(query_id).orderBy(F.desc("sim"), F.asc(corpus_id))
-    return rerank.withColumn("rank", F.row_number().over(wk)).filter(F.col("rank") <= k)
+    return _rerank(cands, shortlist, k, queries, vectors, keys, query_id, corpus_id, vec_col, out_id)
 
 
 def build_ivfpq_index(
@@ -1938,9 +1979,6 @@ def ivfpq_query_index(
     back to one groupBy over codes); ``nprobe=None`` the measured
     ceil(k/4) probe-fraction rule from the persisted meta (or centroid
     count). Output: (query_id, neighbor_id, sim, rank)."""
-    import numpy as np
-    import pandas as pd
-
     cents = read_parquet_cached(spark, f"{index_dir}/centroids")
     meta_row = None
     if nprobe is None or shortlist is None:
@@ -1953,91 +1991,21 @@ def ivfpq_query_index(
             int(meta_row["k_centroids"]) if meta_row is not None else cents.count()
         )
     CB = _collect_codebooks(read_parquet_cached(spark, f"{index_dir}/codebooks"))
-    m, _, dsub = CB.shape
     codes = read_parquet_cached(spark, f"{index_dir}/codes")
+    vectors = read_parquet_cached(spark, f"{index_dir}/vectors")
     if shortlist is None:
         if meta_row is not None and "adc_crowd" in meta_row:
             crowd = int(meta_row["adc_crowd"])
         else:
             # index built before meta existed: measure from the persisted
             # vectors + codes (one bounded pass, same walk as the build)
-            vecs = read_parquet_cached(spark, f"{index_dir}/vectors")
             crowd = measured_adc_crowd(
-                _unit_vectors(vecs, corpus_id, vec_col), codes, CB, corpus_id
+                _unit_vectors(vectors, corpus_id, vec_col), codes, CB, corpus_id
             )
         shortlist = _auto_shortlist(k, crowd)
-
-    qrows = queries.select(F.col(query_id), F.col(vec_col)).limit(MAX_QUERY_ROWS + 1).collect()
-    if len(qrows) > MAX_QUERY_ROWS:
-        raise ValueError(
-            f"ivfpq_query_index: the query side is collected and broadcast in "
-            f"the UDF closure, but it has > MAX_QUERY_ROWS={MAX_QUERY_ROWS} rows."
-        )
-    if not qrows:
-        empty = spark.createDataFrame([], f"{query_id} long, neighbor_id long, sim double")
-        return empty.withColumn("rank", F.lit(1)).limit(0)
-    qindex = {r[0]: i for i, r in enumerate(qrows)}
-    Q = np.stack([np.asarray(r[1], dtype="float64") for r in qrows])
-    LUT = np.stack(
-        [Q[:, j * dsub : (j + 1) * dsub] @ CB[j].T for j in range(m)], axis=1
+    return _ivfpq_search(
+        "ivfpq_query_index", queries, _collect_queries(queries, query_id, vec_col), cents, CB,
+        codes, vectors=vectors, keys=["cell_id", corpus_id],
+        nprobe=nprobe, shortlist=shortlist, k=k,
+        query_id=query_id, corpus_id=corpus_id, vec_col=vec_col, out_id="neighbor_id",
     )
-
-    qprobe = (
-        queries.select(F.col(query_id), F.col(vec_col).alias("qv"))
-        .crossJoin(F.broadcast(cents))
-        .select(query_id, "cell_id", cosine(F.col("qv"), F.col("cvec")).alias("csim"))
-    )
-    wq = Window.partitionBy(query_id).orderBy(F.desc("csim"), F.asc("cell_id"))
-    qcells = (
-        qprobe.withColumn("__pr", F.row_number().over(wq))
-        .filter(F.col("__pr") <= nprobe)
-        .select(query_id, "cell_id")
-    )
-    joined = F.broadcast(qcells).join(codes, "cell_id").select(
-        query_id, "cell_id", F.col(corpus_id), "codes"
-    )
-    take = shortlist + 1
-
-    def score(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            qidx = np.array([qindex[q] for q in pdf[query_id]])
-            ids = pdf[corpus_id].to_numpy()
-            Cd = np.stack([np.asarray(c, dtype="int64") for c in pdf["codes"]])
-            s = LUT[qidx, 0, Cd[:, 0]]
-            for j in range(1, m):
-                s = s + LUT[qidx, j, Cd[:, j]]
-            s[pdf[query_id].to_numpy() == ids] = -np.inf
-            out = pd.DataFrame(
-                {query_id: pdf[query_id], "cell_id": pdf["cell_id"], corpus_id: ids, "approx": s}
-            )
-            out = out[np.isfinite(out["approx"])]
-            out = out.sort_values(
-                [query_id, "approx", corpus_id], ascending=[True, False, True]
-            ).groupby(query_id, sort=False).head(take)
-            yield out
-
-    cands = joined.mapInPandas(
-        score, f"{query_id} long, cell_id int, {corpus_id} long, approx double"
-    )
-    ws = Window.partitionBy(query_id).orderBy(F.desc("approx"), F.asc(corpus_id))
-    short = (
-        cands.withColumn("__sr", F.row_number().over(ws))
-        .filter(F.col("__sr") <= shortlist)
-        .select(query_id, "cell_id", corpus_id)
-    )
-    qdf = queries.select(F.col(query_id), F.col(vec_col).alias("__qv"))
-    vectors = read_parquet_cached(spark, f"{index_dir}/vectors")
-    rerank = (
-        vectors.join(
-            F.broadcast(short.join(F.broadcast(qdf), query_id)), ["cell_id", corpus_id]
-        )
-        .select(
-            query_id,
-            F.col(corpus_id).alias("neighbor_id"),
-            F.round(cosine(F.col("__qv"), F.col(vec_col)), 4).alias("sim"),
-        )
-    )
-    wk = Window.partitionBy(query_id).orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return rerank.withColumn("rank", F.row_number().over(wk)).filter(F.col("rank") <= k)

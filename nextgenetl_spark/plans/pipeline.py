@@ -168,8 +168,11 @@ class Pipeline:
             path = os.path.join(self.warehouse, dest)
             sidecar = os.path.join(path, "_step_fingerprint.json")
             if os.path.exists(os.path.join(path, "_SUCCESS")) and os.path.exists(sidecar):
-                with open(sidecar, encoding="utf-8") as fh:
-                    recorded = json.load(fh)
+                try:
+                    with open(sidecar, encoding="utf-8") as fh:
+                        recorded = json.load(fh)
+                except ValueError:  # a torn sidecar: stale, so the step recomputes
+                    recorded = {}
                 if recorded.get("fingerprint") == self._step_fingerprint(step, rendered):
                     return read_parquet_as(self.spark, path, recorded.get("schema"))
         if "sql" in step:
@@ -274,9 +277,10 @@ class Pipeline:
                 df.write.mode(mode).parquet(path)
             df = read_parquet_as(self.spark, path, df.schema if mode == "overwrite" else None)
             if step.get("skip_if_fresh"):
+                from nextgenetl_spark.staging import atomic_write
+
                 record = {"fingerprint": self._step_fingerprint(step, rendered), "schema": df.schema.json()}
-                with open(os.path.join(path, "_step_fingerprint.json"), "w", encoding="utf-8") as fh:
-                    json.dump(record, fh)
+                atomic_write(os.path.join(path, "_step_fingerprint.json"), json.dumps(record))
         if step.get("export_jsonl"):
             # table → JSONL extract: the reference's staging format for
             # BQ load jobs (write_list_to_jsonl_and_upload,

@@ -18,12 +18,12 @@ from __future__ import annotations
 import json
 import os
 import re
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
 from nextgenetl_spark.catalog import read_parquet_as
 from nextgenetl_spark.diff import tables_equal
+from nextgenetl_spark.staging import atomic_write
 
 #: Sidecar filename for table metadata. The leading underscore makes Spark's
 #: file index skip it, so a metadata-bearing table dir still reads as plain
@@ -38,13 +38,9 @@ def write_table_metadata(table_dir: str, metadata: dict) -> str:
     per-column descriptions) as a sidecar next to the parquet files — the
     BQ-table-properties counterpart (reference common_etl/utils.py:134-151
     update_table_metadata). Atomic replace so readers never see a torn file."""
-    os.makedirs(table_dir, exist_ok=True)
-    path = os.path.join(table_dir, METADATA_FILE)
-    fd, tmp = tempfile.mkstemp(dir=table_dir)
-    with os.fdopen(fd, "w") as fh:
-        json.dump(metadata, fh, indent=2, sort_keys=True)
-    os.replace(tmp, path)
-    return path
+    return atomic_write(
+        os.path.join(table_dir, METADATA_FILE), json.dumps(metadata, indent=2, sort_keys=True)
+    )
 
 
 def read_table_metadata(table_dir: str) -> dict:

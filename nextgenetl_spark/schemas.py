@@ -17,7 +17,6 @@ from __future__ import annotations
 
 import json
 import os
-import tempfile
 
 from pyspark.sql import types as T
 
@@ -104,12 +103,9 @@ def save_schema(path: str, schema: T.StructType | dict, descriptions: dict | Non
         ]
     else:
         fields = schema_to_fields(schema, descriptions)
-    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    fd, tmp = tempfile.mkstemp(dir=os.path.dirname(path) or ".")
-    with os.fdopen(fd, "w") as fh:
-        json.dump({"fields": fields}, fh, indent=4)
-    os.replace(tmp, path)
-    return path
+    from nextgenetl_spark.staging import atomic_write
+
+    return atomic_write(path, json.dumps({"fields": fields}, indent=4))
 
 
 def load_schema_fields(path: str) -> list[dict]:

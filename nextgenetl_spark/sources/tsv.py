@@ -196,18 +196,14 @@ def read_tsv(
             types = {f["name"]: f["type"] for f in merged_fields}
         if schema_path:
             import json as _json
-            import tempfile as _tempfile
 
             from nextgenetl_spark.schemas import save_schema
+            from nextgenetl_spark.staging import atomic_write
 
             if merged_fields is None:
                 save_schema(schema_path, types)
             else:
-                os.makedirs(os.path.dirname(schema_path) or ".", exist_ok=True)
-                fd, tmp = _tempfile.mkstemp(dir=os.path.dirname(schema_path) or ".")
-                with os.fdopen(fd, "w") as fh:
-                    _json.dump({"fields": merged_fields}, fh, indent=4)
-                os.replace(tmp, schema_path)
+                atomic_write(schema_path, _json.dumps({"fields": merged_fields}, indent=4))
 
     str_schema = T.StructType([T.StructField(h, T.StringType(), True) for h in headers])
     df = (

@@ -60,6 +60,26 @@ def content_fingerprint(src_path: str) -> str:
     return hashlib.md5("\n".join(parts).encode()).hexdigest()[:12]
 
 
+def atomic_write(path: str, text: str) -> str:
+    """Write ``text`` to ``path`` all or nothing: a temp file in the same
+    directory, then ``os.replace``. The temp name starts with ``_``, which
+    Spark's file index skips, so a crash before the replace cannot make the
+    parquet table the file sits in unreadable; a failed write also removes
+    the temp file."""
+    d = os.path.dirname(path) or "."
+    os.makedirs(d, exist_ok=True)
+    fd, tmp = tempfile.mkstemp(dir=d, prefix="_", suffix=".tmp")
+    try:
+        with os.fdopen(fd, "w", encoding="utf-8") as fh:
+            fh.write(text)
+        os.replace(tmp, path)
+    except BaseException:
+        if os.path.exists(tmp):
+            os.unlink(tmp)
+        raise
+    return path
+
+
 def _path_key(src_path: str) -> str:
     return hashlib.md5(os.path.abspath(src_path).encode()).hexdigest()[:8]
 

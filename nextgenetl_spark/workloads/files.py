@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nextgenetl_spark.catalog import read_parquet_cached
+from nextgenetl_spark.staging import atomic_write
 
 from nextgenetl_spark.sources.gtf import read_gtf
 from nextgenetl_spark.sources.maf import read_maf_concat
@@ -24,25 +25,22 @@ from nextgenetl_spark.workloads import workload
 CALLER_SETS = ["muse", "muse;mutect2", "mutect2;varscan2*", "muse;mutect2;pindel;varscan2"]
 
 
-def _fixture_dir(sf_dir: str) -> str:
-    # Keyed by CONTENT fingerprint of part.parquet (the table every text
-    # fixture derives from), not by path: regenerating testdata in place
-    # gets fresh fixtures instead of silently reusing the old corpus.
+def _fixture_dir(sf_dir: str, table: str = "part") -> str:
+    # Keyed by CONTENT fingerprint of the table the fixtures derive from
+    # (part.parquet for every text fixture), not by path: regenerating
+    # testdata in place gets fresh fixtures instead of silently reusing the
+    # old corpus.
     from nextgenetl_spark.staging import content_fingerprint
 
-    fp = content_fingerprint(os.path.join(sf_dir, "part.parquet"))
+    fp = content_fingerprint(os.path.join(sf_dir, f"{table}.parquet"))
     d = f"/tmp/nextgenetl_fixtures/{fp}"
     os.makedirs(d, exist_ok=True)
     return d
 
 
 def _atomic_write(path: str, content: str) -> None:
-    if os.path.exists(path):
-        return
-    fd, tmp = tempfile.mkstemp(dir=os.path.dirname(path))
-    with os.fdopen(fd, "w") as fh:
-        fh.write(content)
-    os.replace(tmp, path)
+    if not os.path.exists(path):
+        atomic_write(path, content)
 
 
 def _parts(sf_dir: str):

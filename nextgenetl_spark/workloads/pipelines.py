@@ -223,15 +223,15 @@ def csv_load_disposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     final mode=error attempt on the non-empty dest must raise
     (WRITE_EMPTY). The returned table must therefore equal supplier exactly
     — one copy of each half."""
-    import hashlib
     import os
 
     import duckdb
 
     from nextgenetl_spark.sources.tsv import read_tsv
+    from nextgenetl_spark.staging import atomic_write
+    from nextgenetl_spark.workloads.files import _fixture_dir
 
-    stage = f"/tmp/nextgenetl_fixtures/{hashlib.md5(sf_dir.encode()).hexdigest()[:12]}"
-    os.makedirs(stage, exist_ok=True)
+    stage = _fixture_dir(sf_dir, "supplier")
     paths = {}
     for half, pred in (("a", "s_suppkey % 2 = 0"), ("b", "s_suppkey % 2 = 1")):
         path = os.path.join(stage, f"supplier_{half}.csv")
@@ -245,10 +245,7 @@ def csv_load_disposition(spark: SparkSession, sf_dir: str) -> DataFrame:
             body = "s_suppkey,s_name,s_nationkey,s_acctbal\n" + "".join(
                 f"{k},{n},{nk},{bal!r}\n" for k, n, nk, bal in rows
             )
-            tmp = path + ".tmp"
-            with open(tmp, "w", encoding="utf-8") as fh:
-                fh.write(body)
-            os.replace(tmp, path)
+            atomic_write(path, body)
 
     wh = tempfile.mkdtemp(prefix="ngetl_disp_")
     pipe = Pipeline(spark, warehouse=wh)

@@ -953,15 +953,24 @@ def test_minhash_index_append_then_query_matches_full_rebuild(spark, tmp_path):
     assert a == b and len(a) > 0
 
 
-def test_cosine_topk_gemm_oversized_query_side_fails_by_name(spark):
+def test_cosine_topk_gemm_oversized_query_side_fails_by_name(spark, tmp_path):
     """The GEMM top-k collects the query side into the UDF closure; a
     query batch above MAX_QUERY_ROWS must raise a named ValueError (the
     bounded-collect contract), not exhaust driver memory. limit(cap+1)
     bounds what the driver ever materializes, so the failure itself is
-    cheap even for a 100k-row query side."""
+    cheap even for a 100k-row query side. The ADC searches (pq_topk,
+    ivfpq_topk, ivfpq_query_index) collect their query side the same way
+    and fail the same way, each naming itself."""
     import pytest
 
-    from nextgenetl_spark.operators.similarity import MAX_QUERY_ROWS, cosine_topk_gemm
+    from nextgenetl_spark.operators.similarity import (
+        MAX_QUERY_ROWS,
+        build_ivfpq_index,
+        cosine_topk_gemm,
+        ivfpq_query_index,
+        ivfpq_topk,
+        pq_topk,
+    )
 
     big = spark.range(100_000).select(
         F.col("id").alias("query_id"),
@@ -971,9 +980,28 @@ def test_cosine_topk_gemm_oversized_query_side_fails_by_name(spark):
         F.col("id").alias("neighbor_id"),
         F.array(F.lit(1.0), F.lit(0.0)).alias("embedding"),
     )
-    with pytest.raises(ValueError, match="MAX_QUERY_ROWS"):
+    with pytest.raises(ValueError, match="cosine_topk_gemm.*MAX_QUERY_ROWS"):
         cosine_topk_gemm(big, corpus, k=3)
     assert MAX_QUERY_ROWS >= 1024  # contract floor: real ad-hoc batches fit
+
+    rng = random.Random(5)
+    emb = spark.createDataFrame(
+        [(i, [rng.gauss(0, 1) for _ in range(4)]) for i in range(24)],
+        "vec_id long, embedding array<double>",
+    )
+    big4 = spark.range(100_000).select(
+        F.col("id").alias("query_id"),
+        F.array(*[F.lit(1.0)] * 4).alias("embedding"),
+    )
+    c4 = emb.withColumnRenamed("vec_id", "neighbor_id")
+    with pytest.raises(ValueError, match="pq_topk.*MAX_QUERY_ROWS"):
+        pq_topk(big4, c4, m=2, ks=4, k=3, shortlist=8, train_iters=1)
+    with pytest.raises(ValueError, match="ivfpq_topk.*MAX_QUERY_ROWS"):
+        ivfpq_topk(big4, c4, k_centroids=2, nprobe=1, m=2, ks=4, k=3, shortlist=8)
+    idx = str(tmp_path / "ivfpq")
+    build_ivfpq_index(emb, idx, k_centroids=2, refine_iters=0, m=2, ks=4, train_iters=1)
+    with pytest.raises(ValueError, match="ivfpq_query_index.*MAX_QUERY_ROWS"):
+        ivfpq_query_index(spark, idx, big4, nprobe=1, shortlist=8, k=3)
 
 
 def test_banded_hamming_pairs_enforces_losslessness_preconditions(spark):

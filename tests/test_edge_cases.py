@@ -31,11 +31,20 @@ def test_connected_components_on_empty_edges(spark):
     assert D.connected_components_star(edges).count() == 0
 
 
-def test_similarity_on_empty_corpus_and_queries(spark):
+def test_similarity_on_empty_corpus_and_queries(spark, tmp_path):
+    import random
+
     from nextgenetl_spark.operators.similarity import (
         blocked_near_dup_pairs_vectorized,
+        build_ivf_index,
+        build_ivfpq_index,
         cosine_topk,
         cosine_topk_gemm,
+        ivf_query_index,
+        ivf_topk,
+        ivfpq_query_index,
+        ivfpq_topk,
+        pq_topk,
     )
 
     e = spark.createDataFrame([], "vec_id long, embedding array<float>, label int")
@@ -44,6 +53,36 @@ def test_similarity_on_empty_corpus_and_queries(spark):
     assert cosine_topk(q, c).count() == 0
     assert cosine_topk_gemm(q, c).count() == 0
     assert blocked_near_dup_pairs_vectorized(e).count() == 0
+
+    # an empty query batch against a real corpus: every ANN search returns
+    # no rows, typed and named as a non-empty result
+    rng = random.Random(9)
+    emb = spark.createDataFrame(
+        [(i, [rng.gauss(0, 1) for _ in range(4)]) for i in range(24)],
+        "vec_id long, embedding array<float>",
+    )
+    corpus = emb.withColumnRenamed("vec_id", "neighbor_id")
+    some = emb.filter("vec_id < 2").withColumnRenamed("vec_id", "query_id")
+    none = some.filter("query_id < 0")
+    ivf_idx, pq_idx = str(tmp_path / "ivf"), str(tmp_path / "ivfpq")
+    build_ivf_index(emb, ivf_idx, k_centroids=2, refine_iters=0)
+    build_ivfpq_index(emb, pq_idx, k_centroids=2, refine_iters=0, m=2, ks=4, train_iters=1)
+    searches = {
+        "ivf_topk": lambda qs: ivf_topk(qs, corpus, k_centroids=2, nprobe=1, k=3),
+        "ivf_query_index": lambda qs: ivf_query_index(spark, ivf_idx, qs, nprobe=1, k=3),
+        "pq_topk": lambda qs: pq_topk(qs, corpus, m=2, ks=4, k=3, shortlist=8, train_iters=1),
+        "ivfpq_topk": lambda qs: ivfpq_topk(
+            qs, corpus, k_centroids=2, nprobe=1, m=2, ks=4, k=3, shortlist=8
+        ),
+        "ivfpq_query_index": lambda qs: ivfpq_query_index(
+            spark, pq_idx, qs, nprobe=1, shortlist=8, k=3
+        ),
+    }
+    for name, search in searches.items():
+        full, empty = search(some), search(none)
+        assert full.count() > 0, name
+        assert empty.count() == 0, name
+        assert empty.dtypes == full.dtypes, name
 
 
 def test_single_doc_and_whitespace_only_text(spark):

@@ -216,6 +216,64 @@ def test_publish_versioning(spark, tmp_path):
     assert cur.collect()[0]["v"] == 2.0
 
 
+def test_publish_failed_sidecar_replace_leaves_tables_readable(spark, tmp_path, monkeypatch):
+    """Fault injection: os.replace fails while publish_table writes its
+    metadata sidecar. The error surfaces, and the versioned and _current
+    tables it already wrote still read: the sidecar's temp file is neither
+    left where Spark's file index would list it as a data file."""
+    import os
+
+    import pytest
+
+    root = str(tmp_path / "pub")
+    df = spark.createDataFrame([("k1", 1.0), ("k2", 2.0)], ["pk", "v"])
+
+    def failing_replace(src, dst):
+        raise OSError("injected replace failure")
+
+    monkeypatch.setattr(os, "replace", failing_replace)
+    with pytest.raises(OSError, match="injected"):
+        publish_table(spark, df, root, "clinical", "r1")
+    monkeypatch.undo()
+    for d in (f"{root}/clinical_versioned/r1", f"{root}/clinical_current"):
+        assert sorted(map(tuple, spark.read.parquet(d).collect())) == [("k1", 1.0), ("k2", 2.0)], d
+
+
+def test_skip_if_fresh_recomputes_on_torn_fingerprint(spark, tmp_path):
+    """Fault injection: a truncated _step_fingerprint.json (a crash mid-
+    write) reads as stale, so the step recomputes and records a whole
+    fingerprint again instead of failing the run with a JSON error."""
+    import json
+    import os
+
+    wh = str(tmp_path / "wh")
+    src = spark.range(0, 5).select(F.col("id").alias("k"))
+    step = {
+        "name": "s1",
+        "dest": "out1",
+        "sql": "SELECT k, k * 2 AS v FROM src",
+        "materialize": True,
+        "skip_if_fresh": True,
+    }
+    p = Pipeline(spark, warehouse=wh)
+    p.register("src", src)
+    p.run_step(step)
+    sidecar = os.path.join(wh, "out1", "_step_fingerprint.json")
+    with open(sidecar, encoding="utf-8") as fh:
+        whole = fh.read()
+    with open(sidecar, "w", encoding="utf-8") as fh:
+        fh.write(whole[: len(whole) // 2])
+    mtime = os.path.getmtime(os.path.join(wh, "out1", "_SUCCESS"))
+
+    p2 = Pipeline(spark, warehouse=wh)
+    p2.register("src", src)
+    df = p2.run_step(step)
+    assert {(r["k"], r["v"]) for r in df.collect()} == {(i, 2 * i) for i in range(5)}
+    assert os.path.getmtime(os.path.join(wh, "out1", "_SUCCESS")) != mtime
+    with open(sidecar, encoding="utf-8") as fh:
+        assert json.load(fh)["fingerprint"]
+
+
 def test_pipeline_cluster_by_and_export_csv(spark, tmp_path):
     import glob
 

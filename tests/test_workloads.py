@@ -1,19 +1,18 @@
 """Smoke + oracle tests for the driver-contract workloads.
 
 Every registry query must run at sf0.001 with a stable schema; a fast
-subset is oracle-compared against DuckDB here (the full compare runs in
+subset, plus the ANN family at sf0.01, is oracle-compared against DuckDB
+here with tools/check.py's row hash (the full compare runs in
 tools/check.py / the driver's own gate)."""
 
 from __future__ import annotations
-
-import hashlib
-import math
 
 import duckdb
 import pytest
 
 from nextgenetl_spark.workloads import load_all
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, SF_T2
+from tools.check import table_hash
 
 REGISTRY = load_all()
 
@@ -25,6 +24,25 @@ ORACLE_SUBSET = [
     "exact_dedup",
     "ann_cosine_topk",
 ]
+# The ANN family's VALUES oracles are pinned at sf0.01, so they run there.
+ANN_FAMILY = [
+    "ann_cosine_topk",
+    "ann_lsh_topk",
+    "ann_lsh_multiprobe",
+    "ann_ivf_topk",
+    "ann_ivf_full_probe",
+    "ann_pq_topk",
+    "ann_pq_full_rerank",
+    "ann_ivfpq_topk",
+    "ann_ivfpq_full",
+    "knn_label_predict",
+    "hybrid_rrf_retrieval",
+    "hybrid_rrf_production",
+    "hybrid_rrf_persisted",
+    "ann_ivfpq_append",
+    "stream_ivfpq_ingest",
+    "stream_ann_lookup",
+]
 
 
 @pytest.mark.parametrize("name", sorted(REGISTRY))
@@ -34,39 +52,51 @@ def test_workload_runs(spark, name):
     assert df.count() >= 0
 
 
-def _canon(v):
-    if v is None:
-        return "NULL"
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        if v == int(v) and abs(v) < 1e15:
-            return str(int(v))
-        return repr(v)
-    return str(v)
-
-
-def _hash(rows, cols):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    hs = sorted(hashlib.md5("|".join(_canon(r[i]) for i in order).encode()).hexdigest() for r in rows)
-    return hashlib.md5("\n".join(hs).encode()).hexdigest()
-
-
-@pytest.mark.parametrize("name", ORACLE_SUBSET)
+@pytest.mark.parametrize("name", sorted(set(ORACLE_SUBSET) | set(ANN_FAMILY)))
 def test_oracle_match(spark, name):
+    sf = SF_T2 if name in ANN_FAMILY else SF_SMOKE
     wl = REGISTRY[name]
-    sdf = wl.fn(spark, SF_SMOKE)
+    sdf = wl.fn(spark, sf)
     srows = [tuple(r) for r in sdf.collect()]
     con = duckdb.connect()
     for t in ["region", "nation", "customer", "supplier", "part", "orders",
               "lineitem", "events", "documents", "embeddings"]:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_SMOKE}/{t}.parquet'")
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
     res = con.execute(wl.oracle)
     ocols = [d[0] for d in res.description]
     orows = res.fetchall()
     assert sorted(sdf.columns) == sorted(ocols)
     assert len(srows) == len(orows)
-    assert _hash(srows, sdf.columns) == _hash(orows, ocols)
+    assert table_hash(srows, sdf.columns) == table_hash(orows, ocols)
+
+
+def test_csv_load_disposition_fixtures_follow_supplier_content(spark, tmp_path):
+    """The staged supplier CSVs are keyed by supplier.parquet's content, not
+    by the sf directory's path: regenerating the table in place serves the
+    new rows, not the CSVs staged from the old ones."""
+    import os
+    import time
+
+    sf = str(tmp_path)
+    target = os.path.join(sf, "supplier.parquet")
+
+    def write_supplier(n):
+        duckdb.sql(
+            f"COPY (SELECT * FROM '{SF_SMOKE}/supplier.parquet' ORDER BY s_suppkey LIMIT {n}) "
+            f"TO '{target}' (FORMAT PARQUET)"
+        )
+
+    def loaded():
+        df = REGISTRY["csv_load_disposition"].fn(spark, sf)
+        return sorted(r["s_suppkey"] for r in df.collect())
+
+    write_supplier(4)
+    first = loaded()
+    assert len(first) == 4
+    time.sleep(0.01)  # a distinct mtime even on coarse-grained filesystems
+    write_supplier(6)
+    new = sorted(r[0] for r in duckdb.sql(f"SELECT s_suppkey FROM '{target}'").fetchall())
+    assert len(new) == 6 and loaded() == new
 
 
 def test_salted_join_matches_plain_join(spark):
