@@ -641,7 +641,9 @@ def ivf_topk(
     if nprobe is None:
         nprobe = _auto_nprobe(k_centroids)
     cents, cells = _ivf_cells(corpus, k_centroids, refine_iters, corpus_id, vec_col)
-    return _ivf_search(queries, cents, cells, nprobe, k, query_id, corpus_id, vec_col, corpus_id)
+    return _ivf_search(
+        queries, cents, cells, nprobe, k, query_id, corpus_id, vec_col, corpus_id, broadcast_probe=False
+    )
 
 
 def _ivf_cells(corpus: DataFrame, k_centroids: int, refine_iters: int, id_col: str, vec_col: str):
@@ -677,16 +679,23 @@ def _ivf_search(
     corpus_id: str,
     vec_col: str,
     out_id: str,
+    broadcast_probe: bool,
 ) -> DataFrame:
     """The IVF search: probe each query's cells, join the probed cells to
     the cell-assigned corpus on cell_id, then score exactly and rank.
-    Output: (query_id, ``out_id``, sim, rank). The join carries no hint:
-    the planner broadcasts the smaller side, and when that is the cells the
-    probe's query_id partitioning feeds the final window with no further
-    shuffle (broadcasting the probe instead measured one more job per
-    query at sf0.01)."""
+    Output: (query_id, ``out_id``, sim, rank). ``broadcast_probe`` is set
+    for a persisted index, whose cells may be far past the broadcast
+    threshold: the small probe is broadcast and the hive-partitioned cells
+    scan streams, never shuffled to a sort-merge join, and the broadcast
+    probe is the build side a dynamic pruning filter on that scan is
+    planned against. In-memory cells have no partitions to prune, so that
+    join carries no hint: the planner broadcasts the smaller side, and when
+    that is the cells the probe's query_id partitioning feeds the final
+    window with no further shuffle (broadcasting the probe there measured
+    one more job at sf0.01)."""
+    probe = _probe(queries, cents, query_id, vec_col, nprobe)
     scored = (
-        _probe(queries, cents, query_id, vec_col, nprobe)
+        (F.broadcast(probe) if broadcast_probe else probe)
         .join(cells, "cell_id")
         .filter(F.col(query_id) != F.col(corpus_id))
         .select(query_id, F.col(corpus_id).alias(out_id), _sim("qv", vec_col))
@@ -705,7 +714,7 @@ def build_ivf_index(
     """Persist an IVF index: centroids (k rows) + the corpus assigned to
     cells, written hive-partitioned BY cell_id. Building costs one centroid
     pass (+ refine_iters Lloyd passes) and one assignment scan; every later
-    query batch reuses the cells — the index-reuse
+    query batch reads the cells, never the corpus — the index-reuse
     workflow that makes IVF pay off at 100 TB, where re-deriving cells per
     query batch (ivf_topk's self-contained form) would re-scan the corpus
     every time.
@@ -747,8 +756,12 @@ def ivf_query_index(
 ) -> DataFrame:
     """Query a persisted IVF index: rank cells per query against the tiny
     centroid table (broadcast), keep nprobe, join the cell-partitioned
-    corpus on cell_id (``_ivf_search``, the walk ``ivf_topk`` runs on
-    in-memory cells), then score and re-rank. Same output
+    corpus on cell_id with the probe as the broadcast build side, then
+    score and re-rank (``_ivf_search``, the walk ``ivf_topk`` runs on
+    in-memory cells). The cells scan carries a planned dynamic pruning
+    filter on cell_id, but MEASURED on Spark 4.1 it resolves to ``true``
+    at execution: a 2-query nprobe=1 batch on an 8-cell index opened all
+    8 cell partitions (ROADMAP Direction 3). Same output
     contract as ``ivf_topk`` (query_id, neighbor_id, sim, rank); with
     nprobe == k_centroids it is exactly brute force. ``nprobe=None``
     applies the measured ceil(k/4) probe-fraction rule from the
@@ -757,7 +770,9 @@ def ivf_query_index(
     if nprobe is None:
         nprobe = _auto_nprobe(cents.count())
     cells = read_parquet_cached(spark, f"{index_dir}/cells")
-    return _ivf_search(queries, cents, cells, nprobe, k, query_id, corpus_id, vec_col, "neighbor_id")
+    return _ivf_search(
+        queries, cents, cells, nprobe, k, query_id, corpus_id, vec_col, "neighbor_id", broadcast_probe=True
+    )
 
 
 def lsh_topk_multiprobe(
@@ -1714,8 +1729,7 @@ def _ivfpq_search(
 ) -> DataFrame:
     """The IVF-PQ search: probe each query's cells, ADC-score ONLY the
     probed cells' code rows (the probed cells are broadcast, so the code
-    table never shuffles, and over a cell-partitioned index partition
-    filters keep unprobed cells' files unread), shortlist, then re-rank
+    table never shuffles), shortlist, then re-rank
     exactly against ``vectors`` joined on ``keys``. The same walk whether
     ``cents``/``CB``/``codes``/``vectors`` were built in memory
     (``ivfpq_topk``) or read from an index (``ivfpq_query_index``)."""
@@ -1755,8 +1769,7 @@ def build_ivfpq_index(
     - ``codes/``      — (id, codes) hive-partitioned BY cell_id: the scan
       surface, m·log2(ks) bits per vector
     - ``vectors/``    — (id, vec) hive-partitioned BY cell_id: the re-rank
-      surface; shortlisted rows join back on (cell_id, id), so even the
-      raw-vector reads stay partition-pruned to probed cells
+      surface; shortlisted rows join back on (cell_id, id)
 
     ``k_centroids=None`` sizes cells as round(√N) (build_ivf_index's
     measured default — hold the probe fraction as the corpus grows). The
@@ -1966,11 +1979,12 @@ def ivfpq_query_index(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Query a persisted IVF-PQ index: rank cells against the broadcast
-    centroid table, keep nprobe, ADC-score ONLY those cells' code
-    partitions (partition filters keep unprobed cells' files unread),
+    centroid table, keep nprobe, ADC-score ONLY those cells' code rows,
     shortlist, then re-rank exactly against the vectors table joined on
-    (cell_id, id) — still partition-pruned. Identical walk to the
-    self-contained ``ivfpq_topk`` built with the same parameters, so
+    (cell_id, id). The codes and vectors scans carry planned dynamic
+    pruning filters on cell_id that, as in ``ivf_query_index``, resolve
+    to ``true`` at execution, so every cell partition is read. Identical
+    walk to the self-contained ``ivfpq_topk`` built with the same parameters, so
     results are bit-identical (pinned by pytest); with
     nprobe == k_centroids and an unbounded shortlist it is exactly brute
     force. ``shortlist=None`` applies the frozen 3·max(k, crowd) rule from

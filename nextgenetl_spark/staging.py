@@ -88,11 +88,11 @@ def code_token(*objs) -> str:
     """Version token over the SOURCE of the code that computes a staged
     artifact (round-5 ADVICE: a cache keyed on input content alone serves
     stale results after the operator implementation changes — only the
-    slow oracle run would notice). Pass the functions whose behavior the
-    artifact bakes in; their ``inspect.getsource`` text is hashed, so any
-    edit — even a constant tweak — produces a new token and therefore a
-    new staged_dir fingerprint, and ``mark_complete`` reaps the old
-    build."""
+    slow oracle run would notice). Pass the functions (or whole modules)
+    whose behavior the artifact bakes in; their ``inspect.getsource`` text
+    is hashed, so any edit — even a constant tweak — produces a new token
+    and therefore a new staged_dir fingerprint, and ``mark_complete``
+    reaps the old build."""
     import inspect
 
     parts = []

@@ -11,22 +11,11 @@ from nextgenetl_spark.operators.similarity import (
     cosine_topk_gemm,
     lsh_topk,
 )
+# the staged index builds below key their cache on this whole module's
+# source (code_token(S)): an edit to any function a build runs, private
+# helpers included, rebuilds the index instead of serving a stale one
 from nextgenetl_spark.operators import similarity as S
 from nextgenetl_spark.workloads import workload
-
-# Every operator function a staged index build runs. Each staged_dir site
-# passes these to code_token, so an edit to any of them rebuilds the index
-# instead of serving one the old code built.
-_IVF_BUILD = (
-    S.build_ivf_index, S._ivf_cells, S._seed_scan, S.pick_centroids,
-    S._attach_cent_rows, S.refine_centroids, S.assign_cells,
-)
-_IVFPQ_BUILD = (
-    S.build_ivfpq_index, S._seed_scan, S.pick_centroids, S._attach_cent_rows,
-    S.refine_centroids, S.assign_cells, S.train_pq_codebooks, S._codebook_literal, S._unit_vectors,
-    S._pq_assign_long, S._collect_codebooks, S.pq_encode, S.measured_adc_crowd,
-    S._adc_lut, S.expected_code_crowd,
-)
 
 
 @workload(
@@ -507,7 +496,7 @@ def stream_ann_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx, complete = staged_dir(
         "ngetl_ivf",
         os.path.join(sf_dir, "embeddings.parquet"),
-        code=code_token(*_IVF_BUILD),
+        code=code_token(S),
     )
     if not complete:
         build_ivf_index(load(spark, sf_dir, "embeddings"), idx, k_centroids=16, refine_iters=1)
@@ -1030,7 +1019,7 @@ def hybrid_rrf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx, complete = staged_dir(
         "ngetl_ivfpq_hybrid",
         os.path.join(sf_dir, "embeddings.parquet"),
-        code=code_token(*_IVFPQ_BUILD, hybrid_rrf_persisted),
+        code=code_token(S, hybrid_rrf_persisted),
     )
     if not complete:
         build_ivfpq_index(
@@ -1091,7 +1080,7 @@ def ann_ivfpq_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx, complete = staged_dir(
         "ngetl_ivfpq_append",
         os.path.join(sf_dir, "embeddings.parquet"),
-        code=code_token(*_IVFPQ_BUILD, S.append_to_ivfpq_index, ann_ivfpq_append),
+        code=code_token(S, ann_ivfpq_append),
     )
     if not complete:
         build_ivfpq_index(
@@ -1157,7 +1146,7 @@ def stream_ivfpq_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     base, complete = staged_dir(
         "ngetl_ivfpq_hist",
         os.path.join(sf_dir, "embeddings.parquet"),
-        code=code_token(*_IVFPQ_BUILD, stream_ivfpq_ingest),
+        code=code_token(S, stream_ivfpq_ingest),
     )
     if not complete:
         build_ivfpq_index(

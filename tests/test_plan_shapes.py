@@ -13,11 +13,15 @@ from tests.conftest import SF_SMOKE
 REGISTRY = load_all()
 
 
-def _plan(spark, name: str) -> str:
-    df = REGISTRY[name].fn(spark, SF_SMOKE)
+def _explain(df) -> str:
+    jvm = df.sparkSession._jvm
     return df._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+        jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     )
+
+
+def _plan(spark, name: str) -> str:
+    return _explain(REGISTRY[name].fn(spark, SF_SMOKE))
 
 
 def test_manifest_filter_pushes_predicates_to_scan(spark):
@@ -113,6 +117,36 @@ def test_sliding_window_expands_partials_not_raw_rows(spark):
 def test_time_grid_fill_broadcast_lands_on_build_side(spark):
     plan = _plan(spark, "time_grid_fill")
     assert "BroadcastHashJoin LeftOuter BuildRight" in plan
+
+
+def test_ivf_query_index_broadcasts_the_probe_over_large_cells(spark, tmp_path):
+    """A persisted IVF index's cells can be far larger than the broadcast
+    threshold. The query path must still broadcast the small probe (query,
+    cell) table and stream the hive-partitioned cells scan, never shuffle
+    the cells to a sort-merge join. The broadcast probe is also the build
+    side a dynamic pruning filter on the cells scan is planned against.
+    The threshold is switched off so the sf0.001 cells count as large."""
+    from pyspark.sql import functions as F
+
+    from nextgenetl_spark.catalog import load
+    from nextgenetl_spark.operators.similarity import build_ivf_index, ivf_query_index
+
+    emb = load(spark, SF_SMOKE, "embeddings")
+    idx = str(tmp_path / "ivf")
+    build_ivf_index(emb, idx, k_centroids=8, refine_iters=0)
+    q = emb.filter(F.col("vec_id") < 5).select(F.col("vec_id").alias("query_id"), "embedding")
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        plan = _explain(ivf_query_index(spark, idx, q, nprobe=2, k=3))
+    finally:
+        spark.conf.set(key, before)
+    assert "SortMergeJoin" not in plan
+    # the cells scan is the streamed side: the probe is on the left
+    assert "BroadcastHashJoin Inner BuildLeft" in plan
+    scan = next(l for l in plan.splitlines() if "PartitionFilters:" in l and "cell_id" in l)
+    assert "dynamicpruningexpression(cell_id" in scan
 
 
 def test_no_single_partition_exchange_in_topk_paths(spark):

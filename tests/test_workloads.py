@@ -73,9 +73,13 @@ def test_oracle_match(spark, name):
 def test_csv_load_disposition_fixtures_follow_supplier_content(spark, tmp_path):
     """The staged supplier CSVs are keyed by supplier.parquet's content, not
     by the sf directory's path: regenerating the table in place serves the
-    new rows, not the CSVs staged from the old ones."""
+    new rows, not the CSVs staged from the old ones. The rewrite changes
+    the file's size, which content_fingerprint covers even where the
+    filesystem's mtime is too coarse to move."""
     import os
-    import time
+    import shutil
+
+    from nextgenetl_spark.workloads.files import _fixture_dir
 
     sf = str(tmp_path)
     target = os.path.join(sf, "supplier.parquet")
@@ -90,13 +94,18 @@ def test_csv_load_disposition_fixtures_follow_supplier_content(spark, tmp_path):
         df = REGISTRY["csv_load_disposition"].fn(spark, sf)
         return sorted(r["s_suppkey"] for r in df.collect())
 
-    write_supplier(4)
-    first = loaded()
-    assert len(first) == 4
-    time.sleep(0.01)  # a distinct mtime even on coarse-grained filesystems
-    write_supplier(6)
-    new = sorted(r[0] for r in duckdb.sql(f"SELECT s_suppkey FROM '{target}'").fetchall())
-    assert len(new) == 6 and loaded() == new
+    staged = []
+    try:
+        write_supplier(4)
+        staged.append(_fixture_dir(sf, "supplier"))
+        assert len(loaded()) == 4
+        write_supplier(6)
+        staged.append(_fixture_dir(sf, "supplier"))
+        new = sorted(r[0] for r in duckdb.sql(f"SELECT s_suppkey FROM '{target}'").fetchall())
+        assert len(new) == 6 and loaded() == new
+    finally:
+        for d in staged:
+            shutil.rmtree(d, ignore_errors=True)
 
 
 def test_salted_join_matches_plain_join(spark):
