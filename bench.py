@@ -262,8 +262,11 @@ def _box_health() -> dict:
 
 # Each query runs 1 cold + 2 warm reps back to back; the reported time is
 # the MIN across reps: steady-state throughput, excluding one-time
-# whole-stage-codegen compilation (~0.5-3s/query, amortized to zero on real
-# workloads and on any cluster run) AND single-run host noise (multiway_star
+# whole-stage-codegen compilation (~0.5-3s/query; a warm rep pays none
+# because its classes are still in the codegen cache, which
+# session.CODEGEN_CACHE_ENTRIES sizes so that queries run between the reps
+# do not evict them either: each rep's record counts its compiles in
+# codegen_compiles) AND single-run host noise (multiway_star
 # once swung 1.94→5.62s between two healthy-box records on a byte-identical
 # plan — one warm run is not a trustworthy wall on a VM; the min of 3 is).
 # A query whose cold rep reaches REPEAT_MAX_SEC gets one warm rep, to bound

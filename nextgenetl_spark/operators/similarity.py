@@ -1556,8 +1556,10 @@ def pq_topk(
     import numpy as np
 
     # The query-side collect is independent of the whole training/crowd
-    # walk — overlap it (guide §2.6; see ivfpq_topk). Values unchanged.
-    from nextgenetl_spark.overlap import overlap
+    # walk — overlap it (guide §2.6; see ivfpq_topk). Values unchanged. An
+    # oversized query side raises as soon as it is collected, which
+    # cancels the walk.
+    from nextgenetl_spark.overlap import overlap_pool
 
     def _walk(shortlist=shortlist):
         CB = _collect_codebooks(train_pq_codebooks(corpus, m, ks, train_iters, corpus_id, vec_col), m, ks)
@@ -1568,12 +1570,11 @@ def pq_topk(
             )
         return CB, codes, shortlist
 
-    qrows, (CB, codes, shortlist) = overlap(queries.sparkSession, [
-        lambda: _collect_queries(queries, query_id, vec_col),
-        _walk,
-    ])
+    with overlap_pool(queries.sparkSession) as submit:
+        f_walk = submit(_walk)
+        batch = _query_batch("pq_topk", _collect_queries(queries, query_id, vec_col))
+        CB, codes, shortlist = f_walk.result()
     vectors = corpus.select(F.col(corpus_id), F.col(vec_col))
-    batch = _query_batch("pq_topk", qrows)
     if batch is None:
         return _adc_no_hits(queries, vectors, query_id, corpus_id, corpus_id)
     qids, Q = batch
@@ -1659,18 +1660,18 @@ def ivfpq_topk(
     # centroids are the first k_centroids rows, the PQ codebook seeds the
     # first ks nonzero-norm rows of the SAME (xxhash64(id), id) ordering
     seed_horizon = max(k_centroids, ks)
-    seed_rows = _seed_scan(corpus, seed_horizon, corpus_id, vec_col)
-    cents0 = pick_centroids(corpus, k_centroids, corpus_id, vec_col, _rows=seed_rows)
 
-    # The three driver-blocking walks that follow are pairwise INDEPENDENT:
-    # the Lloyd refinement of the cell centroids, the PQ codebook training,
-    # and the query-side collect each depend only on inputs that already
-    # exist. Running them sequentially left the cluster idle between each
-    # walk's small jobs; ``overlap_pool`` runs them together (guide §2.6 —
-    # actions are only sequential because the driver calls them
-    # sequentially), and the query collect also overlaps the encode and
-    # crowd pass below. Each walk's own collected values are unchanged, so
-    # results are bit-identical regardless of scheduling order.
+    # The driver-blocking walks that follow are pairwise INDEPENDENT: the
+    # query-side collect (it also overlaps the seed scan), the Lloyd
+    # refinement of the cell centroids and the PQ codebook training each
+    # depend only on inputs that already exist. Running them sequentially
+    # left the cluster idle between each walk's small jobs;
+    # ``overlap_pool`` runs them together (guide §2.6 — actions are only
+    # sequential because the driver calls them sequentially). The query
+    # side is checked as soon as it is collected, so an oversized one
+    # raises before the encode and crowd pass, and the raise cancels the
+    # two training walks. Each walk's own collected values are unchanged,
+    # so results are bit-identical regardless of scheduling order.
     from nextgenetl_spark.overlap import overlap_pool
 
     def _refine():
@@ -1686,8 +1687,11 @@ def ivfpq_topk(
         return _collect_codebooks(cb, m, ks)
 
     with overlap_pool(queries.sparkSession) as submit:
-        f_cents, f_train = submit(_refine), submit(_train)
         f_qrows = submit(lambda: _collect_queries(queries, query_id, vec_col))
+        seed_rows = _seed_scan(corpus, seed_horizon, corpus_id, vec_col)
+        cents0 = pick_centroids(corpus, k_centroids, corpus_id, vec_col, _rows=seed_rows)
+        f_cents, f_train = submit(_refine), submit(_train)
+        batch = _query_batch("ivfpq_topk", f_qrows.result())
         cents, CB = f_cents.result(), f_train.result()
         # literal-backed either way (r11) — no checkpoint job needed
         cells = assign_cells(corpus, cents, corpus_id, vec_col).select(corpus_id, "cell_id")
@@ -1701,9 +1705,8 @@ def ivfpq_topk(
             codes, shortlist = _crowd_shortlist(
                 k, corpus, codes, CB, corpus_id, vec_col, crowd_count_fraction
             )
-        qrows = f_qrows.result()
     return _ivfpq_search(
-        "ivfpq_topk", queries, qrows, cents, CB, codes,
+        queries, batch, cents, CB, codes,
         vectors=corpus.select(F.col(corpus_id), F.col(vec_col)), keys=[corpus_id],
         nprobe=nprobe, shortlist=shortlist, k=k,
         query_id=query_id, corpus_id=corpus_id, vec_col=vec_col, out_id=corpus_id,
@@ -1711,9 +1714,8 @@ def ivfpq_topk(
 
 
 def _ivfpq_search(
-    op: str,
     queries: DataFrame,
-    qrows: list,
+    batch,
     cents: DataFrame,
     CB,
     codes: DataFrame,
@@ -1732,8 +1734,8 @@ def _ivfpq_search(
     table never shuffles), shortlist, then re-rank
     exactly against ``vectors`` joined on ``keys``. The same walk whether
     ``cents``/``CB``/``codes``/``vectors`` were built in memory
-    (``ivfpq_topk``) or read from an index (``ivfpq_query_index``)."""
-    batch = _query_batch(op, qrows)
+    (``ivfpq_topk``) or read from an index (``ivfpq_query_index``).
+    ``batch`` is the checked query side (``_query_batch``)."""
     if batch is None:
         return _adc_no_hits(queries, vectors, query_id, corpus_id, out_id)
     qids, Q = batch
@@ -2017,9 +2019,9 @@ def ivfpq_query_index(
                 _unit_vectors(vectors, corpus_id, vec_col), codes, CB, corpus_id
             )
         shortlist = _auto_shortlist(k, crowd)
+    batch = _query_batch("ivfpq_query_index", _collect_queries(queries, query_id, vec_col))
     return _ivfpq_search(
-        "ivfpq_query_index", queries, _collect_queries(queries, query_id, vec_col), cents, CB,
-        codes, vectors=vectors, keys=["cell_id", corpus_id],
+        queries, batch, cents, CB, codes, vectors=vectors, keys=["cell_id", corpus_id],
         nprobe=nprobe, shortlist=shortlist, k=k,
         query_id=query_id, corpus_id=corpus_id, vec_col=vec_col, out_id="neighbor_id",
     )

@@ -378,47 +378,28 @@ class Pipeline:
         its own job group. A step's output is registered (temp view and
         ``tables``) on this thread as it finishes, before its dependents
         are submitted. When a step fails, nothing more is submitted, the
-        running steps' job groups are cancelled until they end, and a
-        RuntimeError naming the failed step is raised from its error. A
-        step that did not finish writes no ``_step_fingerprint.json``."""
+        running steps are cancelled (``overlap_pool`` cancels their jobs)
+        until they end, and a RuntimeError naming the failed step is raised
+        from its error. A step that did not finish writes no
+        ``_step_fingerprint.json``."""
         self.params = {**config.get("params", {}), **self.params}
         selected = steps if steps is not None else config.get("run_steps")
         plan = [s for s in config["steps"] if selected is None or _step_name(s) in selected]
         deps = self._step_dag(plan)
         done: dict[int, DataFrame] = {}
         running: dict[Future, int] = {}
-        failed: list[tuple[int, BaseException]] = []
-
-        def settle(finished) -> None:
-            # config order among steps that finished together
-            for fut in sorted(finished, key=running.get):
-                j = running.pop(fut)
-                if fut.cancelled():
-                    continue
-                if fut.exception() is not None:
-                    failed.append((j, fut.exception()))
-                    continue
-                done[j] = fut.result()
-                self.register(plan[j]["dest"], done[j])
-
         with overlap_pool(self.spark) as submit:
-            try:
-                while not failed and len(done) < len(plan):
-                    for j, step in enumerate(plan):
-                        if j not in done and j not in running.values() and deps[j] <= done.keys():
-                            running[submit(lambda step=step: self._step_output(step))] = j
-                    settle(wait(running, return_when=FIRST_COMPLETED)[0])
-            finally:
-                # cancelJobGroup reaches only the jobs active when it is
-                # called, so repeat it until each sibling has ended.
-                while running:
-                    for fut, j in running.items():
-                        if not fut.cancel():
-                            self.spark.sparkContext.cancelJobGroup(_step_name(plan[j]))
-                    settle(wait(running, timeout=0.05)[0])
-        if failed:
-            j, exc = failed[0]
-            raise RuntimeError(f"pipeline step '{_step_name(plan[j])}' failed: {exc}") from exc
+            while len(done) < len(plan):
+                for j, step in enumerate(plan):
+                    if j not in done and j not in running.values() and deps[j] <= done.keys():
+                        running[submit(lambda step=step: self._step_output(step))] = j
+                # config order among steps that finished together
+                for fut in sorted(wait(running, return_when=FIRST_COMPLETED)[0], key=running.get):
+                    j = running.pop(fut)
+                    if (exc := fut.exception()) is not None:
+                        raise RuntimeError(f"pipeline step '{_step_name(plan[j])}' failed: {exc}") from exc
+                    done[j] = fut.result()
+                    self.register(plan[j]["dest"], done[j])
         return {plan[j]["dest"]: done[j] for j in sorted(done)}
 
 

@@ -10,6 +10,12 @@ ours is Spark. This module centralizes the session config so every entry point
 - Broadcast threshold left at default (10 MB) — dimension tables (region,
   nation, supplier, part at small SF) broadcast automatically; at 100 TB the
   facts stay shuffled on their join keys.
+- Codegen class cache sized to the working set (``CODEGEN_CACHE_ENTRIES``):
+  Catalyst's generated code only pays off when a compiled class is reused.
+  Spark's default 100-class LRU is smaller than one pass of either
+  benchmark workload, so every warm pass recompiled what the previous one
+  compiled. The bound is JVM-wide: driver-side planning and the projection
+  and whole-stage compiles inside tasks share it.
 """
 
 from __future__ import annotations
@@ -19,6 +25,24 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+# Compiled-class LRU bound (spark.sql.codegen.cache.maxEntries, default 100).
+# Measured with perfbench on 4 vCPUs, compiles counted per pass from
+# CodegenMetrics: a cold pass compiles 141 classes (sql_mix) and 147
+# (release_build). At the default 100 every warm pass recompiled 76-137 of
+# them; at 150 still 11-45; at 200, 300, 500 and 1000 a warm pass compiled
+# 0 (sql_mix) and 4 (release_build: 4 classes that are new on every pass,
+# which no bound saves). 200 is the smallest round bound that holds both
+# working sets; 500 leaves headroom for a larger one (more ops, queries
+# interleaved in one process). Each entry keeps one generated class loaded.
+CODEGEN_CACHE_ENTRIES = 500
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Generated classes this JVM has compiled so far (Janino compiles,
+    i.e. codegen cache misses): driver-side planning and tasks alike."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
 
 
 def _default_driver_mem() -> str:
@@ -139,6 +163,8 @@ def get_spark(app_name: str = "nextgenetl-spark", shuffle_partitions: int | None
                 "SPARK_GRAFT_OHA_FALLBACK", _oha_fallback_threshold(driver_mem)
             ),
         )
+        # static: read once per JVM when the first class is generated
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.ui.enabled", "false")
         # PySpark 4's DataFrame-debugging wrapper fires on EVERY Column/
         # DataFrame API call: a conf RPC + a JVM-class reflection RPC + a

@@ -15,9 +15,11 @@ fingerprint-keyed directory and whether it is complete; the caller builds
 into it and calls ``mark_complete``. The directory name carries BOTH a
 source-path key and the content fingerprint (``<prefix>_<pathkey>_<fp>``),
 so ``mark_complete`` can reap superseded fingerprints of the SAME source
-(bounded disk: one live artifact per source path) without ever touching a
-different source's cache — e.g. sf0.01's and sf0.1's IVF indexes coexist,
-but regenerating sf0.1 in place replaces sf0.1's old index.
+(bounded disk: one live artifact per source path and code token) without
+ever touching a different source's cache — e.g. sf0.01's and sf0.1's IVF
+indexes coexist, but regenerating sf0.1 in place replaces sf0.1's old
+index. Builds of the same source under another code token (another
+checkout sharing the temp dir) are never reaped.
 """
 
 from __future__ import annotations
@@ -91,8 +93,9 @@ def code_token(*objs) -> str:
     slow oracle run would notice). Pass the functions (or whole modules)
     whose behavior the artifact bakes in; their ``inspect.getsource`` text
     is hashed, so any edit — even a constant tweak — produces a new token
-    and therefore a new staged_dir fingerprint, and ``mark_complete``
-    reaps the old build."""
+    and therefore a new staged_dir fingerprint. ``mark_complete`` leaves
+    the old token's build in place (another checkout may still read it),
+    so each code version keeps at most one build per source."""
     import inspect
 
     parts = []
@@ -148,17 +151,22 @@ def staged_dir(prefix: str, src_path: str, code: str | None = None) -> tuple[str
 
 def mark_complete(cache_dir: str) -> None:
     """Stamp a finished build, then reap superseded builds of the SAME
-    source (same prefix+pathkey, different fingerprint) so in-place source
-    regeneration never accumulates unbounded stale artifacts. The marker
-    is written first, so a crash mid-reap leaves the new build usable; a
-    crash mid-build (no marker) leaves a dir that is rebuilt, never
-    probed — and reaped by the next successful build."""
+    source by the SAME code (same prefix+pathkey and code token, different
+    content fingerprint) so in-place source regeneration never accumulates
+    unbounded stale artifacts. A build under another code token is left
+    alone: it is another checkout's (or another version's) live artifact
+    of the same source, which a process sharing the temp dir may still be
+    reading. The marker is written first, so a crash mid-reap leaves the
+    new build usable; a crash mid-build (no marker) leaves a dir that is
+    rebuilt, never probed — and reaped by the next successful build."""
     os.makedirs(cache_dir, exist_ok=True)
     with open(os.path.join(cache_dir, _MARKER), "w", encoding="utf-8") as fh:
         fh.write(os.path.basename(cache_dir))
     base = os.path.basename(cache_dir)
-    family = base.rsplit("_", 1)[0]  # <prefix>_<pathkey>
+    family, fp = base.rsplit("_", 1)  # <prefix>_<pathkey>, <content>[-<code>]
+    code = fp.partition("-")[2]
     parent = os.path.dirname(cache_dir)
     for sib in glob.glob(os.path.join(parent, f"{family}_*")):
-        if os.path.basename(sib) != base and os.path.isdir(sib):
+        name = os.path.basename(sib)
+        if name != base and name.rsplit("_", 1)[1].partition("-")[2] == code and os.path.isdir(sib):
             shutil.rmtree(sib, ignore_errors=True)

@@ -953,16 +953,22 @@ def test_minhash_index_append_then_query_matches_full_rebuild(spark, tmp_path):
     assert a == b and len(a) > 0
 
 
-def test_cosine_topk_gemm_oversized_query_side_fails_by_name(spark, tmp_path):
+def test_cosine_topk_gemm_oversized_query_side_fails_by_name(spark, tmp_path, monkeypatch):
     """The GEMM top-k collects the query side into the UDF closure; a
     query batch above MAX_QUERY_ROWS must raise a named ValueError (the
     bounded-collect contract), not exhaust driver memory. limit(cap+1)
     bounds what the driver ever materializes, so the failure itself is
     cheap even for a 100k-row query side. The ADC searches (pq_topk,
     ivfpq_topk, ivfpq_query_index) collect their query side the same way
-    and fail the same way, each naming itself."""
+    and fail the same way, each naming itself. pq_topk and ivfpq_topk
+    train their codebooks next to the collect: the failure cancels that
+    training, so it never finishes (the training is held until the query
+    side is collected, so the check does not race it)."""
+    import threading
+
     import pytest
 
+    import nextgenetl_spark.operators.similarity as S
     from nextgenetl_spark.operators.similarity import (
         MAX_QUERY_ROWS,
         build_ivfpq_index,
@@ -994,10 +1000,29 @@ def test_cosine_topk_gemm_oversized_query_side_fails_by_name(spark, tmp_path):
         F.array(*[F.lit(1.0)] * 4).alias("embedding"),
     )
     c4 = emb.withColumnRenamed("vec_id", "neighbor_id")
+    collected, trained = threading.Event(), []
+    collect, train = S._collect_queries, S.train_pq_codebooks
+
+    def collect_then_signal(*args):
+        rows = collect(*args)
+        collected.set()
+        return rows
+
+    def train_after_collect(*args, **kwargs):
+        assert collected.wait(120)
+        cb = train(*args, **kwargs)
+        trained.append(cb)
+        return cb
+
+    monkeypatch.setattr(S, "_collect_queries", collect_then_signal)
+    monkeypatch.setattr(S, "train_pq_codebooks", train_after_collect)
     with pytest.raises(ValueError, match="pq_topk.*MAX_QUERY_ROWS"):
         pq_topk(big4, c4, m=2, ks=4, k=3, shortlist=8, train_iters=1)
+    collected.clear()
     with pytest.raises(ValueError, match="ivfpq_topk.*MAX_QUERY_ROWS"):
         ivfpq_topk(big4, c4, k_centroids=2, nprobe=1, m=2, ks=4, k=3, shortlist=8)
+    assert trained == []
+    monkeypatch.undo()
     idx = str(tmp_path / "ivfpq")
     build_ivfpq_index(emb, idx, k_centroids=2, refine_iters=0, m=2, ks=4, train_iters=1)
     with pytest.raises(ValueError, match="ivfpq_query_index.*MAX_QUERY_ROWS"):

@@ -49,6 +49,9 @@ def test_prof_query_profiles_each_rep(spark):
         assert r["jobs"] >= 1 and r["tasks"] >= r["stages"] >= 1
         assert 0 < r["job_busy_s"] <= r["wall_s"]
         assert abs(r["job_busy_s"] + r["driver_gap_s"] - r["wall_s"]) <= 0.1 * r["wall_s"]
+        assert r["codegen_compiles"] >= 0
+    # the warm rep reuses every class the cold rep compiled
+    assert recs[1]["codegen_compiles"] == 0
 
 
 def test_bench_takes_the_min_of_profiled_reps(spark, monkeypatch):

@@ -8,7 +8,9 @@ also pays whole-stage codegen) on the factory session over
 says. A record holds the rep's wall, its Catalyst phases, and the jobs,
 stages, tasks, executor run/CPU/GC seconds, shuffle bytes and spill of the
 jobs submitted during the rep, plus the driver gap: wall minus the time at
-least one job was running.
+least one job was running, and ``codegen_compiles``: the generated classes
+the JVM compiled during the rep (0 on a warm rep whose classes stayed in
+the codegen cache).
 Phases and counters are ``perfbench/spans.py``'s, so a record reads the same
 as the benchmark's per-layer metrics. ``bench.py`` times its Spark side
 through ``profile``.
@@ -34,6 +36,7 @@ def profile(spark, names: list[str], sf_dir: str, reps: int = 2, long_s: float |
     record per rep. A query whose first rep takes ``long_s`` seconds or more
     runs one rep fewer."""
     from bench import HEADLINE
+    from nextgenetl_spark.session import codegen_compiles
     from nextgenetl_spark.workloads import load_all
 
     registry = load_all()
@@ -41,6 +44,7 @@ def profile(spark, names: list[str], sf_dir: str, reps: int = 2, long_s: float |
     counters.poll()
 
     def run(name: str, rep: int) -> dict:
+        compiles = codegen_compiles(spark)
         lo = time.time()
         df = registry[name].fn(spark, sf_dir)
         if HEADLINE.get(name, "count") == "collect":
@@ -53,6 +57,7 @@ def profile(spark, names: list[str], sf_dir: str, reps: int = 2, long_s: float |
         counters.poll()
         rec = {"query": name, "rep": rep, "wall_s": hi - lo, **phases(df), **counters.window(lo, hi)}
         rec["driver_gap_s"] = rec["wall_s"] - rec["job_busy_s"]
+        rec["codegen_compiles"] = codegen_compiles(spark) - compiles
         return rec
 
     records = []
