@@ -22,6 +22,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from nextgenetl_spark.catalog import TABLES
 from nextgenetl_spark.session import DEFAULT_SF_DIR, get_spark
 from nextgenetl_spark.workloads import load_all
 
@@ -195,35 +196,6 @@ HEADLINE = {
     "small_quantity_revenue": "collect",
 }
 
-# Machine-readable run-validity thresholds (round-9 verdict ask #3): a bench
-# record taken on a loaded/ballooned/stolen box is self-labeling instead of
-# needing forensic re-adjudication (the r9 driver run started at loadavg
-# 2.19 and inflated Spark walls a median 1.17× while DuckDB deflated 0.79×).
-# Thresholds documented in BASELINE.md §3.
-HEALTH_THRESHOLDS = {"loadavg_1m": 0.5, "steal_pct": 0.1, "balloon_mib": 0}
-
-
-def _box_health_ok(pre: dict, post: dict | None = None) -> bool:
-    """Valid iff the PRE snapshot clears every threshold AND the POST
-    snapshot shows no balloon/steal that appeared MID-RUN (the r8 incident
-    shape: idle at start, hypervisor squeeze during the run). Post loadavg
-    is self-polluted by the bench itself and is not consulted."""
-    if "error" in pre:
-        return False
-    ok = (
-        pre.get("loadavg_1m", 99.0) < HEALTH_THRESHOLDS["loadavg_1m"]
-        and pre.get("steal_pct", 99.0) < HEALTH_THRESHOLDS["steal_pct"]
-        and pre.get("balloon_mib", 1) <= HEALTH_THRESHOLDS["balloon_mib"]
-    )
-    if post is not None:
-        if "error" in post:
-            return False
-        ok = ok and (
-            post.get("steal_pct", 99.0) < HEALTH_THRESHOLDS["steal_pct"]
-            and post.get("balloon_mib", 1) <= HEALTH_THRESHOLDS["balloon_mib"]
-        )
-    return ok
-
 
 def _box_health() -> dict:
     """Environment snapshot recorded with every bench run (round-8 verdict
@@ -290,13 +262,6 @@ def main() -> None:
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
     health_pre = _box_health()
-    if not _box_health_ok(health_pre):
-        print(
-            f"WARNING: box health check failed pre-run ({health_pre}; "
-            f"thresholds {HEALTH_THRESHOLDS}) — walls from this record are "
-            "not comparable with other records (box_health_ok=false)",
-            file=sys.stderr,
-        )
     registry = load_all()
     spark = get_spark("bench")
     # warm-up: touch the session + parquet footers once
@@ -320,9 +285,7 @@ def main() -> None:
         # the full first-pass wall, so the one-time cost stays visible
         "cold_total": round(sum(rs[0]["wall_s"] for rs in spark_reps.values()), 3),
         "box_health_pre": health_pre,
-        "box_health_post": (health_post := _box_health()),
-        "box_health_ok": _box_health_ok(health_pre, health_post),
-        "box_health_thresholds": HEALTH_THRESHOLDS,
+        "box_health_post": _box_health(),
     }
     # Warm-time each query's DuckDB oracle on the same tables, on as many
     # threads as Spark has cores, for the paired regime ratio (BASELINE.md §3).
@@ -330,8 +293,7 @@ def main() -> None:
 
     con = duckdb.connect()
     con.execute(f"SET threads={spark.sparkContext.defaultParallelism}")
-    for t in ["region", "nation", "customer", "supplier", "part", "orders",
-              "lineitem", "events", "documents", "embeddings"]:
+    for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     duck: dict[str, float] = {}
     duck_runs: dict[str, list[float]] = {}
@@ -379,7 +341,6 @@ def main() -> None:
         "timing_rule": out["timing_rule"],
         "query_set_sha": out["query_set_sha"],
         "cold_total": out["cold_total"],
-        "box_health_ok": out["box_health_ok"],
         "detail": detail,
         "duckdb_total": out["duckdb_total"],
         "paired_spark_total": out["paired_spark_total"],

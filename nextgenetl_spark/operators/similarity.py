@@ -8,7 +8,8 @@ with their automatic knobs (√N cells, nprobe = ceil(cells/4), shortlist =
 (IVF_DEFAULT_CONFIRM.json), 0.965 / 0.997 for IVF-PQ
 (PQ_AUTO_SHORTLIST.json). ``pq_topk`` compresses without pruning.
 Hyperplane LSH (``lsh_topk``) is a cheap bucket join, but its recall@10
-measured only 0.15-0.41 (ANN_RECALL.json).
+measured only 0.15-0.41 single-probe and 0.33-0.75 with two multiprobe
+flips (ANN_RECALL.json).
 
 The searches share one copy of each step: ``_topn`` (the per-query top-n
 under (score desc, id asc): final top-k, ADC shortlist, cell probe),
@@ -355,22 +356,51 @@ def lsh_topk(
     corpus: DataFrame,
     planes: list[list[float]],
     k: int = 5,
+    nprobe_flips: int = 0,
     query_id: str = "query_id",
     corpus_id: str = "neighbor_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Approximate top-k: bucket both sides by hyperplane signature and only
-    score within matching buckets. Recall < 1.0 by construction; used when
-    the corpus is too large to brute-force per query. The bucket join
-    shuffles on the signature, so each task scores one bucket. MEASURED
-    recall@10 falls as planes rise (0.41/0.27/0.15 at 8/12/16 planes on
-    the 40k corpus — buckets shrink 2^-planes); prefer lsh_topk_multiprobe,
-    which roughly doubles each of those (ANN_RECALL.json, BASELINE §4.2)."""
-    sig = lambda df, idc: df.select(
-        F.col(idc), F.col(vec_col), hyperplane_signature(F.col(vec_col), planes).alias("bucket")
+    """Approximate top-k by hyperplane LSH: bucket both sides by sign
+    signature and only score within matching buckets. Recall < 1.0 by
+    construction; used when the corpus is too large to brute-force per
+    query. The bucket join shuffles on the signature, so each task scores
+    one bucket.
+
+    Multiprobe: besides its own bucket, each query probes the buckets
+    reached by flipping its ``nprobe_flips`` LOWEST-MARGIN sign bits (the
+    planes it was closest to, where a true neighbor most likely landed on
+    the other side). It buys the recall of several hash tables for a small
+    query-side fan-out (1 + flips buckets per query); the corpus is still
+    bucketed once, so the join stays one bucket-keyed shuffle. MEASURED
+    recall@10 (tools/ann_recall.py, 40k corpus): 0.41/0.27/0.15 at 8/12/16
+    planes with no flips, 0.75/0.53/0.33 with 2 flips, for ~1.5× the wall;
+    see BASELINE §4.2 and ANN_RECALL.json.
+
+    A (query, corpus row) pair joins at most once: the probed buckets are
+    distinct (the base bucket and its XORs with distinct powers of two) and
+    each corpus row lands in one bucket."""
+    dots = _plane_dots(F.col(vec_col), planes)
+    margins = [F.struct(F.abs(d).alias("m"), F.lit(i).alias("i")) for i, d in enumerate(dots)]
+    base = _signature(dots)
+    # lowest-|margin| planes first; flip each of the first nprobe_flips
+    flips = F.slice(F.array_sort(F.array(*margins)), 1, nprobe_flips)
+    probes = F.array_union(
+        F.array(base),
+        # 2^i as pow (shiftleft needs a literal bit count); i <= len(planes) so
+        # the double → int cast is exact
+        F.transform(
+            flips, lambda s: base.bitwiseXOR(F.pow(F.lit(2.0), s["i"].cast("double")).cast("int"))
+        ),
     )
-    q = sig(queries, query_id).withColumnRenamed(vec_col, "qv")
-    c = sig(corpus, corpus_id).withColumnRenamed(vec_col, "cv")
+    q = queries.select(
+        F.col(query_id), F.col(vec_col).alias("qv"), F.explode(probes).alias("bucket")
+    )
+    c = corpus.select(
+        F.col(corpus_id),
+        F.col(vec_col).alias("cv"),
+        hyperplane_signature(F.col(vec_col), planes).alias("bucket"),
+    )
     scored = (
         q.join(c, "bucket")
         .filter(F.col(query_id) != F.col(corpus_id))
@@ -773,57 +803,6 @@ def ivf_query_index(
     return _ivf_search(
         queries, cents, cells, nprobe, k, query_id, corpus_id, vec_col, "neighbor_id", broadcast_probe=True
     )
-
-
-def lsh_topk_multiprobe(
-    queries: DataFrame,
-    corpus: DataFrame,
-    planes: list[list[float]],
-    k: int = 5,
-    nprobe_flips: int = 2,
-    query_id: str = "query_id",
-    corpus_id: str = "neighbor_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Multiprobe hyperplane LSH: besides its own bucket, each query probes
-    the buckets reached by flipping its ``nprobe_flips`` LOWEST-MARGIN sign
-    bits (the planes it was closest to — where a true neighbor most likely
-    landed on the other side). Standard recall booster: multiprobe trades a
-    small fan-out (1 + flips buckets per query) for the recall that would
-    otherwise need many independent hash tables. The corpus is still
-    bucketed ONCE; only the query side explodes, so the join stays one
-    bucket-keyed shuffle. MEASURED recall@10 (tools/ann_recall.py, 40k
-    corpus): ~2× the single-probe recall at every plane count — 0.75 vs
-    0.41 (8 planes), 0.53 vs 0.27 (12), 0.33 vs 0.15 (16) — for ~1.5× the
-    wall; see BASELINE §4.2 and ANN_RECALL.json."""
-    dots = _plane_dots(F.col(vec_col), planes)
-    margins = [F.struct(F.abs(d).alias("m"), F.lit(i).alias("i")) for i, d in enumerate(dots)]
-    base = _signature(dots)
-    # lowest-|margin| planes first; flip each of the first nprobe_flips
-    flips = F.slice(F.array_sort(F.array(*margins)), 1, nprobe_flips)
-    probes = F.array_union(
-        F.array(base),
-        # 2^i as pow (shiftleft needs a literal bit count); i <= len(planes) so
-        # the double → int cast is exact
-        F.transform(
-            flips, lambda s: base.bitwiseXOR(F.pow(F.lit(2.0), s["i"].cast("double")).cast("int"))
-        ),
-    )
-    q = queries.select(
-        F.col(query_id), F.col(vec_col).alias("qv"), F.explode(probes).alias("bucket")
-    )
-    c = corpus.select(
-        F.col(corpus_id),
-        F.col(vec_col).alias("cv"),
-        hyperplane_signature(F.col(vec_col), planes).alias("bucket"),
-    )
-    scored = (
-        q.join(c, "bucket")
-        .filter(F.col(query_id) != F.col(corpus_id))
-        .select(query_id, corpus_id, _sim("qv", "cv"))
-        .distinct()  # a neighbor can appear via several probed buckets
-    )
-    return _topn(scored, query_id, "sim", corpus_id, k)
 
 
 def append_to_ivf_index(

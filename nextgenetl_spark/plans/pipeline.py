@@ -31,12 +31,11 @@ Spark design:
   that step's inputs, since the view is a plan over them. A step waits for
   every earlier step that writes a table it reads, reads or writes a table
   it writes (so same-dest steps keep config order), or shares an export
-  directory with it. A builder step, a ``force_skew_join`` step (it flips a
-  session-global conf) and a step reading a name the pipeline cannot name
-  (directly or through a lazy step) are barriers: they wait for every earlier step, and every later step
-  waits for them. Ready steps run concurrently (``overlap.overlap_pool``);
-  each finished step's output is registered on the calling thread before
-  its dependents are submitted.
+  directory with it. A builder step and a step reading a name the pipeline
+  cannot name (directly or through a lazy step) are barriers: they wait for
+  every earlier step, and every later step waits for them. Ready steps run
+  concurrently (``overlap.overlap_pool``); each finished step's output is
+  registered on the calling thread before its dependents are submitted.
 """
 
 from __future__ import annotations
@@ -131,6 +130,7 @@ class Pipeline:
 
     def run_step(self, step: dict) -> DataFrame:
         """Run one step and register its output under its ``dest``."""
+        _check_step(step)
         df = self._step_output(step)
         self.register(step["dest"], df)
         return df
@@ -226,15 +226,6 @@ class Pipeline:
         else:
             raise ValueError(f"step '{name}' needs 'sql', 'builder' or 'salted_join'")
 
-        if step.get("force_skew_join"):
-            # Opt-in AQE escalation for join-under-agg shapes where the
-            # default skew-join declines to fire (measured in BASELINE
-            # §4.4): binds at this step's ACTION, so it requires
-            # materialize — a lazy step would execute under whatever conf
-            # holds at the eventual consumer's action time.
-            if not step.get("materialize"):
-                raise ValueError(f"step '{name}': force_skew_join requires materialize")
-
         if step.get("cluster_by"):
             # CLUSTER BY rewrite (reference: common_etl/support.py:1148-1160):
             # co-locate + order rows on the cluster keys so downstream joins
@@ -254,27 +245,7 @@ class Pipeline:
                 raise ValueError(f"step '{name}': materialize=true requires a warehouse dir")
             path = os.path.join(self.warehouse, dest)
             mode = step.get("mode", "overwrite")
-            if step.get("force_skew_join"):
-                # NOTE: the override is SESSION-GLOBAL for the duration of
-                # this write — Spark has no per-query conf scope, so any
-                # concurrent query on the same SparkSession also runs with
-                # skew-join forced (round-6 ADVICE). ``run`` makes this step
-                # a barrier, so it runs alone: no other step of the pipeline
-                # runs a job during this write.
-                # Restore by UNSETTING when the key was absent, so we never
-                # convert "unset" into an explicit "false".
-                key = "spark.sql.adaptive.forceOptimizeSkewedJoin"
-                prev = self.spark.conf.get(key, None)
-                self.spark.conf.set(key, "true")
-                try:
-                    df.write.mode(mode).parquet(path)
-                finally:
-                    if prev is None:
-                        self.spark.conf.unset(key)
-                    else:
-                        self.spark.conf.set(key, prev)
-            else:
-                df.write.mode(mode).parquet(path)
+            df.write.mode(mode).parquet(path)
             df = read_parquet_as(self.spark, path, df.schema if mode == "overwrite" else None)
             if step.get("skip_if_fresh"):
                 from nextgenetl_spark.staging import atomic_write
@@ -343,7 +314,6 @@ class Pipeline:
         known = {n.lower() for n in self.tables}
         reads: list[set[str] | None] = []
         writes: list[set[str]] = []
-        barrier: list[bool] = []
         deps: list[set[int]] = []
         for j, step in enumerate(plan):
             names = known | {str(s.get("dest")).lower() for s in plan[:j]}
@@ -358,11 +328,10 @@ class Pipeline:
                 inputs = None
             reads.append(inputs)
             writes.append({str(step[k]).lower() for k in ("dest", "export_jsonl", "export_csv") if step.get(k)})
-            barrier.append(inputs is None or bool(step.get("force_skew_join")))
             deps.append({
                 i for i in range(j)
-                if barrier[j] or barrier[i] or (inputs or set()) & writes[i]
-                or writes[j] & ((reads[i] or set()) | writes[i])
+                if inputs is None or reads[i] is None or inputs & writes[i]
+                or writes[j] & (reads[i] | writes[i])
             })
         return deps
 
@@ -385,6 +354,8 @@ class Pipeline:
         self.params = {**config.get("params", {}), **self.params}
         selected = steps if steps is not None else config.get("run_steps")
         plan = [s for s in config["steps"] if selected is None or _step_name(s) in selected]
+        for step in plan:
+            _check_step(step)
         deps = self._step_dag(plan)
         done: dict[int, DataFrame] = {}
         running: dict[Future, int] = {}
@@ -405,3 +376,13 @@ class Pipeline:
 
 def _step_name(step: dict) -> str:
     return step.get("name", step.get("dest", "<unnamed>"))
+
+
+def _check_step(step: dict) -> None:
+    """Fail a step that sets a removed key, before any step runs, rather
+    than run it without what the key asked for."""
+    if "force_skew_join" in step:
+        raise ValueError(
+            f"step '{_step_name(step)}': 'force_skew_join' is no longer supported; "
+            "salt a skewed join with a salted_join step"
+        )

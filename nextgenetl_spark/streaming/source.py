@@ -65,9 +65,11 @@ def _file_stream(spark: SparkSession, sf_dir: str, table: str, schema: T.StructT
     micro-batch unit; ``run_bounded`` runs the stream as a bounded replay."""
     import hashlib
     import os
+    import tempfile
 
     src = os.path.abspath(f"{sf_dir}/{table}.parquet")
-    stage = f"/tmp/nextgenetl_streams/{hashlib.md5(src.encode()).hexdigest()[:12]}"
+    digest = hashlib.md5(src.encode()).hexdigest()[:12]
+    stage = os.path.join(tempfile.gettempdir(), f"ngetl_stream_{digest}")
     _stage_symlinks(src, stage)
     return spark.readStream.schema(schema).parquet(stage)
 

@@ -626,16 +626,17 @@ def stream_lake_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     would double every count and the oracle compare would fail — the
     exactly-once property is inside the gate, not just asserted in a
     test."""
-    import hashlib
-    import shutil
+    import os
+    import tempfile
 
     from nextgenetl_spark.streaming.sink import exactly_once_parquet_sink, run_stream_to_lake
     from nextgenetl_spark.streaming.source import events_stream
 
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    lake = f"/tmp/nextgenetl_lake/{tag}/events"
-    ckpt = f"/tmp/nextgenetl_lake/{tag}/_ckpt"
-    shutil.rmtree(f"/tmp/nextgenetl_lake/{tag}", ignore_errors=True)
+    # a lake per call: the returned DataFrame reads it, so no later call
+    # may reuse or remove it
+    root = tempfile.mkdtemp(prefix="ngetl_lake_")
+    lake = os.path.join(root, "events")
+    ckpt = os.path.join(root, "_ckpt")
 
     ev = events_stream(spark, sf_dir).select("event_id", "ts", "user_id", "event_type", "value")
     run_stream_to_lake(ev, lake, ckpt, partition_cols=["event_type"])

@@ -1,12 +1,11 @@
 """File-format reader workloads (S4/S5): deterministic GTF and MAF fixture
-files are rendered from the `part` table into /tmp (atomic, idempotent),
-read back through the real readers, and oracle-checked against the same
-derivation computed directly in SQL — so the parsers themselves sit inside
-the driver's correctness gate, not just pytest."""
+files are rendered from the `part` table into a staged dir (atomic,
+idempotent), read back through the real readers, and oracle-checked against
+the same derivation computed directly in SQL — so the parsers themselves
+sit inside the driver's correctness gate, not just pytest."""
 
 from __future__ import annotations
 
-import hashlib
 import os
 import tempfile
 
@@ -15,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nextgenetl_spark.catalog import read_parquet_cached
-from nextgenetl_spark.staging import atomic_write
+from nextgenetl_spark.staging import atomic_write, staged
 
 from nextgenetl_spark.sources.gtf import read_gtf
 from nextgenetl_spark.sources.maf import read_maf_concat
@@ -26,16 +25,10 @@ CALLER_SETS = ["muse", "muse;mutect2", "mutect2;varscan2*", "muse;mutect2;pindel
 
 
 def _fixture_dir(sf_dir: str, table: str = "part") -> str:
-    # Keyed by CONTENT fingerprint of the table the fixtures derive from
-    # (part.parquet for every text fixture), not by path: regenerating
-    # testdata in place gets fresh fixtures instead of silently reusing the
-    # old corpus.
-    from nextgenetl_spark.staging import content_fingerprint
-
-    fp = content_fingerprint(os.path.join(sf_dir, f"{table}.parquet"))
-    d = f"/tmp/nextgenetl_fixtures/{fp}"
-    os.makedirs(d, exist_ok=True)
-    return d
+    """The staged dir of the fixtures derived from ``table``: new table
+    content or a package edit gets a new dir. Each fixture writer fills
+    its own file into it on first use."""
+    return staged("ngetl_fixtures", os.path.join(sf_dir, f"{table}.parquet"), lambda d: None)
 
 
 def _atomic_write(path: str, content: str) -> None:
@@ -350,22 +343,17 @@ def partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruned read, exactly like a real lake where the layout already exists,
     while an in-place regeneration of orders.parquet restages instead of
     silently serving the old lake."""
-    from nextgenetl_spark.staging import code_token, mark_complete, staged_dir
-
-    stage, complete = staged_dir(
+    stage = staged(
         "ngetl_part",
         os.path.join(sf_dir, "orders.parquet"),
-        code=code_token(partition_pruning),
-    )
-    if not complete:
-        o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-        (
-            o.withColumn("o_year", F.year("o_orderdate"))
+        lambda stage: (
+            spark.read.parquet(f"{sf_dir}/orders.parquet")
+            .withColumn("o_year", F.year("o_orderdate"))
             .write.mode("overwrite")
             .partitionBy("o_year")
             .parquet(stage)
-        )
-        mark_complete(stage)
+        ),
+    )
     po = read_parquet_cached(spark, stage)
     return (
         po.filter(F.col("o_year") == 1996)
@@ -563,15 +551,10 @@ def _time_tsv_path(sf_dir: str) -> str:
     """TSV with the full temporal column family rendered from events:
     DATE ('YYYY-MM-DD'), TIME ('HH:MM:SS' — the reference type Spark lacks),
     TIMESTAMP ('YYYY-MM-DD HH:MM:SS', second precision)."""
-    # this fixture derives from EVENTS (the dir key covers part.parquet),
-    # so the file name carries events' own content fingerprint
-    from nextgenetl_spark.staging import content_fingerprint
-
-    efp = content_fingerprint(os.path.join(sf_dir, "events.parquet"))
-    path = os.path.join(_fixture_dir(sf_dir), f"temporal_{efp}.tsv")
+    path = os.path.join(_fixture_dir(sf_dir, "events"), "temporal.tsv")
     if os.path.exists(path):
-        # the fingerprint-keyed file already exists — skip the full events
-        # scan + driver-side fetchall (this runs inside the timed workload)
+        # skip the full events scan + driver-side fetchall (this runs
+        # inside the timed workload)
         return path
     con = duckdb.connect()
     rows = con.sql(
@@ -611,7 +594,7 @@ def time_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nextgenetl_spark.sources.tsv import read_tsv
 
     tsv = _time_tsv_path(sf_dir)
-    schema_json = os.path.join(_fixture_dir(sf_dir), "schema_temporal.json")
+    schema_json = os.path.join(_fixture_dir(sf_dir, "events"), "schema_temporal.json")
     df = read_tsv(spark, tsv, schema_path=schema_json)
     types = load_schema_types(schema_json)
     assert types == {

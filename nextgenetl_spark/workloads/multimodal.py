@@ -141,27 +141,19 @@ def _staged_phash_fps(spark: SparkSession, sf_dir: str, pixels: bool) -> DataFra
         perceptual_hash,
         perceptual_hash_pixels,
     )
-    from nextgenetl_spark.staging import code_token, mark_complete, staged_dir
+    from nextgenetl_spark.staging import staged
 
-    name = "ngetl_phash_pixels" if pixels else "ngetl_phash_hist"
-    stage, complete = staged_dir(
-        name,
-        os.path.join(sf_dir, "documents.parquet"),
-        # round-5 ADVICE: key the cache on the generating code too — an
-        # edit to the hash operators or the variant construction must
-        # invalidate staged fingerprints, not silently serve stale ones
-        code=code_token(perceptual_hash, perceptual_hash_pixels, _phash_variant_corpus),
-    )
-    path = os.path.join(stage, "fps.parquet")
-    if not complete:
+    def build(stage: str) -> None:
         corpus = _phash_variant_corpus(spark, sf_dir, pixels)
         if pixels:
             fps = perceptual_hash_pixels(attach_image_blob(corpus))
         else:
             fps = perceptual_hash(attach_blob(corpus))
-        fps.write.mode("overwrite").parquet(path)
-        mark_complete(stage)
-    return read_parquet_cached(spark, path)
+        fps.write.mode("overwrite").parquet(os.path.join(stage, "fps.parquet"))
+
+    name = "ngetl_phash_pixels" if pixels else "ngetl_phash_hist"
+    stage = staged(name, os.path.join(sf_dir, "documents.parquet"), build)
+    return read_parquet_cached(spark, os.path.join(stage, "fps.parquet"))
 
 
 @workload(

@@ -2189,12 +2189,9 @@ def flatten_merged_single(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from nextgenetl_spark.flatten import FlattenConfig, flatten
-    from nextgenetl_spark.staging import code_token, mark_complete, staged_dir
+    from nextgenetl_spark.staging import staged
 
-    stage, complete = staged_dir(
-        "ngetl_nested_fix", sf_dir, code=code_token(flatten_merged_single)
-    )
-    if not complete:
+    def build(stage: str) -> None:
         o = load(spark, sf_dir, "orders")
         c = load(spark, sf_dir, "customer")
         li = load(spark, sf_dir, "lineitem")
@@ -2228,7 +2225,8 @@ def flatten_merged_single(spark: SparkSession, sf_dir: str) -> DataFrame:
             .write.mode("overwrite")
             .parquet(os.path.join(stage, "nested.parquet"))
         )
-        mark_complete(stage)
+
+    stage = staged("ngetl_nested_fix", sf_dir, build)
     nested = read_parquet_cached(spark, os.path.join(stage, "nested.parquet"))
     cfg = FlattenConfig(
         base="orders",
@@ -2350,12 +2348,9 @@ def flatten_deep_single(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from nextgenetl_spark.flatten import FlattenConfig, flatten
-    from nextgenetl_spark.staging import code_token, mark_complete, staged_dir
+    from nextgenetl_spark.staging import staged
 
-    stage, complete = staged_dir(
-        "ngetl_nested_deep", sf_dir, code=code_token(flatten_deep_single)
-    )
-    if not complete:
+    def build(stage: str) -> None:
         o = load(spark, sf_dir, "orders")
         c = load(spark, sf_dir, "customer")
         n = load(spark, sf_dir, "nation")
@@ -2396,7 +2391,8 @@ def flatten_deep_single(spark: SparkSession, sf_dir: str) -> DataFrame:
             .write.mode("overwrite")
             .parquet(os.path.join(stage, "nested.parquet"))
         )
-        mark_complete(stage)
+
+    stage = staged("ngetl_nested_deep", sf_dir, build)
     nested = read_parquet_cached(spark, os.path.join(stage, "nested.parquet"))
     cfg = FlattenConfig(
         base="orders",

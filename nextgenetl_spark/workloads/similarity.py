@@ -11,10 +11,6 @@ from nextgenetl_spark.operators.similarity import (
     cosine_topk_gemm,
     lsh_topk,
 )
-# the staged index builds below key their cache on this whole module's
-# source (code_token(S)): an edit to any function a build runs, private
-# helpers included, rebuilds the index instead of serving a stale one
-from nextgenetl_spark.operators import similarity as S
 from nextgenetl_spark.workloads import workload
 
 
@@ -490,17 +486,14 @@ def stream_ann_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from nextgenetl_spark.operators.similarity import build_ivf_index, ivf_query_index
-    from nextgenetl_spark.staging import code_token, mark_complete, staged_dir
+    from nextgenetl_spark.staging import staged
     from nextgenetl_spark.streaming.source import embeddings_stream, run_bounded
 
-    idx, complete = staged_dir(
+    idx = staged(
         "ngetl_ivf",
         os.path.join(sf_dir, "embeddings.parquet"),
-        code=code_token(S),
+        lambda idx: build_ivf_index(load(spark, sf_dir, "embeddings"), idx, k_centroids=16, refine_iters=1),
     )
-    if not complete:
-        build_ivf_index(load(spark, sf_dir, "embeddings"), idx, k_centroids=16, refine_iters=1)
-        mark_complete(idx)
 
     # keyed by batch id: foreachBatch is at-least-once, so a re-delivered
     # batch replaces its rows instead of adding them a second time
@@ -528,8 +521,8 @@ def stream_ann_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @workload("ann_lsh_multiprobe", oracle=_lsh_values_oracle("multi"))
 def ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multiprobe hyperplane LSH (operators/similarity.py
-    lsh_topk_multiprobe): each query also probes the buckets across its two
+    """Multiprobe hyperplane LSH (operators/similarity.py lsh_topk with
+    nprobe_flips=2): each query also probes the buckets across its two
     lowest-margin hyperplanes — the recall of several hash tables for the
     cost of a small query-side fan-out, with the corpus still bucketed
     once. Cross-engine check: independently-computed literal-VALUES oracle
@@ -538,14 +531,12 @@ def ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall >= single-probe at any sf."""
     import random
 
-    from nextgenetl_spark.operators.similarity import lsh_topk_multiprobe
-
     rng = random.Random(42)
     planes = [[rng.gauss(0, 1) for _ in range(64)] for _ in range(4)]
     emb = load(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 10).select(F.col("vec_id").alias("query_id"), "embedding")
     c = emb.select(F.col("vec_id").alias("neighbor_id"), "embedding")
-    return lsh_topk_multiprobe(q, c, planes, k=5, nprobe_flips=2).select(
+    return lsh_topk(q, c, planes, k=5, nprobe_flips=2).select(
         "query_id", "neighbor_id", "sim", "rank"
     )
 
@@ -1007,25 +998,15 @@ def hybrid_rrf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from nextgenetl_spark.operators.similarity import build_ivfpq_index, ivfpq_query_index
     from nextgenetl_spark.operators.textstats import rrf_fuse
-    from nextgenetl_spark.staging import code_token, mark_complete, staged_dir
+    from nextgenetl_spark.staging import staged
 
     emb = load(spark, sf_dir, "embeddings")
     docs = load(spark, sf_dir, "documents")
-
-    # code_token includes THIS workload fn so the call-site build knobs
-    # (k_centroids/m/ks/...) key the cache too — tokening only
-    # build_ivfpq_index would serve a stale index after a knob edit here
-    # (self-review r10; the partition_pruning staging discipline)
-    idx, complete = staged_dir(
+    idx = staged(
         "ngetl_ivfpq_hybrid",
         os.path.join(sf_dir, "embeddings.parquet"),
-        code=code_token(S, hybrid_rrf_persisted),
+        lambda idx: build_ivfpq_index(emb, idx, k_centroids=16, refine_iters=1, m=8, ks=16, train_iters=1),
     )
-    if not complete:
-        build_ivfpq_index(
-            emb, idx, k_centroids=16, refine_iters=1, m=8, ks=16, train_iters=1
-        )
-        mark_complete(idx)
 
     q_emb = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
@@ -1065,8 +1046,8 @@ def ann_ivfpq_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     frozen-artifact encode equivalence (appended codes == what the build
     would write) is pinned separately by
     tests/test_dedup_similarity.py::test_ivfpq_append_matches_frozen_encode.
-    Build+append are staged content-fingerprinted and keyed on this fn's
-    source (append is NOT idempotent — pure partition append)."""
+    Build+append are staged as one artifact (append is NOT idempotent —
+    pure partition append)."""
     import os
 
     from nextgenetl_spark.operators.similarity import (
@@ -1074,21 +1055,18 @@ def ann_ivfpq_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         build_ivfpq_index,
         ivfpq_query_index,
     )
-    from nextgenetl_spark.staging import code_token, mark_complete, staged_dir
+    from nextgenetl_spark.staging import staged
 
     emb = load(spark, sf_dir, "embeddings")
-    idx, complete = staged_dir(
-        "ngetl_ivfpq_append",
-        os.path.join(sf_dir, "embeddings.parquet"),
-        code=code_token(S, ann_ivfpq_append),
-    )
-    if not complete:
+
+    def build(idx: str) -> None:
         build_ivfpq_index(
             emb.filter(F.col("vec_id") >= 25), idx,
             k_centroids=16, refine_iters=1, m=8, ks=16, train_iters=1,
         )
         append_to_ivfpq_index(spark, idx, emb.filter(F.col("vec_id") < 25))
-        mark_complete(idx)
+
+    idx = staged("ngetl_ivfpq_append", os.path.join(sf_dir, "embeddings.parquet"), build)
 
     q = emb.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), "embedding"
@@ -1125,7 +1103,7 @@ def stream_ivfpq_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     and streams the new batch (vec_id < 25) into the copy, so the pure
     append is exactly-once per run with no duplicate hazard and the stream
     is REAL on every run (the run dir persists for the returned DataFrame;
-    /tmp-lifecycle, a few MB at test sf). Full-probe + unbounded-shortlist
+    temp-dir lifecycle, a few MB at test sf). Full-probe + unbounded-shortlist
     query over the maintained copy degenerates to exact brute force over
     history ∪ streamed batch — the plain SQL oracle value-checks the whole
     streamed maintenance path (a dropped/duplicated micro-batch row breaks
@@ -1139,24 +1117,21 @@ def stream_ivfpq_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         build_ivfpq_index,
         ivfpq_query_index,
     )
-    from nextgenetl_spark.staging import code_token, mark_complete, staged_dir
+    from nextgenetl_spark.staging import staged
     from nextgenetl_spark.streaming.source import embeddings_stream, run_bounded
 
     emb = load(spark, sf_dir, "embeddings")
-    base, complete = staged_dir(
+    base = staged(
         "ngetl_ivfpq_hist",
         os.path.join(sf_dir, "embeddings.parquet"),
-        code=code_token(S, stream_ivfpq_ingest),
-    )
-    if not complete:
-        build_ivfpq_index(
+        lambda base: build_ivfpq_index(
             emb.filter(F.col("vec_id") >= 25), base,
             k_centroids=16, refine_iters=1, m=8, ks=16, train_iters=1,
-        )
-        mark_complete(base)
+        ),
+    )
 
     # reap stale per-run copies (>1h old) so repeated bench/oracle sweeps
-    # cannot fill /tmp; live concurrent runs are younger and untouched
+    # cannot fill the temp dir; live concurrent runs are younger and untouched
     import glob as _glob
     import time as _time
 

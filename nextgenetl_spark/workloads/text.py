@@ -29,15 +29,9 @@ def _staged_md5_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     values stay cross-engine-verified end-to-end."""
     import os
 
-    from nextgenetl_spark.staging import code_token, mark_complete, staged_dir
+    from nextgenetl_spark.staging import staged
 
-    stage, complete = staged_dir(
-        "ngetl_md5_scan",
-        os.path.join(sf_dir, "documents.parquet"),
-        code=code_token(_staged_md5_scan, TS.tokens),
-    )
-    path = os.path.join(stage, "scan.parquet")
-    if not complete:
+    def build(stage: str) -> None:
         d = load(spark, sf_dir, "documents")
         tok_md5 = F.transform(
             F.array_distinct(TS.tokens("text")), lambda t: F.md5(t)
@@ -52,9 +46,10 @@ def _staged_md5_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         shm = F.array_distinct(F.transform(D.shingles("text", 3), lambda s: F.md5(s)))
         d.select("doc_id", toks.alias("toks"), shm.alias("shm")).write.mode(
             "overwrite"
-        ).parquet(path)
-        mark_complete(stage)
-    return read_parquet_cached(spark, path)
+        ).parquet(os.path.join(stage, "scan.parquet"))
+
+    stage = staged("ngetl_md5_scan", os.path.join(sf_dir, "documents.parquet"), build)
+    return read_parquet_cached(spark, os.path.join(stage, "scan.parquet"))
 
 
 @workload(
@@ -2055,33 +2050,18 @@ def incremental_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     touches only candidates."""
     import os
 
-    from nextgenetl_spark.staging import mark_complete, staged_dir
+    from nextgenetl_spark.staging import staged
 
     d = load(spark, sf_dir, "documents")
     hist = d.filter(F.col("doc_id") < 400)
     new = d.filter(F.col("doc_id") >= 400)
-    # Cache key = CONTENT fingerprint (size + mtime of every source data
-    # file — staging.content_fingerprint), not path alone: a regenerated
-    # documents.parquet at the same path gets a fresh index instead of
-    # silently probing a stale one. Build once per corpus release (the
-    # capability's real cost shape — same cached-staging treatment as the
-    # partition_pruning demo), so repeat runs measure the PROBE, not a
-    # rebuild. The _COMPLETE marker is written only after
-    # build_minhash_index returns, so a crashed partial build is rebuilt,
-    # never probed.
-    from nextgenetl_spark.staging import code_token
-
-    index_dir, complete = staged_dir(
+    # Built once per corpus release (the capability's real cost shape), so
+    # repeat runs measure the PROBE, not a rebuild.
+    index_dir = staged(
         "ngetl_minhash_idx",
         os.path.join(sf_dir, "documents.parquet"),
-        # the helper is a transitive dependency the index bakes in: hashing
-        # only build_minhash_index would keep serving a pre-edit staged
-        # index after a helper change (r11 ADVICE #3)
-        code=code_token(D.build_minhash_index, D._md5_banded_and_shingles),
+        lambda index_dir: D.build_minhash_index(index_dir, hist),
     )
-    if not complete:
-        D.build_minhash_index(index_dir, hist)
-        mark_complete(index_dir)
     return D.query_minhash_index(spark, index_dir, new, threshold=0.5)
 
 

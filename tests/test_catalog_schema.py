@@ -8,6 +8,7 @@ no scan, no Spark job for the metadata itself.
 
 from __future__ import annotations
 
+import glob
 import os
 import shutil
 
@@ -475,35 +476,50 @@ def test_residual_cleanup_ignores_temp_view_shadow(spark, tmp_path):
         spark.catalog.dropTempView(name)
 
 
-def test_staging_fingerprint_tracks_content(tmp_path):
-    """Regenerating a source in place must change the cache key; an
-    incomplete build (no _COMPLETE marker) must report not-complete."""
-    from nextgenetl_spark.staging import content_fingerprint, mark_complete, staged_dir
+def _staging_in(tmp_path, monkeypatch, code_key="aaaa1111"):
+    """The staging module with its temp dir under ``tmp_path`` and its
+    package code key pinned."""
+    import tempfile
+
+    from nextgenetl_spark import staging
+
+    (tmp_path / "tmp").mkdir(exist_ok=True)
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "tmp"))
+    monkeypatch.setattr(staging, "_code_key", lambda: code_key)
+    return staging
+
+
+def test_staging_fingerprint_tracks_content(tmp_path, monkeypatch):
+    """``build`` runs once and is skipped while its dir is complete;
+    regenerating the source in place gets a new dir, and completing it
+    reaps the superseded build of the same source, never another
+    source's."""
+    from nextgenetl_spark.staging import content_fingerprint
+
+    staging = _staging_in(tmp_path, monkeypatch)
+    built = []
+
+    def build(d):
+        built.append(d)
+        os.makedirs(d, exist_ok=True)
 
     src = tmp_path / "t.parquet"
     src.write_bytes(b"v1")
     fp1 = content_fingerprint(str(src))
-    d1, complete = staged_dir("ngetl_test_stage", str(src))
-    assert not complete
-    mark_complete(d1)
-    _, complete = staged_dir("ngetl_test_stage", str(src))
-    assert complete
+    d1 = staging.staged("ngetl_test_stage", str(src), build)
+    assert built == [d1] and os.path.exists(os.path.join(d1, "_COMPLETE"))
+    assert staging.staged("ngetl_test_stage", str(src), build) == d1
+    assert built == [d1]
+    assert os.path.basename(d1).endswith(f"_{fp1}-aaaa1111")
 
-    src.write_bytes(b"v2-longer")  # in-place regeneration
-    fp2 = content_fingerprint(str(src))
-    assert fp1 != fp2
-    d2, complete = staged_dir("ngetl_test_stage", str(src))
-    assert d2 != d1 and not complete
-
-    # an unrelated source's completed cache must survive the reap below
     other = tmp_path / "other.parquet"
     other.write_bytes(b"other")
-    d_other, _ = staged_dir("ngetl_test_stage", str(other))
-    mark_complete(d_other)
+    d_other = staging.staged("ngetl_test_stage", str(other), build)
 
-    # completing the new build reaps the superseded fingerprint of the
-    # SAME source (bounded disk) but never another source's cache
-    mark_complete(d2)
+    src.write_bytes(b"v2-longer")  # in-place regeneration
+    assert content_fingerprint(str(src)) != fp1
+    d2 = staging.staged("ngetl_test_stage", str(src), build)
+    assert d2 != d1 and built == [d1, d_other, d2]
     assert not os.path.exists(d1), "superseded build not reaped"
     assert os.path.exists(d_other), "different source's cache was reaped"
 
@@ -516,111 +532,101 @@ def test_staging_fingerprint_tracks_content(tmp_path):
     (dsrc / "part-1.parquet").write_bytes(b"b")
     assert content_fingerprint(str(dsrc)) != fp3
 
-    shutil.rmtree(d2, ignore_errors=True)
-    shutil.rmtree(d_other, ignore_errors=True)
 
-
-def test_staging_code_token_invalidates_on_impl_change(tmp_path):
-    """Round-5 ADVICE: a staged artifact keyed on input content alone
-    silently serves stale results after the GENERATING CODE changes. The
-    code token (hash of the operator source) must fold into the cache key.
-    Completing a build under a new token leaves the old one in place: it
-    may be another checkout's live build of the same source."""
-    from nextgenetl_spark.staging import code_token, mark_complete, staged_dir
-
+def test_staging_code_token_invalidates_on_impl_change(tmp_path, monkeypatch):
+    """A staged artifact keyed on input content alone would serve stale
+    results after the generating code changes: another package code key
+    gets a new dir, and completing it leaves the old one in place (it may
+    be another checkout's live build of the same source)."""
+    staging = _staging_in(tmp_path, monkeypatch, "aaaa1111")
     src = tmp_path / "t.parquet"
     src.write_bytes(b"v1")
+    d1 = staging.staged("ngetl_test_code", str(src), lambda d: None)
 
-    def impl_v1(x):
-        return x + 1
-
-    def impl_v2(x):
-        return x + 2
-
-    t1, t2 = code_token(impl_v1), code_token(impl_v2)
-    assert t1 != t2
-    # token is stable across calls for the same source
-    assert code_token(impl_v1) == t1
-
-    d1, complete = staged_dir("ngetl_test_code", str(src), code=t1)
-    assert not complete
-    mark_complete(d1)
-    _, complete = staged_dir("ngetl_test_code", str(src), code=t1)
-    assert complete
-
-    # same data, new implementation → different dir, not complete
-    d2, complete = staged_dir("ngetl_test_code", str(src), code=t2)
-    assert d2 != d1 and not complete
-    mark_complete(d2)
-    assert os.path.exists(d1), "another code token's build was reaped"
-
-    shutil.rmtree(d1, ignore_errors=True)
-    shutil.rmtree(d2, ignore_errors=True)
+    monkeypatch.setattr(staging, "_code_key", lambda: "bbbb2222")
+    built = []
+    d2 = staging.staged("ngetl_test_code", str(src), built.append)
+    assert d2 != d1 and built == [d2]
+    assert os.path.exists(os.path.join(d1, "_COMPLETE")), "another code key's build was reaped"
 
 
-def test_staging_reaps_only_builds_of_its_own_code_token(tmp_path):
+def test_staging_reaps_only_builds_of_its_own_code_token(tmp_path, monkeypatch):
     """Two checkouts that share a temp dir stage the same source under
-    different code tokens. Each build must stay readable while the other
-    completes and rebuilds; an in-place rewrite of the source still reaps
-    the superseded build of the same token."""
-    from nextgenetl_spark.staging import mark_complete, staged_dir
-
+    different code keys. Each build stays readable while the other
+    completes; an in-place rewrite of the source still reaps the
+    superseded build of the same key."""
+    staging = _staging_in(tmp_path, monkeypatch, "aaaa1111")
     src = tmp_path / "t.parquet"
     src.write_bytes(b"v1")
-    a1, _ = staged_dir("ngetl_test_share", str(src), code="aaaa1111")
-    b1, _ = staged_dir("ngetl_test_share", str(src), code="bbbb2222")
-    mark_complete(a1)
-    open(os.path.join(a1, "part-0.parquet"), "w").close()
-    mark_complete(b1)
-    mark_complete(a1)  # a rebuild by the first checkout
-    for d in (a1, b1):
-        assert staged_dir("ngetl_test_share", str(src), code=d.rsplit("-", 1)[1]) == (d, True)
+
+    def build(d):
+        os.makedirs(d, exist_ok=True)
+        open(os.path.join(d, "part-0.parquet"), "w").close()
+
+    a1 = staging.staged("ngetl_test_share", str(src), build)
+    monkeypatch.setattr(staging, "_code_key", lambda: "bbbb2222")
+    b1 = staging.staged("ngetl_test_share", str(src), build)
     assert os.path.exists(os.path.join(a1, "part-0.parquet"))
 
+    monkeypatch.setattr(staging, "_code_key", lambda: "aaaa1111")
     src.write_bytes(b"v2-longer")  # in-place regeneration
-    a2, complete = staged_dir("ngetl_test_share", str(src), code="aaaa1111")
-    assert a2 != a1 and not complete
-    mark_complete(a2)
-    assert not os.path.exists(a1), "superseded build of the same token not reaped"
-    assert os.path.exists(b1), "another code token's build was reaped"
-
-    for d in (a2, b1):
-        shutil.rmtree(d, ignore_errors=True)
+    a2 = staging.staged("ngetl_test_share", str(src), build)
+    assert a2 != a1
+    assert not os.path.exists(a1), "superseded build of the same key not reaped"
+    assert os.path.exists(os.path.join(b1, "_COMPLETE")), "another code key's build was reaped"
 
 
-def _exec_fn(src: str):
-    ns: dict = {}
-    exec(compile(src, "<round8-gen>", "exec"), ns)  # no retrievable source
-    return ns["f"]
+def test_staged_build_that_raises_leaves_no_marker(tmp_path, monkeypatch):
+    """A build that raises leaves its dir unmarked, so the next call
+    builds again instead of serving a partial artifact."""
+    import pytest
+
+    staging = _staging_in(tmp_path, monkeypatch)
+    src = tmp_path / "t.parquet"
+    src.write_bytes(b"v1")
+
+    def crash(d):
+        os.makedirs(d)
+        open(os.path.join(d, "partial"), "w").close()
+        raise OSError("injected build failure")
+
+    with pytest.raises(OSError, match="injected"):
+        staging.staged("ngetl_test_crash", str(src), crash)
+    (d,) = glob.glob(str(tmp_path / "tmp" / "ngetl_test_crash_*"))
+    assert not os.path.exists(os.path.join(d, "_COMPLETE"))
+    built = []
+    assert staging.staged("ngetl_test_crash", str(src), built.append) == d
+    assert built == [d] and os.path.exists(os.path.join(d, "_COMPLETE"))
 
 
-def test_code_token_fallback_distinguishes_constants_and_names():
-    from nextgenetl_spark.staging import code_token
+def test_fixture_dir_moves_with_the_code_key(tmp_path, monkeypatch):
+    """Fixtures are staged like every other artifact: an edit to the
+    package (another code key) gets a fresh fixture dir instead of the
+    fixtures an older generator wrote."""
+    from nextgenetl_spark.workloads.files import _fixture_dir
 
-    f_plus1 = _exec_fn("def f(x):\n    return x + 1\n")
-    f_plus2 = _exec_fn("def f(x):\n    return x + 2\n")
-    # same bytecode, different co_consts — must produce different tokens
-    assert f_plus1.__code__.co_code == f_plus2.__code__.co_code
-    assert code_token(f_plus1) != code_token(f_plus2)
-
-    f_len = _exec_fn("def f(x):\n    return len(x)\n")
-    f_abs = _exec_fn("def f(x):\n    return abs(x)\n")
-    assert f_len.__code__.co_code == f_abs.__code__.co_code
-    assert code_token(f_len) != code_token(f_abs)
-
-    # stable across re-exec of identical source (cache hits across runs)
-    assert code_token(f_plus1) == code_token(_exec_fn("def f(x):\n    return x + 1\n"))
+    staging = _staging_in(tmp_path, monkeypatch, "aaaa1111")
+    (tmp_path / "part.parquet").write_bytes(b"p")
+    d1 = _fixture_dir(str(tmp_path))
+    assert _fixture_dir(str(tmp_path)) == d1
+    monkeypatch.setattr(staging, "_code_key", lambda: "bbbb2222")
+    d2 = _fixture_dir(str(tmp_path))
+    assert d2 != d1 and os.path.isdir(d2) and os.path.isdir(d1)
 
 
-def test_code_token_fallback_folds_closure_cells():
-    from nextgenetl_spark.staging import code_token
+def test_package_names_no_fixed_tmp_path():
+    """Everything the package stages lives under ``tempfile.gettempdir()``,
+    so a caller that points the temp dir elsewhere moves all of it: no
+    module names a ``/tmp/`` path."""
+    import nextgenetl_spark
 
-    src = "def mk(th):\n    def f(x):\n        return x > th\n    return f\ndef f():\n    pass\n"
-    ns: dict = {}
-    exec(compile(src, "<round8-gen>", "exec"), ns)
-    g1, g2 = ns["mk"](0.5), ns["mk"](0.7)  # identical code, threshold in a cell
-    assert code_token(g1) != code_token(g2)
-    assert code_token(g1) == code_token(ns["mk"](0.5))
+    root = os.path.dirname(nextgenetl_spark.__file__)
+    named = [
+        os.path.relpath(p, root)
+        for p in glob.glob(os.path.join(root, "**", "*.py"), recursive=True)
+        if "/tmp/" in open(p, encoding="utf-8").read()
+    ]
+    assert named == []
 
 
 def test_staged_phash_fps_match_fresh_compute(spark):

@@ -786,8 +786,6 @@ def test_lsh_multiprobe_recall_at_least_single_probe(spark):
     stay a subset of brute force by construction of the verify ranking."""
     import random
 
-    from nextgenetl_spark.operators.similarity import lsh_topk_multiprobe
-
     rng = random.Random(7)
     planes = [[rng.gauss(0, 1) for _ in range(64)] for _ in range(4)]
     emb = load(spark, SF_SMOKE, "embeddings")
@@ -798,7 +796,7 @@ def test_lsh_multiprobe_recall_at_least_single_probe(spark):
     single = {(r["query_id"], r["neighbor_id"]) for r in lsh_topk(q, c, planes, k=3).collect()}
     multi = {
         (r["query_id"], r["neighbor_id"])
-        for r in lsh_topk_multiprobe(q, c, planes, k=3, nprobe_flips=2).collect()
+        for r in lsh_topk(q, c, planes, k=3, nprobe_flips=2).collect()
     }
     assert len(multi & brute) >= len(single & brute)
     # with 2 of 4 bits probable, multiprobe should strictly improve recall

@@ -100,7 +100,7 @@ def test_hashpath_generators_match_spark_on_edge_docs(spark):
 
 def test_lsh_generator_matches_spark_on_random_vectors(spark):
     import tools.gen_lsh_oracle as G
-    from nextgenetl_spark.operators.similarity import lsh_topk, lsh_topk_multiprobe
+    from nextgenetl_spark.operators.similarity import lsh_topk
 
     rng = random.Random(7)
     dim, n = 16, 40
@@ -139,7 +139,7 @@ def test_lsh_generator_matches_spark_on_random_vectors(spark):
     assert got_single == expected(False)
     got_multi = {
         (r["query_id"], r["neighbor_id"], r["sim"], r["rank"])
-        for r in lsh_topk_multiprobe(q, c, planes, k=5, nprobe_flips=2).collect()
+        for r in lsh_topk(q, c, planes, k=5, nprobe_flips=2).collect()
     }
     assert got_multi == expected(True)
 

@@ -124,7 +124,6 @@ steps:
       key: k
       num_salts: 8
     materialize: true
-    force_skew_join: true
   - name: totals
     dest: totals
     sql: "SELECT label, COUNT(*) AS n, SUM(v) AS sv FROM enriched GROUP BY label"
@@ -149,8 +148,6 @@ steps:
     assert got == want
     # no salt plumbing leaks into the step output schema
     assert "__salt" not in out["enriched"].columns
-    # conf restored after the step's action
-    assert spark.conf.get("spark.sql.adaptive.forceOptimizeSkewedJoin") == "false"
 
 
 def test_pipeline_salted_join_auto_step(spark, tmp_path):
@@ -182,15 +179,20 @@ def test_pipeline_salted_join_auto_step(spark, tmp_path):
         assert "__salt" not in out.columns
 
 
-def test_pipeline_force_skew_join_requires_materialize(spark, tmp_path):
+def test_pipeline_rejects_removed_force_skew_join(spark, tmp_path):
+    """A config that still sets the removed ``force_skew_join`` key fails by
+    step and key before any step runs, in ``run`` and ``run_step`` alike."""
     import pytest as _pytest
 
     pipe = Pipeline(spark, warehouse=str(tmp_path / "wh"))
     pipe.register("a", spark.range(5).withColumnRenamed("id", "k"))
-    pipe.register("b", spark.range(5).withColumnRenamed("id", "k"))
-    step = {"name": "x", "dest": "x", "salted_join": {"big": "a", "small": "b", "key": "k"},
-            "force_skew_join": True}
-    with _pytest.raises(ValueError, match="requires materialize"):
+    first = {"name": "first", "dest": "first", "materialize": True, "sql": "SELECT * FROM a"}
+    step = {"name": "x", "dest": "x", "salted_join": {"big": "a", "small": "a", "key": "k"},
+            "materialize": True, "force_skew_join": True}
+    with _pytest.raises(ValueError, match="step 'x': 'force_skew_join'"):
+        pipe.run({"steps": [first, step]})
+    assert not (tmp_path / "wh").exists()
+    with _pytest.raises(ValueError, match="step 'x': 'force_skew_join'"):
         pipe.run_step(step)
 
 
@@ -1108,27 +1110,6 @@ def test_failing_step_cancels_running_sibling(spark, tmp_path):
     for dest in ("dag_cancel_slow", "after"):
         assert not os.path.exists(os.path.join(wh, dest, "_step_fingerprint.json"))
     assert not {"dag_cancel_slow", "boom", "after"} & set(p.tables)
-
-
-def test_force_skew_join_step_runs_alone(spark, tmp_path):
-    """A force_skew_join step flips a session-global conf, so no other
-    step's jobs run while its jobs do; the independent steps after it do
-    overlap each other."""
-    p = _dag_pipeline(spark, tmp_path)
-    names = ["dag_skew_a", "dag_skew_b", "dag_skew_c", "dag_skew_d"]
-    cfg = {"steps": [
-        _sleep_step(names[0], 0.5),
-        _sleep_step(names[1], 0.5, force_skew_join=True),
-        _sleep_step(names[2], 1.0),
-        _sleep_step(names[3], 1.0),
-    ]}
-    p.run(cfg)
-    spans = {n: _group_span(spark, n) for n in names}
-    skew = spans["dag_skew_b"]
-    for n in ("dag_skew_a", "dag_skew_c", "dag_skew_d"):
-        assert spans[n][1] <= skew[0] or skew[1] <= spans[n][0], (n, spans)
-    (c0, c1), (d0, d1) = spans["dag_skew_c"], spans["dag_skew_d"]
-    assert c0 < d1 and d0 < c1, spans
 
 
 def test_same_dest_steps_keep_config_order(spark, tmp_path):

@@ -108,6 +108,23 @@ def test_csv_load_disposition_fixtures_follow_supplier_content(spark, tmp_path):
             shutil.rmtree(d, ignore_errors=True)
 
 
+def test_stream_lake_publish_calls_keep_their_own_lakes(spark):
+    """Each stream_lake_publish call lands its stream in a lake of its own:
+    a second call, as from another process sharing the sf dir, neither
+    writes into nor removes the lake the first call's result reads."""
+    import os
+    from urllib.parse import urlparse
+
+    fn = REGISTRY["stream_lake_publish"].fn
+    first = fn(spark, SF_SMOKE)
+    want = sorted(map(tuple, first.collect()))
+    files = first.inputFiles()
+    second = fn(spark, SF_SMOKE)
+    assert not set(files) & set(second.inputFiles())
+    assert files and all(os.path.exists(urlparse(f).path) for f in files)
+    assert sorted(map(tuple, first.collect())) == want == sorted(map(tuple, second.collect()))
+
+
 def test_salted_join_matches_plain_join(spark):
     from nextgenetl_spark.operators.joins import salted_join
     from nextgenetl_spark.catalog import load

@@ -41,7 +41,6 @@ from nextgenetl_spark.operators.similarity import (
     cosine_topk_gemm,
     ivf_topk,
     lsh_topk,
-    lsh_topk_multiprobe,
 )
 from nextgenetl_spark.session import DEFAULT_SF_DIR, get_spark
 
@@ -138,12 +137,7 @@ def main() -> None:
         planes = [[rng.gauss(0, 1) for _ in range(64)] for _ in range(n_planes)]
         for multi in (False, True):
             t0 = time.time()
-            fn = (
-                (lambda q, cc: lsh_topk_multiprobe(q, cc, planes, k=K, nprobe_flips=2))
-                if multi
-                else (lambda q, cc: lsh_topk(q, cc, planes, k=K))
-            )
-            ann = topk_sets(fn(queries, c))
+            ann = topk_sets(lsh_topk(queries, c, planes, k=K, nprobe_flips=2 if multi else 0))
             row = {"num_planes": n_planes, "multiprobe": multi,
                    "recall_at_10": round(recall(ann, truth), 3),
                    "sec": round(time.time() - t0, 1)}

@@ -19,6 +19,7 @@ import duckdb
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from nextgenetl_spark.catalog import TABLES
 from nextgenetl_spark.session import get_spark
 from nextgenetl_spark.workloads import load_all
 
@@ -54,7 +55,7 @@ def main():
     registry = load_all()
     spark = get_spark("check")
     con = duckdb.connect()
-    for t in ["region", "nation", "customer", "supplier", "part", "orders", "lineitem", "events", "documents", "embeddings"]:
+    for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
     n_pass = n_fail = 0

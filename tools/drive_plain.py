@@ -6,7 +6,7 @@ way the driver does (row count + schema + order-insensitive value hash).
     python tools/drive_plain.py            # all queries at sf0.01
 """
 
-import hashlib, math, os, sys, time
+import os, sys, time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import SparkSession
 
@@ -14,23 +14,13 @@ spark = SparkSession.builder.master("local[8]").appName("drive-full").getOrCreat
 import __spark_entry__ as E
 import duckdb
 
+from nextgenetl_spark.catalog import TABLES
+from tools.check import table_hash
+
 SF = "/root/testdata/sf0.01"
 con = duckdb.connect()
-for t in ["region","nation","customer","supplier","part","orders","lineitem","events","documents","embeddings"]:
+for t in TABLES:
     con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
-
-def canon(v):
-    if v is None: return "NULL"
-    if isinstance(v, float):
-        if math.isnan(v): return "NaN"
-        if v == int(v) and abs(v) < 1e15: return str(int(v))
-        return repr(v)
-    return str(v)
-
-def h(rows, cols):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    hs = sorted(hashlib.md5("|".join(canon(r[i]) for i in order).encode()).hexdigest() for r in rows)
-    return hashlib.md5("\n".join(hs).encode()).hexdigest()
 
 qs = E.queries(); os_ = E.oracle_sql()
 only = set(sys.argv[1:])
@@ -45,7 +35,7 @@ for name, fn in qs.items():
         if name in os_:
             res = con.execute(os_[name])
             ocols = [d[0] for d in res.description]; orows = res.fetchall()
-            match = sorted(sdf.columns)==sorted(ocols) and len(srows)==len(orows) and h(srows, sdf.columns)==h(orows, ocols)
+            match = sorted(sdf.columns)==sorted(ocols) and len(srows)==len(orows) and table_hash(srows, sdf.columns)==table_hash(orows, ocols)
         else:
             match = len(srows) >= 0
     except Exception as e:
