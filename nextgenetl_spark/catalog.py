@@ -29,27 +29,50 @@ TABLES = (
 )
 
 
-def _parquet_ts_unit(path: str, field: str = "ts") -> str | None:
-    """Footer-only probe (pyarrow, no Spark job) for a timestamp column's
-    physical resolution ('ns'/'us'/'ms'), or None if absent/not a timestamp.
-    A URI-scheme path (s3a://, hdfs://) is not a local file pyarrow can open:
-    None, as _schema_cache_key does, and the plain Spark read follows."""
-    import glob
-    import os
-
-    import pyarrow.parquet as pq
-
-    if "://" in path:
+def _events_ts_type(sf_dir: str) -> T.DataType | None:
+    """Read type of ``events.ts``, from the first file's footer (pyarrow, no
+    Spark job, no session conf): LongType for TIMESTAMP(NANOS), which Spark
+    has no type for (the parquet reader accepts INT64 nanos as long under
+    an explicit read schema), TimestampNTZType for tz-less and
+    TimestampType for tz-aware timestamps. ``load`` and ``events_stream``
+    both read through it, so a directory-shaped events table reads the
+    same in batch and streaming. None for a URI-scheme path, which pyarrow
+    cannot open (read_schema raises ArrowInvalid on s3a://), and for a
+    table with no readable footer or no ts field: the caller takes Spark's
+    inferred type, and Spark's read reports what is wrong."""
+    if "://" in sf_dir:
         return None
-    if os.path.isdir(path):
-        parts = sorted(glob.glob(os.path.join(path, "*.parquet")))
-        if not parts:
-            return None
-        path = parts[0]
     try:
-        return getattr(pq.read_schema(path).field(field).type, "unit", None)
-    except (OSError, KeyError):
+        ts = _footer_schema(sf_dir, "events").field("ts").type
+    except (OSError, IndexError, KeyError):
         return None
+    if getattr(ts, "unit", None) == "ns":
+        return T.LongType()
+    return T.TimestampNTZType() if getattr(ts, "tz", None) is None else T.TimestampType()
+
+
+def _events_ts_to_timestamp(df: DataFrame) -> DataFrame:
+    """Normalize the ``ts`` read type to a plain TimestampType, so every
+    operator downstream sees one type regardless of the file's physical
+    resolution: nanos-as-long truncate to micros; NTZ reinterprets the
+    wall-clock value as UTC via make_timestamp with an EXPLICIT zone
+    argument. (to_utc_timestamp would NOT work: it implicitly casts NTZ→LTZ
+    through the session zone first, making the result session-dependent.
+    make_timestamp's timezone parameter interprets the wall components
+    directly, so the read is value-preserving under ANY caller session with
+    no conf write; date_part('SECOND') carries the fractional micros.)"""
+    ts_type = df.schema["ts"].dataType
+    if isinstance(ts_type, T.LongType):
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    if isinstance(ts_type, T.TimestampNTZType):
+        return df.withColumn(
+            "ts",
+            F.expr(
+                "make_timestamp(year(ts), month(ts), day(ts), "
+                "hour(ts), minute(ts), date_part('SECOND', ts), 'UTC')"
+            ),
+        )
+    return df
 
 
 # In-process schema memo: path + content fingerprint → the StructType the
@@ -147,25 +170,19 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     cached = _schema_cache_get(cache_key) if cache_key is not None else None
     if cached is not None:
         df = spark.read.schema(cached).parquet(path)
-    elif name == "events" and _parquet_ts_unit(path) == "ns":
-        # TIMESTAMP(NANOS) is rejected by schema inference unless nanos
-        # surface as long. Instead of mutating session config
-        # (spark.sql.legacy.parquet.nanosAsLong — a global flip a concurrent
-        # caller would observe mid-query), request LongType for the ts
-        # column via an EXPLICIT read schema: the vectorized reader accepts
-        # INT64 TIMESTAMP(NANOS) → LongType without any conf, and the read
-        # stays pure. Schema comes from the parquet footer (no Spark job).
-        import pyarrow.parquet as pq
+    elif name == "events" and isinstance(_events_ts_type(sf_dir), T.LongType):
+        # TIMESTAMP(NANOS) is rejected by schema inference; an EXPLICIT read
+        # schema with LongType for ts reads it without any session conf, so
+        # the read stays pure. The schema comes from the footer (no job).
         from pyspark.sql.pandas.types import from_arrow_type  # arrow→spark leaf map
 
-        arrow_schema = pq.read_schema(path)
         fields = [
             T.StructField(
                 f.name,
                 T.LongType() if f.name == "ts" else from_arrow_type(f.type),
                 f.nullable,
             )
-            for f in arrow_schema
+            for f in _footer_schema(sf_dir, name)
         ]
         df = spark.read.schema(T.StructType(fields)).parquet(path)
         if cache_key is not None:
@@ -174,27 +191,8 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         df = spark.read.parquet(path)
         if cache_key is not None:
             _schema_cache_put(cache_key, df.schema)
-    # Normalize the scan edge so every operator downstream sees a plain
-    # TimestampType regardless of the file's physical resolution: nanos-as-
-    # long → truncate to micros; NTZ → reinterpret the wall-clock value as
-    # UTC via make_timestamp with an EXPLICIT zone argument. (to_utc_timestamp
-    # would NOT work here: it implicitly casts NTZ→LTZ through the session
-    # zone first, making the result session-dependent. make_timestamp's
-    # timezone parameter interprets the wall components directly, so load()
-    # is value-preserving under ANY caller session with no conf write;
-    # date_part('SECOND') carries the fractional micros.)
     if name == "events":
-        ts_type = df.schema["ts"].dataType
-        if isinstance(ts_type, T.LongType):
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif isinstance(ts_type, T.TimestampNTZType):
-            df = df.withColumn(
-                "ts",
-                F.expr(
-                    "make_timestamp(year(ts), month(ts), day(ts), "
-                    "hour(ts), minute(ts), date_part('SECOND', ts), 'UTC')"
-                ),
-            )
+        df = _events_ts_to_timestamp(df)
     return df
 
 

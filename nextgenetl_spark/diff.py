@@ -146,13 +146,3 @@ def duplicate_keys(df: DataFrame, keys: list) -> DataFrame:
     """``GROUP BY keys HAVING COUNT(*) > 1`` duplicate detection
     (reference: CDA/compare_and_publish_tables.py:245-255)."""
     return df.groupBy(*keys).agg(F.count(F.lit(1)).alias("cnt")).filter(F.col("cnt") > 1)
-
-
-def max_child_cardinality(df: DataFrame, array_col: str) -> DataFrame:
-    """Max child-record count spot check (reference:
-    gdc_clinical_resources/test_data_integrity.py:60-130 — UNNEST + GROUP BY
-    + ORDER BY cnt DESC LIMIT 1; with nested arrays the size() form needs no
-    explode at all)."""
-    return df.select(F.coalesce(F.size(F.col(array_col)), F.lit(0)).alias("cnt")).agg(
-        F.max("cnt").alias("max_count")
-    )

@@ -270,19 +270,6 @@ def _child_table(df: DataFrame, config: FlattenConfig, path: str, structure: dic
     return cur.select(*out_cols)
 
 
-def melt_matrix(
-    df: DataFrame,
-    id_cols: list,
-    value_cols: list,
-    var_name: str = "variable",
-    value_name: str = "value",
-) -> DataFrame:
-    """Y4 matrix melt: wide quant matrix (genes × aliquots) → long rows
-    (reference: CDA/PDC/create_tables_quant_data_matrix_pdc.py:502-580).
-    Uses the built-in unpivot/melt (JVM-side), not a python loop."""
-    return df.unpivot(id_cols, value_cols, var_name, value_name)
-
-
 def melt_quant_matrix(df: DataFrame, gene_col: str, study_name: str | None = None) -> DataFrame:
     """The PDC-specific melt: value-column headers are
     ``aliquot_run_metadata_id:aliquot_submitter_id`` pairs; output one row

@@ -52,15 +52,6 @@ def child_counts(parent: DataFrame, child: DataFrame, parent_key: str, count_col
     )
 
 
-def wide_groupby_dedup(df: DataFrame, agg_cols: dict[str, F.Column]) -> DataFrame:
-    """GROUP BY every column except the aggregated ones — the ~140-column
-    merge-by-aliquot dedup (reference:
-    build_open_somatic_mut_bq_table.py:339-639, which groups all passthrough
-    MAF columns and STRING_AGGs the varying ones)."""
-    group_cols = [c for c in df.columns if c not in agg_cols]
-    return df.groupBy(*group_cols).agg(*[expr.alias(name) for name, expr in agg_cols.items()])
-
-
 def any_value_dedup(df: DataFrame, keys: Sequence[str]) -> DataFrame:
     """``ANY_VALUE(STRUCT(...)).*`` whole-row dedup per key (reference:
     Clinical_From_File/build_gdc_file_clinical_tables_TCGA.py:622-625).

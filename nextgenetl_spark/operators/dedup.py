@@ -1,4 +1,4 @@
-"""Deduplication operators: exact, n-gram Jaccard, MinHash+LSH.
+"""Deduplication operators: exact, n-gram Jaccard, MinHash+LSH, SimHash.
 
 Scale design: exact dedup is a hash aggregate on a fingerprint (one
 shuffle of (hash, id), never text). Near-dup at 100 TB must not be the
@@ -6,14 +6,25 @@ quadratic all-pairs join — MinHash+LSH banding reduces it to a self-join on
 (band_index, band_hash) buckets, then exact Jaccard verifies only the
 candidates. The quadratic ``ngram_jaccard_pairs`` is kept as the correctness
 baseline for tests and small partitions (e.g. within-source blocks).
+
+Every MinHash operator — the batch pairs, the persisted index and the
+stream probe (streaming/neardup.py) — is one banded pipeline over a
+``HashFamily``: ``XXHASH64`` (the fast path) or ``MD5`` (the portable path
+whose DuckDB oracles are generated here). Its stages are flat-min
+signatures (batch) or a per-row signature (streams), band rows, a
+candidate join (self-join with a < b, or new-vs-history on the first
+shared band) and the Jaccard verify.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from dataclasses import dataclass
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from nextgenetl_spark.catalog import read_parquet_cached
+from nextgenetl_spark.catalog import read_parquet_cached, spread
 
 from nextgenetl_spark.operators.textstats import tokens
 
@@ -26,10 +37,6 @@ def exact_dedup_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc
         .groupBy("fp")
         .agg(F.count(F.lit(1)).alias("n_docs"), F.min(id_col).alias("canonical_id"))
     )
-
-
-def token_sets(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    return df.select(id_col, F.array_distinct(tokens(text_col)).alias("tok_set"))
 
 
 def jaccard(a: F.Column, b: F.Column) -> F.Column:
@@ -109,8 +116,6 @@ def ngram_jaccard_pairs(
     # no-op on multi-row-group lakes and uses an explicit partition count,
     # which AQE never coalesces (a bare repartition(block_col) is
     # REPARTITION_BY_COL and AQE merged it right back to one partition).
-    from nextgenetl_spark.catalog import spread
-
     hashed = F.array_distinct(F.transform(tokens(text_col), lambda t: F.xxhash64(t)))
     ts = spread(df).select(block_col, F.col(id_col), hashed.alias("tok_set")).withColumn(
         "n_tok", F.size("tok_set")
@@ -216,105 +221,270 @@ def shingles(text_col, n: int = 3) -> F.Column:
     return F.array_distinct(full)
 
 
+#: Universal-hash permutation family for the portable MinHash: fixed odd
+#: multipliers/offsets (deterministic, engine-neutral) and the largest prime
+#: below 2^32. perm_i(h) = (A[i]*h + B[i]) mod P over the 32-bit md5 prefix;
+#: products stay < 2^63, so the arithmetic is exact in any BIGINT engine.
+MINHASH_P = 4294967291
+#: multipliers < 2^31 so A*h < 2^63 for any 32-bit h (no BIGINT overflow
+#: in either engine — Spark ANSI mode raises on long overflow)
+_MINHASH_A = [2146435069, 1610612741, 805306457, 402653189, 201326611,
+              100663319, 50331653, 25165843, 12582917, 6291469,
+              3145739, 1572869, 786433, 393241, 196613, 98317]
+_MINHASH_B = [1013904223, 1664525, 22695477, 69069, 1103515245,
+              214013, 134775813, 2097593, 2531011, 40692,
+              3877, 29573, 12345, 1012019, 573, 997]
+
+
+def _md5_perm(h: F.Column, i) -> F.Column:
+    """Permutation ``i`` of the md5 family, ``(A[i]*h + B[i]) mod P``. ``i``
+    is a literal int (the batch aggregates) or an int Column (the per-row
+    transform over permutation indices, which reads A and B from literal
+    arrays). Both promote to exact 64-bit arithmetic before the mod."""
+    if isinstance(i, int):
+        a, b = F.lit(_MINHASH_A[i]), F.lit(_MINHASH_B[i])
+    else:
+        a = F.element_at(F.array(*map(F.lit, _MINHASH_A)), i + 1)
+        b = F.element_at(F.array(*map(F.lit, _MINHASH_B)), i + 1)
+    return (a * h + b) % F.lit(MINHASH_P)
+
+
+@dataclass(frozen=True)
+class HashFamily:
+    """What one MinHash hash family supplies to the shared stages.
+
+    ``shingle_hash`` maps a shingle string to an element of the doc's
+    hashed shingle set (the verify set, named ``set_col``); ``perm_key``
+    maps a set element to the long the permutations read; ``perm(h, i)`` is
+    permutation ``i`` (a literal int or an int Column); ``band_hash(rows,
+    b)`` hashes the signature values of band ``b``. ``num_perm`` and
+    ``num_bands`` are the family's defaults."""
+
+    set_col: str
+    shingle_hash: Callable[[F.Column], F.Column]
+    perm_key: Callable[[F.Column], F.Column]
+    perm: Callable[[F.Column, int | F.Column], F.Column]
+    band_hash: Callable[[list[F.Column], int], F.Column]
+    num_perm: int
+    num_bands: int
+
+
+#: The fast path: each shingle hashed once, permutations re-hash the 8-byte
+#: value with a per-permutation seed, bands hash the long[] slice directly
+#: (no string materialization). Pinned by the pure-Python VALUES oracles.
+XXHASH64 = HashFamily(
+    set_col="sh",
+    shingle_hash=lambda s: F.xxhash64(s),
+    perm_key=lambda x: x,
+    perm=lambda h, i: F.xxhash64(h, F.lit(i) if isinstance(i, int) else i),
+    band_hash=lambda rows, b: F.xxhash64(F.array(*rows), F.lit(b)),
+    num_perm=32,
+    num_bands=8,
+)
+
+#: The portable path: one md5 per shingle, its 32-bit hex prefix feeds the
+#: universal-hash permutations, bands are md5 over the '|'-joined slice —
+#: every step exists verbatim in ANSI-ish SQL, so DuckDB replays it.
+MD5 = HashFamily(
+    set_col="shm",
+    shingle_hash=lambda s: F.md5(s),
+    perm_key=lambda x: F.conv(F.substring(x, 1, 8), 16, 10).cast("long"),
+    perm=_md5_perm,
+    band_hash=lambda rows, b: F.md5(F.concat_ws("|", *[r.cast("string") for r in rows])),
+    num_perm=16,
+    num_bands=4,
+)
+
+
+def _hashed_shingles(family: HashFamily, text_col, shingle_n: int = 3) -> F.Column:
+    """The doc's shingle set under the family's shingle hash: the verify
+    set and the signature's input."""
+    return F.transform(shingles(text_col, shingle_n), family.shingle_hash)
+
+
+def _flat_min(docs: DataFrame, id_col: str, family: HashFamily, sets, num_perm: int) -> DataFrame:
+    """Batch signatures, (id, m0 .. m{num_perm-1}), over the set Column
+    ``sets`` of ``docs``.
+
+    Shape matters here: explode the set and take num_perm plain
+    ``min(perm(h, i))`` aggregates rather than nesting transform/array_min
+    higher-order functions — flat aggregates stay inside whole-stage
+    codegen with map-side partial aggregation (the shuffle carries num_perm
+    longs per doc), where per-element HOF lambdas do not. Minima over the
+    distinct set equal minima over raw occurrences.
+
+    From text, pass the set EXPRESSION over the spread docs, not a set
+    column projected above the spread: exploding a column makes the
+    optimizer infer a ``size(set) > 0`` filter and push it below the
+    spread, so the signature side stops sharing the spread exchange with
+    the verify side (measured: one more job per query)."""
+    base = docs.select(F.col(id_col), F.explode(sets).alias("s"))
+    base = base.select(id_col, family.perm_key(F.col("s")).alias("h"))
+    aggs = [F.min(family.perm(F.col("h"), i)).alias(f"m{i}") for i in range(num_perm)]
+    return base.groupBy(id_col).agg(*aggs)
+
+
+def _row_signature(sets_col, family: HashFamily, num_perm: int) -> F.Column:
+    """Per-ROW signature (array<long>), the same values as ``_flat_min``:
+    ``array_min`` over the permuted set per permutation. It needs no
+    aggregation, which makes it legal in append-mode Structured Streaming,
+    where a groupBy would demand watermark/window state. One transform over
+    the permutation indices keeps the expression tree small; bind the set
+    to a column first, or the HOF re-evaluates it per permutation."""
+    sets = F.col(sets_col) if isinstance(sets_col, str) else sets_col
+    return F.transform(
+        F.sequence(F.lit(0), F.lit(num_perm - 1)),
+        lambda i: F.array_min(F.transform(sets, lambda x: family.perm(family.perm_key(x), i))),
+    )
+
+
+def _band_hashes(family: HashFamily, sig: list[F.Column], num_bands: int) -> list[F.Column]:
+    """One band-hash Column per band over the signature values ``sig``."""
+    rows = len(sig) // num_bands
+    return [family.band_hash(sig[b * rows : (b + 1) * rows], b) for b in range(num_bands)]
+
+
+def _band_rows(df: DataFrame, cols: list[str], bhs: list[F.Column]) -> DataFrame:
+    """``cols`` plus one (band, bh) row per band: the LSH bucket keys."""
+    bands = F.array(*[F.struct(F.lit(b).alias("band"), bh.alias("bh")) for b, bh in enumerate(bhs)])
+    return df.select(*cols, F.explode(bands).alias("bb")).select(
+        *cols, F.col("bb.band").alias("band"), F.col("bb.bh").alias("bh")
+    )
+
+
+def _carried(bhs_col: str, num_bands: int) -> list[F.Column]:
+    """The band hashes of a carried band-hash array column."""
+    return [F.element_at(bhs_col, b + 1) for b in range(num_bands)]
+
+
+def _row_banded(
+    df: DataFrame, text_col: str, id_col: str, family: HashFamily,
+    num_perm: int, num_bands: int, shingle_n: int,
+) -> DataFrame:
+    """(id, set, bhs) per doc from the per-row signature: no aggregate,
+    so it runs on append streams. Three projections keep the set and the
+    signature bound to columns (each is referenced more than once)."""
+    s = family.set_col
+    sets = df.select(F.col(id_col), _hashed_shingles(family, text_col, shingle_n).alias(s))
+    sigs = sets.select(id_col, s, _row_signature(s, family, num_perm).alias("sig"))
+    sig = [F.element_at("sig", i + 1) for i in range(num_perm)]
+    return sigs.select(id_col, s, F.array(*_band_hashes(family, sig, num_bands)).alias("bhs"))
+
+
+def _batch_banded(
+    df: DataFrame, text_col: str, id_col: str, family: HashFamily,
+    num_perm: int, num_bands: int, shingle_n: int,
+) -> DataFrame:
+    """(id, set, bhs) per doc from the flat-min signatures (batch); the
+    per-row form is ~50x slower on a batch corpus (measured on the sf0.1
+    index probe: 10.8s -> ~1s). Spread before the shingle projection
+    (guide §2.5): single-row-group inputs otherwise pin the per-doc
+    shingle+hash work to one task; no-op on multi-row-group lakes."""
+    docs = spread(df)
+    sets = _hashed_shingles(family, text_col, shingle_n)
+    m = [F.col(f"m{i}") for i in range(num_perm)]
+    bhs = _flat_min(docs, id_col, family, sets, num_perm).select(
+        id_col, F.array(*_band_hashes(family, m, num_bands)).alias("bhs")
+    )
+    return docs.select(F.col(id_col), sets.alias(family.set_col)).join(bhs, id_col)
+
+
+def _side(df: DataFrame, id_col: str, family: HashFamily, side: str) -> DataFrame:
+    """Prefix the id, set and (when present) bhs columns with ``side``."""
+    s = family.set_col
+    return df.withColumnsRenamed(
+        {id_col: f"{side}_id", s: f"{side}_{s}", "bhs": f"{side}_bhs"}
+    )
+
+
+def _self_candidates(banded: DataFrame, id_col: str) -> DataFrame:
+    """(a_id, b_id), a < b, for every pair sharing a (band, bh) bucket. Each
+    band hash is one value per doc, so the join input is num_bands rows per
+    doc; the shuffle is by bucket, and only same-bucket docs ever meet."""
+    a = banded.alias("a")
+    b = banded.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.bh") == F.col("b.bh"))
+            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+        )
+        .select(F.col(f"a.{id_col}").alias("a_id"), F.col(f"b.{id_col}").alias("b_id"))
+        .distinct()
+    )
+
+
+def _history_candidates(probes: DataFrame, hist_bands: DataFrame, hist_verify: DataFrame) -> DataFrame:
+    """New-vs-history candidates: ``probes`` (new_id, new_bhs, ..., band,
+    bh) bucket-joined to ``hist_bands`` (hist_id, band, bh), then to
+    ``hist_verify`` (hist_id, hist_<set>, hist_bhs). A pair sharing several
+    bands is kept on its FIRST shared band only — decided in-row from both
+    band-hash arrays, the exact join criterion — so it emits once without
+    ``distinct`` or ``dropDuplicates`` (stateful on streams, keeping every
+    key forever)."""
+    same = F.zip_with("new_bhs", "hist_bhs", lambda x, y: x == y)
+    earlier = F.exists(F.slice(same, 1, F.col("band")), lambda s: s)
+    return probes.join(hist_bands, ["band", "bh"]).join(hist_verify, "hist_id").filter(~earlier)
+
+
+def _verify(cands: DataFrame, a: str, b: str, family: HashFamily, threshold: float) -> DataFrame:
+    """(a_id, b_id, jac) for candidate rows whose exact Jaccard of the two
+    hashed shingle sets (``{a}_<set>``, ``{b}_<set>``) reaches the
+    threshold. The sets are hashes, so the intersect compares hashes, not
+    shingle strings."""
+    s = family.set_col
+    jac = F.round(jaccard(F.col(f"{a}_{s}"), F.col(f"{b}_{s}")), 4)
+    return cands.select(f"{a}_id", f"{b}_id", jac.alias("jac")).filter(F.col("jac") >= threshold)
+
+
+def _self_join_pairs(
+    docs: DataFrame, sets, id_col: str, family: HashFamily,
+    threshold: float, num_perm: int, num_bands: int,
+) -> DataFrame:
+    """Batch near-dup pairs over the set Column ``sets`` of ``docs``:
+    flat-min signatures → band rows → bucket self-join → verify,
+    re-joining the sets only for candidate pairs."""
+    m = [F.col(f"m{i}") for i in range(num_perm)]
+    sigs = _flat_min(docs, id_col, family, sets, num_perm)
+    set_df = docs.select(F.col(id_col), sets.alias(family.set_col))
+    cands = _self_candidates(_band_rows(sigs, [id_col], _band_hashes(family, m, num_bands)), id_col)
+    cands = cands.join(_side(set_df, id_col, family, "a"), "a_id").join(_side(set_df, id_col, family, "b"), "b_id")
+    return _verify(cands, "a", "b", family, threshold)
+
+
+def _probe_history(
+    new: DataFrame, hist_bands: DataFrame, hist_verify: DataFrame,
+    family: HashFamily, num_bands: int, threshold: float,
+) -> DataFrame:
+    """(new_id, hist_id, jac) for a banded new side (new_id, new_<set>,
+    new_bhs) against a history index: band rows → first-shared-band
+    candidate join → verify. Every step is a projection or a join, so the
+    stream probe and the persisted-index probe both run it."""
+    probes = _band_rows(new, new.columns, _carried("new_bhs", num_bands))
+    return _verify(_history_candidates(probes, hist_bands, hist_verify), "new", "hist", family, threshold)
+
+
 def minhash_signatures(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    num_perm: int = 32,
+    num_perm: int = XXHASH64.num_perm,
     shingle_n: int = 3,
 ) -> DataFrame:
-    """MinHash signature per document: num_perm seeded min-hash values over
-    the shingle set.
-
-    Shape matters here: explode the shingles and take num_perm plain
-    ``min(xxhash64(h0, seed))`` aggregates rather than nesting
-    transform/array_min higher-order functions — flat aggregates stay inside
-    whole-stage codegen with map-side partial aggregation (the shuffle
-    carries num_perm longs per doc), where per-element HOF lambdas do not.
-    Each shingle string is hashed ONCE; the permutations re-hash the 8-byte
-    value with a per-permutation seed."""
-    # spread before shingling (guide §2.5): the explode + per-shingle hash +
-    # map-side partial min otherwise all run in the single scan task on
-    # single-row-group inputs; no-op on real lakes.
-    from nextgenetl_spark.catalog import spread
-
-    base = spread(df).select(F.col(id_col), F.explode(shingles(text_col, shingle_n)).alias("s"))
-    base = base.select(id_col, F.xxhash64("s").alias("h0"))
-    aggs = [F.min(F.xxhash64(F.col("h0"), F.lit(seed))).alias(f"m{seed}") for seed in range(num_perm)]
-    sigs = base.groupBy(id_col).agg(*aggs)
+    """(id, sig) xxhash64 MinHash signature per document: num_perm seeded
+    min-hash values over the shingle set, from the flat aggregates."""
+    sets = _hashed_shingles(XXHASH64, text_col, shingle_n)
+    sigs = _flat_min(spread(df), id_col, XXHASH64, sets, num_perm)
     return sigs.select(id_col, F.array(*[f"m{i}" for i in range(num_perm)]).alias("sig"))
 
 
-def minhash_sig_from_hashes(sh_col, num_perm: int = 32) -> F.Column:
-    """Per-ROW MinHash signature (array<long>) from a PRECOMPUTED
-    xxhash64 shingle-hash array: ONE transform over a seed sequence instead
-    of ``num_perm`` sibling expressions each embedding the whole shingle
-    subtree — the expression tree shrinks ~num_perm-fold, which is pure
-    catalyst analysis/planning time (the text family's measured per-query
-    floor), while values are bit-identical: ``seq(0, n-1)`` elements are
-    IntegerType exactly like the old ``F.lit(seed)``, so every
-    ``xxhash64(h, seed)`` hashes the same bytes. Callers should bind the
-    hash array to a real column first (the two-step projection keeps the
-    shingle hashing evaluated once per row; HOF lambdas are interpreted,
-    so an inlined subtree would re-evaluate per seed)."""
-    sh = F.col(sh_col) if isinstance(sh_col, str) else sh_col
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(num_perm - 1)),
-        lambda seed: F.array_min(F.transform(sh, lambda h: F.xxhash64(h, seed))),
-    )
-
-
-def minhash_signature_expr(text_col, num_perm: int = 32, shingle_n: int = 3) -> F.Column:
-    """Per-ROW MinHash signature as one Column expression (array<long>):
-    ``array_min`` over the re-seeded shingle hashes per permutation.
-
-    Same values as ``minhash_signatures`` (identical hash math), different
-    execution shape: the batch form explodes shingles into flat map-side
-    aggregates (faster on large corpora), while this form needs NO
-    aggregation at all — which makes it legal in append-mode Structured
-    Streaming, where a groupBy would demand watermark/window state.
-    Prefer computing the hash array as its own column and calling
-    ``minhash_sig_from_hashes`` (one shingle evaluation per row); this
+def minhash_signature_expr(text_col, num_perm: int = XXHASH64.num_perm, shingle_n: int = 3) -> F.Column:
+    """Per-ROW xxhash64 MinHash signature as one Column expression, the
+    same values as ``minhash_signatures`` (see ``_row_signature``). This
     self-contained form re-evaluates the shingle subtree per permutation
     and exists for call sites that cannot add a projection."""
-    sh = F.transform(shingles(text_col, shingle_n), lambda s: F.xxhash64(s))
-    return minhash_sig_from_hashes(sh, num_perm)
-
-
-def band_structs(sig_col, num_bands: int) -> F.Column:
-    """(band, band_hash) structs for a signature column — the LSH banding
-    expression shared by the batch self-join and the streaming
-    stream-static probe."""
-    sig = F.col(sig_col) if isinstance(sig_col, str) else sig_col
-    rows_per_band = (F.size(sig) / num_bands).cast("int")
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(num_bands - 1)),
-        lambda b: F.struct(
-            b.alias("band"),
-            # hash the long[] slice directly — no string materialization
-            F.xxhash64(F.slice(sig, b * rows_per_band + 1, rows_per_band), b).alias("bh"),
-        ),
-    )
-
-
-def lsh_candidate_pairs(
-    sigs: DataFrame,
-    id_col: str = "doc_id",
-    num_bands: int = 8,
-) -> DataFrame:
-    """Band the signatures and self-join on (band, band_hash). Each band hash
-    is one value per doc, so the join input is num_bands rows per doc; the
-    shuffle is by bucket, and only same-bucket docs ever meet."""
-    banded = sigs.select(id_col, F.explode(band_structs("sig", num_bands)).alias("b")).select(
-        id_col, F.col("b.band").alias("band"), F.col("b.bh").alias("bh")
-    )
-    a = banded.alias("a")
-    b = banded.alias("b")
-    return (
-        a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.bh") == F.col("b.bh")) & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        .select(F.col(f"a.{id_col}").alias("a_id"), F.col(f"b.{id_col}").alias("b_id"))
-        .distinct()
-    )
+    return _row_signature(_hashed_shingles(XXHASH64, text_col, shingle_n), XXHASH64, num_perm)
 
 
 def minhash_near_dup_pairs(
@@ -322,35 +492,212 @@ def minhash_near_dup_pairs(
     threshold: float = 0.5,
     text_col: str = "text",
     id_col: str = "doc_id",
-    num_perm: int = 32,
-    num_bands: int = 8,
+    num_perm: int = XXHASH64.num_perm,
+    num_bands: int = XXHASH64.num_bands,
     shingle_n: int = 3,
 ) -> DataFrame:
-    """LSH candidates verified by exact shingle-set Jaccard ≥ threshold.
-    Verification re-joins the shingle sets only for candidate pairs; the
-    sets are carried as xxhash64 longs so the verify intersect is primitive
-    compares, not string compares."""
-    # spread before the shingle projection (guide §2.5): single-row-group
-    # inputs otherwise pin the per-doc shingle+hash work to one task; the
-    # two spreads over the same scan collapse to one exchange via
-    # ReuseExchange, and are no-ops on multi-row-group lakes.
-    from nextgenetl_spark.catalog import spread
+    """LSH candidates verified by exact shingle-set Jaccard ≥ threshold, on
+    the xxhash64 family (the perf path)."""
+    sets = _hashed_shingles(XXHASH64, text_col, shingle_n)
+    return _self_join_pairs(spread(df), sets, id_col, XXHASH64, threshold, num_perm, num_bands)
 
-    sh = spread(df).select(
-        F.col(id_col),
-        F.transform(shingles(text_col, shingle_n), lambda s: F.xxhash64(s)).alias("sh"),
+
+def md5_minhash_near_dup_pairs(
+    df: DataFrame,
+    threshold: float = 0.5,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    num_perm: int = MD5.num_perm,
+    num_bands: int = MD5.num_bands,
+    shingle_n: int = 3,
+) -> DataFrame:
+    """MinHash+LSH near-dup pairs on the engine-portable md5 family — the
+    textbook construction (one md5 per shingle, universal-hash minima,
+    band hashes over the joined slice, exact Jaccard verify) that a DuckDB
+    oracle replays exactly (``md5_minhash_oracle_sql``). One md5 per
+    shingle instead of num_perm keeps the pin within ~20% of the xxhash64
+    form's cost."""
+    sets = _hashed_shingles(MD5, text_col, shingle_n)
+    return _self_join_pairs(spread(df), sets, id_col, MD5, threshold, num_perm, num_bands)
+
+
+def md5_minhash_pairs_from_shingles(
+    shm_df: DataFrame,
+    threshold: float = 0.5,
+    id_col: str = "doc_id",
+    num_perm: int = MD5.num_perm,
+    num_bands: int = MD5.num_bands,
+) -> DataFrame:
+    """``md5_minhash_near_dup_pairs`` over a precomputed ``(id, shm)`` table
+    of DISTINCT md5'd shingles per doc. One shingle+md5 scan feeds both the
+    signature minima and the verify; a staged scan (one md5 pass per corpus
+    release) removes it from the per-run cost entirely."""
+    return _self_join_pairs(shm_df, F.col("shm"), id_col, MD5, threshold, num_perm, num_bands)
+
+
+def _md5_minhash_sql(
+    cand: str, a: str, b: str, threshold: float, table: str, text_col: str, id_col: str,
+    num_perm: int, num_bands: int,
+) -> str:
+    """DuckDB SQL replaying the md5-family pipeline: shingle construction,
+    universal-hash minima over the md5 32-bit prefix, banding, the
+    candidate CTE ``cand`` (columns ``a``, ``b``) and the Jaccard verify —
+    generated from the same parameter tables (_MINHASH_A/_MINHASH_B/
+    MINHASH_P) so both engines share one definition. shingle_n is fixed at
+    3 (the workload default)."""
+    hexpr = _hex_prefix_int_sql("md5(s)")
+    sig = ",\n           ".join(
+        f"min(({_MINHASH_A[i]} * h + {_MINHASH_B[i]}) % {MINHASH_P}) AS m{i}"
+        for i in range(num_perm)
     )
-    sigs = minhash_signatures(df, text_col, id_col, num_perm, shingle_n)
-    cands = lsh_candidate_pairs(sigs, id_col, num_bands)
-    a = sh.withColumnRenamed(id_col, "a_id").withColumnRenamed("sh", "a_sh")
-    b = sh.withColumnRenamed(id_col, "b_id").withColumnRenamed("sh", "b_sh")
-    verified = (
-        cands.join(a, "a_id")
-        .join(b, "b_id")
-        .select("a_id", "b_id", F.round(jaccard(F.col("a_sh"), F.col("b_sh")), 4).alias("jac"))
-        .filter(F.col("jac") >= threshold)
+    rows = num_perm // num_bands
+    band_rows = "\n        UNION ALL\n        ".join(
+        f"SELECT {id_col}, {band} AS band, md5("
+        + " || '|' || ".join(f"CAST(m{i} AS VARCHAR)" for i in range(band * rows, (band + 1) * rows))
+        + f") AS bh FROM sig"
+        for band in range(num_bands)
     )
-    return verified
+    return f"""
+    WITH toks AS (
+        SELECT {id_col}, string_split_regex(trim({text_col}), '\\s+') AS tk FROM {table}
+    ), sh AS (
+        SELECT {id_col},
+               list_distinct(CASE WHEN len(tk) >= 3
+                    THEN list_transform(range(1, len(tk) - 1),
+                                        i -> concat_ws(' ', tk[i], tk[i+1], tk[i+2]))
+                    ELSE [array_to_string(tk, ' ')] END) AS sh
+        FROM toks
+    ), ex AS (
+        SELECT {id_col}, unnest(sh) AS s FROM sh
+    ), hx AS (
+        SELECT {id_col}, {hexpr} AS h FROM ex
+    ), sig AS (
+        SELECT {id_col},
+           {sig}
+        FROM hx GROUP BY {id_col}
+    ), bands AS (
+        {band_rows}
+    ), cand AS ({cand}
+    ), shm AS (
+        SELECT {id_col}, list_distinct(list_transform(sh, s -> md5(s))) AS shm FROM sh
+    ), v AS (
+        SELECT {a}, {b},
+               ROUND(CAST(len(list_intersect(x.shm, y.shm)) AS DOUBLE)
+                     / len(list_distinct(list_concat(x.shm, y.shm))), 4) AS jac
+        FROM cand
+        JOIN shm x ON x.{id_col} = {a}
+        JOIN shm y ON y.{id_col} = {b}
+    )
+    SELECT {a}, {b}, jac FROM v WHERE jac >= {threshold}
+    """
+
+
+def md5_minhash_oracle_sql(
+    threshold: float = 0.5,
+    table: str = "documents",
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    num_perm: int = MD5.num_perm,
+    num_bands: int = MD5.num_bands,
+) -> str:
+    """DuckDB SQL replaying ``md5_minhash_near_dup_pairs`` exactly."""
+    cand = f"""
+        SELECT DISTINCT a.{id_col} AS a_id, b.{id_col} AS b_id
+        FROM bands a JOIN bands b
+          ON a.band = b.band AND a.bh = b.bh AND a.{id_col} < b.{id_col}"""
+    return _md5_minhash_sql(cand, "a_id", "b_id", threshold, table, text_col, id_col, num_perm, num_bands)
+
+
+def md5_stream_near_dup_oracle_sql(
+    split: int,
+    threshold: float = 0.5,
+    table: str = "documents",
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    num_perm: int = MD5.num_perm,
+    num_bands: int = MD5.num_bands,
+) -> str:
+    """DuckDB oracle for the md5 new-vs-history probes (stream and
+    persisted index): every (new ≥ split, hist < split) pair that shares at
+    least one band hash and verifies at the Jaccard threshold — the
+    DISTINCT collapse equals the first-shared-band emission exactly once
+    per pair."""
+    cand = f"""
+        SELECT DISTINCT n.{id_col} AS new_id, o.{id_col} AS hist_id
+        FROM bands n JOIN bands o
+          ON n.band = o.band AND n.bh = o.bh
+         AND n.{id_col} >= {split} AND o.{id_col} < {split}"""
+    return _md5_minhash_sql(cand, "new_id", "hist_id", threshold, table, text_col, id_col, num_perm, num_bands)
+
+
+def build_minhash_index(
+    index_dir: str,
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    num_perm: int = MD5.num_perm,
+    num_bands: int = MD5.num_bands,
+    shingle_n: int = 3,
+) -> dict:
+    """Persist an md5-family MinHash-LSH index for incremental near-dup:
+    band rows hive-partitioned BY band (a probe for one band opens only
+    that partition) plus, per doc, the md5 shingle set and band-hash array
+    for the verify and the first-shared-band test. The batch analogue of
+    streaming/neardup.py's in-memory history index and the textual sibling
+    of build_ivf_index — build once per corpus release, then every new
+    batch probes it without re-scanning history."""
+    _write_minhash_index(index_dir, df, "overwrite", text_col, id_col, num_perm, num_bands, shingle_n)
+    return {"index_dir": index_dir, "num_perm": num_perm, "num_bands": num_bands}
+
+
+def append_to_minhash_index(
+    spark,
+    index_dir: str,
+    new_docs: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    num_perm: int = MD5.num_perm,
+    num_bands: int = MD5.num_bands,
+    shingle_n: int = 3,
+) -> dict:
+    """Fold a new batch into the persisted index (pure append — dedupe the
+    batch upstream; re-running the same batch duplicates rows, same
+    contract as append_to_ivf_index)."""
+    _write_minhash_index(index_dir, new_docs, "append", text_col, id_col, num_perm, num_bands, shingle_n)
+    return {"index_dir": index_dir}
+
+
+def _write_minhash_index(
+    index_dir: str, df: DataFrame, mode: str, text_col: str, id_col: str,
+    num_perm: int, num_bands: int, shingle_n: int,
+) -> None:
+    banded = _batch_banded(df, text_col, id_col, MD5, num_perm, num_bands, shingle_n)
+    bands = _band_rows(banded, [id_col], _carried("bhs", num_bands))
+    bands.write.mode(mode).partitionBy("band").parquet(f"{index_dir}/bands")
+    banded.write.mode(mode).parquet(f"{index_dir}/shingles")
+
+
+def query_minhash_index(
+    spark,
+    index_dir: str,
+    new_docs: DataFrame,
+    threshold: float = 0.5,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    num_perm: int = MD5.num_perm,
+    num_bands: int = MD5.num_bands,
+    shingle_n: int = 3,
+) -> DataFrame:
+    """Probe the persisted index with a new batch: band the batch with the
+    SAME hash family, equi-join (band, bh) against the stored band table
+    (the shuffle carries band hashes, never text), then verify candidates
+    by exact Jaccard against the stored shingle sets. Returns (new_id,
+    hist_id, jac) — history never re-tokenizes, and the batch side is
+    typically orders of magnitude smaller than the corpus."""
+    hist_bands = read_parquet_cached(spark, f"{index_dir}/bands").withColumnRenamed(id_col, "hist_id")
+    hist_verify = _side(read_parquet_cached(spark, f"{index_dir}/shingles"), id_col, MD5, "hist")
+    new = _side(_batch_banded(new_docs, text_col, id_col, MD5, num_perm, num_bands, shingle_n), id_col, MD5, "new")
+    return _probe_history(new, hist_bands, hist_verify, MD5, num_bands, threshold)
 
 
 def _swar_bit_vote_fold(base: DataFrame, id_col: str, word, reverse: bool = False) -> DataFrame:
@@ -407,8 +754,6 @@ def simhash_fingerprints(df: DataFrame, text_col: str = "text", id_col: str = "d
     partial aggregation — the per-element HOF accumulator in ``simhash64``
     does not, and is ~50× slower on realistic corpora. The shuffle carries
     33 packed longs per doc."""
-    from nextgenetl_spark.catalog import spread
-
     # spread before tokenizing (guide §2.5; no-op on multi-row-group lakes)
     base = spread(df).select(
         F.col(id_col), F.explode_outer(F.array_distinct(tokens(text_col))).alias("t")
@@ -458,8 +803,6 @@ def md5_simhash_fingerprints(
     arithmetic exist verbatim in ANSI-ish SQL, so a DuckDB oracle reproduces
     the fingerprint bit-for-bit. The xxhash64 form stays the production/perf
     path; this one is the cross-engine-verifiable pin of the algorithm."""
-    from nextgenetl_spark.catalog import spread
-
     # spread before tokenizing (guide §2.5; no-op on multi-row-group lakes)
     base = spread(df).select(
         F.col(id_col), F.explode_outer(F.array_distinct(tokens(text_col))).alias("t")
@@ -606,21 +949,6 @@ def md5_simhash_near_dup_pairs(
     )
 
 
-#: Universal-hash permutation family for the portable MinHash: fixed odd
-#: multipliers/offsets (deterministic, engine-neutral) and the largest prime
-#: below 2^32. perm_i(h) = (A[i]*h + B[i]) mod P over the 32-bit md5 prefix;
-#: products stay < 2^63, so the arithmetic is exact in any BIGINT engine.
-MINHASH_P = 4294967291
-#: multipliers < 2^31 so A*h < 2^63 for any 32-bit h (no BIGINT overflow
-#: in either engine — Spark ANSI mode raises on long overflow)
-_MINHASH_A = [2146435069, 1610612741, 805306457, 402653189, 201326611,
-              100663319, 50331653, 25165843, 12582917, 6291469,
-              3145739, 1572869, 786433, 393241, 196613, 98317]
-_MINHASH_B = [1013904223, 1664525, 22695477, 69069, 1103515245,
-              214013, 134775813, 2097593, 2531011, 40692,
-              3877, 29573, 12345, 1012019, 573, 997]
-
-
 def _hex_prefix_int_sql(expr: str, n_chars: int = 8) -> str:
     """Engine-neutral SQL turning the first ``n_chars`` hex chars of
     ``expr`` into an integer (polynomial build from instr lookups — DuckDB
@@ -672,156 +1000,6 @@ def md5_rolling_fingerprint_oracle_sql(
            list_reduce(list_prepend(CAST(0 AS BIGINT), hs),
                        (acc, h) -> (acc * {ROLL_B} + h) % {ROLL_P}) AS fp
     FROM hs
-    """
-
-
-def md5_minhash_near_dup_pairs(
-    df: DataFrame,
-    threshold: float = 0.5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_perm: int = 16,
-    num_bands: int = 4,
-    shingle_n: int = 3,
-) -> DataFrame:
-    """MinHash+LSH near-dup pairs with an engine-portable hash family:
-    each shingle is md5-hashed ONCE, its 32-bit hex prefix h feeds
-    ``num_perm`` universal-hash permutations ``(A[i]*h + B[i]) mod P``
-    (exact BIGINT arithmetic — the textbook MinHash construction), band
-    hashes are md5 over the '|'-joined band slice, and candidate pairs are
-    verified by exact Jaccard over the md5'd shingle sets. Identical
-    banding/verify shape to ``minhash_near_dup_pairs`` (explode → flat min
-    aggregates → (band, band_hash) self-join → verify candidates only); the
-    xxhash64 form is the perf path, this one is the cross-engine pin that a
-    DuckDB oracle replays exactly — and one md5 per shingle instead of
-    num_perm keeps the pin within ~20% of the xxhash64 form's cost."""
-    sh = shingles(text_col, shingle_n)
-    shm = df.select(
-        F.col(id_col), F.array_distinct(F.transform(sh, lambda s: F.md5(s))).alias("shm")
-    )
-    return md5_minhash_pairs_from_shingles(
-        shm, threshold=threshold, id_col=id_col, num_perm=num_perm, num_bands=num_bands
-    )
-
-
-def md5_minhash_pairs_from_shingles(
-    shm_df: DataFrame,
-    threshold: float = 0.5,
-    id_col: str = "doc_id",
-    num_perm: int = 16,
-    num_bands: int = 4,
-) -> DataFrame:
-    """Signature → band → candidate-join → Jaccard-verify tail of
-    ``md5_minhash_near_dup_pairs`` over a precomputed ``(id, shm)`` table of
-    DISTINCT md5'd shingles per doc. One shingle+md5 scan feeds BOTH the
-    signature minima (h = big-endian int of the md5's first 8 hex chars,
-    exploded from shm — minima over the distinct set equal minima over raw
-    occurrences) and the verify join's set-Jaccard, where the from-text form
-    hashed the corpus twice; a staged scan (one md5 pass per corpus release)
-    removes it from the per-run cost entirely."""
-    base = shm_df.select(F.col(id_col), F.explode("shm").alias("s"))
-    h = F.conv(F.substring("s", 1, 8), 16, 10).cast("long")
-    base = base.select(id_col, h.alias("h"))
-    aggs = [
-        F.min((F.lit(_MINHASH_A[i]) * F.col("h") + F.lit(_MINHASH_B[i])) % F.lit(MINHASH_P)).alias(f"m{i}")
-        for i in range(num_perm)
-    ]
-    sigs = base.groupBy(id_col).agg(*aggs)
-    rows = num_perm // num_bands
-    bands = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.md5(
-                F.concat_ws("|", *[F.col(f"m{i}").cast("string") for i in range(b * rows, (b + 1) * rows)])
-            ).alias("bh"),
-        )
-        for b in range(num_bands)
-    ]
-    banded = sigs.select(id_col, F.explode(F.array(*bands)).alias("bb")).select(
-        id_col, F.col("bb.band").alias("band"), F.col("bb.bh").alias("bh")
-    )
-    a = banded.alias("a")
-    b = banded.alias("b")
-    cands = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bh") == F.col("b.bh"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(F.col(f"a.{id_col}").alias("a_id"), F.col(f"b.{id_col}").alias("b_id"))
-        .distinct()
-    )
-    av = shm_df.withColumnRenamed(id_col, "a_id").withColumnRenamed("shm", "a_shm")
-    bv = shm_df.withColumnRenamed(id_col, "b_id").withColumnRenamed("shm", "b_shm")
-    return (
-        cands.join(av, "a_id")
-        .join(bv, "b_id")
-        .select("a_id", "b_id", F.round(jaccard(F.col("a_shm"), F.col("b_shm")), 4).alias("jac"))
-        .filter(F.col("jac") >= threshold)
-    )
-
-
-def md5_minhash_oracle_sql(
-    threshold: float = 0.5,
-    table: str = "documents",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_perm: int = 16,
-    num_bands: int = 4,
-) -> str:
-    """DuckDB SQL replaying ``md5_minhash_near_dup_pairs`` exactly (shingle
-    construction, universal-hash minima over the md5 32-bit prefix, banding,
-    candidate join, Jaccard verify) — generated from the same parameter
-    tables (_MINHASH_A/_MINHASH_B/MINHASH_P) so both sides share one
-    definition. shingle_n is fixed at 3 here (the workload default)."""
-    hexpr = _hex_prefix_int_sql("md5(s)")
-    sig = ",\n           ".join(
-        f"min(({_MINHASH_A[i]} * h + {_MINHASH_B[i]}) % {MINHASH_P}) AS m{i}"
-        for i in range(num_perm)
-    )
-    rows = num_perm // num_bands
-    band_rows = "\n        UNION ALL\n        ".join(
-        f"SELECT {id_col}, {b} AS band, md5("
-        + " || '|' || ".join(f"CAST(m{i} AS VARCHAR)" for i in range(b * rows, (b + 1) * rows))
-        + f") AS bh FROM sig"
-        for b in range(num_bands)
-    )
-    return f"""
-    WITH toks AS (
-        SELECT {id_col}, string_split_regex(trim({text_col}), '\\s+') AS tk FROM {table}
-    ), sh AS (
-        SELECT {id_col},
-               list_distinct(CASE WHEN len(tk) >= 3
-                    THEN list_transform(range(1, len(tk) - 1),
-                                        i -> concat_ws(' ', tk[i], tk[i+1], tk[i+2]))
-                    ELSE [array_to_string(tk, ' ')] END) AS sh
-        FROM toks
-    ), ex AS (
-        SELECT {id_col}, unnest(sh) AS s FROM sh
-    ), hx AS (
-        SELECT {id_col}, {hexpr} AS h FROM ex
-    ), sig AS (
-        SELECT {id_col},
-           {sig}
-        FROM hx GROUP BY {id_col}
-    ), bands AS (
-        {band_rows}
-    ), cand AS (
-        SELECT DISTINCT a.{id_col} AS a_id, b.{id_col} AS b_id
-        FROM bands a JOIN bands b
-          ON a.band = b.band AND a.bh = b.bh AND a.{id_col} < b.{id_col}
-    ), shm AS (
-        SELECT {id_col}, list_distinct(list_transform(sh, s -> md5(s))) AS shm FROM sh
-    ), v AS (
-        SELECT a_id, b_id,
-               ROUND(CAST(len(list_intersect(x.shm, y.shm)) AS DOUBLE)
-                     / len(list_distinct(list_concat(x.shm, y.shm))), 4) AS jac
-        FROM cand
-        JOIN shm x ON x.{id_col} = a_id
-        JOIN shm y ON y.{id_col} = b_id
-    )
-    SELECT a_id, b_id, jac FROM v WHERE jac >= {threshold}
     """
 
 
@@ -1097,112 +1275,6 @@ def bbit_minhash_similarity(
     return out
 
 
-def md5_minhash_sig_from_hashes(hs_col, num_perm: int = 16) -> F.Column:
-    """Portable per-ROW MinHash signature from a PRECOMPUTED hash array
-    (the 32-bit md5-prefix longs): one transform over the permutation
-    index with (A, B) as literal arrays — the md5 analogue of
-    ``minhash_sig_from_hashes`` and the same ~num_perm-fold expression-tree
-    shrink. Values identical: int×long/long×long both promote to exact
-    64-bit arithmetic before the mod."""
-    hs = F.col(hs_col) if isinstance(hs_col, str) else hs_col
-    A = F.array(*[F.lit(_MINHASH_A[i]).cast("long") for i in range(num_perm)])
-    B = F.array(*[F.lit(_MINHASH_B[i]).cast("long") for i in range(num_perm)])
-    return F.transform(
-        F.sequence(F.lit(1), F.lit(num_perm)),
-        lambda i: F.array_min(
-            F.transform(hs, lambda h: (F.element_at(A, i) * h + F.element_at(B, i)) % F.lit(MINHASH_P))
-        ),
-    )
-
-
-def md5_minhash_signature_expr(text_col, num_perm: int = 16, shingle_n: int = 3) -> F.Column:
-    """Per-ROW portable MinHash signature (array<long>): the universal-hash
-    permutations of ``md5_minhash_near_dup_pairs`` computed with array_min
-    HOFs instead of aggregates — no groupBy, so it is legal in append-mode
-    Structured Streaming (the md5 analogue of ``minhash_signature_expr``).
-    Identical values to the batch form: same shingles, same md5 prefix,
-    same (A, B, P). Prefer binding the hash array to a column and calling
-    ``md5_minhash_sig_from_hashes`` (see minhash_signature_expr)."""
-    sh = shingles(text_col, shingle_n)
-    hs = F.transform(sh, lambda s: F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("long"))
-    return md5_minhash_sig_from_hashes(hs, num_perm)
-
-
-def md5_band_hash(sig_col, band: int, rows_per_band: int) -> F.Column:
-    """Band hash matching ``md5_minhash_near_dup_pairs``: md5 over the
-    '|'-joined stringified band slice of the signature."""
-    sig = F.col(sig_col) if isinstance(sig_col, str) else sig_col
-    parts = [
-        F.element_at(sig, band * rows_per_band + i + 1).cast("string")
-        for i in range(rows_per_band)
-    ]
-    return F.md5(F.concat_ws("|", *parts))
-
-
-def md5_stream_near_dup_oracle_sql(
-    split: int,
-    threshold: float = 0.5,
-    table: str = "documents",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_perm: int = 16,
-    num_bands: int = 4,
-) -> str:
-    """DuckDB oracle for the streaming md5 near-dup probe: every (new ≥
-    split, hist < split) pair that shares at least one band hash and
-    verifies at the Jaccard threshold — the DISTINCT collapse equals the
-    stream's first-matching-band emission exactly once per pair."""
-    hexpr = _hex_prefix_int_sql("md5(s)")
-    sig = ",\n           ".join(
-        f"min(({_MINHASH_A[i]} * h + {_MINHASH_B[i]}) % {MINHASH_P}) AS m{i}"
-        for i in range(num_perm)
-    )
-    rows = num_perm // num_bands
-    band_rows = "\n        UNION ALL\n        ".join(
-        f"SELECT {id_col}, {b} AS band, md5("
-        + " || '|' || ".join(f"CAST(m{i} AS VARCHAR)" for i in range(b * rows, (b + 1) * rows))
-        + f") AS bh FROM sig"
-        for b in range(num_bands)
-    )
-    return f"""
-    WITH toks AS (
-        SELECT {id_col}, string_split_regex(trim({text_col}), '\\s+') AS tk FROM {table}
-    ), sh AS (
-        SELECT {id_col},
-               list_distinct(CASE WHEN len(tk) >= 3
-                    THEN list_transform(range(1, len(tk) - 1),
-                                        i -> concat_ws(' ', tk[i], tk[i+1], tk[i+2]))
-                    ELSE [array_to_string(tk, ' ')] END) AS sh
-        FROM toks
-    ), ex AS (
-        SELECT {id_col}, unnest(sh) AS s FROM sh
-    ), hx AS (
-        SELECT {id_col}, {hexpr} AS h FROM ex
-    ), sig AS (
-        SELECT {id_col},
-           {sig}
-        FROM hx GROUP BY {id_col}
-    ), bands AS (
-        {band_rows}
-    ), cand AS (
-        SELECT DISTINCT n.{id_col} AS new_id, o.{id_col} AS hist_id
-        FROM bands n JOIN bands o
-          ON n.band = o.band AND n.bh = o.bh
-         AND n.{id_col} >= {split} AND o.{id_col} < {split}
-    ), shm AS (
-        SELECT {id_col}, list_distinct(list_transform(sh, s -> md5(s))) AS shm FROM sh
-    ), v AS (
-        SELECT new_id, hist_id,
-               ROUND(CAST(len(list_intersect(x.shm, y.shm)) AS DOUBLE)
-                     / len(list_distinct(list_concat(x.shm, y.shm))), 4) AS jac
-        FROM cand
-        JOIN shm x ON x.{id_col} = new_id
-        JOIN shm y ON y.{id_col} = hist_id
-    )
-    SELECT new_id, hist_id, jac FROM v WHERE jac >= {threshold}
-    """
-
-
 def banded_hamming_pairs(
     fps: DataFrame,
     id_col: str = "doc_id",
@@ -1258,151 +1330,4 @@ def banded_hamming_pairs(
             ham.cast("int").alias("hamming"),
         )
         .distinct()
-    )
-
-
-def _md5_banded_and_shingles(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_perm: int = 16,
-    num_bands: int = 4,
-    shingle_n: int = 3,
-) -> tuple[DataFrame, DataFrame]:
-    """(banded, shingle-set) frames for the portable md5 MinHash family —
-    the two tables a persisted near-dup index stores. banded = one (id,
-    band, bh) row per band; shm = (id, md5'd distinct shingle set) for the
-    exact-Jaccard verify."""
-    rows = num_perm // num_bands
-    # spread before the shingle projections (guide §2.5): both the banding
-    # explode and the shm build evaluate the zip-shift shingle expression
-    # straight off the scan, and a single-row-group input serializes each
-    # onto one core (measured: the probe's two broadcast-build jobs ran
-    # 1.9s/2.1s single-task at sf0.1). Round-robin only moves rows; both
-    # consumers are keyed aggregates/joins, so results are unchanged.
-    from nextgenetl_spark.catalog import spread
-
-    df = spread(df)
-    # batch path: explode + flat min aggregates (codegen, map-side partial),
-    # NOT the per-row HOF signature expression — that form exists for
-    # append-mode streaming where groupBy is illegal, and is ~50x slower
-    # on a batch corpus (measured on the sf0.1 probe: 10.8s -> ~1s)
-    sh = shingles(text_col, shingle_n)
-    h = F.conv(F.substring(F.md5("s"), 1, 8), 16, 10).cast("long")
-    base = df.select(F.col(id_col), F.explode(sh).alias("s")).select(
-        id_col, h.alias("h")
-    )
-    aggs = [
-        F.min(
-            (F.lit(_MINHASH_A[i]) * F.col("h") + F.lit(_MINHASH_B[i])) % F.lit(MINHASH_P)
-        ).alias(f"m{i}")
-        for i in range(num_perm)
-    ]
-    sigs = base.groupBy(id_col).agg(*aggs)
-    bands = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.md5(
-                F.concat_ws(
-                    "|", *[F.col(f"m{i}").cast("string") for i in range(b * rows, (b + 1) * rows)]
-                )
-            ).alias("bh"),
-        )
-        for b in range(num_bands)
-    ]
-    banded = sigs.select(id_col, F.explode(F.array(*bands)).alias("bb")).select(
-        id_col, F.col("bb.band").alias("band"), F.col("bb.bh").alias("bh")
-    )
-    shm = df.select(
-        F.col(id_col),
-        F.array_distinct(
-            F.transform(shingles(text_col, shingle_n), lambda s: F.md5(s))
-        ).alias("shm"),
-    )
-    return banded, shm
-
-
-def build_minhash_index(
-    index_dir: str,
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_perm: int = 16,
-    num_bands: int = 4,
-    shingle_n: int = 3,
-) -> dict:
-    """Persist a MinHash-LSH index for incremental near-dup: band rows
-    hive-partitioned BY band (a probe for one band opens only that
-    partition) plus the md5 shingle sets for candidate verification. The
-    batch analogue of streaming/neardup.py's in-memory history index and
-    the textual sibling of build_ivf_index — build once per corpus
-    release, then every new batch probes it without re-scanning history."""
-    banded, shm = _md5_banded_and_shingles(df, text_col, id_col, num_perm, num_bands, shingle_n)
-    banded.write.mode("overwrite").partitionBy("band").parquet(f"{index_dir}/bands")
-    shm.write.mode("overwrite").parquet(f"{index_dir}/shingles")
-    return {"index_dir": index_dir, "num_perm": num_perm, "num_bands": num_bands}
-
-
-def append_to_minhash_index(
-    spark,
-    index_dir: str,
-    new_docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_perm: int = 16,
-    num_bands: int = 4,
-    shingle_n: int = 3,
-) -> dict:
-    """Fold a new batch into the persisted index (pure append — dedupe the
-    batch upstream; re-running the same batch duplicates rows, same
-    contract as append_to_ivf_index)."""
-    banded, shm = _md5_banded_and_shingles(new_docs, text_col, id_col, num_perm, num_bands, shingle_n)
-    banded.write.mode("append").partitionBy("band").parquet(f"{index_dir}/bands")
-    shm.write.mode("append").parquet(f"{index_dir}/shingles")
-    return {"index_dir": index_dir}
-
-
-def query_minhash_index(
-    spark,
-    index_dir: str,
-    new_docs: DataFrame,
-    threshold: float = 0.5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_perm: int = 16,
-    num_bands: int = 4,
-    shingle_n: int = 3,
-) -> DataFrame:
-    """Probe the persisted index with a new batch: band the batch with the
-    SAME hash family, equi-join (band, bh) against the stored band table
-    (the shuffle carries band hashes, never text), then verify candidates
-    by exact Jaccard against the stored shingle sets. Returns (new_id,
-    hist_id, jac) — history never re-tokenizes, and the batch side is
-    typically orders of magnitude smaller than the corpus."""
-    hist_bands = read_parquet_cached(spark, f"{index_dir}/bands")
-    hist_shm = read_parquet_cached(spark, f"{index_dir}/shingles").select(
-        F.col(id_col).alias("hist_id"), F.col("shm").alias("hist_shm")
-    )
-    banded, shm = _md5_banded_and_shingles(new_docs, text_col, id_col, num_perm, num_bands, shingle_n)
-    cands = (
-        banded.alias("n")
-        .join(
-            hist_bands.alias("h"),
-            (F.col("n.band") == F.col("h.band")) & (F.col("n.bh") == F.col("h.bh")),
-        )
-        .select(
-            F.col(f"n.{id_col}").alias("new_id"), F.col(f"h.{id_col}").alias("hist_id")
-        )
-        .distinct()
-    )
-    new_shm = shm.select(F.col(id_col).alias("new_id"), F.col("shm").alias("new_shm"))
-    return (
-        cands.join(new_shm, "new_id")
-        .join(hist_shm, "hist_id")
-        .select(
-            "new_id",
-            "hist_id",
-            F.round(jaccard(F.col("new_shm"), F.col("hist_shm")), 4).alias("jac"),
-        )
-        .filter(F.col("jac") >= threshold)
     )

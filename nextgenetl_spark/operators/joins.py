@@ -57,17 +57,6 @@ def coalesced_left_legs(base: DataFrame, legs: Sequence[tuple[DataFrame, Sequenc
     return out.drop(*leg_cols)
 
 
-def star_join(fact: DataFrame, dims: Sequence[tuple[DataFrame, Sequence[str] | str, str]], broadcast_dims: bool = True) -> DataFrame:
-    """LEFT-join a fact to N dimensions (reference: the 5-way star in
-    CDA/GDC/create_tables_file_metadata_gdc.py:126-140). Dimensions are
-    broadcast by default: at 100 TB the fact never shuffles for a dim lookup."""
-    out = fact
-    for dim, on, how in dims:
-        d = F.broadcast(dim) if broadcast_dims else dim
-        out = out.join(d, on, how)
-    return out
-
-
 def salted_join(
     big: DataFrame,
     skewed_small: DataFrame,

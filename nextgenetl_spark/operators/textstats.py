@@ -25,14 +25,6 @@ def tokens(col) -> Column:
     return F.split(F.trim(c), r"\s+")
 
 
-def token_count(col) -> Column:
-    return F.size(tokens(col))
-
-
-def distinct_token_count(col) -> Column:
-    return F.size(F.array_distinct(tokens(col)))
-
-
 def stopword_hits(toks: Column, lang: str = "en") -> Column:
     words = STOPWORDS[lang]
     return F.size(F.filter(toks, lambda t: t.isin(*words)))

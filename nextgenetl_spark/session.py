@@ -128,9 +128,6 @@ def get_spark(app_name: str = "nextgenetl-spark", shuffle_partitions: int | None
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # the driver's events.parquet stores TIMESTAMP(NANOS); Spark has no
-        # nanosecond timestamp type — read as long and convert in catalog.load
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", driver_mem)
         # G1 (the JVM default), NOT ParallelGC (r11 correction): ParallelGC

@@ -28,12 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from nextgenetl_spark.functions.text import normalize_value_sql, select_sql, sql_ident, sql_string
-from nextgenetl_spark.inference import (
-    BQ_TO_SPARK,
-    dedupe_headers,
-    infer_tsv_types,
-    make_name_bq_friendly,
-)
+from nextgenetl_spark.inference import dedupe_headers, infer_tsv_types, make_name_bq_friendly
 
 _CAST = {
     "STRING": "string",
@@ -234,9 +229,3 @@ def cast_sql(expr: str, bq_type: str) -> str:
         # a direct string→long cast rejects the decimal point
         return f"CAST(CAST({expr} AS double) AS long)"
     return f"CAST({expr} AS {_CAST[bq_type]})"
-
-
-def schema_from_types(types: dict[str, str]) -> T.StructType:
-    """BQ-vocabulary type dict → StructType (for persisting inferred schemas
-    the way the reference serializes schema JSON to GCS)."""
-    return T.StructType([T.StructField(h, BQ_TO_SPARK[t], True) for h, t in types.items()])

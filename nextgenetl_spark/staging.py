@@ -23,10 +23,20 @@ builds of the same prefix, source path and code key (bounded disk: one
 live artifact per source and code version). A build under another code
 key is left alone: it belongs to another checkout sharing the temp dir,
 which may still be reading it.
+
+Per-call scratch dirs (a warehouse, a lake a stream writes, an index
+copy a stream appends to) are the other thing the package writes under
+the temp dir. ``scratch_dir(prefix)`` is their one owner: it makes each
+under a per-process root ``<tempdir>/ngetl_run_<pid>``. The DataFrames
+those dirs back read them lazily, so no call removes its own dir; an
+``atexit`` hook removes the whole root when the process exits, and the
+first call of a process removes the roots of pids that no longer run
+(a process killed before its hook ran).
 """
 
 from __future__ import annotations
 
+import atexit
 import functools
 import glob
 import hashlib
@@ -135,3 +145,42 @@ def _mark_complete(cache_dir: str) -> None:
         name = os.path.basename(sib)
         if name != base and name.rsplit("_", 1)[1].partition("-")[2] == code and os.path.isdir(sib):
             shutil.rmtree(sib, ignore_errors=True)
+
+
+_RUN_PREFIX = "ngetl_run_"
+_RUN_ROOTS: set[str] = set()
+
+
+def scratch_dir(prefix: str) -> str:
+    """A fresh dir named ``<prefix>...`` under this process's run root (see
+    the module docstring)."""
+    root = os.path.join(tempfile.gettempdir(), f"{_RUN_PREFIX}{os.getpid()}")
+    if root not in _RUN_ROOTS:
+        if not _RUN_ROOTS:
+            atexit.register(_remove_run_roots)
+        _RUN_ROOTS.add(root)
+        _reap_dead_run_roots(os.path.dirname(root))
+    # made on every call: a caller may empty the temp dir between calls
+    os.makedirs(root, exist_ok=True)
+    return tempfile.mkdtemp(prefix=prefix, dir=root)
+
+
+def _remove_run_roots() -> None:
+    # only this pid's roots: a forked child inherits the hook and the set
+    suffix = f"_{os.getpid()}"
+    for root in _RUN_ROOTS:
+        if root.endswith(suffix):
+            shutil.rmtree(root, ignore_errors=True)
+
+
+def _reap_dead_run_roots(tmp: str) -> None:
+    for root in glob.glob(os.path.join(tmp, f"{_RUN_PREFIX}*")):
+        pid = root.rpartition("_")[2]
+        if not pid.isdigit():
+            continue
+        try:
+            os.kill(int(pid), 0)
+        except ProcessLookupError:
+            shutil.rmtree(root, ignore_errors=True)
+        except (PermissionError, OverflowError):
+            pass  # alive under another user / not a pid

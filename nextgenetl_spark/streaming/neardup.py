@@ -7,15 +7,17 @@ corpus, candidates verified by exact shingle-set Jaccard — all STATELESS
 stream-static work (projections, explode, two joins), so append mode needs
 no watermark and NO state store grows with the stream.
 
-Two shapes make that possible:
-- the per-row signature (``minhash_signature_expr``) is a Column HOF with
-  identical hash math to the batch ``minhash_signatures`` — aggregation is
-  illegal in append-mode streams, per-row expressions are not;
+Both functions are compositions of operators/dedup.py's banded-MinHash
+stages for one hash family (``XXHASH64``, the fast path, or ``MD5``, the
+portable path a DuckDB oracle replays):
+- the per-row signature is a Column HOF with identical hash math to the
+  batch flat-min aggregates — aggregation is illegal in append-mode
+  streams, per-row expressions are not;
 - multi-band matches of the same (new, hist) pair are collapsed WITHOUT
   ``dropDuplicates`` (which is stateful on streams, keeping every key
-  forever): a pair is emitted only from its FIRST matching band, decided
-  in-row by re-testing earlier bands' hashes against the carried history
-  signature — the exact join criterion, so exactly one band row survives.
+  forever): both sides carry their band-hash arrays, and a pair is emitted
+  only from its FIRST shared band — the same candidate-join and verify
+  stage the persisted index probe (``query_minhash_index``) runs.
 
 At 100 TB: the history index (id, band, bh) is written bucketed by
 (band, bh) so the per-micro-batch probe is a bucket-local join; refreshing
@@ -26,13 +28,15 @@ side each micro-batch).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from nextgenetl_spark.operators.dedup import (
-    band_structs,
-    jaccard,
-    minhash_signature_expr,
-    shingles,
+    XXHASH64,
+    HashFamily,
+    _band_rows,
+    _carried,
+    _probe_history,
+    _row_banded,
+    _side,
 )
 
 
@@ -40,28 +44,22 @@ def history_index(
     hist: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    num_perm: int = 32,
-    num_bands: int = 8,
+    num_perm: int | None = None,
+    num_bands: int | None = None,
     shingle_n: int = 3,
+    family: HashFamily = XXHASH64,
 ) -> tuple[DataFrame, DataFrame]:
-    """Static-side index: (hist_id, band, bh) banded signatures, plus the
-    verification table (hist_id, hist_sh shingle hashes, hist_sig full
-    signature — carried so the stream side can re-test earlier bands).
-    Built once (batch), re-read per micro-batch."""
-    sigs = hist.select(
-        F.col(id_col).alias("hist_id"),
-        minhash_signature_expr(text_col, num_perm, shingle_n).alias("hist_sig"),
-        F.transform(shingles(text_col, shingle_n), lambda s: F.xxhash64(s)).alias("hist_sh"),
+    """Static-side index: (hist_id, band, bh) band rows, plus the
+    verification table (hist_id, hist_<set> hashed shingles, hist_bhs
+    band-hash array — carried so the stream side can re-test earlier
+    bands). ``num_perm``/``num_bands`` default to the family's. Built once
+    (batch), re-read per micro-batch."""
+    num_bands = num_bands or family.num_bands
+    banded = _row_banded(
+        hist, text_col, id_col, family, num_perm or family.num_perm, num_bands, shingle_n
     )
-    bands = sigs.select(
-        "hist_id", F.explode(band_structs("hist_sig", num_bands)).alias("b")
-    ).select("hist_id", F.col("b.band").alias("band"), F.col("b.bh").alias("bh"))
-    return bands, sigs.select("hist_id", "hist_sh", "hist_sig")
-
-
-def _band_hash(sig_col, band, rows_per_band) -> F.Column:
-    # must mirror band_structs exactly: xxhash64 over (slice, band-index)
-    return F.xxhash64(F.slice(sig_col, band * rows_per_band + 1, rows_per_band), band)
+    verify = _side(banded, id_col, family, "hist")
+    return _band_rows(verify, ["hist_id"], _carried("hist_bhs", num_bands)), verify
 
 
 def near_dup_against_history(
@@ -71,37 +69,17 @@ def near_dup_against_history(
     threshold: float = 0.5,
     text_col: str = "text",
     id_col: str = "doc_id",
-    num_perm: int = 32,
-    num_bands: int = 8,
+    num_perm: int | None = None,
+    num_bands: int | None = None,
     shingle_n: int = 3,
+    family: HashFamily = XXHASH64,
 ) -> DataFrame:
     """(new_id, hist_id, jac) for every arriving document whose shingle-set
-    Jaccard with an already-ingested document reaches the threshold."""
-    rows_per_band = num_perm // num_bands
-    enriched = stream_docs.select(
-        F.col(id_col).alias("new_id"),
-        minhash_signature_expr(text_col, num_perm, shingle_n).alias("sig"),
-        F.transform(shingles(text_col, shingle_n), lambda s: F.xxhash64(s)).alias("new_sh"),
+    Jaccard with an already-ingested document reaches the threshold.
+    ``family`` and the signature shape must match ``history_index``'s."""
+    num_bands = num_bands or family.num_bands
+    banded = _row_banded(
+        stream_docs, text_col, id_col, family, num_perm or family.num_perm, num_bands, shingle_n
     )
-    probes = enriched.select(
-        "new_id", "new_sh", "sig", F.explode(band_structs("sig", num_bands)).alias("b")
-    ).select("new_id", "new_sh", "sig", F.col("b.band").alias("band"), F.col("b.bh").alias("bh"))
-    cands = probes.join(hist_bands, ["band", "bh"]).join(hist_verify, "hist_id")
-    # first-matching-band filter: drop this row if any EARLIER band also
-    # hash-matches (that row emits the pair instead) — stateless pair dedup
-    earlier = F.when(F.col("band") == 0, F.lit(False)).otherwise(
-        F.exists(
-            F.sequence(F.lit(0), F.col("band") - 1),
-            lambda b2: _band_hash(F.col("sig"), b2, rows_per_band)
-            == _band_hash(F.col("hist_sig"), b2, rows_per_band),
-        )
-    )
-    return (
-        cands.filter(~earlier)
-        .select(
-            "new_id",
-            "hist_id",
-            F.round(jaccard(F.col("new_sh"), F.col("hist_sh")), 4).alias("jac"),
-        )
-        .filter(F.col("jac") >= threshold)
-    )
+    new = _side(banded, id_col, family, "new")
+    return _probe_history(new, hist_bands, hist_verify, family, num_bands, threshold)

@@ -92,24 +92,10 @@ def docs_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events parquet, with ``ts`` converted to
     the TIMESTAMP that catalog.load gives the batch plans."""
-    # Footer-only probe (pyarrow, no Spark job, NO session conf) decides
-    # the read type for ts: nanos → request LongType in the EXPLICIT stream
-    # schema (the parquet reader accepts INT64 TIMESTAMP(NANOS) → LongType
-    # without spark.sql.legacy.parquet.nanosAsLong), tz-less micros → NTZ,
-    # tz-aware → TimestampType. Same conf-pure discipline — and the same
-    # footer reader — as catalog.load: _footer_schema handles a
-    # directory-shaped events.parquet (multi-file table), where a raw
-    # pq.read_schema on the table path would raise, diverging batch from
-    # streaming on the same lake layout.
-    from nextgenetl_spark.catalog import _footer_schema
+    # the same footer-derived ts read type and conversion as catalog.load
+    from nextgenetl_spark.catalog import _events_ts_to_timestamp, _events_ts_type
 
-    arrow_ts = _footer_schema(sf_dir, "events").field("ts").type
-    if getattr(arrow_ts, "unit", None) == "ns":
-        ts_type: T.DataType = T.LongType()
-    elif getattr(arrow_ts, "tz", None) is None:
-        ts_type = T.TimestampNTZType()
-    else:
-        ts_type = T.TimestampType()
+    ts_type = _events_ts_type(sf_dir) or T.TimestampType()
     schema = T.StructType(
         [
             T.StructField("event_id", T.LongType()),
@@ -120,24 +106,7 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("props", T.StringType()),
         ]
     )
-    df = _file_stream(spark, sf_dir, "events", schema)
-    if isinstance(ts_type, T.LongType):
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif isinstance(ts_type, T.TimestampNTZType):
-        # NTZ → TIMESTAMP for schema parity with catalog.load (same column
-        # type in batch and streaming plans, stable state-store schemas).
-        # make_timestamp with an EXPLICIT zone interprets the wall-clock
-        # components directly — value-preserving under ANY caller session
-        # zone, no session-timeZone write (a plain cast would shift by the
-        # session offset).
-        df = df.withColumn(
-            "ts",
-            F.expr(
-                "make_timestamp(year(ts), month(ts), day(ts), "
-                "hour(ts), minute(ts), date_part('SECOND', ts), 'UTC')"
-            ),
-        )
-    return df
+    return _events_ts_to_timestamp(_file_stream(spark, sf_dir, "events", schema))
 
 
 def embeddings_stream(spark: SparkSession, sf_dir: str) -> DataFrame:

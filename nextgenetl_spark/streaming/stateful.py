@@ -65,8 +65,6 @@ def running_user_profile(events: DataFrame) -> DataFrame:
     )
 
 
-DEBOUNCE_STATE_SCHEMA = T.StructType([T.StructField("last_kept_us", T.LongType())])
-
 # per-USER state: parallel arrays mapping event_type -> last kept ts.
 # Bounded by the (small) per-user type cardinality, so state per key stays
 # tiny while the operator makes 5× fewer Arrow round-trips than keying on
@@ -116,48 +114,14 @@ DEBOUNCE_SHARD_STATE_SCHEMA = T.StructType(
 )
 
 
-def _debounce_group(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    # Groups are typically tiny (tens of rows), so per-group fixed cost is
-    # the hot path: avoid pd.concat for the single-chunk case and sort via
-    # numpy lexsort instead of DataFrame.sort_values (no index machinery).
-    import numpy as np
-
-    user_id, event_type = key
-    last = state.get[0] if state.exists else None
-    chunks = list(pdfs)
-    rows = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
-    ev = rows["event_id"].to_numpy()
-    ts = rows["ts_us"].to_numpy()
-    order = np.lexsort((ev, ts))
-    keep: list[int] = []
-    for i in order:
-        t = int(ts[i])
-        if last is None or t - last > DEBOUNCE_GAP_US:
-            keep.append(i)
-            last = t
-    state.update((last,))
-    idx = np.asarray(keep, dtype="int64")
-    n = len(idx)
-    yield pd.DataFrame(
-        {
-            "event_id": ev[idx].astype("int64", copy=False),
-            "user_id": np.full(n, user_id, dtype="int64"),
-            "event_type": pd.Series([event_type] * n, dtype="object"),
-            "ts_us": ts[idx].astype("int64", copy=False),
-        }
-    )
-
-
 def _debounce_user_group(
     key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
 ) -> Iterator[pd.DataFrame]:
     """Per-USER debounce: one stateful group serves every event_type of the
-    user, with state = {event_type: last_kept_us} as parallel arrays. Same
-    greedy pass as _debounce_group, but the per-group fixed cost (Arrow
-    transfer + pandas assembly + state round-trip) amortizes over all the
-    user's types."""
+    user, with state = {event_type: last_kept_us} as parallel arrays: a
+    greedy last-KEPT pass per type in (ts, event_id) order, so the
+    per-group fixed cost (Arrow transfer + pandas assembly + state
+    round-trip) amortizes over all the user's types."""
     import numpy as np
 
     (user_id,) = key

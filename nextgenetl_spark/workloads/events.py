@@ -627,14 +627,14 @@ def stream_lake_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly-once property is inside the gate, not just asserted in a
     test."""
     import os
-    import tempfile
 
+    from nextgenetl_spark.staging import scratch_dir
     from nextgenetl_spark.streaming.sink import exactly_once_parquet_sink, run_stream_to_lake
     from nextgenetl_spark.streaming.source import events_stream
 
     # a lake per call: the returned DataFrame reads it, so no later call
     # may reuse or remove it
-    root = tempfile.mkdtemp(prefix="ngetl_lake_")
+    root = scratch_dir("ngetl_lake_")
     lake = os.path.join(root, "events")
     ckpt = os.path.join(root, "_ckpt")
 
@@ -717,8 +717,8 @@ def _stream_neardup_oracle() -> str:
 @workload("stream_near_dup_ingest", oracle=_stream_neardup_oracle())
 def stream_near_dup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ACTUAL streaming NEAR-dup-on-ingest: the documents stream is
-    MinHash-banded per row (``minhash_signature_expr`` — a Column HOF, legal
-    where append-mode aggregation is not) and probed against a static banded
+    MinHash-banded per row (a Column HOF signature on the xxhash64 family,
+    legal where append-mode aggregation is not) and probed against a static banded
     index of the already-ingested half of the corpus; candidates verify by
     exact shingle-set Jaccard. Every step is a stateless projection or
     stream-static join — no watermark, no state store, and multi-band pair

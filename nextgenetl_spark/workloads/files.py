@@ -7,14 +7,13 @@ sit inside the driver's correctness gate, not just pytest."""
 from __future__ import annotations
 
 import os
-import tempfile
 
 import duckdb
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nextgenetl_spark.catalog import read_parquet_cached
-from nextgenetl_spark.staging import atomic_write, staged
+from nextgenetl_spark.staging import atomic_write, scratch_dir, staged
 
 from nextgenetl_spark.sources.gtf import read_gtf
 from nextgenetl_spark.sources.maf import read_maf_concat
@@ -303,7 +302,7 @@ def orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     format gets the identical declarative plan; only the scan node differs.
     The write is a one-time staging cost; at 100 TB you'd partition the
     write by a pruning key exactly as with parquet."""
-    out = tempfile.mkdtemp(prefix="ngetl_orc_")
+    out = scratch_dir("ngetl_orc_")
     for t in ("supplier", "nation"):
         spark.read.parquet(f"{sf_dir}/{t}.parquet").write.mode("overwrite").orc(f"{out}/{t}")
     s = spark.read.orc(f"{out}/supplier")
@@ -385,7 +384,7 @@ def schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     equivalent of unionByName(allowMissingColumns=True), resolved per file
     at scan time with no rewrite of old data. Footer-schema merge is a
     one-time planning cost; the scan itself stays columnar and pruned."""
-    stage = tempfile.mkdtemp(prefix="ngetl_evo_")
+    stage = scratch_dir("ngetl_evo_")
     o = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
         "o_orderkey", F.round("o_totalprice", 2).alias("price"), "o_orderpriority"
     )
@@ -519,13 +518,11 @@ def tsv_export_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     inference) and compared against SQL on the source tables — a
     hash-verified proof the export is lossless, including the
     double→text→double leg."""
-    import tempfile as _tempfile
-
     from nextgenetl_spark.catalog import load
     from nextgenetl_spark.plans.pipeline import Pipeline
     from nextgenetl_spark.sources.tsv import read_tsv
 
-    wh = _tempfile.mkdtemp(prefix="ngetl_tsvexp_")
+    wh = scratch_dir("ngetl_tsvexp_")
     pipe = Pipeline(spark, warehouse=wh)
     pipe.register("customer", load(spark, sf_dir, "customer"))
     pipe.register("nation", load(spark, sf_dir, "nation"))

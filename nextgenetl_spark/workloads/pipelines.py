@@ -12,8 +12,6 @@ common_etl/support.py:2025-2123) and returns the ``_current`` table.
 
 from __future__ import annotations
 
-import tempfile
-
 import yaml
 
 from pyspark.sql import DataFrame, SparkSession
@@ -22,6 +20,7 @@ from pyspark.sql import functions as F
 from nextgenetl_spark.catalog import load
 from nextgenetl_spark.plans.pipeline import Pipeline
 from nextgenetl_spark.plans.publish import publish_table
+from nextgenetl_spark.staging import scratch_dir
 from nextgenetl_spark.workloads import workload
 
 _PIPELINE_YAML = """
@@ -74,7 +73,7 @@ def pipeline_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     one Catalyst plan. At 100 TB the materialization doubles as the
     resume/inspect point and a reusable shuffle barrier."""
     cfg = yaml.safe_load(_PIPELINE_YAML)
-    pipe = Pipeline(spark, warehouse=tempfile.mkdtemp(prefix="ngetl_wh_"))
+    pipe = Pipeline(spark, warehouse=scratch_dir("ngetl_wh_"))
     pipe.register("part", load(spark, sf_dir, "part"))
     pipe.register("lineitem", load(spark, sf_dir, "lineitem"))
     out = pipe.run(cfg)
@@ -101,7 +100,7 @@ def persisted_view_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     round-trip costs two catalog ops and one file write."""
     from nextgenetl_spark.catalog import create_view_from_query, load_views
 
-    root = tempfile.mkdtemp(prefix="ngetl_views_")
+    root = scratch_dir("ngetl_views_")
     load(spark, sf_dir, "supplier").createOrReplaceTempView("supplier")
     load(spark, sf_dir, "nation").createOrReplaceTempView("nation")
     create_view_from_query(
@@ -146,7 +145,7 @@ def publish_current(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("o_totalprice"), 2).alias("revenue"),
         )
 
-    root = tempfile.mkdtemp(prefix="ngetl_pub_")
+    root = scratch_dir("ngetl_pub_")
     r1 = profile(o.filter(F.year("o_orderdate") < 1997))
     publish_table(spark, r1, root, "order_profile", "r1")
     r2 = profile(o)
@@ -247,7 +246,7 @@ def csv_load_disposition(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             atomic_write(path, body)
 
-    wh = tempfile.mkdtemp(prefix="ngetl_disp_")
+    wh = scratch_dir("ngetl_disp_")
     pipe = Pipeline(spark, warehouse=wh)
     pipe.register_builder("load_a", lambda p, step: read_tsv(p.spark, paths["a"], sep=","))
     pipe.register_builder("load_b", lambda p, step: read_tsv(p.spark, paths["b"], sep=","))

@@ -1102,22 +1102,21 @@ def stream_ivfpq_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     25) is staged content-fingerprinted and built once; each RUN copies it
     and streams the new batch (vec_id < 25) into the copy, so the pure
     append is exactly-once per run with no duplicate hazard and the stream
-    is REAL on every run (the run dir persists for the returned DataFrame;
-    temp-dir lifecycle, a few MB at test sf). Full-probe + unbounded-shortlist
+    is REAL on every run (the run dir persists for the returned DataFrame
+    and goes with the process's scratch root, a few MB at test sf). Full-probe + unbounded-shortlist
     query over the maintained copy degenerates to exact brute force over
     history ∪ streamed batch — the plain SQL oracle value-checks the whole
     streamed maintenance path (a dropped/duplicated micro-batch row breaks
     the hash)."""
     import os
     import shutil
-    import tempfile
 
     from nextgenetl_spark.operators.similarity import (
         append_to_ivfpq_index,
         build_ivfpq_index,
         ivfpq_query_index,
     )
-    from nextgenetl_spark.staging import staged
+    from nextgenetl_spark.staging import scratch_dir, staged
     from nextgenetl_spark.streaming.source import embeddings_stream, run_bounded
 
     emb = load(spark, sf_dir, "embeddings")
@@ -1130,19 +1129,7 @@ def stream_ivfpq_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
 
-    # reap stale per-run copies (>1h old) so repeated bench/oracle sweeps
-    # cannot fill the temp dir; live concurrent runs are younger and untouched
-    import glob as _glob
-    import time as _time
-
-    cutoff = _time.time() - 3600
-    for old in _glob.glob(os.path.join(tempfile.gettempdir(), "ngetl_ivfpq_ingest_*")):
-        try:
-            if os.path.getmtime(old) < cutoff:
-                shutil.rmtree(old, ignore_errors=True)
-        except OSError:
-            pass
-    run_idx = tempfile.mkdtemp(prefix="ngetl_ivfpq_ingest_")
+    run_idx = scratch_dir("ngetl_ivfpq_ingest_")
     shutil.copytree(
         base, run_idx, dirs_exist_ok=True, ignore=shutil.ignore_patterns("_COMPLETE*")
     )

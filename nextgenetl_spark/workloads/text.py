@@ -43,7 +43,7 @@ def _staged_md5_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.conv(F.substring(h, 9, 8), 16, 10).cast("long").alias("n2"),
             ),
         )
-        shm = F.array_distinct(F.transform(D.shingles("text", 3), lambda s: F.md5(s)))
+        shm = D._hashed_shingles(D.MD5, "text", 3)
         d.select("doc_id", toks.alias("toks"), shm.alias("shm")).write.mode(
             "overwrite"
         ).parquet(os.path.join(stage, "scan.parquet"))
@@ -1640,91 +1640,23 @@ def simhash_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @workload("stream_near_dup_md5", oracle=D.md5_stream_near_dup_oracle_sql(split=250, threshold=0.5))
 def stream_near_dup_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ORACLE-CHECKED streaming near-dup-on-ingest: the md5 universal-hash
-    MinHash computed per row (array_min HOFs — legal in append streaming),
+    """ORACLE-CHECKED streaming near-dup-on-ingest: the stream probe of
+    stream_near_dup_ingest (events.py) on the md5 hash family — per-row
+    universal-hash MinHash (array_min HOFs, legal in append streaming),
     banded and probed against a static index of the already-ingested half,
-    verified by md5-shingle Jaccard. The whole stream-static LSH probe is
-    value-hash-verified: the DuckDB oracle replays signatures, banding, the
-    cross-split candidate join, and the verify — the first-matching-band
-    filter emits each pair exactly once, matching the oracle's DISTINCT.
-    The xxhash64 variant (events.py stream_near_dup_ingest) stays the perf
-    path with its rows-only check."""
-    from nextgenetl_spark.streaming.source import docs_stream
+    verified by md5-shingle Jaccard. The DuckDB oracle replays signatures,
+    banding, the cross-split candidate join and the verify; the
+    first-shared-band filter emits each pair exactly once, matching the
+    oracle's DISTINCT."""
+    from nextgenetl_spark.streaming.neardup import history_index, near_dup_against_history
+    from nextgenetl_spark.streaming.source import docs_stream, run_memory_replay
 
-    name = "wl_stream_near_dup_md5"
-    split, num_perm, num_bands = 250, 16, 4
-    rows_per_band = num_perm // num_bands
-    d = load(spark, sf_dir, "documents")
-    shm = F.array_distinct(F.transform(D.shingles("text", 3), lambda s: F.md5(s)))
-
-    hist = d.where(F.col("doc_id") < split).select(
-        F.col("doc_id").alias("hist_id"),
-        D.md5_minhash_signature_expr("text", num_perm).alias("hist_sig"),
-        shm.alias("hist_shm"),
-    )
-    hist_bands = hist.select(
-        "hist_id",
-        "hist_sig",
-        "hist_shm",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        D.md5_band_hash("hist_sig", b, rows_per_band).alias("bh"),
-                    )
-                    for b in range(num_bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("hist_id", "hist_sig", "hist_shm", F.col("bb.band").alias("band"), F.col("bb.bh").alias("bh"))
-
+    split = 250
+    hist = load(spark, sf_dir, "documents").where(F.col("doc_id") < split)
+    bands, verify = history_index(hist, family=D.MD5)
     stream = docs_stream(spark, sf_dir).where(F.col("doc_id") >= split)
-    enriched = stream.select(
-        F.col("doc_id").alias("new_id"),
-        D.md5_minhash_signature_expr("text", num_perm).alias("sig"),
-        shm.alias("new_shm"),
-    )
-    probes = enriched.select(
-        "new_id",
-        "new_shm",
-        "sig",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        D.md5_band_hash("sig", b, rows_per_band).alias("bh"),
-                    )
-                    for b in range(num_bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("new_id", "new_shm", "sig", F.col("bb.band").alias("band"), F.col("bb.bh").alias("bh"))
-    cands = probes.join(hist_bands.withColumnRenamed("bh", "hbh"), "band").where(
-        F.col("bh") == F.col("hbh")
-    )
-    # first-matching-band filter → each (new, hist) pair emits exactly once
-    # (md5_band_hash needs a literal band index, so OR the per-band equality
-    # tests behind a band > b guard)
-    earlier = F.lit(False)
-    for b2 in range(num_bands - 1):
-        earlier = earlier | (
-            (F.col("band") > b2)
-            & (D.md5_band_hash("sig", b2, rows_per_band) == D.md5_band_hash("hist_sig", b2, rows_per_band))
-        )
-    out = (
-        cands.filter(~earlier)
-        .select(
-            "new_id",
-            "hist_id",
-            F.round(D.jaccard(F.col("new_shm"), F.col("hist_shm")), 4).alias("jac"),
-        )
-        .filter(F.col("jac") >= 0.5)
-    )
-    from nextgenetl_spark.streaming.source import run_memory_replay
-
-    return run_memory_replay(spark, out, name, "append")
+    out = near_dup_against_history(stream, bands, verify, threshold=0.5, family=D.MD5)
+    return run_memory_replay(spark, out, "wl_stream_near_dup_md5", "append")
 
 
 @workload(

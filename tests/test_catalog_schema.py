@@ -366,7 +366,7 @@ def test_oha_threshold_parses_every_memory_string():
         t(_default_driver_mem())  # the session's own default parses without a warning
 
 
-def test_parquet_ts_unit_skips_remote_paths(monkeypatch):
+def test_events_ts_type_skips_remote_paths(monkeypatch):
     """A URI-scheme path returns None before pyarrow sees it (pyarrow's
     read_schema raises ArrowInvalid, a ValueError, on s3a:// URIs), so
     catalog.load takes the plain Spark read for a remote events table."""
@@ -378,8 +378,8 @@ def test_parquet_ts_unit_skips_remote_paths(monkeypatch):
         raise ValueError("pyarrow must not open a remote path")
 
     monkeypatch.setattr(pq, "read_schema", boom)
-    assert cat._parquet_ts_unit("s3a://bucket/sf/events.parquet") is None
-    assert cat._parquet_ts_unit("hdfs://nn/sf/events") is None
+    assert cat._events_ts_type("s3a://bucket/sf") is None
+    assert cat._events_ts_type("hdfs://nn/sf") is None
 
 
 def test_schema_cache_bypasses_remote_and_bounds_per_path(spark, tmp_path):
@@ -627,6 +627,58 @@ def test_package_names_no_fixed_tmp_path():
         if "/tmp/" in open(p, encoding="utf-8").read()
     ]
     assert named == []
+
+
+def test_scratch_dirs_share_one_run_root(tmp_path, monkeypatch):
+    """Per-call scratch dirs are distinct dirs under one per-process root."""
+    staging = _staging_in(tmp_path, monkeypatch)
+    monkeypatch.setattr(staging, "_RUN_ROOTS", set())
+    a = staging.scratch_dir("ngetl_wh_")
+    b = staging.scratch_dir("ngetl_lake_")
+    root = str(tmp_path / "tmp" / f"ngetl_run_{os.getpid()}")
+    assert a != b and os.path.dirname(a) == os.path.dirname(b) == root
+    assert os.path.basename(a).startswith("ngetl_wh_") and os.path.isdir(b)
+
+
+def test_scratch_run_root_goes_when_the_process_exits(tmp_path):
+    """A process's run root, with every scratch dir in it, is removed when
+    the process exits."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "TMPDIR": str(tmp_path), "PYTHONPATH": repo}
+    code = (
+        "import os\n"
+        "from nextgenetl_spark.staging import scratch_dir\n"
+        "d = scratch_dir('ngetl_t_')\n"
+        "open(os.path.join(d, 'f'), 'w').close()\n"
+        "print(d)\n"
+    )
+    out = subprocess.run([sys.executable, "-c", code], env=env, capture_output=True, text=True, check=True)
+    d = out.stdout.strip().splitlines()[-1]
+    assert os.path.basename(os.path.dirname(d)).startswith("ngetl_run_")
+    assert os.path.dirname(os.path.dirname(d)) == str(tmp_path)
+    assert not os.path.exists(os.path.dirname(d))
+
+
+def test_scratch_dir_reaps_roots_of_dead_pids(tmp_path, monkeypatch):
+    """The first scratch_dir call of a process removes the run roots of
+    pids that no longer run, and keeps those of live ones."""
+    import subprocess
+    import sys
+
+    staging = _staging_in(tmp_path, monkeypatch)
+    monkeypatch.setattr(staging, "_RUN_ROOTS", set())
+    dead = subprocess.run(
+        [sys.executable, "-c", "import os; print(os.getpid())"], capture_output=True, text=True, check=True
+    ).stdout.strip()
+    dead_root = tmp_path / "tmp" / f"ngetl_run_{dead}"
+    live_root = tmp_path / "tmp" / f"ngetl_run_{os.getppid()}"
+    (dead_root / "ngetl_wh_x").mkdir(parents=True)
+    live_root.mkdir()
+    staging.scratch_dir("ngetl_wh_")
+    assert not dead_root.exists() and live_root.exists()
 
 
 def test_staged_phash_fps_match_fresh_compute(spark):

@@ -556,14 +556,21 @@ def test_embedding_near_dup_auto_routes_and_matches(spark):
 
 def test_minhash_signature_expr_matches_batch_aggregation(spark):
     """The per-row HOF signature (streaming shape) must be value-identical
-    to the batch flat-aggregate form."""
-    docs = load(spark, SF_SMOKE, "documents").limit(50)
+    to the batch flat-aggregate form, for both hash families."""
+    docs = load(spark, SF_SMOKE, "documents").filter(F.col("doc_id") < 50)
     batch = {r["doc_id"]: r["sig"] for r in D.minhash_signatures(docs).collect()}
     perrow = {
         r["doc_id"]: r["sig"]
         for r in docs.select("doc_id", D.minhash_signature_expr("text").alias("sig")).collect()
     }
-    assert batch == perrow
+    assert batch == perrow and len(batch) == 50
+
+    for fam in (D.XXHASH64, D.MD5):
+        sets = D._hashed_shingles(fam, "text")
+        flat = D._flat_min(docs, "doc_id", fam, sets, fam.num_perm).collect()
+        batch = {r["doc_id"]: [r[f"m{i}"] for i in range(fam.num_perm)] for r in flat}
+        rows = docs.select("doc_id", D._row_signature(sets, fam, fam.num_perm).alias("sig"))
+        assert batch == {r["doc_id"]: r["sig"] for r in rows.collect()}, fam.set_col
 
 
 def test_stream_near_dup_matches_batch_cross_pairs(spark):
@@ -588,6 +595,23 @@ def test_stream_near_dup_matches_batch_cross_pairs(spark):
         if min(r["a_id"], r["b_id"]) < split <= max(r["a_id"], r["b_id"])
     }
     assert got == expect
+
+
+def test_md5_stream_probe_matches_persisted_index_probe(spark, tmp_path):
+    """At split 250 the md5 stream probe (stream_near_dup_md5) and the md5
+    persisted-index probe (query_minhash_index) run one candidate-join and
+    verify stage, so they return the same pairs."""
+    from nextgenetl_spark.workloads import load_all
+
+    stream = load_all()["stream_near_dup_md5"].fn(spark, SF_SMOKE)
+    got = sorted((r["new_id"], r["hist_id"], r["jac"]) for r in stream.collect())
+
+    docs = load(spark, SF_SMOKE, "documents")
+    idx = str(tmp_path / "idx")
+    D.build_minhash_index(idx, docs.filter(F.col("doc_id") < 250))
+    probe = D.query_minhash_index(spark, idx, docs.filter(F.col("doc_id") >= 250))
+    assert got == sorted((r["new_id"], r["hist_id"], r["jac"]) for r in probe.collect())
+    assert got
 
 
 def test_md5_simhash_python_reference(spark):

@@ -258,18 +258,15 @@ def test_stateful_debounce_differs_from_lag_gap_on_bursts(spark):
     """last-KEPT debounce readmits an event once it clears the gap from the
     last kept one, even when the previous (dropped) event was recent —
     the case the lag-gap batch form gets wrong by construction."""
-    import datetime as dt
-
-    from nextgenetl_spark.streaming.stateful import (
-        DEBOUNCE_GAP_US,
-        _debounce_group,
-    )
+    from nextgenetl_spark.streaming.stateful import _debounce_shard_group
     import pandas as pd
 
     t0 = 1_700_000_000_000_000
     rows = pd.DataFrame(
         {
             "event_id": [1, 2, 3],
+            "user_id": [7, 7, 7],
+            "event_type": ["click", "click", "click"],
             "ts_us": [t0, t0 + 200_000_000, t0 + 400_000_000],  # 0s, 200s, 400s
         }
     )
@@ -285,7 +282,7 @@ def test_stateful_debounce_differs_from_lag_gap_on_bursts(spark):
         def get(self):
             return self._v
 
-    out = pd.concat(list(_debounce_group((7, "click"), iter([rows]), FakeState())))
+    out = pd.concat(list(_debounce_shard_group((0,), iter([rows]), FakeState())))
     # 0s kept; 200s dropped (200 <= 300 from last kept); 400s KEPT (400 > 300
     # from last kept, though only 200s after the dropped event)
     assert list(out["event_id"]) == [1, 3]

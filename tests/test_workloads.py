@@ -566,6 +566,36 @@ def test_events_nanos_parquet_reads_without_session_conf(spark, tmp_path):
     assert got == want
 
 
+def test_events_nanos_directory_table_loads(spark, tmp_path):
+    """A directory-shaped TIMESTAMP(NANOS) events table (a multi-file
+    ``events.parquet/``) loads through catalog.load: the explicit read
+    schema comes from the first part's footer, not from the table path."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from nextgenetl_spark.catalog import load
+
+    wall = [dt.datetime(2024, 1, 1, 12, 0, 0), dt.datetime(2024, 1, 2, 3, 4, 5)]
+    table = tmp_path / "events.parquet"
+    table.mkdir()
+    for i, w in enumerate(wall):
+        t = pa.table(
+            {
+                "ts": pa.array([w], type=pa.timestamp("ns")),
+                "user_id": pa.array([i], type=pa.int64()),
+            }
+        )
+        pq.write_table(t, str(table / f"part-{i}.parquet"))
+
+    df = load(spark.newSession(), str(tmp_path), "events")
+    got = sorted(r["us"] for r in df.select(F.unix_micros("ts").alias("us")).collect())
+    want = sorted(int(w.replace(tzinfo=dt.timezone.utc).timestamp() * 1_000_000) for w in wall)
+    assert got == want
+
+
 def test_catalog_load_never_writes_session_conf(spark):
     """load() must be conf-pure: reading every table leaves the caller's
     runtime SQL conf byte-identical (round-1 ask #8 / round-2 verdict #3)."""
